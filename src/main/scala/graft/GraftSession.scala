@@ -67,7 +67,8 @@ object GraftSession {
     "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false",
   )
 
-  /** Static conf that must be present at session build time. */
+  /** Static conf that must be present at session build time: the
+    * extension installs every `graft.plans.Native` function. */
   val extensionsConf: (String, String) =
     "spark.sql.extensions" -> classOf[graft.plans.GraftExtensions].getName
 
@@ -105,7 +106,6 @@ object GraftSession {
     "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version" -> "2",
   )
 
-  /** Apply graft's recommended SQL + committer conf to any builder. */
   /** STATIC confs — must be set at session BUILD time (conf.set on a
     * live session refuses them), which is why they live apart from
     * [[tunedConf]] (whose keys the spec proves runtime-settable):
@@ -118,6 +118,7 @@ object GraftSession {
   def staticConf: Seq[(String, String)] = Seq(
     "spark.sql.codegen.cache.maxEntries" -> "4000")
 
+  /** Apply graft's recommended SQL + committer conf to any builder. */
   def tuned(builder: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder = {
     val withRuntime = (tunedConf(shufflePartitions) ++ objectStoreConf ++ staticConf)
       .foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }

@@ -50,7 +50,7 @@ import graft.Tables
   */
 object AnnIndex {
 
-  import Similarity.{dot, dotD, withNative}
+  import Similarity.{dot, dotD}
 
   def indexRoot(spark: SparkSession): String =
     spark.conf.get("spark.graft.ann.indexDir", "target/ann_index")
@@ -172,7 +172,7 @@ object AnnIndex {
     * vector in one native loop. Integer addition is order-independent, so
     * qdot is bit-equal to the exploded SUM the base oracle replays. */
   private def sq8RankedServe(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.plans.DotI64.register(spark)
+    graft.plans.Native.install(spark)
     import spark.implicits._
     val codes = Tables.readMemo(spark, ensureSq8(spark, sfDir))
     val q = codes.filter($"vec_id" === 0)
@@ -195,7 +195,7 @@ object AnnIndex {
     * re-rank over the shortlist-pruned float re-read (the only embeddings
     * bytes the serve path touches). */
   def l3jServe(spark: SparkSession, sfDir: String): DataFrame = {
-    withNative(spark)
+    graft.plans.Native.install(spark)
     import spark.implicits._
     val shortlist = sq8RankedServe(spark, sfDir)
       .orderBy($"approx_dot".desc, $"vec_id")
@@ -369,7 +369,7 @@ object AnnIndex {
     * bit-equal to the base l3n's flat sum and the serve row is
     * oracle-checked against l3n's own SQL. */
   def l3nServe(spark: SparkSession, sfDir: String): DataFrame = {
-    withNative(spark)
+    graft.plans.Native.install(spark)
     import spark.implicits._
     val dir = ensureIvfPq(spark, sfDir)
     val comps = Tables.readMemo(spark, s"${ensureIvf(spark, sfDir)}/ivf_centroids")
@@ -415,7 +415,7 @@ object AnnIndex {
 
   def ivfServe(spark: SparkSession, sfDir: String, nProbe: Int): DataFrame = {
     require(nProbe >= 1, s"nProbe out of range: $nProbe")
-    withNative(spark)
+    graft.plans.Native.install(spark)
     import spark.implicits._
     val dir = ensureIvf(spark, sfDir)
     val comps = Tables.readMemo(spark, s"$dir/ivf_centroids")

@@ -253,7 +253,7 @@ object Assembly {
     * separate async stages) cannot fuse. */
   def l13CorpusExport(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.plans.ShingleHashes.register(spark)
+    graft.plans.Native.install(spark)
     val docs = Tables.documents(spark, sfDir)
     val K = graft.llm.Dedup.SHINGLE_K
 
@@ -364,7 +364,7 @@ object Assembly {
     * partitioning. */
   def l13bCorpusExportV2(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.plans.ShingleHashes.register(spark)
+    graft.plans.Native.install(spark)
     val K = graft.llm.Dedup.SHINGLE_K
     val W = graft.llm.Dedup.SEGMENT_WORDS
     val docs = Tables.documents(spark, sfDir)
@@ -617,8 +617,7 @@ object Assembly {
   private[graft] def l28From(docs: DataFrame, keep: Int): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.plans.WordCountAgg.register(spark)
-    graft.plans.BucketScore.register(spark)
+    graft.plans.Native.install(spark)
     val B = DSIR_BUCKETS
     val rawMap = docs.agg(expr("word_count_agg(text)").as("mr"))
     val tgtMap = docs.filter($"lang" === "en")

@@ -48,7 +48,7 @@ object Dedup {
     * previous form materialized. Empty sigs == fewer than SHINGLE_K
     * words — the size filter the array form needed. */
   private def withMinhashSigs(docs: DataFrame, numHashes: Int): DataFrame = {
-    graft.plans.MinHashSigs.register(docs.sparkSession)
+    graft.plans.Native.install(docs.sparkSession)
     // The short-doc gate tests the CHEAP equivalent predicate (word count
     // >= k ⟺ non-empty sigs), not size(sigs) > 0: a filter on the computed
     // column sits below the projection after pushdown and would re-run the
@@ -78,7 +78,7 @@ object Dedup {
       .select(col("doc_id"), explode(col("shingles")).as("shingle"))
 
   private def explodedShingleHashesBy(docs: DataFrame, hashSql: String): DataFrame = {
-    graft.plans.Md5Prefix48.register(docs.sparkSession)
+    graft.plans.Native.install(docs.sparkSession)
     docs
       .withColumn("words", wordsCol)
       .filter(size(col("words")) >= SHINGLE_K)
@@ -480,7 +480,7 @@ object Dedup {
     * collision posture as l2f_pos, checked per-run by the md5 oracle). */
   def l2fDecontamGen(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.plans.ShingleHashes.register(spark)
+    graft.plans.Native.install(spark)
     val docs = Tables.documents(spark, sfDir)
     def exploded(d: DataFrame): DataFrame = d.select($"doc_id",
       explode(expr(s"shingle_hashes(text, $SHINGLE_K, 'xxh64')")).as("sh"))
@@ -519,8 +519,7 @@ object Dedup {
     * the train set does NOT fit in a broadcast; BloomDecontamSpec measures
     * the pruned exchange on the fixture). */
   def l27BloomDecontam(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.plans.ShingleHashes.register(spark)
-    graft.plans.BloomFunctions.register(spark)
+    graft.plans.Native.install(spark)
     import spark.implicits._
     val docs = Tables.documents(spark, sfDir)
     def exploded(d: DataFrame): DataFrame = d.select($"doc_id",
@@ -552,7 +551,7 @@ object Dedup {
     * digest cost, both inside whole-stage codegen). */
   def l2fDecontamMd5(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.plans.ShingleHashes.register(spark)
+    graft.plans.Native.install(spark)
     val docs = Tables.documents(spark, sfDir)
     def exploded(d: DataFrame): DataFrame = d.select($"doc_id",
       explode(expr(s"shingle_hashes(text, $SHINGLE_K, 'md5p48')")).as("sh"))
@@ -611,7 +610,7 @@ object Dedup {
   private[graft] val SIMHASH_BITS = 16
 
   private[graft] def simhashed(docs: DataFrame): DataFrame = {
-    graft.plans.SimHashSig.register(docs.sparkSession)
+    graft.plans.Native.install(docs.sparkSession)
     docs.select(col("doc_id"),
       expr(s"simhash_sig(text, $SIMHASH_BITS)").as("simhash"))
   }
@@ -687,7 +686,7 @@ object Dedup {
     * distinct strings) — identical modulo within-doc collisions, which the
     * md5-anchored oracles check per run. */
   private def explodedShingleHashesNative(docs: DataFrame, algo: String): DataFrame = {
-    graft.plans.ShingleHashes.register(docs.sparkSession)
+    graft.plans.Native.install(docs.sparkSession)
     // No size(hs) > 0 pre-filter: explode already drops empty arrays, and
     // an explicit filter is NOT free — Catalyst pushes it into the scan's
     // DataFilters and keeps the FilterExec, so the (expensive) shingle
@@ -902,7 +901,7 @@ object Dedup {
   private[graft] def winnowScreenBy(docs: DataFrame, maxDf: Long,
       minShared: Long): DataFrame = {
     val spark = docs.sparkSession
-    graft.plans.WinnowHashes.register(spark)
+    graft.plans.Native.install(spark)
     import spark.implicits._
     val fps = docs
       .select($"doc_id",

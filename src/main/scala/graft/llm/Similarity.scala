@@ -33,13 +33,9 @@ object Similarity {
     s"aggregate(zip_with($a, $b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), " +
       s"CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
 
-  private[llm] def withNative(spark: SparkSession): SparkSession = {
-    graft.plans.DotF32.register(spark); spark
-  }
-
   /** L3: brute-force cosine top-10 for query vec_id=0. */
   def l3BruteForceTopk(spark: SparkSession, sfDir: String): DataFrame = {
-    withNative(spark)
+    graft.plans.Native.install(spark)
     import spark.implicits._
     val emb = Tables.embeddings(spark, sfDir)
     // query norm computed once in the broadcast frame, not per scanned row
@@ -82,7 +78,7 @@ object Similarity {
   def signLshPairs(embFrame: DataFrame, signBits: Int, simCut: Double): DataFrame = {
     require(signBits >= 1 && signBits <= 62, s"signBits out of range: $signBits")
     val spark = embFrame.sparkSession
-    withNative(spark)
+    graft.plans.Native.install(spark)
     import spark.implicits._
     val sig = (1 to signBits)
       .map(i => when(expr(s"embedding[${i - 1}]") > 0f, lit(1L << (i - 1))).otherwise(lit(0L)))
@@ -249,7 +245,7 @@ object Similarity {
     // bit-equal to the aggregate(zip_with(...)) SQL fold this replaces —
     // the fold paid two nested interpreted lambdas per bit); signs are
     // splitmix64-derived inline, so no matrix materializes or broadcasts
-    graft.plans.RademacherSigs.register(embFrame.sparkSession)
+    graft.plans.Native.install(embFrame.sparkSession)
     val withSigs = embFrame.withColumn("rsigs",
       expr(s"rademacher_sigs(embedding, ${seed}L, $signBits, $bands)"))
     def bandSig(b: Int): Column = col("rsigs").getItem(b)
@@ -284,7 +280,7 @@ object Similarity {
   private def bandedPairs(embFrame: DataFrame, bands: Int,
       bandSig: Int => Column, simCut: Double): DataFrame = {
     val spark = embFrame.sparkSession
-    withNative(spark)
+    graft.plans.Native.install(spark)
     import spark.implicits._
     val bandKeys = (0 until bands)
       .map(b => struct(lit(b).as("band"), bandSig(b).as("bucket")))
@@ -354,7 +350,7 @@ object Similarity {
     * then a final rank over the ≤ |Q|·partitions·k survivors — so no
     * single task ever sorts a full query's pair list. */
   def l3dBatchTopk(spark: SparkSession, sfDir: String): DataFrame = {
-    withNative(spark)
+    graft.plans.Native.install(spark)
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     val emb = Tables.embeddings(spark, sfDir)
@@ -456,7 +452,7 @@ object Similarity {
     * exact scan's cost. The shortlist broadcasts: the float-vector
     * re-read is a semi-join pruned scan, not a second pass. */
   def l3jRerankTopk(spark: SparkSession, sfDir: String): DataFrame = {
-    withNative(spark)
+    graft.plans.Native.install(spark)
     import spark.implicits._
     val shortlist = sq8Ranked(spark, sfDir)
       .orderBy($"approx_dot".desc, $"vec_id")
@@ -496,7 +492,7 @@ object Similarity {
     * centroids. */
   def ivfTopk(spark: SparkSession, sfDir: String, nProbe: Int): DataFrame = {
     require(nProbe >= 1, s"nProbe out of range: $nProbe")
-    withNative(spark)
+    graft.plans.Native.install(spark)
     import spark.implicits._
     val emb = Tables.embeddings(spark, sfDir)
     // centroid components: exact decimal sum -> double divide. The
@@ -762,7 +758,7 @@ object Similarity {
     * The query vector is excluded from its own result (the l3c
     * convention). */
   def l3nIvfPqTopk(spark: SparkSession, sfDir: String): DataFrame = {
-    withNative(spark)
+    graft.plans.Native.install(spark)
     import spark.implicits._
     val emb = Tables.embeddings(spark, sfDir)
     // coarse quantizer: the SAME persisted centroid components l3c/l3f
@@ -854,7 +850,7 @@ object Similarity {
     * O(M·K·SUB) driver state — 16k longs at production width. */
   private[graft] def pqTrainSized(spark: SparkSession, sfDir: String,
       k: Int = PQ_K_PROD, sampleVecs: Long = PQ_TRAIN_VECS): Seq[(Int, Int, Int, Long)] = {
-    graft.plans.PqEncode.register(spark)
+    graft.plans.Native.install(spark)
     import spark.implicits._
     val emb = Tables.embeddings(spark, sfDir)
     val n = emb.count()
@@ -898,7 +894,7 @@ object Similarity {
   /** Encode every vector in ONE compiled pass: (vec_id, label, codes). */
   private[graft] def pqEncodeAll(spark: SparkSession, sfDir: String,
       cent: Seq[(Int, Int, Int, Long)]): DataFrame = {
-    graft.plans.PqEncode.register(spark)
+    graft.plans.Native.install(spark)
     import spark.implicits._
     Tables.embeddings(spark, sfDir)
       .crossJoin(broadcast(codebookDf(spark, cent)))
@@ -948,7 +944,7 @@ object Similarity {
     * coarse-quantizer probe prunes to IVFPQ_PROBE lists, compiled encode,
     * LUT ADC over only the probed lists' codes. */
   def l3nSizedTopk(spark: SparkSession, sfDir: String): DataFrame = {
-    withNative(spark)
+    graft.plans.Native.install(spark)
     import spark.implicits._
     val emb = Tables.embeddings(spark, sfDir)
     val comps = emb

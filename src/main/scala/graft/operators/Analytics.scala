@@ -269,7 +269,7 @@ object Analytics {
     // decides, so mid-size windows aren't wrongly rejected
     val gated = gatedBroadcast(spark, dim,
       Seq(() => inWindow.count(), () => dim.count()))
-    graft.plans.Sum128.register(spark)
+    graft.plans.Native.install(spark)
     lineitem
       .select($"l_orderkey", $"l_extendedprice", $"l_discount")
       .join(gated, $"l_orderkey" === $"o_orderkey")
@@ -310,7 +310,7 @@ object Analytics {
     // measured 2.1x on the whole bucketed query (DecProbe q3b_shipped
     // 3.5s vs q3b_postproj 1.7s at 150M rows); the join payload trades
     // one long for two raw doubles, a width the saved work dwarfs.
-    graft.plans.Sum128.register(spark)
+    graft.plans.Native.install(spark)
     val items = lineitem
       .select($"l_orderkey", $"l_extendedprice", $"l_discount")
     orders

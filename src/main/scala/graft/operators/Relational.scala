@@ -34,7 +34,7 @@ object Relational {
     * ceiling is 10^29. */
   def q1PricingSummary(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.plans.Sum128.register(spark)
+    graft.plans.Native.install(spark)
     Tables.lineitem(spark, sfDir)
       .filter($"l_shipdate" <= lit("1998-09-02").cast("timestamp"))
       .select($"l_returnflag", $"l_linestatus", $"l_quantity",
@@ -124,7 +124,7 @@ object Relational {
     * pins value parity across the adversarial shapes). */
   def p5ValidityFilter(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    graft.plans.JsonGetLong.register(spark)
+    graft.plans.Native.install(spark)
     Tables.events(spark, sfDir)
       .withColumn("k", expr("json_long(props, 'k')"))
       .filter($"k".isNotNull && $"k" >= 50)

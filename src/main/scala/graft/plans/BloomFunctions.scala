@@ -1,8 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression}
 
 /** SQL surface for Spark's OWN Bloom-filter expression pair — the
   * machinery behind `spark.sql.optimizer.runtime.bloomFilter.enabled`
@@ -20,41 +19,23 @@ import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expre
   *
   * Both are Spark classes (aggregate.BloomFilterAggregate,
   * BloomFilterMightContain) — no custom code evaluates; this file only
-  * routes them through the same registry/extension path as the graft
-  * native expressions. The l27 decontamination screen uses them for the
+  * holds their builders, which [[Native]] lists beside the graft native
+  * expressions. The l27 decontamination screen uses them for the
   * two-phase membership pattern: broadcast the sketch, prune the probe
   * side BEFORE its exchange, confirm survivors exactly (false positives
   * die in the exact join, so results never depend on the Bloom). */
 object BloomFunctions {
 
-  private val aggBuilder = (exprs: Seq[Expression]) => {
+  private[plans] val aggBuilder = (exprs: Seq[Expression]) => {
     require(exprs.length == 3,
       "graft_bloom_agg(value, estimatedItems, numBits) takes exactly 3 arguments")
     new BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
       .toAggregateExpression()
   }
 
-  private val probeBuilder = (exprs: Seq[Expression]) => {
+  private[plans] val probeBuilder = (exprs: Seq[Expression]) => {
     require(exprs.length == 2,
       "graft_might_contain(bloom, value) takes exactly 2 arguments")
     BloomFilterMightContain(exprs(0), exprs(1))
   }
-
-  /** Runtime registration (idempotent) — usable on any session. */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_agg", aggBuilder, "internal")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_might_contain", probeBuilder, "internal")
-  }
-
-  private[plans] def aggInjection = ((
-    org.apache.spark.sql.catalyst.FunctionIdentifier("graft_bloom_agg"),
-    new ExpressionInfo(classOf[BloomFilterAggregate].getName, "graft_bloom_agg"),
-    aggBuilder))
-
-  private[plans] def probeInjection = ((
-    org.apache.spark.sql.catalyst.FunctionIdentifier("graft_might_contain"),
-    new ExpressionInfo(classOf[BloomFilterMightContain].getName, "graft_might_contain"),
-    probeBuilder))
 }

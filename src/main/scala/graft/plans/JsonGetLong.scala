@@ -1,9 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -320,16 +319,6 @@ object JsonGetLong {
   private def isCastTrimWs(c: Byte): Boolean =
     c >= 0 && (Character.isWhitespace(c.toInt) || Character.isISOControl(c.toInt))
 
-  private val builder = (exprs: Seq[Expression]) =>
+  private[plans] val builder = (exprs: Seq[Expression]) =>
     JsonGetLong(exprs.head, exprs(1))
-
-  /** Runtime registration (idempotent) — usable on any session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "json_long", builder, "internal")
-
-  private[plans] def injection = ((
-    org.apache.spark.sql.catalyst.FunctionIdentifier("json_long"),
-    new ExpressionInfo(classOf[JsonGetLong].getName, "json_long"),
-    builder))
 }

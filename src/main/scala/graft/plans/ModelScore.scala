@@ -1,10 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, GenericInternalRow, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, TernaryExpression}
 import org.apache.spark.sql.catalyst.util.MapData
 import org.apache.spark.sql.types.{DataType, LongType, MapType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -110,18 +109,8 @@ object ModelScore {
     new GenericInternalRow(Array[Any](nTokens, acc))
   }
 
-  private val builder = (exprs: Seq[Expression]) => {
+  private[plans] val builder = (exprs: Seq[Expression]) => {
     require(exprs.length == 3, "model_score(text, vocab_map, oov) takes exactly 3 arguments")
     ModelScore(exprs.head, exprs(1), exprs(2))
   }
-
-  /** Runtime registration (idempotent) — usable on any session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("model_score", builder, "internal")
-
-  private[plans] def injection = ((
-    org.apache.spark.sql.catalyst.FunctionIdentifier("model_score"),
-    new ExpressionInfo(classOf[ModelScore].getName, "model_score"),
-    builder))
 }

@@ -1,9 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -66,15 +65,5 @@ object RollingFp {
     acc
   }
 
-  private val builder = (exprs: Seq[Expression]) => RollingFp(exprs.head)
-
-  /** Runtime registration (idempotent) — usable on any session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_fp", builder, "internal")
-
-  private[plans] def injection = ((
-    org.apache.spark.sql.catalyst.FunctionIdentifier("rolling_fp"),
-    new ExpressionInfo(classOf[RollingFp].getName, "rolling_fp"),
-    builder))
+  private[plans] val builder = (exprs: Seq[Expression]) => RollingFp(exprs.head)
 }

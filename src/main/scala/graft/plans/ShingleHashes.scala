@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -188,22 +187,11 @@ object ShingleHashes {
   }
 
   // SQL surface: shingle_hashes(text, k, algo) with foldable k/algo
-  private val builder = (exprs: Seq[Expression]) => {
+  private[plans] val builder = (exprs: Seq[Expression]) => {
     require(exprs.length == 3,
       "shingle_hashes(text, k, algo) takes exactly 3 arguments")
     ShingleHashes(exprs.head,
       FoldableArgs.int("shingle_hashes", "k", exprs(1)),
       FoldableArgs.string("shingle_hashes", "algo", exprs(2)))
   }
-
-  /** Runtime registration (idempotent) — usable on any session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_hashes", builder, "internal")
-
-  private[plans] def injection = ((
-    org.apache.spark.sql.catalyst.FunctionIdentifier("shingle_hashes"),
-    new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-      classOf[ShingleHashes].getName, "shingle_hashes"),
-    builder))
 }

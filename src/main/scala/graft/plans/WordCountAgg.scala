@@ -3,11 +3,10 @@ package graft.plans
 import java.io.{ByteArrayOutputStream, DataOutputStream}
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.types.{DataType, LongType, MapType, StringType}
@@ -148,18 +147,8 @@ case class WordCountAgg(
 
 object WordCountAgg {
 
-  private val builder = (exprs: Seq[Expression]) => {
+  private[plans] val builder = (exprs: Seq[Expression]) => {
     require(exprs.length == 1, "word_count_agg(text) takes exactly 1 argument")
     WordCountAgg(exprs.head).toAggregateExpression()
   }
-
-  /** Runtime registration (idempotent) — usable on any session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("word_count_agg", builder, "internal")
-
-  private[plans] def injection = ((
-    org.apache.spark.sql.catalyst.FunctionIdentifier("word_count_agg"),
-    new ExpressionInfo(classOf[WordCountAgg].getName, "word_count_agg"),
-    builder))
 }

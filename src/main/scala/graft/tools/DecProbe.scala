@@ -32,7 +32,7 @@ object DecProbe {
     val variants: Seq[(String, () => DataFrame)] = Seq(
       "q1_shipped" -> (() => graft.operators.Relational.q1PricingSummary(spark, dir)),
       "q1_centsfast" -> (() => {
-        graft.plans.Sum128.register(spark)
+        graft.plans.Native.install(spark)
         Tables.lineitem(spark, dir)
           .filter($"l_shipdate" <= lit("1998-09-02").cast("timestamp"))
           .select($"l_returnflag", $"l_linestatus", $"l_quantity",
@@ -110,7 +110,7 @@ object DecProbe {
           spark.table("hv_orders_b"), spark.table("hv_lineitem_b").hint("merge"))
       }),
       "q3b_postproj" -> (() => {
-        graft.plans.Sum128.register(spark)
+        graft.plans.Native.install(spark)
         val region = Tables.region(spark, dir).filter($"r_name" === "ASIA")
         val nation = Tables.nation(spark, dir)
           .join(broadcast(region), $"n_regionkey" === $"r_regionkey")

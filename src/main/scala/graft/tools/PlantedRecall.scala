@@ -41,8 +41,7 @@ object PlantedRecall {
     val dir = args.headOption.getOrElse("/root/repo/target/bench_heavy/sf5")
     val out = if (args.length > 1) args(1) else "tools/planted_recall.json"
     val spark = MakeHeavy.session()
-    graft.plans.DotF32.register(spark)
-    graft.plans.RademacherSigs.register(spark)
+    graft.plans.Native.install(spark)
     import spark.implicits._
 
     val emb = graft.Tables.embeddings(spark, dir).cache()

@@ -23,17 +23,7 @@ class CodegenSpec extends SparkSpecBase {
 
   test("all native expressions compile in whole-stage codegen (fallback off)") {
     import spark.implicits._
-    graft.plans.Md5Prefix48.register(spark)
-    graft.plans.ShingleHashes.register(spark)
-    graft.plans.MinHashSigs.register(spark)
-    graft.plans.RademacherSigs.register(spark)
-    graft.plans.DotF32.register(spark)
-    graft.plans.SimHashSig.register(spark)
-    graft.plans.DotI64.register(spark)
-    graft.plans.RollingFp.register(spark)
-    graft.plans.WinnowHashes.register(spark)
-    graft.plans.ModelScore.register(spark)
-    graft.plans.PqEncode.register(spark)
+    graft.plans.Native.install(spark)
     val docs = Seq((1L, "a b c d e f g"), (2L, "h i j k l m n"))
       .toDF("doc_id", "text")
     val vecs = Seq((1L, Array(0.1f, -0.2f, 0.3f, 0.4f)),

@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.plans.DotF32
+import graft.plans.Native
 
 /** Native expression vs composed built-in: bit-equal results, codegen path. */
 class DotF32Spec extends SparkSpecBase {
 
   test("dot_f32 is bit-equal to aggregate(zip_with(...)) on the embeddings table") {
-    DotF32.register(spark)
+    Native.install(spark)
     import spark.implicits._
     val emb = Tables.embeddings(spark, sfDir)
     val both = emb.select(
@@ -20,7 +20,7 @@ class DotF32Spec extends SparkSpecBase {
   }
 
   test("dot_f32 null and length semantics") {
-    DotF32.register(spark)
+    Native.install(spark)
     import spark.implicits._
     val df = Seq(
       (Some(Array(1f, 2f)), Some(Array(3f, 4f))),   // 3+8=11
@@ -32,7 +32,7 @@ class DotF32Spec extends SparkSpecBase {
   }
 
   test("dot_f32 propagates NULL on null array elements, like the composed form") {
-    DotF32.register(spark)
+    Native.install(spark)
     val r = spark.sql(
       "SELECT dot_f32(array(CAST(1 AS FLOAT), CAST(NULL AS FLOAT)), " +
         "array(CAST(1 AS FLOAT), CAST(1 AS FLOAT))) AS d").head()
@@ -46,7 +46,7 @@ class DotF32Spec extends SparkSpecBase {
   }
 
   test("dot_f32 participates in whole-stage codegen") {
-    DotF32.register(spark)
+    Native.install(spark)
     val plan = Tables.embeddings(spark, sfDir)
       .selectExpr("dot_f32(embedding, embedding) AS d")
       .queryExecution.executedPlan.toString

@@ -1,8 +1,12 @@
 package graft
 
+import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+
 /** The deployment surface: every tuned conf key must be accepted by a live
   * session (catches typo'd keys, which Spark silently ignores at builder
-  * time), and the extensions class must resolve and wire dot_f32. */
+  * time), the extensions class must resolve and inject every native
+  * function, and operators must install them without replacing any. */
 class GraftSessionSpec extends SparkSpecBase {
 
   test("every tunedConf key is a valid, runtime-settable Spark conf") {
@@ -25,12 +29,44 @@ class GraftSessionSpec extends SparkSpecBase {
     }
   }
 
-  test("extensions conf names a resolvable class that wires dot_f32") {
+  private def extensionsHook(): SparkSessionExtensions => Unit = {
     val (key, className) = GraftSession.extensionsConf
     assert(key === "spark.sql.extensions")
-    val ext = Class.forName(className).getDeclaredConstructor().newInstance()
-      .asInstanceOf[org.apache.spark.sql.SparkSessionExtensions => Unit]
-    ext.apply(new org.apache.spark.sql.SparkSessionExtensions) // must not throw
+    Class.forName(className).getDeclaredConstructor().newInstance()
+      .asInstanceOf[SparkSessionExtensions => Unit]
+  }
+
+  test("extensions conf names a resolvable extension class") {
+    extensionsHook().apply(new SparkSessionExtensions) // must not throw
+  }
+
+  test("the extension injects exactly the Native function list") {
+    val injected = scala.collection.mutable.ArrayBuffer.empty[String]
+    val recording = new SparkSessionExtensions {
+      override def injectFunction(f: FunctionDescription): Unit = {
+        injected += f._1.funcName
+        super.injectFunction(f)
+      }
+    }
+    extensionsHook().apply(recording)
+    val listed = graft.plans.Native.functions.map(_._1.funcName)
+    assert(injected.toSeq === listed)
+    assert(listed.distinct.size === listed.size, "a name is listed twice")
+    assert(Set("sum128", "simhash_sig").subsetOf(injected.toSet))
+  }
+
+  test("repeated operator calls install simhash_sig once, never replace it") {
+    val s = spark.newSession() // fresh registry: no extension, nothing installed
+    val id = FunctionIdentifier("simhash_sig")
+    val registry = s.sessionState.functionRegistry
+    assert(registry.lookupFunction(id).isEmpty)
+    val docs = s.createDataFrame(Seq((1L, "a b c d"), (2L, "e f g h")))
+      .toDF("doc_id", "text")
+    assert(graft.llm.Dedup.simhashed(docs).collect().length === 2)
+    val first = registry.lookupFunction(id).get
+    assert(first.getClassName === classOf[graft.plans.SimHashSig].getName)
+    assert(graft.llm.Dedup.simhashed(docs).collect().length === 2)
+    assert(registry.lookupFunction(id).get eq first)
   }
 
   test("tuned builder produces a session with the knobs set (same-JVM getOrCreate)") {
@@ -44,7 +80,7 @@ class GraftSessionSpec extends SparkSpecBase {
 
   test("dot_f32 registers and evaluates on a fresh session") {
     val s = spark.newSession()
-    graft.plans.DotF32.register(s)
+    graft.plans.Native.install(s)
     val r = s.sql("SELECT dot_f32(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)), " +
       "array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d").head().getDouble(0)
     assert(r === 11.0)

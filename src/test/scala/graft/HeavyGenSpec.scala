@@ -23,7 +23,7 @@ class HeavyGenSpec extends SparkSpecBase {
 
   test("replica transform is orthogonal: pairwise dots match the base corpus") {
     import spark.implicits._
-    graft.plans.DotF32.register(spark)
+    graft.plans.Native.install(spark)
     val emb = Tables.embeddings(spark, sfDir).filter($"vec_id" < 40)
     def dots(col: String): Array[Double] = {
       val a = emb.select($"vec_id".as("ia"), expr(col).as("ea"))

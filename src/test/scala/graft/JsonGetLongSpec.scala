@@ -12,7 +12,7 @@ class JsonGetLongSpec extends SparkSpecBase {
 
   private def both(cases: Seq[String], key: String = "k"): Seq[(String, Any, Any)] = {
     import spark.implicits._
-    graft.plans.JsonGetLong.register(spark)
+    graft.plans.Native.install(spark)
     cases.toDF("j")
       .select($"j",
         expr(s"json_long(j, '$key')").as("native"),
@@ -132,7 +132,7 @@ class JsonGetLongSpec extends SparkSpecBase {
     // plain-identifier contract), which is the one intentional
     // divergence.
     import spark.implicits._
-    graft.plans.JsonGetLong.register(spark)
+    graft.plans.Native.install(spark)
     val rng = new scala.util.Random(20260815L)
     val wsPool = " \t\n\r"
     def ws(): String = if (rng.nextInt(3) == 0) wsPool(rng.nextInt(4)).toString else ""
@@ -214,7 +214,7 @@ class JsonGetLongSpec extends SparkSpecBase {
 
   test("fixture parity end-to-end plus the p5 plan stays codegen'd and shuffle-free up to the sort") {
     import spark.implicits._
-    graft.plans.JsonGetLong.register(spark)
+    graft.plans.Native.install(spark)
     val diverged = Tables.events(spark, sfDir)
       .select(
         expr("json_long(props, 'k')").as("native"),

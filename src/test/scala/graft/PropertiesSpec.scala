@@ -310,7 +310,7 @@ class PropertiesSpec extends SparkSpecBase {
     // Spark's own Jackson path run over the SAME column — the contract
     // JsonGetLongSpec pins case-by-case, here sampled at breadth.
     import spark.implicits._
-    graft.plans.JsonGetLong.register(spark)
+    graft.plans.Native.install(spark)
     val genKeyVal: Gen[String] = Gen.oneOf(
       Gen.chooseNum(Long.MinValue + 1, Long.MaxValue).map(_.toString),
       Gen.chooseNum(-999999L, 999999L).map(n => "\"" + n + "\""),
