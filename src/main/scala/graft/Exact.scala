@@ -31,12 +31,13 @@ object Exact {
     * not `round(x*100)` either: BOTH of those allocate a BigDecimal per
     * row (the decimal cast's shortest-string valueOf + setScale, and
     * Spark's Round, which round-trips doubles through BigDecimal.
-    * valueOf().setScale()), which DecProbe measured at ~25% of q1's
-    * whole runtime at the 150M-row tier. The FP form is whole-stage
-    * arithmetic with zero allocation: x*100 lands within ±0.25 of the
-    * true cent integer c on the contract domain, so trunc-toward-zero
-    * of (x*100 + sign*0.5) ∈ (c ± (0.25..0.75)) recovers c exactly,
-    * both signs. On
+    * valueOf().setScale()), which a round-13 A/B measured at ~25% of
+    * q1's whole runtime at the 150M-row tier (CROSSOVER.md's q1 section
+    * records the decimal form at 4.56s vs 1.64s for this one with
+    * sum128). The FP form is whole-stage arithmetic with zero
+    * allocation: x*100 lands within ±0.25 of the true cent integer c on
+    * the contract domain, so trunc-toward-zero of (x*100 + sign*0.5) ∈
+    * (c ± (0.25..0.75)) recovers c exactly, both signs. On
     * the [[money]] contract's domain — values that ARE 2-decimal
     * decimals carried in doubles, |cents| < 2^51 (~$22.5T per value) —
     * the two are equal on every input: x's representation error and

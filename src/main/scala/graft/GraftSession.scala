@@ -47,11 +47,11 @@ object GraftSession {
     // highly compressible columns expand 10x+ — and SHJ build maps do
     // NOT spill): budget PER EXECUTOR is cores x (threshold x expansion);
     // at 8 cores/8 GB the 256m default already sums past the heap in the
-    // worst case, so memory-tight deployments must lower it. Overridable
-    // without a rebuild via GRAFT_SHJ_THRESHOLD (e.g. "64m" or "0" to
-    // disable the conversion), mirroring Bench's SPARK_GRAFT_AQE toggle.
-    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" ->
-      sys.env.getOrElse("GRAFT_SHJ_THRESHOLD", "256m"),
+    // worst case, so memory-tight deployments must lower it ("64m", or
+    // "0" to disable the conversion) through the Spark key itself: a later
+    // `.config` on the builder, or `spark.conf.set` on a live session,
+    // since the key is runtime-settable.
+    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold" -> "256m",
     "spark.sql.shuffle.partitions" -> shufflePartitions.toString,
     "spark.sql.files.maxPartitionBytes" -> (128L * 1024 * 1024).toString,
     "spark.sql.session.timeZone" -> "UTC",
@@ -125,11 +125,14 @@ object GraftSession {
     withRuntime.config(extensionsConf._1, extensionsConf._2)
   }
 
-  /** Local development/test session (local[n], n shuffle partitions). */
-  def local(cores: Int): SparkSession = {
-    val s = tuned(SparkSession.builder().master(s"local[$cores]"), cores)
+  /** Local session (local[n], n shuffle partitions): the one session
+    * graftbench and every `graft.tools` main build. `warehouse` is
+    * where managed tables live (the heavy tiers keep their bucketed
+    * copies beside the data). */
+  def local(cores: Int, warehouse: Option[String] = None): SparkSession = {
+    val b = tuned(SparkSession.builder().master(s"local[$cores]"), cores)
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = warehouse.fold(b)(b.config("spark.sql.warehouse.dir", _)).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -114,9 +114,8 @@ object SparkEntry {
     "l16_domain_cap" -> (graft.llm.TextAnalysis.l16DomainCap _),
     // l2f in the default suite = the two native endpoints: md5p48 (oracle
     // anchor, collision-free equality with the md5-keyed SQL) and xxh64
-    // (production digest). The interpreted/positional ladder rungs that
-    // motivated plans.ShingleHashes live in [[ladderQueries]] (opt-in,
-    // benched by BenchHeavy; analysis in BENCHNOTES_HEAVY).
+    // (production digest). The interpreted/positional forms that
+    // motivated plans.ShingleHashes are measured in BENCHNOTES_HEAVY.
     "l2f_decontam" -> (graft.llm.Dedup.l2fDecontamMd5 _),
     "l2f_gen" -> (graft.llm.Dedup.l2fDecontamGen _),
     "l27_bloom_decontam" -> (graft.llm.Dedup.l27BloomDecontam _),
@@ -212,27 +211,6 @@ object SparkEntry {
     "u2_scd2" -> (Quality.u2Scd2 _),
     "u3_merge_upsert" -> (Quality.u3MergeUpsert _),
     "l10_pii_redact" -> (graft.llm.TextAnalysis.l10PiiRedact _),
-  )
-
-  /** Opt-in registry: the measured NEGATIVE-result rungs of the l2f
-    * shingle-cost ladder (BENCHNOTES_HEAVY). Not part of the driver's
-    * correctness/bench suite — they are kept as reproducible evidence for
-    * the interpreted-lambda tax that motivated plans.ShingleHashes, and
-    * BenchHeavy times them on demand. LadderSpec pins each rung's RESULT
-    * to the suite's l2f_decontam (same md5-keyed semantics), so eviction
-    * from the default suite loses no correctness coverage.
-    *
-    *  - l2f_interp_md5: interpreted-`transform` shingles, md5p48 keys
-    *    (the suite's pre-round-6 "l2f_decontam" baseline)
-    *  - l2f_xxh: interpreted shingles, xxh64 keys
-    *  - l2f_roll: lambda-interior positional multi-arg hash (slowest)
-    *  - l2f_pos: zero-lambda positional keys (second-fastest) */
-  def ladderQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "l2f_interp_md5" -> (graft.llm.Dedup.l2fDecontam _),
-    "l2f_xxh" -> (graft.llm.Dedup.l2fDecontamXx _),
-    "l2f_roll" -> (graft.llm.Dedup.l2fDecontamRoll _),
-    "l2f_pos" -> (graft.llm.Dedup.l2fDecontamPos _),
-    "p5_jackson" -> (graft.operators.Relational.p5ValidityFilterJackson _),
   )
 
   /** Single source of truth for the listing page size (main.rs:120). */
@@ -2083,7 +2061,7 @@ object SparkEntry {
     "l2f_decontam" -> l2fOracle,
     // xxh64 production digest: the hash is join-internal, so the md5-keyed
     // oracle is the exact expected output and equality doubles as the
-    // per-run zero-collision check (ladder rungs: see ladderQueries)
+    // per-run zero-collision check
     "l2f_gen" -> l2fOracle,
     // l27 = l2f_gen with a Bloom prefilter whose false positives die in
     // the exact-confirm join — results are identical BY CONSTRUCTION at

@@ -58,15 +58,6 @@ object Dedup {
       .withColumn("sigs", expr(s"minhash_sigs(text, $SHINGLE_K, $numHashes)"))
   }
 
-  /** One row per (doc, shingle hash) with the doc's shingle count, with a
-    * caller-chosen shingle hash expression over `s`. The hash key never
-    * appears in any output — only pair counts derived from equality on it
-    * — so any collision-sparse 64-bit hash yields identical results.
-    * The digest runs in a flat codegen'd projection AFTER the explode, but
-    * the shingle STRINGS are still built in an interpreted `transform`
-    * lambda — this is the measured middle rung of the shingle-cost ladder
-    * (BENCHNOTES_HEAVY l2f); only the l2f baseline variants still use it,
-    * production paths use [[explodedShingleHashesNative]]. */
   /** Shingle STRINGS exploded per doc — the independent re-derivation
     * path specs use to cross-check the hashed production forms (a hash
     * bug upstream cannot hide behind the same hash downstream). */
@@ -76,71 +67,6 @@ object Dedup {
       .filter(size(col("words")) >= SHINGLE_K)
       .withColumn("shingles", shinglesExpr)
       .select(col("doc_id"), explode(col("shingles")).as("shingle"))
-
-  private def explodedShingleHashesBy(docs: DataFrame, hashSql: String): DataFrame = {
-    graft.plans.Native.install(docs.sparkSession)
-    docs
-      .withColumn("words", wordsCol)
-      .filter(size(col("words")) >= SHINGLE_K)
-      .withColumn("shingles", shinglesExpr)
-      .select(col("doc_id"), size(col("shingles")).cast("long").as("n_sh"),
-        explode(col("shingles")).as("s"))
-      .select(col("doc_id"), col("n_sh"), expr(hashSql).as("sh"))
-  }
-
-  /** Positional shingle keys without shingle strings: each shingle's key
-    * is the native multi-argument `xxhash64` over its 5 words — no 5-word
-    * concat is ever materialized. The key is join-internal like the xx
-    * variants, so the md5-shingle oracle stays the expected output and
-    * equality is the per-run collision check.
-    *
-    * MEASURED NEGATIVE RESULT (kept deliberately): at sf0.1 this runs ~3x
-    * slower than [[l2fDecontamXx]] (9.5s vs 3.1s), because higher-order
-    * lambdas evaluate INTERPRETED — never codegen'd — and the per-shingle
-    * hash sits inside one. Two rewrites confirmed the interpreted
-    * tree-walk (boxing per node) is the cost, not the hashing: hashing
-    * each word once and combining 5 word-hashes per shingle with XOR-of-
-    * rotations arithmetic (more, cheaper nodes in the lambda) measured
-    * 28s — node count, not node cost, dominates. On Spark the winning
-    * shape is l2f_xxh's: keep the lambda minimal (build the shingle
-    * string), explode, and hash in the codegen'd projection. The concat
-    * the roll form avoids was never the bottleneck. */
-  private def rollShingleKeys: Column = {
-    val words = (0 until SHINGLE_K).map(k => s"element_at(words, i + $k)").mkString(", ")
-    expr(s"array_distinct(transform(sequence(1, size(words) - ${SHINGLE_K - 1}), i -> xxhash64($words)))")
-  }
-
-  private def explodedShingleRoll(docs: DataFrame): DataFrame =
-    docs
-      .withColumn("words", wordsCol)
-      .filter(size(col("words")) >= SHINGLE_K)
-      .withColumn("sks", rollShingleKeys)
-      .select(col("doc_id"), size(col("sks")).cast("long").as("n_sh"),
-        explode(col("sks")).as("sh"))
-
-  /** ZERO-lambda positional shingle keys — the production decontamination
-    * shape (`l2f_pos`): explode shingle START POSITIONS (`sequence` takes
-    * no lambda), then build and hash each shingle in the flat post-explode
-    * projection, where `slice`/`array_join`/`xxhash64` all run inside
-    * whole-stage codegen and Generate pipelines `words` by reference (the
-    * array is never copied per output row — the stage fuses scan → split →
-    * generate → hash). This is the endpoint of the lambda-cost ladder that
-    * [[rollShingleKeys]] mapped out: l2f_xxh still pays one interpreted
-    * `transform` building shingle strings; this form pays none.
-    *
-    * No pre-explode `array_distinct` exists here (there is no shingle
-    * array to distinct), so duplicate in-doc shingles survive to the join
-    * and the aggregate must count DISTINCT hashes — the roll form's
-    * collision posture (a 64-bit collision undercounts by merging two
-    * shingles; oracle equality is the per-run check). */
-  private def explodedShinglePos(docs: DataFrame): DataFrame =
-    docs
-      .withColumn("words", wordsCol)
-      .filter(size(col("words")) >= SHINGLE_K)
-      .select(col("doc_id"), col("words"),
-        explode(expr(s"sequence(1, size(words) - ${SHINGLE_K - 1})")).as("i"))
-      .select(col("doc_id"),
-        expr(s"xxhash64(array_join(slice(words, i, $SHINGLE_K), ' '))").as("sh"))
 
   /** L1: exact dedup — content-hash the text, keep the smallest doc_id as
     * representative. One shuffle on the 32-byte hash, never on the text. */
@@ -423,61 +349,21 @@ object Dedup {
     * training corpus runs before release: flag corpus documents sharing
     * ANY 5-gram shingle with a benchmark/seed set (stand-in here: docs
     * with doc_id < 50). The benchmark's shingle-hash set broadcasts (it is
-    * small by construction); the corpus side joins on the 48-bit hash with
-    * no shuffle before the per-doc count — one corpus scan regardless of
-    * benchmark count, the l3d decontamination shape applied to text. */
-  def l2fDecontam(spark: SparkSession, sfDir: String): DataFrame =
-    decontamBy(spark, sfDir, "md5_prefix48(s)")
-
-  /** L2f on `xxhash64` shingle keys — same swappable-hash argument as
-    * [[l2dNgramJaccardXx]]: the key is join-internal, so the md5-keyed
-    * oracle is the exact expected output and equality doubles as the
-    * zero-collision check. */
-  def l2fDecontamXx(spark: SparkSession, sfDir: String): DataFrame =
-    decontamBy(spark, sfDir, "xxhash64(s)")
-
-  /** L2f on positional multi-arg-hash keys (see [[rollShingleKeys]]) — a
-    * measured NEGATIVE result kept as documentation: the lambda-interior
-    * hash makes it ~3x slower than [[l2fDecontamXx]], which is the
-    * production speed tier. */
-  def l2fDecontamRoll(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val docs = Tables.documents(spark, sfDir)
-    val bench = explodedShingleRoll(docs.filter($"doc_id" < 50)).select($"sh").distinct()
-    val corpus = explodedShingleRoll(docs.filter($"doc_id" >= 50)).select($"doc_id", $"sh")
-    corpus.join(broadcast(bench), "sh")
-      .groupBy($"doc_id")
-      .agg(count(lit(1)).as("n_shared"))
-      .orderBy($"doc_id")
-  }
-
-  /** L2f on zero-lambda positional keys (see [[explodedShinglePos]]) —
-    * the second-to-last ladder rung (l2f_gen's native expression halves it
-    * again): every per-shingle operation runs post-explode inside
-    * whole-stage codegen. The md5-keyed oracle stays
-    * the expected output (hash is join-internal) and equality doubles as
-    * the per-run collision check. `countDistinct` replaces the plain count
-    * because the positional form has no pre-explode distinct; the join has
-    * already filtered to shared shingles, so the two-phase distinct runs
-    * over the small contaminated subset, not the corpus. */
-  def l2fDecontamPos(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val docs = Tables.documents(spark, sfDir)
-    val bench = explodedShinglePos(docs.filter($"doc_id" < 50)).select($"sh").distinct()
-    val corpus = explodedShinglePos(docs.filter($"doc_id" >= 50)).select($"doc_id", $"sh")
-    corpus.join(broadcast(bench), "sh")
-      .groupBy($"doc_id")
-      .agg(countDistinct($"sh").as("n_shared"))
-      .orderBy($"doc_id")
-  }
-
-  /** L2f on the native one-pass shingle expression
-    * ([[graft.plans.ShingleHashes]]) — the endpoint of the ladder the
-    * other variants measured: no shingle string, no word array re-slice,
-    * no lambda anywhere; each hash is computed off the parent string's
-    * bytes inside whole-stage codegen and arrives pre-deduped per doc, so
-    * the aggregate is a plain count (hash-distinct semantics, the same
-    * collision posture as l2f_pos, checked per-run by the md5 oracle). */
+    * small by construction); the corpus side joins on the hash with no
+    * shuffle before the per-doc count — one corpus scan regardless of
+    * benchmark count, the l3d decontamination shape applied to text.
+    *
+    * Shingles come from the native one-pass expression
+    * ([[graft.plans.ShingleHashes]]): no shingle string, no word array
+    * re-slice, no lambda anywhere; each hash is computed off the parent
+    * string's bytes inside whole-stage codegen and arrives pre-deduped per
+    * doc, so the aggregate is a plain count (hash-distinct semantics: a
+    * 64-bit collision would merge two shingles, checked per run by the
+    * md5 oracle). This is the endpoint of the shingle-cost ladder
+    * BENCHNOTES_HEAVY records: building shingle strings in an interpreted
+    * `transform` lambda cost ~11s at sf5 and hashing inside the lambda
+    * ~25s, against ~0.7s for positions exploded and hashed post-explode
+    * and ~0.6s here. */
   def l2fDecontamGen(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     graft.plans.Native.install(spark)
@@ -563,36 +449,6 @@ object Dedup {
       .orderBy($"doc_id")
   }
 
-  /** DELIBERATELY the interpreted-`transform` form: the l2f_interp_md5 /
-    * l2f_xxh ladder rungs (opt-in registry, benched by BenchHeavy) are the
-    * measured baseline rungs of the shingle-cost ladder (BENCHNOTES_HEAVY)
-    * that motivated plans.ShingleHashes — production callers use
-    * [[l2fDecontamGen]] (xxh64) or [[l2fDecontamMd5]] (oracle anchor). */
-  private def decontamBy(spark: SparkSession, sfDir: String, hashSql: String): DataFrame = {
-    import spark.implicits._
-    val docs = Tables.documents(spark, sfDir)
-    val bench = explodedShingleHashesBy(docs.filter($"doc_id" < 50), hashSql)
-      .select($"sh").distinct()
-    val corpus = explodedShingleHashesBy(docs.filter($"doc_id" >= 50), hashSql)
-      .select($"doc_id", $"sh")
-    // (doc_id, sh) is distinct by construction — shingles are
-    // array_distinct'd per doc before exploding and the broadcast side is
-    // distinct — so a plain count equals COUNT(DISTINCT sh) (the oracle's
-    // form) while aggregating in one cheap partial+final pass instead of
-    // the two-phase distinct machinery. Caveat: per-doc distinctness here
-    // holds on the shingle STRING, so a 48/64-bit collision between two
-    // distinct strings yields duplicate (doc_id, sh) rows and count(1)
-    // OVERCOUNTS where COUNT(DISTINCT sh) would absorb it. (The roll path,
-    // l2fDecontamRoll, distincts the HASHES instead — a collision there
-    // merges two shingles and undercounts.) Either way the hash, not the
-    // string, carries the semantics; oracle equality vs the md5-keyed
-    // COUNT(DISTINCT) SQL is the per-run zero-collision check.
-    corpus.join(broadcast(bench), "sh")
-      .groupBy($"doc_id")
-      .agg(count(lit(1)).as("n_shared"))
-      .orderBy($"doc_id")
-  }
-
   /** L2c: SimHash — 16-bit signature; per bit, every word votes ±1 by a
     * bit of its md5 digest, weighted by term frequency. Pure per-row
     * projection, no shuffle until the final cluster window. */
@@ -668,8 +524,7 @@ object Dedup {
 
   /** L2d on `xxhash64` shingle keys instead of md5: the 64-bit key is
     * just as collision-sparse, so the pair set — and therefore every
-    * output row — is identical (the hash never leaves the plan; see
-    * [[explodedShingleHashesBy]]). Measured at the sf5 heavy tier the
+    * output row — is identical (the hash never leaves the plan). Measured at the sf5 heavy tier the
     * end-to-end time matches l2d's (BENCHNOTES_HEAVY) — the native
     * [[graft.plans.Md5Prefix48]] already removed the digest from the
     * critical path and the self-join pair volume dominates. The variant
@@ -947,7 +802,7 @@ object Dedup {
     *  1. anchor duplication is ONE corpus-wide window keyed by the 48-bit
     *     span hash (l14's posture) over (doc_id, n_words, i, sh) rows —
     *     the 5-gram string is built and hashed in the codegen'd
-    *     post-explode projection (the l2f_pos shape) and dies before the
+    *     post-explode projection (positions exploded, no lambda) and dies before the
     *     exchange;
     *  2. only FLAGGED positions (df >= 2) regroup by doc_id for the
     *     islands pass — sparse duplication ships a sparse stream; the

@@ -340,7 +340,7 @@ object TextAnalysis {
   def l17bBigramLogprob(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val docs = Tables.documents(spark, sfDir)
-    // zero-lambda positional scoring (the l2f_pos shape): posexplode the
+    // zero-lambda positional scoring (positions exploded, no lambda): posexplode the
     // token positions and compute each token's micronats in the flat
     // post-Generate projection — element_at/concat/try_element_at all run
     // inside whole-stage codegen and Generate pipelines `words` by

@@ -307,8 +307,8 @@ object Analytics {
     // rev4 projection sits ABOVE the join: q3's lineitem side carries no
     // filter, so computing it below would pay the arithmetic on EVERY
     // item row while the orders date filter then drops ~6/7 of them —
-    // measured 2.1x on the whole bucketed query (DecProbe q3b_shipped
-    // 3.5s vs q3b_postproj 1.7s at 150M rows); the join payload trades
+    // measured 2.1x on the whole bucketed query at 150M rows
+    // (BENCHNOTES_HEAVY's q3_bucketed note); the join payload trades
     // one long for two raw doubles, a width the saved work dwarfs.
     graft.plans.Native.install(spark)
     val items = lineitem
@@ -352,9 +352,8 @@ object Analytics {
     * accuracy parameter, NEVER by group size) with the a6b in-row band.
     * The exact-buffering `percentile` form this row used to carry is the
     * survey's own named OOM path (every group value buffered in one
-    * executor); it remains available as [[a9ExactPercentiles]] for the
-    * spec ladder, but no DECLARED query's memory now grows with group
-    * size — the exact GRADED family is a13's two-phase selection.
+    * executor) and is retired: no DECLARED query's memory grows with
+    * group size — the exact GRADED family is a13's two-phase selection.
     *
     * The band is rank-based and computed in-query: for each group the GK
     * value v_q must satisfy |rank(v_q)/n − q| ≤ 0.01 (accuracy 1000 →
@@ -386,22 +385,6 @@ object Analytics {
       .select($"o_orderpriority", $"n", $"sum_cents",
         (abs($"le_med" / $"n".cast("double") - 0.5) <= 0.01).as("band_p50_ok"),
         (abs($"le_p90" / $"n".cast("double") - 0.9) <= 0.01).as("band_p90_ok"))
-      .orderBy($"o_orderpriority")
-  }
-
-  /** The pre-r16 exact form of a9 (`percentile` = ANSI percentile_cont):
-    * correct, and the right tool when groups are known-small, but its
-    * aggregation state is EVERY group value — the documented negative at
-    * 100 TB group sizes. Kept for the spec ladder (SemanticsSpec pins it
-    * equal to the oracle's quantile_cont at test scale); the graded exact
-    * family is [[a13ExactPercentiles]]. */
-  private[graft] def a9ExactPercentiles(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    Tables.orders(spark, sfDir)
-      .groupBy($"o_orderpriority")
-      .agg(
-        expr("percentile(o_totalprice, 0.5)").as("med"),
-        expr("percentile(o_totalprice, 0.9)").as("p90"))
       .orderBy($"o_orderpriority")
   }
 

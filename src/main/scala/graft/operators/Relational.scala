@@ -25,8 +25,9 @@ object Relational {
     * Money rides as exact integer cents into `sum128` (plans/Sum128:
     * int128 accumulation in three primitive buffer longs) instead of
     * SUM(DECIMAL), whose >18-digit buffer boxes a BigDecimal per row —
-    * that box was ~40% of this query at the sf25 tier (DecProbe: 4.57s
-    * -> 2.70s). Values are unchanged: the 2dp/4dp integer sums are the
+    * that box was ~40% of this query at the sf25 tier (4.57s -> 2.70s in
+    * a round-13 A/B; BENCHNOTES_SF25's q1 note records the whole rework,
+    * 5.25s -> 1.58s). Values are unchanged: the 2dp/4dp integer sums are the
     * decimal sums' exact unscaled values and the final DOUBLE casts are
     * correctly rounded on both paths, so the query stays hash-exact vs
     * the DECIMAL-sum oracle. q1 groups are O(corpus/4) rows, so the raw
@@ -127,19 +128,6 @@ object Relational {
     graft.plans.Native.install(spark)
     Tables.events(spark, sfDir)
       .withColumn("k", expr("json_long(props, 'k')"))
-      .filter($"k".isNotNull && $"k" >= 50)
-      .select($"event_id", $"k")
-      .orderBy($"event_id")
-  }
-
-  /** The get_json_object form [[p5ValidityFilter]] retired — kept as the
-    * measured ladder rung (SparkEntry.ladderQueries, the l2f_interp_md5
-    * convention): identical semantics, full Jackson tokenizer per row,
-    * so BENCHNOTES_HEAVY's Jackson-vs-native gap stays reproducible. */
-  def p5ValidityFilterJackson(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    Tables.events(spark, sfDir)
-      .withColumn("k", expr("try_cast(get_json_object(props, '$.k') AS BIGINT)"))
       .filter($"k".isNotNull && $"k" >= 50)
       .select($"event_id", $"k")
       .orderBy($"event_id")

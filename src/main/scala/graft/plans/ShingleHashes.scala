@@ -12,12 +12,11 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Native Catalyst expression: the DISTINCT hashed word k-gram shingles of
   * a string as ARRAY<BIGINT>, in one pass over the UTF-8 bytes.
   *
-  * This is the endpoint of the shingle-cost ladder the l2f variants
-  * measured (llm/Dedup.scala): the SQL forms either build every shingle
-  * string inside a higher-order `transform` lambda (interpreted, boxed
-  * tree-walk per element — l2f_decontam/l2f_xxh) or explode positions and
-  * re-slice the word array per row (codegen'd but re-materializing ~k
-  * words per shingle — l2f_pos). Here the shingle is never materialized at
+  * This is the endpoint of the shingle-cost ladder BENCHNOTES_HEAVY
+  * records for l2f: the SQL forms either build every shingle string
+  * inside a higher-order `transform` lambda (interpreted, boxed tree-walk
+  * per element) or explode positions and re-slice the word array per row
+  * (codegen'd but re-materializing ~k words per shingle). Here the shingle is never materialized at
   * all: a word k-gram joined by single spaces is EXACTLY a byte region of
   * the original string (split-on-' '/rejoin-with-' ' is the identity on
   * any region, including empty words from doubled spaces), so each
@@ -29,13 +28,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * `algo` selects the hash family so every existing shingle consumer can
   * adopt it without changing results:
   *  - `xxh64`: bit-equal to `xxhash64(shingle_string)` (seed 42 over the
-  *    UTF-8 bytes — the l2f_xxh/l2f_pos key).
+  *    UTF-8 bytes).
   *  - `md5p48`: bit-equal to `md5_prefix48(shingle_string)` (the
   *    [[Md5Prefix48]] key every md5-anchored oracle replays).
   *
   * Dedup happens on the HASH, not the string: a within-doc collision
-  * between distinct shingles merges them (undercount) — the documented
-  * posture of the l2f_pos/l2f_roll family; oracle equality vs the
+  * between distinct shingles merges them (undercount); oracle equality vs the
   * md5-keyed COUNT(DISTINCT) SQL is the per-run collision check.
   */
 case class ShingleHashes(child: Expression, k: Int, algo: String)

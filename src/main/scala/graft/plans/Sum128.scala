@@ -17,7 +17,8 @@ import org.apache.spark.sql.types._
   * Decimal leaves the compact-long representation — every per-row update
   * round-trips a heap BigDecimal through the UnsafeRow's 16-byte slot.
   * On q1's four money sums at the sf25 tier that is ~40% of the query
-  * (DecProbe: 4.57s -> 2.70s with long accumulators). A raw BIGINT sum
+  * (4.57s -> 2.70s with long accumulators in a round-13 A/B;
+  * BENCHNOTES_SF25's q1 note records the whole rework, 5.25s -> 1.58s). A raw BIGINT sum
   * has the right speed but the wrong domain: 4dp-scaled money terms
   * (~10^9 per row) overflow a signed long near 10^10 rows per group —
   * real at the 100 TB design point, where a q1 group is O(corpus/4).

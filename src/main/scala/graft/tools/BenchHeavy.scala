@@ -46,7 +46,7 @@ object MakeHeavy {
     // e.g. adding one table to an existing tier without the docs crossJoin)
     val onlyTables = args.drop(3).toSet
     def want(t: String): Boolean = onlyTables.isEmpty || onlyTables(t)
-    val spark = session(Some(s"$out/warehouse"))
+    val spark = graft.GraftSession.local(cpus, Some(s"$out/warehouse"))
     import spark.implicits._
     val reps = broadcast(spark.range(copies).toDF("k"))
 
@@ -162,24 +162,9 @@ object MakeHeavy {
     spark.stop()
   }
 
-  private[tools] def session(warehouse: Option[String] = None): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // graft.Bench's r15 static conf, mirrored (the BenchHeavy sweep
-      // runs ~80 distinct plans in one JVM — the default 100-entry
-      // codegen cache thrashes exactly like the 170-query suite did)
-      .config("spark.sql.codegen.cache.maxEntries", "4000")
-      .config("spark.ui.enabled", "false")
-    warehouse.foreach(b.config("spark.sql.warehouse.dir", _))
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** Local cores for the tools' sessions: `SPARK_GRAFT_CPUS`, default 32
+    * (the heavy tiers' host). */
+  private[tools] def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
 
   /** Re-register the bucketed tables written by a previous MakeHeavy run:
     * the in-memory catalog forgets metadata between JVMs but the bucketed
@@ -215,9 +200,6 @@ object BenchHeavy {
     "q3_revenue_by_nation", "s5_s6_partitioned_sink", "l1_exact_dedup",
     "w1_topk_per_group", "r4_session_window", "a9_percentiles",
     "s4_point_lookup", "l2f_decontam", "l2f_gen",
-    // the l2f ladder rungs live in SparkEntry.ladderQueries (opt-in,
-    // negative results kept reproducible — BENCHNOTES_HEAVY has the story)
-    "l2f_interp_md5", "l2f_xxh", "l2f_roll", "l2f_pos",
     "l4f_repetition_stats", "l9_sequence_pack", "l11_source_mix",
     "l4g_quality_filter", "l1_xxh",
     // ANN family at scale (needs the round-6 MakeHeavy embeddings). The
@@ -313,11 +295,8 @@ object BenchHeavy {
     // where r11 priced the per-query training re-derivation instead
     "l29b_cluster_profile", "l30_cluster_prune", "r14_stream_cluster_assign",
     // round 12: the JSON-parse per-byte term priced at a tier where it is
-    // compute, not job floor — the p5/f2 watch item from the r11 verdict.
-    // p5_jackson is the retired get_json_object rung (ladder convention):
-    // identical semantics, full tokenizer per row, kept so the
-    // Jackson-vs-from_json-vs-native gap stays measured on demand
-    "p5_validity_filter", "f2_json_parse", "p5_jackson",
+    // compute, not job floor — the p5/f2 watch item from the r11 verdict
+    "p5_validity_filter", "f2_json_parse",
     // round 12: the rank family (ntile/percent_rank/cume_dist over one
     // window) — the last sf0.1 row at >=2x with a real denominator and
     // no tier point; prices the single user-keyed window exchange
@@ -330,10 +309,9 @@ object BenchHeavy {
 
   /** The sf25 scale-sweep subset (BENCHNOTES_SF25.md): the text/dedup
     * production paths — the compute-bound queries whose sf5→sf25 ratio
-    * trend is the "would this survive 100x" evidence. Ladder baselines and
-    * the mis-sized 8-bit ANN forms are excluded (their cost is documented
-    * once at sf5); l2f_pos stays as the one ladder rung cheap enough to
-    * track across tiers. Invoke as `BenchHeavy <sf25Dir> --sf25`.
+    * trend is the "would this survive 100x" evidence. The mis-sized 8-bit
+    * ANN forms are excluded (their cost is documented once at sf5).
+    * Invoke as `BenchHeavy <sf25Dir> --sf25`.
     *
     * The ANN family is deliberately NOT here: at sf25 l3g_sized runs ~100s
     * per pass, and keeping it in the interleaved sweep poisons every other
@@ -350,7 +328,7 @@ object BenchHeavy {
   val SF25_QUERIES: Seq[String] = Seq(
     "l2d_ngram_jaccard", "l7_tfidf_topterms", "l2e_connected_components",
     "l2b_lsh_candidates", "l4f_repetition_stats", "l4g_quality_filter",
-    "l2f_pos", "l2f_gen", "l2f_decontam", "l1_exact_dedup", "l11_source_mix",
+    "l2f_gen", "l2f_decontam", "l1_exact_dedup", "l11_source_mix",
     "q1_pricing_summary", "l1_xxh", "l9_sequence_pack", "l13_corpus_export",
     // round 9: the model-scored filter's sf5->sf25 trend — the build pass
     // is the vocab-sized exchange, the scoring pass is shuffle-free, so
@@ -424,14 +402,13 @@ object BenchHeavy {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/repo/target/bench_heavy/sf5")
-    // optional trailing args: run only these queries (scale-sweep aid —
-    // at sf25+ the deliberate ladder baselines would dominate the wall);
+    // optional trailing args: run only these queries (scale-sweep aid);
     // `--sf25` expands to the canonical SF25_QUERIES subset
     val only = args.drop(1).toSet match {
       case s if s == Set("--sf25") => SF25_QUERIES.toSet
       case s => s
     }
-    val spark = MakeHeavy.session(Some(s"$dir/warehouse"))
+    val spark = graft.GraftSession.local(MakeHeavy.cpus, Some(s"$dir/warehouse"))
     import spark.implicits._
     // trust the one-file-per-bucket sort order at the scan (off by default
     // because it lists files at planning time — cheap here, and it is what
@@ -529,8 +506,7 @@ object BenchHeavy {
         }))
     }
 
-    // bind once (defs); heavy tier resolves suite + opt-in ladder names
-    val queries = graft.SparkEntry.queries ++ graft.SparkEntry.ladderQueries
+    val queries = graft.SparkEntry.queries // bind once: a def
     val runnable: Seq[(String, () => DataFrame)] =
       (HEAVY_QUERIES.map(n => n -> (() => queries(n)(spark, dir))) ++
         bucketed ++ annSized ++ annBuild)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Star-join crossover harness: measure q2/q3 (plain and bucketed) at a
@@ -20,7 +20,7 @@ object MakeStar {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args(1)
     val copies = args(2).toInt
-    val spark = MakeHeavy.session(Some(s"$out/warehouse"))
+    val spark = graft.GraftSession.local(MakeHeavy.cpus, Some(s"$out/warehouse"))
     import spark.implicits._
     val reps = broadcast(spark.range(copies).toDF("k"))
 
@@ -81,22 +81,8 @@ object BenchStar {
     // convention, so a new query joins existing tier JSONs via
     // tools/merge_bench.py without re-running the whole tier
     val subset = args.drop(2).toSet
-    val spark = MakeHeavy.session(Some(s"$dir/warehouse"))
+    val spark = graft.GraftSession.local(MakeHeavy.cpus, Some(s"$dir/warehouse"))
     spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-    // mirror GraftSession's AQE hash-join gate (the bench session is
-    // deliberately minimal; this is the one production knob the star
-    // plans depend on — r14: sort spills to zero, q2/q3 -1.2x/-1.5x)
-    spark.conf.set("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "256m")
-    // A/B probe hook: semicolon-separated k=v runtime conf overrides, so a
-    // candidate optimizer knob can be measured on a tier without a rebuild
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';').filter(_.nonEmpty)
-      .foreach { kv =>
-        val i = kv.indexOf('=')
-        // a '='-less token would slice to conf.set("", kv) — a silently
-        // wrong probe; malformed entries must fail the run loudly
-        require(i > 0, s"bad SPARK_GRAFT_EXTRA_CONF entry (want k=v): $kv")
-        spark.conf.set(kv.take(i), kv.drop(i + 1))
-      })
     val haveBuckets = MakeHeavy.registerBucketed(spark, dir,
       Seq(("hv_orders_b", "o_orderkey"), ("hv_lineitem_b", "l_orderkey")))
     require(haveBuckets, s"bucketed tables missing under $dir/warehouse — run MakeStar first")
@@ -179,11 +165,7 @@ object BenchStar {
     // plan (0.96s vs 2.9s honest at sf25) while DuckDB always fetched
     // full rows.
     // restore the session knobs a conf-scoped probe arm (q2_sortagg_probe)
-    // may have set — every arm starts from the same baseline. The baseline
-    // is CAPTURED here, after SPARK_GRAFT_EXTRA_CONF applied: hardcoding
-    // the defaults would silently undo an extra-conf override of exactly
-    // these two keys on every arm — the documented A/B hook would measure
-    // the baseline while claiming the probe (r16 advice, medium).
+    // may have set — every arm starts from the session's own values.
     val baseConf = Seq(
       "spark.sql.execution.replaceHashWithSortAgg",
       "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold")

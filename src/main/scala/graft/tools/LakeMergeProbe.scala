@@ -33,7 +33,7 @@ object LakeMergeProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("target/bench_lake/sf25")
     val FILES = if (args.length > 1) args(1).toInt else 64
-    val spark = MakeHeavy.session()
+    val spark = graft.GraftSession.local(MakeHeavy.cpus)
     import spark.implicits._
     val src = s"${dir.stripSuffix("/")}/lake_merge_src_$FILES"
     val dst = s"${dir.stripSuffix("/")}/lake_merge_dst_$FILES"

@@ -27,7 +27,7 @@ object LakeProbe {
     // with data volume — at 32 local files parquet row-group stats hide
     // it entirely; a production table has thousands per partition
     val FILES = if (args.length > 1) args(1).toInt else 32
-    val spark = MakeHeavy.session()
+    val spark = graft.GraftSession.local(MakeHeavy.cpus)
     import spark.implicits._
     val table = s"${dir.stripSuffix("/")}/lake_probe_table_$FILES"
 

@@ -1,37 +1,16 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Print the EXECUTED (post-AQE) formatted plan of declared queries —
   * the `.explain("formatted")` iteration loop as a batch tool.
   * Usage: SPARK_GRAFT_SF_DIR=... sbt "runMain graft.tools.PlanDump <query> ..."
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "256m")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("ERROR")
-    // BenchStar's A/B hook, so a candidate knob's plan is inspectable
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';').filter(_.nonEmpty)
-      .foreach { kv =>
-        val i = kv.indexOf('=')
-        require(i > 0, s"bad SPARK_GRAFT_EXTRA_CONF entry (want k=v): $kv")
-        spark.conf.set(kv.take(i), kv.drop(i + 1))
-      })
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // probe-only arms that are not declared queries
-    val probes: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] = Map(
-      "q2_sortagg_probe" -> ((s, dir) => graft.operators.Analytics.q2From(s,
-        graft.Tables.customer(s, dir), graft.Tables.orders(s, dir),
-        graft.Tables.lineitem(s, dir))))
     for (n <- args.toSeq) {
-      val df = (graft.SparkEntry.queries ++ probes)(n)(spark, sf)
+      val df = graft.SparkEntry.queries(n)(spark, sf)
       graft.BenchUtil.force(df) // run so AQE finalizes
       println(s"==== $n ====")
       println(df.queryExecution.executedPlan.toString)

@@ -40,8 +40,7 @@ object PlantedRecall {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/repo/target/bench_heavy/sf5")
     val out = if (args.length > 1) args(1) else "tools/planted_recall.json"
-    val spark = MakeHeavy.session()
-    graft.plans.Native.install(spark)
+    val spark = graft.GraftSession.local(MakeHeavy.cpus)
     import spark.implicits._
 
     val emb = graft.Tables.embeddings(spark, dir).cache()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.operators.TableLog
 
 /** One contending table-log writer PROCESS for the cross-JVM race proof
@@ -22,14 +20,10 @@ object RaceWriter {
     // the race spec drives the same contest through BOTH publish
     // primitives
     val logStore = if (args.length > 4) args(4) else "auto"
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName(s"race-writer-$id")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.graft.logstore", logStore)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(2)
     spark.sparkContext.setLogLevel("ERROR")
+    // runtime conf: LogStore reads it per commit
+    spark.conf.set("spark.graft.logstore", logStore)
     val deadline = System.currentTimeMillis() + 60000
     while (!gate.exists() && System.currentTimeMillis() < deadline) Thread.sleep(5)
     require(gate.exists(), "start gate never opened")

@@ -36,7 +36,7 @@ object StreamHeavy {
     // one — BENCHNOTES_HEAVY renders the sf5 file, BENCHNOTES_SF25 the
     // sf25 one (the last-run-wins clobbering bit round 9's sf25 protocol)
     val out = if (args.length > 2) args(2) else "target/stream_heavy.json"
-    val spark = MakeHeavy.session()
+    val spark = graft.GraftSession.local(MakeHeavy.cpus)
     import spark.implicits._
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")

@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.{BenchUtil, SparkEntry}
+import graft.{BenchUtil, GraftSession, SparkEntry}
 
 /** Local iteration aid: time named SparkEntry queries under the Bench
   * forcing (full materialization to a noop sink), median of 3 after one
@@ -13,16 +12,7 @@ object TimeQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val names = args.tail.toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(MakeHeavy.cpus)
     // stage-runtime accounting (the BENCHNOTES `stage s` convention):
     // wall minus stage is the fixed driver/AQE scheduling floor
     val stageMs = new java.util.concurrent.atomic.AtomicLong(0)

@@ -274,7 +274,7 @@ class PlanAuditSpec extends SparkSpecBase {
     val p = plan(q("l2f_gen"))
     assert(p.contains("shingle_hashes"), p)
     assert(p.contains("BroadcastHashJoin"), p)
-    // the ladder baselines' interpreted machinery must be absent
+    // the interpreted transform-lambda form's machinery must be absent
     assert(!p.contains("array_distinct") && !p.contains("lambda"), p)
   }
 
