@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.Tables
 import graft.operators.TableLog.Action
 
@@ -103,9 +104,7 @@ object Lakehouse {
       beforePublish(head + 1)
       try return TableLog.publish(spark, table, head + 1, actions)
       catch {
-        case e: IllegalStateException
-            if e.getMessage != null &&
-              e.getMessage.contains("lost the publish race") =>
+        case e: TableLog.CommitConflict =>
           if (attempt >= maxAttempts)
             throw new IllegalStateException(
               s"compaction still losing the publish race after $maxAttempts attempts", e)
@@ -203,43 +202,52 @@ object Lakehouse {
 
   // ------------------------------------------------------------- S14: CDF
 
-  /** Row-level change feed for ONE commit: the net delta of version `v`
-    * derived from its add/remove file actions. The removed files' rows
-    * (pre-images) full-outer-join the added files' rows (post-images) on
-    * `keyCol`; a key only in the adds is an `insert`, only in the removes
-    * a `delete`, in both with ANY differing common column an `update`
-    * (post-image emitted), and in both with identical values NOTHING —
-    * a pure rewrite (compaction, clustering) produces an empty feed,
-    * which is what makes the feed subscribable: a downstream consumer
-    * never sees a layout change as a data storm.
+  /** Row-level change feed for the window (from, to]: the NET delta
+    * between the snapshot at `from` and the snapshot at `to`, derived from
+    * the two replayed states alone — no per-commit walk. Pre-images (rows
+    * visible at `from` that the window retired or hid) full-outer-join
+    * post-images (rows of the files the window added, as visible at `to`)
+    * on `keyCol`; a key only in the post-images is an `insert`, only in
+    * the pre-images a `delete`, in both with ANY differing common column
+    * an `update` (post-image emitted), and in both with identical values
+    * NOTHING — a pure rewrite (compaction, clustering) produces an empty
+    * feed, which is what makes the feed subscribable: a downstream
+    * consumer never sees a layout change as a data storm. Every row
+    * carries `_commit_version = to`. For one commit (`from = to - 1`) this
+    * is that commit's slice; [[cdfRead]] unions those per version, and a
+    * relay window applies the multi-version net in one rewrite.
     *
-    * Scale shape: the join is bounded by the COMMIT WINDOW's files, never
-    * the table — a daily commit touching 0.01% of a 100 TB table feeds
+    * The sides, from the states:
+    *  - post-images: post files not in pre, read through
+    *    [[TableLog.scanState]] with the post DVs (each DV scoped to the
+    *    files added before it), so a file added and then hidden or
+    *    retired inside the window nets out;
+    *  - retired: pre files not in post, read at `from` with the pre DVs;
+    *  - window DVs: post DVs newer than `from` — every one of them scopes
+    *    over every kept pre file — semi-joined against the kept pre files.
+    *
+    * Scale shape: the join is bounded by the WINDOW's files, never the
+    * table — a daily commit touching 0.01% of a 100 TB table feeds
     * consumers at 0.01% cost, the same argument as MV1's delta refresh.
-    * Rows are read under the LOGGED schemas (post-images at v, pre-images
-    * at v-1 — the readAsOf discipline), compared on their COMMON columns;
-    * `keyCol` must be unique per snapshot (the fixture's event_id), the
-    * same contract every CDF-producing table format states. */
-  /** One-commit slice against an ALREADY-REPLAYED pre-state: the caller
-    * supplies v-1's live files/DVs/schema and manifest v's actions, so a
-    * window read pays ONE pass over the log ([[cdfRead]] threads it)
-    * instead of a fresh prefix replay per slice. */
-  private def cdfSliceFrom(spark: SparkSession, table: String, v: Int,
-      keyCol: String, preState: TableLog.LiveState,
-      preSchemaOpt: Option[org.apache.spark.sql.types.StructType],
-      postSchemaOpt: Option[org.apache.spark.sql.types.StructType],
-      actions: Seq[Action]): DataFrame = {
+    * Rows are read under the LOGGED schemas (post-images at `to`,
+    * pre-images at `from` — the readAsOf discipline), compared on their
+    * COMMON columns; `keyCol` must be unique per snapshot (the fixture's
+    * event_id), the same contract every CDF-producing table format
+    * states. */
+  private def cdfSliceFrom(spark: SparkSession, table: String, from: Int,
+      to: Int, keyCol: String,
+      pre: TableLog.LiveState, preSchemaOpt: Option[StructType],
+      post: TableLog.LiveState, postSchemaOpt: Option[StructType]): DataFrame = {
     val postSchema = postSchemaOpt.getOrElse(
       throw new IllegalStateException(
-        s"cdfRead needs a logged schema for $table@v$v — commit one at v1"))
-    val preSchema = if (v == 1) postSchema else preSchemaOpt.getOrElse(postSchema)
-    // dv paths are NOT data files: a remove that retires a DV (an
-    // absorbing compaction) must not read the key file as pre-images
-    val dvPaths = actions.collect { case Action("dv", p, _) => p }
-    val dvEver = preState.dvs.map(_._1).toSet ++ dvPaths
-    val adds = actions.collect { case Action("add", p, _) => p }
-    val removes = actions.collect {
-      case Action("remove", p, _) if !dvEver(p) => p }
+        s"cdfRead needs a logged schema for $table@v$to — commit one at v1"))
+    val preSchema = if (from == 0) postSchema else preSchemaOpt.getOrElse(postSchema)
+    val prePaths = pre.files.map(_.path).toSet
+    val postPaths = post.files.map(_.path).toSet
+    val added = post.files.filterNot(f => prePaths(f.path))
+    val retired = pre.files.filterNot(f => postPaths(f.path))
+    val kept = pre.files.filter(f => postPaths(f.path))
+    val dvPaths = post.dvs.collect { case (p, v) if v > from => p }
     // the empty arm is a LocalRelation (createDataFrame over an empty
     // LIST), not an empty RDD: a LogicalRDD has no stats, so the
     // optimizer cannot prove it empty and its union branch survives into
@@ -247,44 +255,37 @@ object Lakehouse {
     // erases the LocalRelation form, keeping the no-DV/no-remove slices'
     // plans identical to the pre-S20 shape (the r17 bench drift gate
     // caught exactly this: s14's scan count grew 6 -> 8)
-    def rd(files: Seq[String], schema: org.apache.spark.sql.types.StructType) =
+    def scan(files: Seq[TableLog.LiveFile], dvs: Seq[(String, Int)],
+        schema: StructType): DataFrame =
       if (files.isEmpty)
         spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-      else spark.read.schema(schema).parquet(files.map(r => s"$table/$r"): _*)
+      else TableLog.scanState(spark, table, files, dvs, Some(schema))
     val valCols = postSchema.fieldNames.toSeq
       .intersect(preSchema.fieldNames.toSeq).filterNot(_ == keyCol)
     require(valCols.nonEmpty,
-      s"cdfRead needs at least one non-key column shared by v${v - 1}/v$v schemas")
-    // pre-images are the removed files' rows AS VISIBLE at v-1 — with the
-    // deletion vectors live at v-1 applied (S18). A raw read would feed a
-    // DV-absorbing compaction's physical purge as a SECOND delete of rows
-    // every consumer already saw deleted.
-    val removedSet = removes.toSet
-    val preFiles = preState.files.filter(f => removedSet(f.path))
-    val preFromRemoves =
-      if (preFiles.isEmpty) rd(Nil, preSchema)
-      else TableLog.scanState(spark, table, preFiles, preState.dvs, Some(preSchema))
+      s"cdfRead needs at least one non-key column shared by v$from/v$to schemas")
+    // pre-images are the retired files' rows AS VISIBLE at `from` — with
+    // the deletion vectors live at `from` applied (S18). A raw read would
+    // feed a DV-absorbing compaction's physical purge as a SECOND delete
+    // of rows every consumer already saw deleted.
+    val preFromRetired = scan(retired, pre.dvs, preSchema)
     // S18/S20: a deletion-vector action hides rows without touching a
-    // data file, so its pre-images are invisible to the removed-file scan
-    // above — derive them by semi-joining the v-1 snapshot (earlier DVs
-    // already applied: a key deleted twice feeds once) against the new
+    // data file, so its pre-images are invisible to the retired-file scan
+    // above — derive them by semi-joining the kept pre files (earlier DVs
+    // already applied: a key deleted twice feeds once) against the window
     // DV keys, and fold them into the SAME full-outer join below. That is
     // what nets a MOR MERGE commit (dv + adds in one version, S20) to
     // `update` rows carrying post-images — not an insert/delete pair a
     // strict consumer could order wrong — while a pure DV delete (S18)
     // still nets to `delete` rows with pre-images. The DV side is
-    // delete-volume-bounded and broadcasts. Files removed by THIS commit
-    // are excluded from the semi-join scan: their visible rows already
-    // feed through the removed-file side, and feeding them twice would
-    // duplicate keys into the full-outer join.
+    // delete-volume-bounded and broadcasts. Retired files are excluded
+    // from the semi-join scan: their visible rows already feed through
+    // the retired-file side, and feeding them twice would duplicate keys
+    // into the full-outer join.
     val preFromDvs =
-      if (dvPaths.isEmpty) rd(Nil, preSchema)
+      if (dvPaths.isEmpty || kept.isEmpty) scan(Nil, Nil, preSchema)
       else {
-        val snapFiles = preState.files.filterNot(f => removedSet(f.path))
-        val preSnap =
-          if (snapFiles.isEmpty) rd(Nil, preSchema)
-          else TableLog.scanState(spark, table, snapFiles, preState.dvs,
-            Some(preSchema))
+        val preSnap = scan(kept, pre.dvs, preSchema)
         dvPaths.map(p => spark.read.parquet(s"$table/$p"))
           .groupBy(_.columns.head).toSeq
           .map { case (kc, frames) =>
@@ -295,21 +296,21 @@ object Lakehouse {
           .dropDuplicates(keyCol)
       }
     // columns only the POST schema has — the evolution commit itself,
-    // where v-1's logged schema lacks them so they cannot ride the
-    // compare structs. Their VALUES still ride the feed (post-images
-    // carry the full post schema; delete rows null-fill them), and a
-    // rewritten row whose only change is a NON-NULL value in a new
-    // column classifies as an update — the row genuinely gained data, a
-    // feed that dropped it would silently diverge every downstream
-    // replica. Identical rewrites that leave the new column null still
-    // feed NOTHING (a bare evolution commit or a compaction after one is
-    // not a data storm). One commit later the column is in both schemas
-    // and takes the ordinary compare path.
+    // where the pre schema lacks them so they cannot ride the compare
+    // structs. Their VALUES still ride the feed (post-images carry the
+    // full post schema; delete rows null-fill them), and a rewritten row
+    // whose only change is a NON-NULL value in a new column classifies as
+    // an update — the row genuinely gained data, a feed that dropped it
+    // would silently diverge every downstream replica. Identical rewrites
+    // that leave the new column null still feed NOTHING (a bare
+    // evolution commit or a compaction after one is not a data storm).
+    // One commit later the column is in both schemas and takes the
+    // ordinary compare path.
     val postOnly = postSchema.fieldNames.toSeq
       .diff(preSchema.fieldNames.toSeq).filterNot(_ == keyCol)
-    val pre = preFromRemoves.unionByName(preFromDvs)
+    val preImgs = preFromRetired.unionByName(preFromDvs)
       .select(col(keyCol).as("__key"), struct(valCols.map(col): _*).as("__pre"))
-    val post = rd(adds, postSchema)
+    val postImgs = scan(added, post.dvs, postSchema)
       .select(Seq(col(keyCol).as("__key"),
         struct(valCols.map(col): _*).as("__post")) ++
         (if (postOnly.isEmpty) Nil
@@ -317,7 +318,7 @@ object Lakehouse {
     val postxChanged =
       if (postOnly.isEmpty) lit(false)
       else postOnly.map(c => col(s"__postx.$c").isNotNull).reduce(_ || _)
-    val fileDelta = pre.join(post, Seq("__key"), "full_outer")
+    preImgs.join(postImgs, Seq("__key"), "full_outer")
       .withColumn("_change_type",
         when(col("__pre").isNull, "insert")
           .when(col("__post").isNull, "delete")
@@ -325,25 +326,25 @@ object Lakehouse {
       .filter(col("_change_type").isNotNull)
       .withColumn("__img",
         when(col("__post").isNotNull, col("__post")).otherwise(col("__pre")))
-      .select(Seq(lit(v.toLong).as("_commit_version"), col("_change_type"),
+      .select(Seq(lit(to.toLong).as("_commit_version"), col("_change_type"),
         col("__key").as(keyCol)) ++ valCols.map(c => col(s"__img.$c").as(c)) ++
         postOnly.map(c => col(s"__postx.$c").as(c)): _*)
-    fileDelta
   }
 
-  /** Single-commit wrapper (cdfApply's shape): one prefix replay for the
-    * pre-state — bounded, since the caller processes one version. Window
-    * readers go through [[cdfRead]], which replays the log ONCE. */
-  private[graft] def cdfSlice(spark: SparkSession, table: String, v: Int,
-      keyCol: String): DataFrame =
-    cdfSliceFrom(spark, table, v, keyCol,
-      TableLog.liveState(spark, table, v - 1),
-      if (v == 1) None else TableLog.schemaAsOf(spark, table, v - 1),
-      TableLog.schemaAsOf(spark, table, v),
-      TableLog.manifestEntries(spark, table, v)._1)
+  /** The net slice of the window (from, to] ([[cdfSliceFrom]]) from two
+    * replays of the log — each bounded by the newest checkpoint at or
+    * below its version (S19). The single-commit feed is the window
+    * (v-1, v]. */
+  private[graft] def cdfSlice(spark: SparkSession, table: String, from: Int,
+      to: Int, keyCol: String): DataFrame =
+    cdfSliceFrom(spark, table, from, to, keyCol,
+      TableLog.liveState(spark, table, from),
+      TableLog.schemaAsOf(spark, table, from),
+      TableLog.liveState(spark, table, to),
+      TableLog.schemaAsOf(spark, table, to))
 
   /** S14 [EXT]: change-data-feed read over the window (from, to] — the
-    * union of each commit's [[cdfSlice]], the subscription surface MV1's
+    * union of each commit's slice, the subscription surface MV1's
     * abelian delta cannot offer non-additive consumers (a downstream
     * MERGE, a cache invalidator, a search indexer). */
   def cdfRead(spark: SparkSession, table: String, from: Int, to: Int,
@@ -362,11 +363,9 @@ object Lakehouse {
       else None)
         .getOrElse(throw new IllegalStateException(
           s"cdfRead needs a logged schema for $table — commit one at v1"))
-      val feed = org.apache.spark.sql.types.StructType(
-        Seq(org.apache.spark.sql.types.StructField("_commit_version",
-            org.apache.spark.sql.types.LongType, nullable = false),
-          org.apache.spark.sql.types.StructField("_change_type",
-            org.apache.spark.sql.types.StringType, nullable = false),
+      val feed = StructType(
+        Seq(StructField("_commit_version", LongType, nullable = false),
+          StructField("_change_type", StringType, nullable = false),
           schema(keyCol)) ++
           schema.fields.filterNot(_.name == keyCol))
       return spark.createDataFrame(java.util.Collections.emptyList[Row](), feed)
@@ -375,25 +374,14 @@ object Lakehouse {
     // past the base state (which itself starts from the newest log
     // checkpoint at or below `from`, S19): the live state and logged
     // schema advance commit by commit, and each slice consumes the
-    // snapshot taken just before its own manifest applies.
+    // states just before and just after its own manifest applies.
     val base = TableLog.liveState(spark, table, from)
     val files = scala.collection.mutable.LinkedHashMap.empty[String, TableLog.LiveFile]
     base.files.foreach(f => files(f.path) = f)
     val dvs = scala.collection.mutable.LinkedHashMap.empty[String, Int]
     base.dvs.foreach { case (p, v) => dvs(p) = v }
-    var schema: Option[org.apache.spark.sql.types.StructType] =
-      TableLog.schemaAsOf(spark, table, from)
-    def advance(v: Int): Seq[Action] = {
-      val (acts, sch) = TableLog.manifestEntries(spark, table, v)
-      acts.foreach {
-        case Action("add", p, st) => files(p) = TableLog.LiveFile(p, st, v)
-        case Action("dv", p, _) => dvs(p) = v
-        case Action("remove", p, _) => files.remove(p); dvs.remove(p)
-        case _ => ()
-      }
-      sch.foreach(s => schema = Some(s))
-      acts
-    }
+    var state = base
+    var schema = TableLog.schemaAsOf(spark, table, from)
     // allowMissingColumns: slices on either side of a schema-evolution
     // commit (S12) carry different value-column sets — the pre-evolution
     // slices null-fill the later columns, so a CDF window MAY cross an
@@ -402,10 +390,17 @@ object Lakehouse {
     // both sides of ITS commit share — evolution never fabricates an
     // update out of a null-fill)
     ((from + 1) to to).map { v =>
-      val preState = TableLog.LiveState(files.values.toSeq, dvs.toSeq)
-      val preSchema = schema
-      val acts = advance(v)
-      cdfSliceFrom(spark, table, v, keyCol, preState, preSchema, schema, acts)
+      val (pre, preSchema) = (state, schema)
+      val (acts, sch) = TableLog.manifestEntries(spark, table, v)
+      acts.foreach {
+        case Action("add", p, st) => files(p) = TableLog.LiveFile(p, st, v)
+        case Action("dv", p, _) => dvs(p) = v
+        case Action("remove", p, _) => files.remove(p); dvs.remove(p)
+        case _ => ()
+      }
+      sch.foreach(s => schema = Some(s))
+      state = TableLog.LiveState(files.values.toSeq, dvs.toSeq)
+      cdfSliceFrom(spark, table, v - 1, v, keyCol, pre, preSchema, state, schema)
     }.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
@@ -553,34 +548,13 @@ object Lakehouse {
 
   // ------------------------------- S17: pruned copy-on-write MERGE (CDF sync)
 
-  /** Apply ONE commit's change feed to a downstream log table as a
-    * pruned copy-on-write MERGE — the composition the whole r16 layer
-    * builds toward: S14 names the changed rows, S15's manifest stats
-    * bound which destination files can hold their keys, and the S11 txn
-    * marker makes the apply EXACTLY-ONCE under re-delivery.
-    *
-    * Shape: destination files are staged clustered on `keyCol` with
-    * manifest stats, so the rewrite set is `prunedLiveFiles(dst)` over
-    * the delta's [min, max] key range — every other file is untouched
-    * (not read, not rewritten, byte-identical on disk). The rewritten
-    * rows are the pruned files' rows anti-joined against delete/update
-    * keys, unioned with insert/update post-images; the commit removes
-    * exactly the pruned files and adds the re-clustered replacements,
-    * under a `(cdf:<consumer>, version)` txn marker — a re-delivered
-    * version no-ops at the gate, the dst never applies a delta twice.
-    *
-    * At 100 TB: |rewrite| is bounded by the delta's key locality, not the
-    * table — a commit touching one key range rewrites the files covering
-    * that range (the copy-on-write MERGE every production format runs for
-    * its UPDATE/DELETE/MERGE), and the key-clustered layout is what keeps
-    * that bound tight. Returns the dst version committed (-1 = replayed
-    * no-op). */
-  /** A window delta materialized AHEAD of its apply: the checkpointed
-    * slice plus the two source-side probe answers. A slice reads only the
-    * SOURCE (fixed for the whole window once a tick starts), so an apply
-    * loop prepares the next versions' deltas concurrently
-    * ([[prepareDelta]] on [[TableLog.inParallel]]) and overlaps their
-    * materialization jobs with the current version's stage+commit. */
+  /** One version's delta materialized AHEAD of its apply: the
+    * checkpointed slice (v-1, v] plus the two source-side probe answers.
+    * A slice reads only the SOURCE, so the declared s17 rows, which apply
+    * a fully built source version by version, prepare every version's
+    * delta in one concurrent round ([[prepareDelta]] on
+    * [[TableLog.inParallel]]) and overlap those materialization jobs
+    * with the applies. */
   private[graft] final case class PreparedDelta(delta: DataFrame, n: Long, ng: Long)
 
   /** Materialize version `v`'s delta with the source-side probe metrics
@@ -592,7 +566,7 @@ object Lakehouse {
       keyCol: String): PreparedDelta = {
     import org.apache.spark.sql.functions.{col => c}
     val isGone = c("_change_type").isin("delete", "update")
-    val observed = cdfSlice(spark, src, v, keyCol)
+    val observed = cdfSlice(spark, src, v - 1, v, keyCol)
       .observe("__cdf_pre", count(lit(1)).as("__n"),
         count(when(isGone, 1)).as("__ng"))
     val delta = observed.localCheckpoint()
@@ -600,13 +574,53 @@ object Lakehouse {
     PreparedDelta(delta, row.getAs[Long]("__n"), row.getAs[Long]("__ng"))
   }
 
+  /** Apply ONE source version `v`: the window (v-1, v]. */
   private[graft] def cdfApply(spark: SparkSession, src: String, dst: String,
       v: Int, keyCol: String, consumer: String, files: Int,
       evolveSchema: Boolean = false,
-      prepared: Option[PreparedDelta] = None): Int = {
+      prepared: Option[PreparedDelta] = None): Int =
+    cdfApply(spark, src, dst, v - 1, v, keyCol, consumer, files, evolveSchema,
+      prepared)
+
+  /** Apply the source window (from, to]'s NET change feed to a downstream
+    * log table as ONE pruned copy-on-write MERGE — the composition the
+    * whole r16 layer builds toward: S14 names the changed rows, S15's
+    * manifest stats bound which destination files can hold their keys,
+    * and the S11 txn markers make the apply EXACTLY-ONCE under
+    * re-delivery.
+    *
+    * Shape: destination files are staged clustered on `keyCol` with
+    * manifest stats, so the rewrite set is `prunedLiveFiles(dst)` over
+    * the delta's [min, max] key range — every other file is untouched
+    * (not read, not rewritten, byte-identical on disk). The rewritten
+    * rows are the pruned files' rows anti-joined against delete/update
+    * keys, unioned with insert/update post-images; the commit removes
+    * exactly the pruned files and adds the re-clustered replacements,
+    * under one `(cdf:<consumer>, version)` txn marker PER source version
+    * of the window, all in the same manifest as the data — so the
+    * markers land exactly when the data does. The gate no-ops (-1) when
+    * ANY version of the window already committed: a re-delivered or
+    * overlapping window never applies a delta twice. The delta is the
+    * window's single net slice ([[cdfSliceFrom]]): a key changed by
+    * several versions is rewritten once, at its state as of `to`.
+    *
+    * At 100 TB: |rewrite| is bounded by the delta's key locality, not the
+    * table — a commit touching one key range rewrites the files covering
+    * that range (the copy-on-write MERGE every production format runs for
+    * its UPDATE/DELETE/MERGE), and the key-clustered layout is what keeps
+    * that bound tight. `prepared` is a delta [[prepareDelta]] already
+    * materialized for this window. Returns the dst version committed (-1
+    * = replayed no-op). */
+  private[graft] def cdfApply(spark: SparkSession, src: String, dst: String,
+      from: Int, to: Int, keyCol: String, consumer: String, files: Int,
+      evolveSchema: Boolean, prepared: Option[PreparedDelta]): Int = {
     import org.apache.spark.sql.functions.{col => c}
+    require(from < to, s"cdfApply window is empty: ($from, $to]")
     val streamId = s"cdf:$consumer"
-    if (TableLog.alreadyCommitted(spark, dst, streamId, v.toLong)) return -1
+    val ids = ((from + 1) to to).map(_.toLong)
+    if (TableLog.alreadyCommitted(spark, dst, streamId, ids)) return -1
+    def commitWindow(actions: Seq[Action]): Int =
+      TableLog.commitIfAbsent(spark, dst, streamId, ids, actions, 5, _ => ())
     // schema evolution across the replica (S12 x S17): when the source's
     // schema grew past the destination's, either refuse loudly (the
     // default — a replica silently missing columns is a divergence) or,
@@ -618,7 +632,7 @@ object Lakehouse {
     // backfill replicates instead of vanishing
     val dstV = TableLog.currentVersion(spark, dst)
     val dstSchema0 = if (dstV > 0) TableLog.schemaAsOf(spark, dst, dstV) else None
-    val srcSchemaOpt = TableLog.schemaAsOf(spark, src, v)
+    val srcSchemaOpt = TableLog.schemaAsOf(spark, src, to)
     // a destination WITHOUT a logged schema — cold start, or a prior
     // marker-only apply (the common first source commit is schema-only,
     // whose empty delta must still propagate the schema; r17 review) —
@@ -629,16 +643,16 @@ object Lakehouse {
         (srcSchemaOpt, srcSchemaOpt.map(s => Action("schema", s.json)).toSeq)
       case Some(d) =>
         val srcSchema = srcSchemaOpt.getOrElse(throw new IllegalStateException(
-          s"cdfApply needs a logged schema for $src@v$v — commit one at v1"))
+          s"cdfApply needs a logged schema for $src@v$to — commit one at v1"))
         val missing = srcSchema.fields.filterNot(f =>
           d.fieldNames.contains(f.name))
         if (missing.isEmpty) (Some(d), Seq.empty[Action])
         else {
           require(evolveSchema,
-            s"cdfApply: source v$v carries columns the destination lacks " +
+            s"cdfApply: source v$to carries columns the destination lacks " +
               s"(${missing.map(_.name).mkString(", ")}) — pass " +
               "evolveSchema=true to adopt them, or evolve the destination first")
-          val evolved = org.apache.spark.sql.types.StructType(d.fields ++ missing)
+          val evolved = StructType(d.fields ++ missing)
           (Some(evolved), Seq(Action("schema", evolved.json)))
         }
     }
@@ -679,7 +693,7 @@ object Lakehouse {
       ranged.size <= TableLog.confInt(
         spark, "spark.graft.log.applyProbeInlineMaxFiles", "64")
     // checkpoint the window delta (a PREPARED one arrives already
-    // checkpointed with its source-side metrics — the lookahead path):
+    // checkpointed with its source-side metrics):
     // the range agg, the anti-join side, and the staged write would
     // otherwise each re-run cdfSlice's full-outer join over the window's
     // files. The observe node rides this one job and is truncated away
@@ -700,7 +714,7 @@ object Lakehouse {
                max(when(isGone && c(keyCol).cast("long") >= s.min &&
                  c(keyCol).cast("long") <= s.max, 1L).otherwise(0L)).as(s"__h$i")
              })
-        val observed = cdfSlice(spark, src, v, keyCol)
+        val observed = cdfSlice(spark, src, from, to, keyCol)
           .observe("__cdf_probe", metricCols.head, metricCols.tail: _*)
         val ck = observed.localCheckpoint()
         // metrics read synchronously off the EXECUTED plan's accumulators
@@ -717,18 +731,17 @@ object Lakehouse {
     }
     val deltaEmpty = metric("__n") == 0L
     // an EMPTY feed (a source compaction / identical rewrite, or a bare
-    // schema-evolution commit) records the version as applied — a
+    // schema-evolution commit) records the window as applied — a
     // marker-only commit that still propagates the schema — BEFORE any
     // key-type contract fires: marker-only streams must not require an
     // integral key (r17 advice — a warm destination with a non-integral
     // key regained the marker path it had before the probe fusion).
-    if (deltaEmpty)
-      return TableLog.commitIfAbsent(spark, dst, streamId, v.toLong, schemaActs)
+    if (deltaEmpty) return commitWindow(schemaActs)
     // attempt-unique staging dir (commitBatch's discipline): a racing
-    // re-delivery of the same version must never Overwrite-delete the
+    // re-delivery of the same window must never Overwrite-delete the
     // winner's committed files — the loser's staging stays orphaned for
     // vacuum, the txn gate stops its commit
-    val rel = s"data/apply-v$v-${java.util.UUID.randomUUID}"
+    val rel = s"data/apply-v$to-${java.util.UUID.randomUUID}"
     if (dstV == 0) {
       // cold start (the first delta cannot rewrite anything, so no
       // gone-side work runs here): the pure-insert delta stages clustered
@@ -740,7 +753,7 @@ object Lakehouse {
       val schActs =
         if (schemaActs.nonEmpty) schemaActs
         else Seq(Action("schema", rows.schema.json))
-      return TableLog.commitIfAbsent(spark, dst, streamId, v.toLong,
+      return commitWindow(
         schActs ++ TableLog.stageWithStats(spark, dst, rows, rel, Seq(keyCol), files))
     }
     // copy-on-write semantics: only DELETE/UPDATE keys force a rewrite of
@@ -801,8 +814,7 @@ object Lakehouse {
     val adds = TableLog.stageWithStats(spark, dst,
       survivors.unionByName(arrivals, allowMissingColumns = true),
       rel, Seq(keyCol), files)
-    TableLog.commitIfAbsent(spark, dst, streamId, v.toLong,
-      schemaActs ++ touched.map(f => Action("remove", f.path)) ++ adds)
+    commitWindow(schemaActs ++ touched.map(f => Action("remove", f.path)) ++ adds)
   }
 
   /** S17 [EXT]: declared query — replicate the s14 source history into a
@@ -1076,15 +1088,27 @@ object Lakehouse {
   /** R17 [EXT]: incremental table-to-table relay — the continuous
     * bronze→silver pipeline every lakehouse deployment runs, composed
     * from parts this log already has: the source's change feed (S14)
-    * names what moved, [[cdfApply]] lands each version as one pruned
-    * copy-on-write commit, and the destination log's OWN txn markers are
-    * the resume offset. A restarted relay calls
+    * names what moved, [[cdfApply]] lands each catch-up window as one
+    * pruned copy-on-write commit, and the destination log's OWN txn
+    * markers are the resume offset. A restarted relay calls
     * [[TableLog.lastCommitted]] on the destination and continues from
     * the next source version — there is no external offset store
     * (checkpoint directory, consumer-group coordinator) to lose, lag
-    * behind, or double-apply against, and a re-delivered version still
-    * no-ops at cdfApply's per-version txn gate (belt and braces: the
-    * offset probe optimizes, the gate guarantees).
+    * behind, or double-apply against, and a re-delivered window still
+    * no-ops at cdfApply's txn gate (belt and braces: the offset probe
+    * optimizes, the gate guarantees).
+    *
+    * Windows: a tick applies every source version past its offset as
+    * ONE netted rewrite per window — one slice over (from, to], one
+    * destination commit carrying a txn marker for EVERY source version
+    * in the window, so exactly-once still holds per version while the
+    * per-version prepare/probe/stage/commit chain is paid once. A source
+    * commit carrying a `schema` action starts a new window, so the
+    * evolution refusal and adoption below see each schema change at its
+    * own version. Contract: the destination gets one commit per window,
+    * not one per source version; the returned source versions and the
+    * destination snapshot at each window's end are what per-version
+    * applies would have produced.
     *
     * At 100 TB: each tick costs O(changed data in the window), never
     * O(table) — the S14/S17 bound — and the offset probe is O(commits
@@ -1106,26 +1130,15 @@ object Lakehouse {
     val from = TableLog.lastCommitted(spark, dst, streamId)
       .map(_.toInt).getOrElse(0)
     val to = TableLog.currentVersion(spark, src)
-    // prepared-delta lookahead: within a tick the source is fixed, so a
-    // multi-version catch-up window materializes its slices concurrently
-    // in bounded batches (spark.graft.log.applyPrefetch, default 4 —
-    // bounds how many checkpointed window deltas are live at once after
-    // a long downtime) while the applies commit strictly in order
-    val prefetch = math.max(1, TableLog.confInt(
-      spark, "spark.graft.log.applyPrefetch", "4"))
-    val applied = ((from + 1) to to).grouped(prefetch).flatMap { batch =>
-      val pres =
-        if (batch.size <= 1) batch.map(v => None)
-        else TableLog.inParallel(batch.map(v => () =>
-          prepareDelta(spark, src, v, keyCol))).map(Some(_))
-      batch.zip(pres).map { case (v, pre) =>
-        val dstV = cdfApply(spark, src, dst, v, keyCol, consumer, files,
-          evolveSchema, prepared = pre)
-        if (every > 0 && dstV > 0 && dstV % every == 0)
-          TableLog.checkpointLog(spark, dst)
-        v
-      }
-    }.toSeq
+    val applied = (from + 1) to to
+    val starts = applied.filter(v =>
+      v == from + 1 || TableLog.manifestEntries(spark, src, v)._2.isDefined)
+    starts.zip(starts.drop(1).map(_ - 1) :+ to).foreach { case (first, last) =>
+      val dstV = cdfApply(spark, src, dst, first - 1, last, keyCol, consumer,
+        files, evolveSchema, prepared = None)
+      if (every > 0 && dstV > 0 && dstV % every == 0)
+        TableLog.checkpointLog(spark, dst)
+    }
     // conf-gated auto-OPTIMIZE (the [[maybeOptimize]] policy): a
     // long-lived relay is exactly the writer whose destination
     // accumulates apply files without bound. Checked only on ticks that

@@ -42,8 +42,9 @@ import org.apache.spark.sql.SparkSession
   *
   * On lost race every impl throws Hadoop's
   * [[org.apache.hadoop.fs.FileAlreadyExistsException]]; [[TableLog]]
-  * wraps it into the "lost the publish race" IllegalStateException its
-  * optimistic-retry loop keys on.
+  * wraps it into [[TableLog.CommitConflict]] (an IllegalStateException,
+  * message "commit vN lost the publish race"), the type its
+  * optimistic-retry loops catch.
   */
 private[graft] sealed trait LogStore {
   /** Publish the fully-staged `tmp` as `dst` with one-winner semantics.

@@ -150,10 +150,18 @@ object TableLog {
       actions: Seq[Action]): Int =
     publish(spark, table, currentVersion(spark, table) + 1, actions)
 
+  /** A lost publish race: another writer already owns manifest `v$next`.
+    * The optimistic-retry loops ([[commitWithRetry]], [[commitIfAbsent]],
+    * [[Lakehouse.compactCommit]]) catch this type; every other
+    * IllegalStateException stays a real failure. */
+  private[graft] final class CommitConflict(next: Int, cause: Throwable)
+      extends IllegalStateException(s"commit v$next lost the publish race", cause)
+
   /** Stage-and-publish manifest `v$next.log`. Split from [[commit]] so the
     * lost-race case — two writers that both read the same current version
     * and race to publish the SAME next manifest — is directly drivable in
-    * a spec; commit() is just publish(currentVersion + 1). */
+    * a spec; commit() is just publish(currentVersion + 1). A lost race
+    * throws [[CommitConflict]]. */
   private[graft] def publish(spark: SparkSession, table: String,
       next: Int, actions: Seq[Action]): Int = {
     val f = fsOf(spark, table)
@@ -182,8 +190,7 @@ object TableLog {
       .publishExclusive(spark.sparkContext.hadoopConfiguration, tmp, dst)
     catch {
       case e: org.apache.hadoop.fs.FileAlreadyExistsException =>
-        throw new IllegalStateException(
-          s"commit v$next lost the publish race", e)
+        throw new CommitConflict(next, e)
     }
     next
   }
@@ -212,9 +219,7 @@ object TableLog {
       beforePublish(next)
       try return publish(spark, table, next, actions)
       catch {
-        case e: IllegalStateException
-            if e.getMessage != null &&
-              e.getMessage.contains("lost the publish race") =>
+        case e: CommitConflict =>
           if (attempt >= maxAttempts)
             throw new IllegalStateException(
               s"commit still losing the publish race after $maxAttempts attempts", e)
@@ -476,17 +481,26 @@ object TableLog {
     * re-runs at publish time) — the `txn` action of the production log
     * formats. */
   private[graft] def alreadyCommitted(spark: SparkSession, table: String,
-      streamId: String, batchId: Long): Boolean = {
+      streamId: String, batchId: Long): Boolean =
+    alreadyCommitted(spark, table, streamId, Seq(batchId))
+
+  /** Has ANY of `batchIds` already committed under `streamId`? The gate of
+    * a multi-batch commit (a relay window carrying one marker per source
+    * version): one pass over the checkpoint's txn set and the manifests
+    * past it, whatever the number of ids. */
+  private[graft] def alreadyCommitted(spark: SparkSession, table: String,
+      streamId: String, batchIds: Seq[Long]): Boolean = {
     val f = fsOf(spark, table)
     val cur = currentVersion(spark, table)
+    val markers = batchIds.map(b => s"$streamId\t$b").toSet
     // the txn set rides the checkpoint (S19): without it, every micro-
     // batch commit would scan the WHOLE manifest chain for its marker —
     // O(table lifetime) per batch on a long-lived ingest
     val floor = newestCheckpoint(spark, table, cur)
-    floor.exists(c =>
-      loadCheckpoint(spark, table, c).txns.contains(s"$streamId\t$batchId")) ||
+    floor.exists(c => markers.exists(loadCheckpoint(spark, table, c).txns)) ||
       ((floor.getOrElse(0) + 1) to cur).exists(v =>
-        manifestLines(f, table, v).contains(s"txn\t$streamId\t$batchId"))
+        manifestLines(f, table, v).exists(l =>
+          l.startsWith("txn\t") && markers(l.stripPrefix("txn\t"))))
   }
 
   /** Newest batchId committed under `streamId`, or None if the stream has
@@ -533,18 +547,28 @@ object TableLog {
     * loser a retry, as in [[commitWithRetry]]. */
   private[graft] def commitIfAbsent(spark: SparkSession, table: String,
       streamId: String, batchId: Long, actions: Seq[Action],
-      maxAttempts: Int = 5, beforePublish: Int => Unit = _ => ()): Int = {
+      maxAttempts: Int = 5, beforePublish: Int => Unit = _ => ()): Int =
+    commitIfAbsent(spark, table, streamId, Seq(batchId), actions,
+      maxAttempts, beforePublish)
+
+  /** [[commitIfAbsent]] for several batch ids at once: ONE commit carrying
+    * one `txn` line per id, a no-op (-1) if ANY of them already committed.
+    * A relay applying a multi-version window publishes every version's
+    * marker with the window's data, so exactly-once holds per version
+    * while the destination pays one commit per window. */
+  private[graft] def commitIfAbsent(spark: SparkSession, table: String,
+      streamId: String, batchIds: Seq[Long], actions: Seq[Action],
+      maxAttempts: Int, beforePublish: Int => Unit): Int = {
+    require(batchIds.nonEmpty, "commitIfAbsent needs at least one batch id")
+    val markers = batchIds.map(b => Action("txn", s"$streamId\t$b"))
     var attempt = 1
     while (true) {
-      if (alreadyCommitted(spark, table, streamId, batchId)) return -1
+      if (alreadyCommitted(spark, table, streamId, batchIds)) return -1
       val next = currentVersion(spark, table) + 1
       beforePublish(next)
-      try return publish(spark, table, next,
-        actions :+ Action("txn", s"$streamId\t$batchId"))
+      try return publish(spark, table, next, actions ++ markers)
       catch {
-        case e: IllegalStateException
-            if e.getMessage != null &&
-              e.getMessage.contains("lost the publish race") =>
+        case e: CommitConflict =>
           if (attempt >= maxAttempts)
             throw new IllegalStateException(
               s"txn commit still losing the publish race after $maxAttempts attempts", e)
@@ -867,7 +891,7 @@ object TableLog {
     * only: a column chunk with missing/foreign-typed statistics, or a
     * column that is all-null in every row group, yields NO stats for
     * that column — the file is then never pruned. */
-  private def footerStats(conf: org.apache.hadoop.conf.Configuration,
+  private[graft] def footerStats(conf: org.apache.hadoop.conf.Configuration,
       file: Path, statsCols: Seq[String]): Seq[FileStats] = {
     import org.apache.parquet.column.statistics.{IntStatistics, LongStatistics}
     import scala.jdk.CollectionConverters._
@@ -881,12 +905,20 @@ object TableLog {
         var trusted = true // every row group must carry usable stats
         var any = false    // at least one row group had a non-null value
         blocks.foreach { b =>
-          // case-INSENSITIVE name match: the former Spark-side aggregation
-          // resolved stats columns under the analyzer's default resolver,
-          // so a miscased caller still produced stats — the footer pass
-          // must not silently disable pruning where the old path pruned
-          b.getColumns.asScala.find(_.getPath.toDotString.equalsIgnoreCase(sc)) match {
-            case Some(cc) =>
+          // the exact name first; failing that, a case-INSENSITIVE match,
+          // as the analyzer's default resolver would find a miscased
+          // caller's column — but only when it is UNIQUE. Under
+          // spark.sql.caseSensitive a file may hold case twins (`id` and
+          // `ID`); a miscased name then matches both, and picking one
+          // would log the other column's bounds, so the stats stay
+          // untrusted (never pruned) instead
+          val cols = b.getColumns.asScala.toSeq
+          val exact = cols.filter(_.getPath.toDotString == sc)
+          val matched =
+            if (exact.nonEmpty) exact
+            else cols.filter(_.getPath.toDotString.equalsIgnoreCase(sc))
+          matched match {
+            case Seq(cc) =>
               val st = cc.getStatistics
               if (st == null || st.isEmpty) trusted = false
               else if (st.hasNonNullValue) st match {
@@ -898,7 +930,7 @@ object TableLog {
               }
             // else: an all-null row group contributes nothing (numNulls
             // set, no min/max) — same as the former agg's null-skip
-            case None => trusted = false
+            case _ => trusted = false // absent, or ambiguous case twins
           }
         }
         if (trusted && any) Some(FileStats(sc, mn, mx)) else None

@@ -570,6 +570,28 @@ class LakehouseSpec extends SparkSpecBase {
     }
   }
 
+  test("footer stats: under caseSensitive, case twins resolve by EXACT name — never the other twin's bounds") {
+    // `id` and `ID` with disjoint ranges: the case-insensitive fallback
+    // exists for a miscased caller, so an exact match must win — a file
+    // logging `id`'s bounds for `ID` would prune ranges that hold rows
+    val table = s"${Etl.scratch(spark)}/stats_case_twins_table"
+    fs(table).delete(new Path(table), true)
+    spark.conf.set("spark.sql.caseSensitive", "true")
+    try {
+      val twins = spark.range(0, 10).select(col("id"), (col("id") + 1000L).as("ID"))
+      val Seq(upper) = TableLog.stageWithStats(spark, table, twins, "data/upper",
+        Seq("ID"), 1)
+      assert(upper.stats === Seq(TableLog.FileStats("ID", 1000L, 1009L)))
+      val Seq(lower) = TableLog.stageWithStats(spark, table, twins, "data/lower",
+        Seq("id"), 1)
+      assert(lower.stats === Seq(TableLog.FileStats("id", 0L, 9L)))
+      // a miscased name matching BOTH twins is ambiguous: no stats, so
+      // the file is never pruned
+      assert(TableLog.footerStats(spark.sparkContext.hadoopConfiguration,
+        new Path(s"$table/${upper.path}"), Seq("Id")) === Nil)
+    } finally spark.conf.unset("spark.sql.caseSensitive")
+  }
+
   test("s14 x s12: a CDF window crossing a schema-evolution commit unions with null-filled early slices, not an AnalysisException") {
     import spark.implicits._
     val table = s"${Etl.scratch(spark)}/s14_evo_table"
@@ -1454,11 +1476,14 @@ class LakehouseSpec extends SparkSpecBase {
         ticks.addData(3); q.processAllAvailable()
       } finally q.stop()
     } finally spark.conf.unset("spark.graft.log.checkpointInterval")
-    assert(TableLog.currentVersion(spark, dst) === 3)
+    // tick 2's two source versions landed as ONE window commit carrying
+    // both markers
+    assert(TableLog.currentVersion(spark, dst) === 2)
+    assert(TableLog.lastCommitted(spark, dst, "cdf:r17stream") === Some(3L))
     // the long-lived relay checkpointed its destination (v2 % 2 == 0)
     assert(fs(dst).exists(new Path(s"$dst/_log/v2.ckpt")),
       "the relay destination never auto-checkpointed")
-    val got = TableLog.readAsOf(spark, dst, 3)
+    val got = TableLog.readAsOf(spark, dst, 2)
       .agg(count(lit(1)), sum($"event_id")).collect().head
     val want = TableLog.readAsOf(spark, src, 3)
       .agg(count(lit(1)), sum($"event_id")).collect().head
@@ -1568,17 +1593,20 @@ class LakehouseSpec extends SparkSpecBase {
     Seq(src, dst).foreach(t => fs(t).delete(new Path(t), true))
     val ev = Tables.events(spark, sfDir)
       .select($"event_id", $"user_id", $"event_type", $"value")
-    TableLog.commit(spark, src, TableLog.Action("schema", ev.schema.json) +:
-      TableLog.stage(spark, src, ev.filter($"event_id" % 3 === 0), "data/v1"))
-    TableLog.commit(spark, src,
-      TableLog.stage(spark, src, ev.filter($"event_id" % 3 === 1), "data/v2"))
-    TableLog.commit(spark, src,
-      TableLog.stage(spark, src, ev.filter($"event_id" % 3 === 2), "data/v3"))
     spark.conf.set("spark.graft.log.optimizeMaxFiles", "6")
     spark.conf.set("spark.graft.log.optimizeTargetFiles", "2")
     try {
-      assert(Lakehouse.relay(spark, src, dst, "event_id", "policyrelay",
-        files = 4) === Seq(1, 2, 3))
+      // one tick per source commit: a catch-up tick applies its whole
+      // window as one 4-file commit, so the destination reaches the
+      // 6-file threshold only across ticks
+      (0 until 3).foreach { b =>
+        val rows = TableLog.stage(spark, src, ev.filter($"event_id" % 3 === b),
+          s"data/v${b + 1}")
+        TableLog.commit(spark, src,
+          if (b == 0) TableLog.Action("schema", ev.schema.json) +: rows else rows)
+        assert(Lakehouse.relay(spark, src, dst, "event_id", "policyrelay",
+          files = 4) === Seq(b + 1))
+      }
       val head = TableLog.currentVersion(spark, dst)
       val st = TableLog.liveState(spark, dst, head)
       assert(st.files.size === 2,

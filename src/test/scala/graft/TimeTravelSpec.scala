@@ -351,7 +351,7 @@ class TimeTravelSpec extends SparkSpecBase {
     TableLog.buildFixture(spark, sfDir, table)
     TableLog.publish(spark, table, 4,
       Seq(TableLog.Action("add", "data/winner/file.parquet")))
-    val e = intercept[Exception] {
+    val e = intercept[TableLog.CommitConflict] {
       TableLog.publish(spark, table, 4,
         Seq(TableLog.Action("add", "data/loser/file.parquet")))
     }
@@ -449,6 +449,66 @@ class TimeTravelSpec extends SparkSpecBase {
       })
     assert(v2 === TableLog.currentVersion(spark, t) &&
       TableLog.alreadyCommitted(spark, t, "s", 2L))
+  }
+
+  test("commitIfAbsent over a window: two writers publish the same window — ONE commit carrying every marker lands, the loser returns -1") {
+    // a relay window commits one txn marker per source version in ONE
+    // manifest. Two writers race the same window (1, 3]: the competitor
+    // publishes inside our read-to-publish window, our publish loses,
+    // and the per-attempt gate — one log pass over ALL the window's
+    // markers — must back off instead of retrying past the winner.
+    val t = s"${Etl.scratch(spark)}/txn_window_race_table"
+    fs.delete(new Path(t), true)
+    TableLog.commit(spark, t, Seq(TableLog.Action("add", "data/base/f.parquet")))
+    val window = Seq(1L, 2L, 3L)
+    var competed = false
+    val r = TableLog.commitIfAbsent(spark, t, "w", window,
+      Seq(TableLog.Action("add", "data/ours/f.parquet")), 5,
+      beforePublish = next => if (!competed) {
+        competed = true
+        assert(TableLog.commitIfAbsent(spark, t, "w", window,
+          Seq(TableLog.Action("add", "data/theirs/f.parquet")), 5, _ => ()) === next)
+        ()
+      })
+    assert(competed)
+    assert(r === -1, s"the window committed twice (returned v$r)")
+    assert(TableLog.currentVersion(spark, t) === 2)
+    val live = TableLog.liveFiles(spark, t, 2)
+    assert(live.contains("data/theirs/f.parquet") && !live.contains("data/ours/f.parquet"))
+    // the winner's ONE manifest carries every version's marker, once
+    val txnLines = (1 to 2).map { v =>
+      val in = fs.open(new Path(t, s"_log/v$v.log"))
+      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+        .filter(_.startsWith("txn\t")).toList
+      finally in.close()
+    }
+    assert(txnLines === Seq(Nil, window.map(b => s"txn\tw\t$b")))
+    assert(TableLog.lastCommitted(spark, t, "w") === Some(3L))
+    window.foreach(b => assert(TableLog.alreadyCommitted(spark, t, "w", b)))
+  }
+
+  test("commitIfAbsent over a window: a window overlapping an already committed id no-ops") {
+    val t = s"${Etl.scratch(spark)}/txn_window_overlap_table"
+    fs.delete(new Path(t), true)
+    assert(TableLog.commitIfAbsent(spark, t, "w", Seq(1L, 2L, 3L),
+      Seq(TableLog.Action("add", "data/w1/f.parquet")), 5, _ => ()) === 1)
+    // (2, 5] overlaps the committed id 3: nothing lands, and the ids
+    // past the overlap stay uncommitted for the caller to re-window
+    assert(TableLog.commitIfAbsent(spark, t, "w", Seq(3L, 4L, 5L),
+      Seq(TableLog.Action("add", "data/w2/f.parquet")), 5, _ => ()) === -1)
+    assert(TableLog.currentVersion(spark, t) === 1)
+    assert(!TableLog.liveFiles(spark, t, 1).contains("data/w2/f.parquet"))
+    assert(!TableLog.alreadyCommitted(spark, t, "w", 4L) &&
+      !TableLog.alreadyCommitted(spark, t, "w", 5L))
+    // the gate reads the markers from the checkpoint as well as the
+    // manifests past it
+    TableLog.checkpointLog(spark, t)
+    assert(TableLog.alreadyCommitted(spark, t, "w", Seq(5L, 2L)))
+    assert(!TableLog.alreadyCommitted(spark, t, "w", Seq(4L, 5L)))
+    // the disjoint window lands
+    assert(TableLog.commitIfAbsent(spark, t, "w", Seq(4L, 5L),
+      Seq(TableLog.Action("add", "data/w3/f.parquet")), 5, _ => ()) === 2)
+    assert(TableLog.lastCommitted(spark, t, "w") === Some(5L))
   }
 
   test("vacuum: the min-age guard protects an in-flight writer's staged files") {
