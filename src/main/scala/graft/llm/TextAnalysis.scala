@@ -479,8 +479,8 @@ object TextAnalysis {
     // two-phase plan is unchanged; the merges are byte-identical either
     // way (CorpusOpsSpec pins both sides of the gate).
     val onePart = docs.queryExecution.optimizedPlan.stats.sizeInBytes <=
-      BigInt(spark.conf.get("spark.graft.bpe.vocabOnePartitionMaxBytes",
-        (1L << 30).toString).toLong)
+      BigInt(graft.operators.TableLog.confLong(spark,
+        "spark.graft.bpe.vocabOnePartitionMaxBytes", (1L << 30).toString))
     val vocab0 = docs
       .select(explode(split($"text", " ")).as("w"))
       .filter(length($"w") >= 2 && !$"w".contains(BPE_SEP))

@@ -71,7 +71,7 @@ object Lakehouse {
     // the snapshot read is DV-aware, so the packed rewrite ABSORBS every
     // live deletion vector (S18): deleted rows are physically gone from
     // the output and the DVs retire in the same commit — the OPTIMIZE
-    // step that bounds how many DVs a read ever has to anti-join
+    // step that bounds how many DVs a read ever has to probe
     val snapshot = TableLog.readAsOf(spark, table, v0)
     val adds =
       if (statsCols.nonEmpty)
@@ -117,7 +117,8 @@ object Lakehouse {
   /** Auto-maintenance policy (S13 as a POLICY, conf-gated): OPTIMIZE
     * when the snapshot's METADATA says the read tax passed the knobs —
     * `spark.graft.log.optimizeMaxDvs` live deletion vectors (each stacks
-    * a broadcast anti-join on every read; LakeMergeProbe prices the tax)
+    * an in-scan key probe, and its file group a scan, on every read;
+    * LakeMergeProbe prices the tax)
     * or `spark.graft.log.optimizeMaxFiles` live files (the per-file scan
     * floor), packing to `spark.graft.log.optimizeTargetFiles`. The check
     * is metadata-only — one log replay, no data I/O — and both knobs
@@ -224,7 +225,8 @@ object Lakehouse {
     *    retired inside the window nets out;
     *  - retired: pre files not in post, read at `from` with the pre DVs;
     *  - window DVs: post DVs newer than `from` — every one of them scopes
-    *    over every kept pre file — semi-joined against the kept pre files.
+    *    over every kept pre file — probed against the kept pre files
+    *    inside their scan ([[TableLog.dvMatch]]).
     *
     * Scale shape: the join is bounded by the WINDOW's files, never the
     * table — a daily commit touching 0.01% of a 100 TB table feeds
@@ -271,30 +273,23 @@ object Lakehouse {
     val preFromRetired = scan(retired, pre.dvs, preSchema)
     // S18/S20: a deletion-vector action hides rows without touching a
     // data file, so its pre-images are invisible to the retired-file scan
-    // above — derive them by semi-joining the kept pre files (earlier DVs
-    // already applied: a key deleted twice feeds once) against the window
-    // DV keys, and fold them into the SAME full-outer join below. That is
-    // what nets a MOR MERGE commit (dv + adds in one version, S20) to
-    // `update` rows carrying post-images — not an insert/delete pair a
+    // above — derive them by filtering the kept pre files (earlier DVs
+    // already applied: a key deleted twice feeds once) to the rows a
+    // window DV holds, and fold them into the SAME full-outer join below.
+    // That is what nets a MOR MERGE commit (dv + adds in one version, S20)
+    // to `update` rows carrying post-images — not an insert/delete pair a
     // strict consumer could order wrong — while a pure DV delete (S18)
-    // still nets to `delete` rows with pre-images. The DV side is
-    // delete-volume-bounded and broadcasts. Retired files are excluded
-    // from the semi-join scan: their visible rows already feed through
-    // the retired-file side, and feeding them twice would duplicate keys
-    // into the full-outer join.
+    // still nets to `delete` rows with pre-images. The DV keys are probed
+    // inside the scan task (one `dv_contains` per key column, OR-ed), so
+    // a row matching several window DVs is still emitted once — keyCol is
+    // unique per snapshot, so no dedup (and no shuffle) is needed.
+    // Retired files are excluded from this scan: their visible rows
+    // already feed through the retired-file side, and feeding them twice
+    // would duplicate keys into the full-outer join.
     val preFromDvs =
       if (dvPaths.isEmpty || kept.isEmpty) scan(Nil, Nil, preSchema)
-      else {
-        val preSnap = scan(kept, pre.dvs, preSchema)
-        dvPaths.map(p => spark.read.parquet(s"$table/$p"))
-          .groupBy(_.columns.head).toSeq
-          .map { case (kc, frames) =>
-            val keys = frames.map(_.select(col(kc).as("__dv_key"))).reduce(_ union _)
-            preSnap.join(broadcast(keys), col(kc) === col("__dv_key"), "left_semi")
-          }
-          .reduce(_ unionByName _)
-          .dropDuplicates(keyCol)
-      }
+      else scan(kept, pre.dvs, preSchema)
+        .filter(TableLog.dvMatch(spark, table, dvPaths))
     // columns only the POST schema has — the evolution commit itself,
     // where the pre schema lacks them so they cannot ride the compare
     // structs. Their VALUES still ride the feed (post-images carry the
@@ -860,7 +855,8 @@ object Lakehouse {
     * fine-grained deletes at 100 TB (Delta deletion vectors, Iceberg v2
     * equality-delete files): the commit writes ONE small parquet of
     * deleted keys plus a one-line `dv` manifest action, and rewrites NO
-    * data file. Readers anti-join the DV keys onto the (pruned) scan;
+    * data file. Readers drop the DV keys inside the (pruned) scan task
+    * (`NOT dv_contains`, [[TableLog.dvMatch]]);
     * [[compactCommit]] absorbs live DVs into its packed rewrite, which is
     * what bounds how many a read ever stacks.
     *
@@ -869,7 +865,9 @@ object Lakehouse {
     * survives ([[TableLog.LiveFile]]'s version). The key file is
     * self-describing — its single column's NAME is the key column it
     * deletes on — so the manifest line stays two fields and pre-S18 logs
-    * replay unchanged.
+    * replay unchanged. The key must be integral or string, in the same
+    * family as the table column (readers compare integral keys as long,
+    * strings by bytes); any other key type is refused here, at write time.
     *
     * Cost shape: S17 rewrites O(files covering the keys) on every delete;
     * S18 writes O(deleted keys) at delete time and defers the rewrite to
@@ -880,20 +878,24 @@ object Lakehouse {
     require(keys.columns.length == 1,
       s"morDelete takes a single-column key frame; got ${keys.columns.mkString(", ")}")
     // the key file's column name is LOAD-BEARING (the self-describing
-    // wire contract: readers join on it) — a DV committed under a name
+    // wire contract: readers probe it) — a DV committed under a name
     // the table schema lacks would poison EVERY subsequent read with an
     // unresolvable-column error; refuse at write time instead
     val cur = TableLog.currentVersion(spark, table)
     val keyCol = keys.columns.head
-    if (cur > 0) TableLog.schemaAsOf(spark, table, cur).foreach { sch =>
+    val keyType = keys.schema.head.dataType
+    val sch = if (cur > 0) TableLog.schemaAsOf(spark, table, cur) else None
+    sch.foreach { sch =>
       require(sch.fieldNames.contains(keyCol),
         s"morDelete key column '$keyCol' is not in the table schema " +
           s"(${sch.fieldNames.mkString(", ")}) — a committed DV under it " +
           "would fail every read")
     }
+    requireDvKeyType("morDelete", keyCol, keyType,
+      sch.fold(keyType)(_(keyCol).dataType))
     val rel = s"data/dv/${java.util.UUID.randomUUID}"
-    // one file: a DV is delete-volume-sized by contract (the broadcast
-    // bound readers rely on) — a delete big enough to need many files
+    // one file: a DV is delete-volume-sized by contract (every reading
+    // JVM holds its key set in memory) — a delete big enough to need many files
     // should be a copy-on-write rewrite (S17) instead
     keys.distinct().coalesce(1)
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$table/$rel")
@@ -908,6 +910,22 @@ object Lakehouse {
     // dv action would resurrect every deleted row, so the requirement is
     // stated on the wire, not assumed
     TableLog.commit(spark, table, Action("feature", "dv") +: staged)
+  }
+
+  /** The DV key-type contract, refused at write time: readers probe DV
+    * keys as `long` (integral types) or as string bytes, so a DV keyed on
+    * any other type — or on the other family than the table column —
+    * would commit fine and then fail (or never match) on every read. */
+  private def requireDvKeyType(op: String, keyCol: String,
+      dvType: org.apache.spark.sql.types.DataType,
+      columnType: org.apache.spark.sql.types.DataType): Unit = {
+    val fam = graft.plans.DvContains.family(dvType)
+    require(fam.isDefined,
+      s"$op key column '$keyCol' is ${dvType.simpleString}; deletion vectors " +
+        "key on integral or string columns only")
+    require(fam == graft.plans.DvContains.family(columnType),
+      s"$op key column '$keyCol' is ${dvType.simpleString} but the table " +
+        s"column is ${columnType.simpleString}: integral and string keys never match")
   }
 
   /** S18 [EXT]: declared query — v1 stages the events table key-clustered
@@ -960,12 +978,13 @@ object Lakehouse {
     * Cost shape at 100 TB: an upsert touching k keys costs O(k) at write
     * time — one key-file parquet and the post-image stage — where S17
     * pays O(files covering the keys) in read+rewrite; the read-side tax
-    * is the same broadcast anti-join every S18 DV already costs, and the
+    * is the same in-scan key probe every S18 DV already costs, and the
     * next OPTIMIZE ([[compactCommit]]) absorbs both. That is the
     * Delta-DV / Hudi-MOR upsert trade: frequent fine-grained upserts pay
     * at compaction time, not per commit.
     *
-    * Contracts: `rows` must carry exactly the logged schema's columns
+    * Contracts: `keyCol` must be integral or string (the DV key-type
+    * contract [[morDelete]] states); `rows` must carry exactly the logged schema's columns
     * (an upsert is a full-row replacement — partial-column updates are a
     * read-modify-write, S17's job); `keyCol` must be key-unique in
     * `rows` AND in the table snapshot (the same uniqueness every CDF
@@ -987,6 +1006,7 @@ object Lakehouse {
     require(sch.fieldNames.contains(keyCol),
       s"morMerge key column '$keyCol' is not in the table schema " +
         s"(${sch.fieldNames.mkString(", ")})")
+    requireDvKeyType("morMerge", keyCol, sch(keyCol).dataType, sch(keyCol).dataType)
     require(rows.columns.toSet == sch.fieldNames.toSet,
       s"morMerge post-images must carry exactly the logged schema " +
         s"(${sch.fieldNames.mkString(", ")}); got ${rows.columns.mkString(", ")} " +
@@ -1017,7 +1037,7 @@ object Lakehouse {
         .getAs[Long]("__n") == 0L) return cur
     // the DV key file (morDelete's self-describing wire: the single
     // column's NAME is the key column, one file by the delete-volume
-    // broadcast contract) and the post-image stage are INDEPENDENT writes
+    // contract) and the post-image stage are INDEPENDENT writes
     // off the same checkpointed frame into disjoint staging dirs — they
     // run concurrently (inParallel, the fixture-staging discipline) and
     // stay invisible until the single commit below publishes both

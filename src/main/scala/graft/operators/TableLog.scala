@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -115,8 +115,16 @@ object TableLog {
     * (the r17 review found three hand-rolled copies drifting apart). */
   private[graft] def confInt(spark: SparkSession, key: String,
       default: String): Int = {
+    val v = confLong(spark, key, default)
+    if (v.isValidInt) v.toInt
+    else throw new IllegalArgumentException(s"$key must be an integer, got '$v'")
+  }
+
+  /** [[confInt]] for knobs whose values pass 2^31 (byte sizes). */
+  private[graft] def confLong(spark: SparkSession, key: String,
+      default: String): Long = {
     val v = spark.conf.get(key, default)
-    v.toIntOption.getOrElse(throw new IllegalArgumentException(
+    v.toLongOption.getOrElse(throw new IllegalArgumentException(
       s"$key must be an integer, got '$v'"))
   }
 
@@ -722,13 +730,13 @@ object TableLog {
   /** The DV-aware snapshot scan both [[readAsOf]] and [[readAsOfRange]]
     * build on. Data files group by the SET of deletion vectors that apply
     * to them (dv.version > file's add version — the sequence-number
-    * scoping); each group anti-joins its DV keys. The DV side is
-    * delete-volume-sized and BROADCAST (compaction absorbs DVs, which is
-    * what bounds their accumulation — the S13×S18 contract), so at 100 TB
-    * a snapshot read pays one broadcast anti-join per group, never a
-    * shuffle of the data. Group count is bounded by the commit count
-    * between compactions. A table with no live DVs takes the exact
-    * pre-S18 single-scan plan — zero cost when the feature is unused. */
+    * scoping); each group's scan filters out its DV keys inside the scan
+    * task ([[dvMatch]]): no DV DataFrame, no broadcast, no join, and no
+    * job beyond the scan's own — a snapshot read under DVs stays one scan
+    * stage per group at any table size. Group count is bounded by the
+    * commit count between compactions (compaction absorbs DVs — the
+    * S13×S18 contract). A table with no live DVs takes the exact pre-S18
+    * single-scan plan — zero cost when the feature is unused. */
   private[graft] def scanState(spark: SparkSession, table: String,
       files: Seq[LiveFile], dvs: Seq[(String, Int)],
       schema: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
@@ -743,26 +751,46 @@ object TableLog {
     else {
       files.groupBy(f => dvs.filter(_._2 > f.version).map(_._1)).toSeq
         .map { case (dvPaths, group) =>
-          applyDvs(spark, table, rd(group.map(_.path)), dvPaths)
+          val df = rd(group.map(_.path))
+          if (dvPaths.isEmpty) df else df.filter(!dvMatch(spark, table, dvPaths))
         }
         .reduce(_ unionByName _)
     }
   }
 
-  /** Anti-join `df` against the keys of the given deletion-vector files.
-    * Each DV parquet is self-describing: its single column's NAME is the
-    * key column it deletes on. DVs sharing a key column union into one
-    * broadcast per column. */
-  private def applyDvs(spark: SparkSession, table: String, df: DataFrame,
-      dvPaths: Seq[String]): DataFrame =
-    if (dvPaths.isEmpty) df
-    else dvPaths.map(p => spark.read.parquet(s"$table/$p"))
-      .groupBy(_.columns.head).toSeq
-      .foldLeft(df) { case (acc, (kc, frames)) =>
-        val keys = frames.map(_.select(col(kc).as("__dv_key")))
-          .reduce(_ union _)
-        acc.join(broadcast(keys), col(kc) === col("__dv_key"), "left_anti")
+  /** True for a row one of the given deletion vectors deletes: one native
+    * `dv_contains(keyCol, files)` per key column the DVs delete on, OR-ed.
+    * Each DV parquet is self-describing — its single column's NAME is the
+    * key column — and [[dvKey]] reads that name from the footer, so
+    * building the predicate runs no job. */
+  private[graft] def dvMatch(spark: SparkSession, table: String,
+      dvPaths: Seq[String]): Column = {
+    graft.plans.Native.install(spark)
+    dvPaths.map(p => dvKey(spark, table, p)).groupBy(_._2.name).toSeq.sortBy(_._1)
+      .map { case (kc, keys) =>
+        call_function("dv_contains", col(kc), typedLit(keys.map(_._1)))
       }
+      .reduce(_ || _)
+  }
+
+  /** Footer memo for [[dvKey]], keyed by qualified path: DV files are
+    * write-once and UUID-named, so an entry cannot go stale. Bounded like
+    * [[ckptCache]]. */
+  private val dvKeyCache =
+    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructField]()
+
+  /** A deletion vector's qualified path and its single key column (name
+    * and type), read from the parquet footer on the driver — no Spark job,
+    * one footer read per DV per JVM. */
+  private[graft] def dvKey(spark: SparkSession, table: String,
+      rel: String): (String, org.apache.spark.sql.types.StructField) = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val path = fsOf(spark, table).makeQualified(new Path(table, rel))
+    val key = path.toString
+    if (dvKeyCache.size > 256) dvKeyCache.clear()
+    key -> dvKeyCache.computeIfAbsent(key,
+      _ => graft.plans.DvContains.keyField(conf, path))
+  }
 
   /** Stage `df` as a fresh file set under `table/rel/` and return the add
     * actions — no reader sees them until the enclosing [[commit]]. */
@@ -1403,8 +1431,9 @@ object TableLog {
     * schema commit.
     *
     * Two guards: a column a LIVE deletion vector deletes on cannot drop
-    * (every subsequent read's DV anti-join would fail to resolve the key
-    * — run OPTIMIZE first to absorb the DV), and the last column cannot
+    * (every subsequent read's DV filter would fail to resolve the key —
+    * run OPTIMIZE first to absorb the DV; the key column comes from the
+    * DV's footer, so the guard runs no job), and the last column cannot
     * drop. DOCUMENTED HAZARD: re-adding a dropped NAME in a later schema
     * commit RESURFACES the old values wherever their files still live,
     * because this log maps columns BY NAME — the production fix is
@@ -1422,10 +1451,9 @@ object TableLog {
       s"dropColumn: '$name' is not in the schema (${sch.fieldNames.mkString(", ")})")
     require(sch.fields.length > 1, s"dropColumn: cannot drop the last column")
     liveState(spark, table, cur).dvs.foreach { case (p, _) =>
-      val kc = spark.read.parquet(s"$table/$p").columns.head
-      require(kc != name,
+      require(dvKey(spark, table, p)._2.name != name,
         s"dropColumn: live deletion vector $p deletes on '$name' — every " +
-          "read's DV anti-join would fail; OPTIMIZE first to absorb it")
+          "read's DV filter would fail; OPTIMIZE first to absorb it")
     }
     commit(spark, table, Seq(Action("schema",
       org.apache.spark.sql.types.StructType(

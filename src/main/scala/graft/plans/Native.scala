@@ -35,7 +35,8 @@ object Native {
     entry("graft_might_contain", classOf[BloomFilterMightContain], BloomFunctions.probeBuilder),
     entry("json_long", classOf[JsonGetLong], JsonGetLong.builder),
     entry("sum128", classOf[Sum128], Sum128.builder),
-    entry("simhash_sig", classOf[SimHashSig], SimHashSig.builder))
+    entry("simhash_sig", classOf[SimHashSig], SimHashSig.builder),
+    entry("dv_contains", classOf[DvContains], DvContains.builder))
 
   /** Registers every function the session does not already resolve.
     * Idempotent and cheap to repeat: an installed entry is left alone, so

@@ -16,7 +16,6 @@ import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, Par
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.operators.TableLog
 
@@ -181,8 +180,9 @@ private[sources] class LogTailMicroBatchStream(table: String,
     // pending initial snapshot: the live state AS OF the base version
     // streams as this window's head — deterministic (a mid-snapshot
     // restart re-plans the identical file set from the same offset), and
-    // read DV-FREE only: this reader cannot anti-join deletion vectors,
-    // so a snapshot over live DVs refuses loudly (OPTIMIZE absorbs them)
+    // read DV-FREE only: this reader does not apply deletion vectors
+    // (the batch readers' in-scan dv_contains filter), so a snapshot over
+    // live DVs refuses loudly (OPTIMIZE absorbs them)
     if (so.snapshotPending && s >= 1) {
       val st = TableLog.liveState(spark, table, s)
       require(st.dvs.isEmpty,
@@ -279,17 +279,7 @@ private[sources] class LogTailPartitionReader(absPath: String,
     val fileType = g.getType
     InternalRow.fromSeq(streamSchema.fields.toSeq.map { f =>
       if (!readable(f.name) || !fileType.containsField(f.name)) null
-      else if (g.getFieldRepetitionCount(f.name) == 0) null
-      else f.dataType match {
-        case LongType => g.getLong(f.name, 0)
-        case IntegerType => g.getInteger(f.name, 0)
-        case DoubleType => g.getDouble(f.name, 0)
-        case FloatType => g.getFloat(f.name, 0)
-        case BooleanType => g.getBoolean(f.name, 0)
-        case StringType => UTF8String.fromString(g.getString(f.name, 0))
-        case dt => throw new IllegalStateException(
-          s"unreachable: '${f.name}' ${dt.simpleString} passed checkSupported")
-      }
+      else graft.plans.GroupValue(g, f.name, f.dataType)
     })
   }
 

@@ -281,6 +281,16 @@ class CorpusOpsSpec extends SparkSpecBase {
     finally spark.conf.unset("spark.graft.bpe.vocabOnePartitionMaxBytes")
   }
 
+  test("l21: a malformed vocabOnePartitionMaxBytes is refused loudly, naming the key") {
+    import spark.implicits._
+    val docs = Tables.documents(spark, sfDir).select($"text")
+    spark.conf.set("spark.graft.bpe.vocabOnePartitionMaxBytes", "1g")
+    val e = try intercept[IllegalArgumentException](graft.llm.TextAnalysis.bpeLearn(docs, 8))
+      finally spark.conf.unset("spark.graft.bpe.vocabOnePartitionMaxBytes")
+    assert(!e.isInstanceOf[NumberFormatException] &&
+      e.getMessage.contains("spark.graft.bpe.vocabOnePartitionMaxBytes"), e.getMessage)
+  }
+
   test("l21: checkpoint ladder bounds plan depth without changing the merges") {
     import spark.implicits._
     val docs = Tables.documents(spark, sfDir).select($"text")

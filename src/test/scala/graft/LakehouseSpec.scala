@@ -1085,7 +1085,7 @@ class LakehouseSpec extends SparkSpecBase {
     } finally spark.conf.unset("spark.graft.log.checkpointInterval")
   }
 
-  test("s18 plan: the DV anti-join BROADCASTS the key side — the data side never shuffles for a delete") {
+  test("s18 plan: the DV applies INSIDE the scan (dv_contains) — no join, no broadcast, the data side never shuffles for a delete") {
     import spark.implicits._
     val table = s"${Etl.scratch(spark)}/s18_plan_table"
     fs(table).delete(new Path(table), true)
@@ -1097,12 +1097,12 @@ class LakehouseSpec extends SparkSpecBase {
       ev.filter($"event_type" === "click").select($"event_id"))
     val plan = TableLog.readAsOf(spark, table, 2)
       .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
-      s"DV read must be a broadcast anti-join:\n$plan")
-    // no exchange on the scan side: a snapshot read under a DV costs a
-    // broadcast probe, never a shuffle of the table
-    assert(!plan.contains("Exchange hashpartitioning"),
-      s"DV read shuffled the data side:\n$plan")
+    assert(plan.contains("dv_contains"), s"DV read must filter in the scan:\n$plan")
+    assert(!plan.contains("Join") && !plan.contains("Broadcast"),
+      s"DV read joined or broadcast the DV keys:\n$plan")
+    // no exchange on the scan side: a snapshot read under a DV costs an
+    // in-task key probe, never a shuffle of the table
+    assert(!plan.contains("Exchange"), s"DV read shuffled the data side:\n$plan")
   }
 
   test("s19: checkpoint wire format refuses corruption loudly") {
