@@ -71,8 +71,9 @@ object Lakehouse {
     // the snapshot read is DV-aware, so the packed rewrite ABSORBS every
     // live deletion vector (S18): deleted rows are physically gone from
     // the output and the DVs retire in the same commit — the OPTIMIZE
-    // step that bounds how many DVs a read ever has to probe
-    val snapshot = TableLog.readAsOf(spark, table, v0)
+    // step that bounds how many DVs a read ever has to probe (the
+    // readAsOf scan, over the state already replayed)
+    val snapshot = TableLog.scanState(spark, table, st0.files, st0.dvs, st0.schema)
     val adds =
       if (statsCols.nonEmpty)
         TableLog.stageWithStats(spark, table, snapshot, rel, statsCols, targetFiles)
@@ -237,13 +238,12 @@ object Lakehouse {
     * event_id), the same contract every CDF-producing table format
     * states. */
   private def cdfSliceFrom(spark: SparkSession, table: String, from: Int,
-      to: Int, keyCol: String,
-      pre: TableLog.LiveState, preSchemaOpt: Option[StructType],
-      post: TableLog.LiveState, postSchemaOpt: Option[StructType]): DataFrame = {
-    val postSchema = postSchemaOpt.getOrElse(
+      to: Int, keyCol: String, pre: TableLog.LogState,
+      post: TableLog.LogState): DataFrame = {
+    val postSchema = post.schema.getOrElse(
       throw new IllegalStateException(
         s"cdfRead needs a logged schema for $table@v$to — commit one at v1"))
-    val preSchema = if (from == 0) postSchema else preSchemaOpt.getOrElse(postSchema)
+    val preSchema = if (from == 0) postSchema else pre.schema.getOrElse(postSchema)
     val prePaths = pre.files.map(_.path).toSet
     val postPaths = post.files.map(_.path).toSet
     val added = post.files.filterNot(f => prePaths(f.path))
@@ -326,17 +326,22 @@ object Lakehouse {
         postOnly.map(c => col(s"__postx.$c").as(c)): _*)
   }
 
-  /** The net slice of the window (from, to] ([[cdfSliceFrom]]) from two
-    * replays of the log — each bounded by the newest checkpoint at or
-    * below its version (S19). The single-commit feed is the window
-    * (v-1, v]. */
+  /** The states of `table` as of `from` and `to`: one replay to `from`
+    * (bounded by the newest checkpoint at or below it, S19) walked on to
+    * `to`. */
+  private def windowStates(spark: SparkSession, table: String, from: Int,
+      to: Int): (TableLog.LogState, TableLog.LogState) = {
+    val (pre, steps) = TableLog.window(spark, table, from, to)
+    (pre, steps.lastOption.fold(pre)(_.after))
+  }
+
+  /** The net slice of the window (from, to] ([[cdfSliceFrom]]). The
+    * single-commit feed is the window (v-1, v]. */
   private[graft] def cdfSlice(spark: SparkSession, table: String, from: Int,
-      to: Int, keyCol: String): DataFrame =
-    cdfSliceFrom(spark, table, from, to, keyCol,
-      TableLog.liveState(spark, table, from),
-      TableLog.schemaAsOf(spark, table, from),
-      TableLog.liveState(spark, table, to),
-      TableLog.schemaAsOf(spark, table, to))
+      to: Int, keyCol: String): DataFrame = {
+    val (pre, post) = windowStates(spark, table, from, to)
+    cdfSliceFrom(spark, table, from, to, keyCol, pre, post)
+  }
 
   /** S14 [EXT]: change-data-feed read over the window (from, to] — the
     * union of each commit's slice, the subscription surface MV1's
@@ -365,18 +370,11 @@ object Lakehouse {
           schema.fields.filterNot(_.name == keyCol))
       return spark.createDataFrame(java.util.Collections.emptyList[Row](), feed)
     }
-    // ONE replay threaded across the window — O(window) manifest reads
+    // ONE replay walked across the window — O(window) manifest reads
     // past the base state (which itself starts from the newest log
-    // checkpoint at or below `from`, S19): the live state and logged
-    // schema advance commit by commit, and each slice consumes the
-    // states just before and just after its own manifest applies.
-    val base = TableLog.liveState(spark, table, from)
-    val files = scala.collection.mutable.LinkedHashMap.empty[String, TableLog.LiveFile]
-    base.files.foreach(f => files(f.path) = f)
-    val dvs = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-    base.dvs.foreach { case (p, v) => dvs(p) = v }
-    var state = base
-    var schema = TableLog.schemaAsOf(spark, table, from)
+    // checkpoint at or below `from`, S19): each slice consumes the states
+    // just before and just after its own manifest applies.
+    val (base, steps) = TableLog.window(spark, table, from, to)
     // allowMissingColumns: slices on either side of a schema-evolution
     // commit (S12) carry different value-column sets — the pre-evolution
     // slices null-fill the later columns, so a CDF window MAY cross an
@@ -384,18 +382,8 @@ object Lakehouse {
     // union (each slice still compares pre/post images on the columns
     // both sides of ITS commit share — evolution never fabricates an
     // update out of a null-fill)
-    ((from + 1) to to).map { v =>
-      val (pre, preSchema) = (state, schema)
-      val (acts, sch) = TableLog.manifestEntries(spark, table, v)
-      acts.foreach {
-        case Action("add", p, st) => files(p) = TableLog.LiveFile(p, st, v)
-        case Action("dv", p, _) => dvs(p) = v
-        case Action("remove", p, _) => files.remove(p); dvs.remove(p)
-        case _ => ()
-      }
-      sch.foreach(s => schema = Some(s))
-      state = TableLog.LiveState(files.values.toSeq, dvs.toSeq)
-      cdfSliceFrom(spark, table, v - 1, v, keyCol, pre, preSchema, state, schema)
+    steps.zip(base +: steps.map(_.after)).map { case (step, pre) =>
+      cdfSliceFrom(spark, table, step.version - 1, step.version, keyCol, pre, step.after)
     }.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
@@ -613,7 +601,12 @@ object Lakehouse {
     require(from < to, s"cdfApply window is empty: ($from, $to]")
     val streamId = s"cdf:$consumer"
     val ids = ((from + 1) to to).map(_.toLong)
-    if (TableLog.alreadyCommitted(spark, dst, streamId, ids)) return -1
+    // the destination's txn set, head schema and live files: ONE replay,
+    // driver-side metadata read before any job, so the probe below can
+    // ride the delta's own materialization
+    val dstV = TableLog.currentVersion(spark, dst)
+    val dstState = TableLog.liveState(spark, dst, dstV)
+    if (dstState.committed(streamId, ids)) return -1
     def commitWindow(actions: Seq[Action]): Int =
       TableLog.commitIfAbsent(spark, dst, streamId, ids, actions, 5, _ => ())
     // schema evolution across the replica (S12 x S17): when the source's
@@ -625,15 +618,14 @@ object Lakehouse {
     // the slice's post-images carry the new columns' values
     // (cdfSliceFrom's post-only path), so the evolution commit's
     // backfill replicates instead of vanishing
-    val dstV = TableLog.currentVersion(spark, dst)
-    val dstSchema0 = if (dstV > 0) TableLog.schemaAsOf(spark, dst, dstV) else None
-    val srcSchemaOpt = TableLog.schemaAsOf(spark, src, to)
+    val (srcPre, srcPost) = windowStates(spark, src, from, to)
+    val srcSchemaOpt = srcPost.schema
     // a destination WITHOUT a logged schema — cold start, or a prior
     // marker-only apply (the common first source commit is schema-only,
     // whose empty delta must still propagate the schema; r17 review) —
     // adopts the source's schema with this apply. A schema'd destination
     // takes the evolution path.
-    val (dstSchema, schemaActs) = dstSchema0 match {
+    val (dstSchema, schemaActs) = dstState.schema match {
       case None =>
         (srcSchemaOpt, srcSchemaOpt.map(s => Action("schema", s.json)).toSeq)
       case Some(d) =>
@@ -651,12 +643,6 @@ object Lakehouse {
           (Some(evolved), Seq(Action("schema", evolved.json)))
         }
     }
-    // the destination's live state is DRIVER-SIDE metadata (manifest
-    // replay) — read it before any job so the probe below can ride the
-    // delta's own materialization
-    val dstState =
-      if (dstV == 0) TableLog.LiveState(Nil, Nil)
-      else TableLog.liveState(spark, dst, dstV)
     val (ranged, statless) = dstState.files.partition(
       _.stats.exists(_.col == keyCol))
     val isGone = c("_change_type").isin("delete", "update")
@@ -709,7 +695,7 @@ object Lakehouse {
                max(when(isGone && c(keyCol).cast("long") >= s.min &&
                  c(keyCol).cast("long") <= s.max, 1L).otherwise(0L)).as(s"__h$i")
              })
-        val observed = cdfSlice(spark, src, from, to, keyCol)
+        val observed = cdfSliceFrom(spark, src, from, to, keyCol, srcPre, srcPost)
           .observe("__cdf_probe", metricCols.head, metricCols.tail: _*)
         val ck = observed.localCheckpoint()
         // metrics read synchronously off the EXECUTED plan's accumulators
@@ -1151,8 +1137,9 @@ object Lakehouse {
       .map(_.toInt).getOrElse(0)
     val to = TableLog.currentVersion(spark, src)
     val applied = (from + 1) to to
-    val starts = applied.filter(v =>
-      v == from + 1 || TableLog.manifestEntries(spark, src, v)._2.isDefined)
+    val starts = TableLog.window(spark, src, from, to)._2.collect {
+      case s if s.version == from + 1 || s.actions.exists(_.op == "schema") => s.version
+    }
     starts.zip(starts.drop(1).map(_ - 1) :+ to).foreach { case (first, last) =>
       val dstV = cdfApply(spark, src, dst, first - 1, last, keyCol, consumer,
         files, evolveSchema, prepared = None)

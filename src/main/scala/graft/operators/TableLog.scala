@@ -34,78 +34,17 @@ import graft.Tables
   */
 object TableLog {
 
-  /** Per-file column statistics carried by an `add` action: min/max of ONE
-    * long-typed stats column, recorded at stage time. At 100 TB this is
-    * the difference between opening ~800k parquet footers to plan a range
-    * scan and reading one manifest: a snapshot read prunes to the files
-    * whose [min, max] overlaps the predicate BEFORE any footer I/O (the
-    * data-skipping S9's clustered layout provides inside a file, lifted
-    * to the file-set level). Stats are optional per action — a file
-    * staged without them is simply never pruned (the safe direction). */
-  private[graft] final case class FileStats(col: String, min: Long, max: Long)
-
-  /** One logged file action; `path` is table-relative (portable across
-    * mounts — the log never embeds an absolute URI). An `add` may carry
-    * stats for SEVERAL columns (the Z-order layout records every
-    * clustered dimension — S16). */
-  private[graft] final case class Action(op: String, path: String,
-      stats: Seq[FileStats] = Nil)
-
-  /** Parse one manifest line to a file action (None for schema/txn
-    * markers). Wire format: `add\tpath[\tcol\tmin\tmax]...` (one col-min-
-    * max triple per stats column) / `remove\tpath` / `dv\tpath` (S18: a
-    * deletion-vector file — a parquet of deleted keys whose single
-    * column IS the key column it deletes on) — the 2-field forms are
-    * what every pre-stats manifest holds, so old logs replay unchanged.
-    * A CORRUPT file action (stats arity not 3k, non-numeric bound, lost
-    * path) fails LOUDLY: silently dropping an unparseable add would lose
-    * a LIVE file — and a swallowed remove or dv would RESURRECT deleted
-    * rows — from every subsequent read with no error anywhere; a
-    * transactional log must refuse to replay what it cannot parse. */
-  private[graft] def parseAction(line: String): Option[Action] =
-    line.split("\t") match {
-      case Array("add", p, rest @ _*) =>
-        Some(Action("add", p, parseStatsTriples(rest, line)))
-      case Array("remove", p) => Some(Action("remove", p))
-      case Array("dv", p) => Some(Action("dv", p))
-      case arr if arr.headOption.exists(op =>
-          op == "add" || op == "remove" || op == "dv") =>
-        throw new IllegalStateException(s"corrupt manifest file action: $line")
-      case _ => None // schema / txn / feature markers
-    }
-
-  /** S21 [EXT]: reader features this engine implements. A manifest or
-    * checkpoint line `feature\t<name>` declares that correctly reading
-    * the table from that commit on REQUIRES understanding `<name>` — the
-    * protocol/table-features posture of the production formats (Delta
-    * reader versions, Iceberg format-version). The gate exists because
-    * [[parseAction]] deliberately tolerates unknown line kinds (schema
-    * and txn markers ride the same wire), so without it a FUTURE writer's
-    * new action — a range delete, an equality predicate — would be
-    * silently SKIPPED by an old reader, which then serves resurrected or
-    * duplicate rows with no error anywhere. The gate turns that silent
-    * wrongness into a loud refusal at replay time; declaring a feature
-    * the reader does implement costs one string compare per line. A
-    * declaration is permanent once committed (removal would need a
-    * rewrite proving no surviving action depends on it); the set rides
-    * checkpoints so it survives [[vacuumLog]] manifest GC. */
-  private[graft] val SUPPORTED_READER_FEATURES: Set[String] =
-    Set("dv", "stats", "checkpoint")
-
-  /** Refuse a `feature` line naming anything this reader does not
-    * implement; tolerate everything else. `where` names the table+version
-    * so the refusal points at the offending commit, not just the read. */
-  private def checkFeatureLine(line: String, where: String): Unit =
-    if (line.startsWith("feature\t")) {
-      val name = line.stripPrefix("feature\t")
-      if (name.isEmpty || name.contains("\t"))
-        throw new IllegalStateException(s"corrupt feature line in $where: $line")
-      if (!SUPPORTED_READER_FEATURES(name))
-        throw new IllegalStateException(
-          s"$where requires reader feature '$name'; this engine implements " +
-            s"only [${SUPPORTED_READER_FEATURES.toSeq.sorted.mkString(", ")}] " +
-            "and refuses to replay a log whose actions it could misread")
-    }
+  // the protocol's types and parser under the names writers, readers and
+  // specs use — [[LogProtocol]] owns them (what a line does to state);
+  // this object owns the I/O (listing, reading, publishing, caching)
+  private[graft] type FileStats = LogProtocol.FileStats
+  private[graft] val FileStats = LogProtocol.FileStats
+  private[graft] type Action = LogProtocol.Action
+  private[graft] val Action = LogProtocol.Action
+  private[graft] type LiveFile = LogProtocol.LiveFile
+  private[graft] val LiveFile = LogProtocol.LiveFile
+  private[graft] type LogState = LogProtocol.LogState
+  private[graft] val parseAction: String => Option[Action] = LogProtocol.parseAction
 
   private def fsOf(spark: SparkSession, table: String): FileSystem =
     new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -180,11 +119,8 @@ object TableLog {
       s"_log/.v$next.${java.util.UUID.randomUUID}.tmp"))
     val out = f.create(tmp, true)
     try {
-      actions.foreach { a =>
-        val line = (s"${a.op}\t${a.path}" +:
-          a.stats.map(s => s"${s.col}\t${s.min}\t${s.max}")).mkString("\t")
-        out.write((line + "\n").getBytes("UTF-8"))
-      }
+      actions.foreach(a =>
+        out.write((LogProtocol.actionLine(a) + "\n").getBytes("UTF-8")))
       out.hflush()
     } finally out.close()
     // one-winner publish through the LogStore seam — the storage-specific
@@ -243,61 +179,16 @@ object TableLog {
     finally in.close()
   }
 
-  /** The ONE manifest read primitive — every replay path (liveState,
-    * schemaAsOf, the txn gates, cdf, vacuum) comes through here, so the
-    * S21 feature gate lives here: a manifest declaring a feature this
-    * reader lacks refuses before any caller can act on a partial parse.
-    * (GC included on purpose: deleting manifests you cannot fully read
-    * is how a retention pass loses an action it never understood.) */
-  private def manifestLines(f: FileSystem, table: String, v: Int): Seq[String] = {
-    val lines = readLogLines(f, new Path(table, s"_log/v$v.log"))
-    lines.foreach(checkFeatureLine(_, s"$table@v$v"))
-    lines
-  }
-
-  /** Parse the col-min-max triples of a file action / checkpoint file
-    * line — ONE parser so the manifest and checkpoint wire formats can
-    * never silently diverge. Refuses loudly with the offending line. */
-  private def parseStatsTriples(rest: Seq[String], line: String): Seq[FileStats] = {
-    if (rest.size % 3 != 0) throw new IllegalStateException(
-      s"corrupt stats arity ${rest.size} in: $line")
-    try rest.grouped(3).map {
-      case Seq(c, mn, mx) => FileStats(c, mn.toLong, mx.toLong)
-    }.toSeq
-    catch {
-      case e: NumberFormatException => throw new IllegalStateException(
-        s"corrupt stats bound in: $line", e)
-    }
-  }
-
-  /** One live data file in a snapshot: table-relative path, its logged
-    * column stats, and the version whose commit ADDED it — the add
-    * version is what scopes deletion vectors (a DV committed at version v
-    * applies only to files added BEFORE v, so a post-delete re-insert of
-    * the same key survives, exactly the sequence-number rule of the
-    * production v2 table formats). */
-  private[graft] final case class LiveFile(path: String, stats: Seq[FileStats],
-      version: Int)
-
-  /** Full replay result as of a version: live data files plus live
-    * deletion vectors (path, commit version). */
-  private[graft] final case class LiveState(files: Seq[LiveFile],
-      dvs: Seq[(String, Int)])
+  /** The lines of manifest `v$v.log`, unparsed. Its one caller is [[walk]],
+    * so every manifest a read, gate, feed or GC pass consumes goes through
+    * [[LogProtocol.applyManifest]] and its S21 feature gate. */
+  private def manifestLines(f: FileSystem, table: String, v: Int): Seq[String] =
+    readLogLines(f, new Path(table, s"_log/v$v.log"))
 
   // ------------------------------------------------ S19: log checkpoints
 
-  /** A parsed checkpoint: the collapsed replay state as of its version.
-    * Files keep their ORIGINAL add versions — collapsing them to the
-    * checkpoint version would silently widen deletion-vector scope (a DV
-    * applies to files added before ITS commit, not before the
-    * checkpoint). Txn markers ride along so the exactly-once gate stays
-    * O(commits since checkpoint) too. */
-  private[graft] final case class Checkpoint(files: Seq[LiveFile],
-      dvs: Seq[(String, Int)], schema: Option[org.apache.spark.sql.types.StructType],
-      txns: Set[String], features: Set[String] = Set.empty)
-
   /** Parsed-checkpoint cache. Without it every txn probe and every
-    * schema fallback re-downloads and re-parses the same multi-MB file —
+    * snapshot read re-downloads and re-parses the same multi-MB file —
     * at ~800k live files that is exactly the per-read cost class S19
     * exists to remove. Keyed by (qualified path, length, mtime), NOT by
     * version alone: test fixtures (and a production restore) can delete
@@ -306,7 +197,7 @@ object TableLog {
     * Bounded: cleared wholesale past 256 entries (checkpoints are few;
     * this is a leak guard, not an eviction policy). */
   private val ckptCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), Checkpoint]()
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long), LogState]()
 
   /** Newest checkpoint version at or below `atMost` (None = replay from
     * v1, the pre-S19 path — old tables read unchanged). */
@@ -322,108 +213,47 @@ object TableLog {
       .maxOption
   }
 
-  /** Checkpoint wire format — ONE line per collapsed fact, its own forms
-    * (manifests are untouched; pre-S19 logs replay unchanged):
-    * `file\t<addVersion>\t<path>[\tcol\tmin\tmax]...` / `dv\t<version>\t
-    * <path>` / `schema\t<json>` / `txn\t<stream>\t<batch>` /
-    * `feature\t<name>` (S21 — the accumulated reader-feature set, gated
-    * by the same check the manifests run). Corrupt lines refuse loudly,
-    * the manifest-parse discipline: a silently dropped `file` line loses
-    * a live file from every read that trusts the checkpoint. */
+  /** The collapsed state checkpoint `v$version.ckpt` holds
+    * ([[LogProtocol.parseCheckpoint]]), cached. */
   private[graft] def loadCheckpoint(spark: SparkSession, table: String,
-      version: Int): Checkpoint = {
+      version: Int): LogState = {
     val f = fsOf(spark, table)
     val path = f.makeQualified(new Path(table, s"_log/v$version.ckpt"))
     val st = f.getFileStatus(path)
     val key = (path.toString, st.getLen, st.getModificationTime)
     val hit = ckptCache.get(key)
     if (hit != null) return hit
-    def corrupt(line: String): Nothing = throw new IllegalStateException(
-      s"corrupt checkpoint line in v$version.ckpt: $line")
-    val files = Seq.newBuilder[LiveFile]
-    val dvs = Seq.newBuilder[(String, Int)]
-    var schema: Option[org.apache.spark.sql.types.StructType] = None
-    val txns = Set.newBuilder[String]
-    val features = Set.newBuilder[String]
-    readLogLines(f, path).foreach { line =>
-      line.split("\t") match {
-        case Array("file", v, p, rest @ _*) =>
-          val addV = v.toIntOption.getOrElse(corrupt(line))
-          files += LiveFile(p, parseStatsTriples(rest, line), addV)
-        case Array("dv", v, p) =>
-          dvs += (p -> v.toIntOption.getOrElse(corrupt(line)))
-        case Array("schema", json) =>
-          schema = Some(org.apache.spark.sql.types.DataType.fromJson(json)
-            .asInstanceOf[org.apache.spark.sql.types.StructType])
-        case Array("txn", s, b) => txns += s"$s\t$b"
-        case Array("feature", _) =>
-          // validated (and refused if unimplemented) by the same gate the
-          // manifests use — the feature set must survive vacuumLog's
-          // manifest GC, which is why it rides the checkpoint at all
-          checkFeatureLine(line, s"$table v$version.ckpt")
-          features += line.stripPrefix("feature\t")
-        case Array("") => ()
-        case _ => corrupt(line)
-      }
-    }
-    val ck = Checkpoint(files.result(), dvs.result(), schema, txns.result(),
-      features.result())
+    val ck = LogProtocol.parseCheckpoint(table, version, readLogLines(f, path))
     if (ckptCache.size > 256) ckptCache.clear()
     ckptCache.put(key, ck)
     ck
   }
 
   /** Write the checkpoint for the CURRENT version: one collapsed-state
-    * file `_log/vN.ckpt`, staged to a dot-tmp and published with the same
-    * exclusive primitive as a commit. At 100 TB this is what keeps every
-    * read metadata cost O(commits since the last OPTIMIZE-and-checkpoint)
-    * instead of O(table lifetime): [[liveState]], [[schemaAsOf]] and the
-    * [[alreadyCommitted]] txn gate all start from the newest checkpoint
-    * at or below their version. Older manifests stay on disk, so time
-    * travel BELOW the checkpoint still replays from v1. Idempotent and
-    * race-safe: checkpoint content for a version is a pure function of
-    * the log, so a lost publish race means an identical file already
-    * exists — return the version quietly. Returns the checkpointed
-    * version. */
+    * file `_log/vN.ckpt` ([[LogProtocol.checkpointLines]]: live files with
+    * their ORIGINAL add versions, live DVs, schema, txn markers and reader
+    * features — features MUST ride it, because after [[vacuumLog]]
+    * retires the declaring manifest the checkpoint is the only place the
+    * requirement survives), staged to a dot-tmp and published with the
+    * same exclusive primitive as a commit. At 100 TB this is what keeps
+    * every read metadata cost O(commits since the last
+    * OPTIMIZE-and-checkpoint) instead of O(table lifetime): every replay
+    * ([[liveState]]) starts from the newest checkpoint at or below its
+    * version. Older manifests stay on disk, so time travel BELOW the
+    * checkpoint still replays from v1. Idempotent and race-safe:
+    * checkpoint content for a version is a pure function of the log, so a
+    * lost publish race means an identical file already exists — return
+    * the version quietly. Returns the checkpointed version. */
   def checkpointLog(spark: SparkSession, table: String): Int = {
     val cur = currentVersion(spark, table)
     require(cur >= 1, s"nothing to checkpoint in $table")
-    val st = liveState(spark, table, cur)
-    val schema = schemaAsOf(spark, table, cur)
-    // txn markers and feature declarations: the previous checkpoint's
-    // sets plus the window's lines (features MUST ride the checkpoint —
-    // after vacuumLog retires the declaring manifest, the checkpoint is
-    // the only place the requirement survives)
+    val lines = LogProtocol.checkpointLines(liveState(spark, table, cur))
     val f = fsOf(spark, table)
-    val prevC = newestCheckpoint(spark, table, cur)
-    val prevCk = prevC.map(loadCheckpoint(spark, table, _))
-    val window = ((prevC.getOrElse(0) + 1) to cur)
-      .flatMap(v => manifestLines(f, table, v))
-    val txns = prevCk.map(_.txns).getOrElse(Set.empty[String]) ++
-      window.collect {
-        case l if l.startsWith("txn\t") => l.stripPrefix("txn\t")
-      }
-    val features = prevCk.map(_.features).getOrElse(Set.empty[String]) ++
-      window.collect {
-        case l if l.startsWith("feature\t") => l.stripPrefix("feature\t")
-      }
     val tmp = f.makeQualified(new Path(table,
       s"_log/.v$cur.ckpt.${java.util.UUID.randomUUID}.tmp"))
     val out = f.create(tmp, true)
     try {
-      st.files.foreach { lf =>
-        val line = (Seq("file", lf.version.toString, lf.path) ++
-          lf.stats.flatMap(s => Seq(s.col, s.min.toString, s.max.toString)))
-          .mkString("\t")
-        out.write((line + "\n").getBytes("UTF-8"))
-      }
-      st.dvs.foreach { case (p, v) =>
-        out.write(s"dv\t$v\t$p\n".getBytes("UTF-8"))
-      }
-      schema.foreach(s => out.write(s"schema\t${s.json}\n".getBytes("UTF-8")))
-      txns.foreach(t => out.write(s"txn\t$t\n".getBytes("UTF-8")))
-      features.toSeq.sorted.foreach(n =>
-        out.write(s"feature\t$n\n".getBytes("UTF-8")))
+      lines.foreach(l => out.write((l + "\n").getBytes("UTF-8")))
       out.hflush()
     } finally out.close()
     val dst = f.makeQualified(new Path(table, s"_log/v$cur.ckpt"))
@@ -439,50 +269,35 @@ object TableLog {
     cur
   }
 
-  /** Replay adds/removes/dvs up to `version`, starting from the newest
-    * checkpoint at or below it (schema/txn markers skipped) — O(commits
-    * since checkpoint) metadata work, one short text line per file
-    * action. */
-  private[graft] def liveState(spark: SparkSession, table: String,
-      version: Int): LiveState = {
+  /** Fold manifests (from, to] onto `base`, the state as of `from`: one
+    * [[LogProtocol.Step]] per version, read lazily in order. The one
+    * forward walk — a replay, a change feed, a vacuum, a log tail and the
+    * relay's window split all consume it. */
+  private[graft] def walk(spark: SparkSession, table: String, base: LogState,
+      from: Int, to: Int): Iterator[LogProtocol.Step] = {
     val f = fsOf(spark, table)
-    val live =
-      scala.collection.mutable.LinkedHashMap.empty[String, (Seq[FileStats], Int)]
-    val dvs = scala.collection.mutable.LinkedHashMap.empty[String, Int]
-    val from = newestCheckpoint(spark, table, version) match {
-      case Some(c) =>
-        val ck = loadCheckpoint(spark, table, c)
-        ck.files.foreach(lf => live(lf.path) = (lf.stats, lf.version))
-        ck.dvs.foreach { case (p, v) => dvs(p) = v }
-        c
-      case None => 0
+    var st = base
+    ((from + 1) to to).iterator.map { v =>
+      val step = LogProtocol.applyManifest(st, table, v, manifestLines(f, table, v))
+      st = step.after
+      step
     }
-    ((from + 1) to version).foreach { v =>
-      manifestLines(f, table, v).foreach { line =>
-        parseAction(line) match {
-          case Some(Action("add", path, st)) => live(path) = (st, v)
-          case Some(Action("dv", path, _)) => dvs(path) = v
-          case Some(Action("remove", path, _)) =>
-            live.remove(path); dvs.remove(path)
-          case _ => () // schema / txn marker
-        }
-      }
-    }
-    LiveState(live.toSeq.map { case (p, (st, v)) => LiveFile(p, st, v) },
-      dvs.toSeq)
   }
 
-  /** Live table-relative files as of `version`, each with its logged
-    * column stats (deletion vectors not included — use [[liveState]]
-    * where DV semantics matter). */
-  private[graft] def liveFilesWithStats(spark: SparkSession, table: String,
-      version: Int): Seq[(String, Seq[FileStats])] =
-    liveState(spark, table, version).files.map(f => f.path -> f.stats)
+  /** The table state as of `version`: the newest checkpoint at or below
+    * it, walked forward — O(commits since checkpoint) metadata work, one
+    * short text line per action. Version 0 is the empty table. */
+  private[graft] def liveState(spark: SparkSession, table: String,
+      version: Int): LogState = {
+    val floor = newestCheckpoint(spark, table, version)
+    val base = floor.fold(LogProtocol.LogState.empty)(loadCheckpoint(spark, table, _))
+    walk(spark, table, base, floor.getOrElse(0), version).foldLeft(base)((_, s) => s.after)
+  }
 
-  /** Live table-relative files as of `version` (stats dropped). */
+  /** Live table-relative files as of `version`. */
   private[graft] def liveFiles(spark: SparkSession, table: String,
       version: Int): Seq[String] =
-    liveFilesWithStats(spark, table, version).map(_._1)
+    liveState(spark, table, version).files.map(_.path)
 
   /** Has `(streamId, batchId)` already committed? The exactly-once test a
     * restarted micro-batch writer runs before (and [[commitIfAbsent]]
@@ -494,51 +309,21 @@ object TableLog {
 
   /** Has ANY of `batchIds` already committed under `streamId`? The gate of
     * a multi-batch commit (a relay window carrying one marker per source
-    * version): one pass over the checkpoint's txn set and the manifests
-    * past it, whatever the number of ids. */
+    * version). The txn set rides the checkpoint (S19): without it, every
+    * micro-batch commit would scan the WHOLE manifest chain for its
+    * marker — O(table lifetime) per batch on a long-lived ingest. */
   private[graft] def alreadyCommitted(spark: SparkSession, table: String,
-      streamId: String, batchIds: Seq[Long]): Boolean = {
-    val f = fsOf(spark, table)
-    val cur = currentVersion(spark, table)
-    val markers = batchIds.map(b => s"$streamId\t$b").toSet
-    // the txn set rides the checkpoint (S19): without it, every micro-
-    // batch commit would scan the WHOLE manifest chain for its marker —
-    // O(table lifetime) per batch on a long-lived ingest
-    val floor = newestCheckpoint(spark, table, cur)
-    floor.exists(c => markers.exists(loadCheckpoint(spark, table, c).txns)) ||
-      ((floor.getOrElse(0) + 1) to cur).exists(v =>
-        manifestLines(f, table, v).exists(l =>
-          l.startsWith("txn\t") && markers(l.stripPrefix("txn\t"))))
-  }
+      streamId: String, batchIds: Seq[Long]): Boolean =
+    liveState(spark, table, currentVersion(spark, table)).committed(streamId, batchIds)
 
   /** Newest batchId committed under `streamId`, or None if the stream has
     * never committed here — the RESUME OFFSET of a relay or ingest whose
     * exactly-once markers live in THIS table's own log (R17): a restarted
     * consumer asks the destination where it left off, so there is no
-    * external offset store to lose, lag, or double-apply against. Same
-    * S19 cost shape as [[alreadyCommitted]]: the checkpoint's txn set
-    * plus only the manifests past it — O(commits since checkpoint), not
-    * O(table lifetime). The `\t` in the probe prefix is load-bearing: it
-    * stops a streamId that prefixes another (`cdf:a` / `cdf:ab`) from
-    * claiming the other's offsets. */
+    * external offset store to lose, lag, or double-apply against. */
   private[graft] def lastCommitted(spark: SparkSession, table: String,
-      streamId: String): Option[Long] = {
-    val f = fsOf(spark, table)
-    val cur = currentVersion(spark, table)
-    if (cur == 0) return None
-    val floor = newestCheckpoint(spark, table, cur)
-    val pfx = s"$streamId\t"
-    val linePfx = s"txn\t$pfx"
-    val fromCkpt = floor.toSeq.flatMap(c =>
-      loadCheckpoint(spark, table, c).txns.collect {
-        case t if t.startsWith(pfx) => t.stripPrefix(pfx).toLong
-      })
-    val fromLog = ((floor.getOrElse(0) + 1) to cur).flatMap(v =>
-      manifestLines(f, table, v).collect {
-        case l if l.startsWith(linePfx) => l.stripPrefix(linePfx).toLong
-      })
-    (fromCkpt ++ fromLog).maxOption
-  }
+      streamId: String): Option[Long] =
+    liveState(spark, table, currentVersion(spark, table)).lastCommitted(streamId)
 
   /** Commit `actions` tagged with a `(streamId, batchId)` txn marker —
     * a NO-OP if that marker already committed (the re-delivered micro-
@@ -608,22 +393,30 @@ object TableLog {
       retainFrom: Int, minAgeMs: Long = 0L): Seq[String] = {
     val f = fsOf(spark, table)
     // referenced = every retained version's data files AND deletion
-    // vectors — a GC'd live DV would silently resurrect its deleted rows
-    val referenced = (retainFrom to currentVersion(spark, table))
-      .flatMap { v =>
-        val st = liveState(spark, table, v)
-        st.files.map(_.path) ++ st.dvs.map(_._1)
-      }.toSet
+    // vectors — a GC'd live DV would silently resurrect its deleted rows.
+    // One replay to `retainFrom` and one walk to the head: the union of
+    // the retained versions' live sets is the live set at `retainFrom`
+    // plus every file and DV a later commit adds
+    val cur = currentVersion(spark, table)
+    val referenced: Set[String] =
+      if (retainFrom > cur) Set.empty
+      else {
+        val base = liveState(spark, table, retainFrom)
+        base.liveFiles.keySet ++ base.liveDvs.keySet ++
+          walk(spark, table, base, retainFrom, cur).flatMap(_.actions.collect {
+            case a if a.op == "add" || a.op == "dv" => a.path
+          })
+      }
     val root = new Path(table, "data")
     if (!f.exists(root)) return Seq.empty
-    def walk(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    def filesUnder(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
       f.listStatus(p).toSeq.flatMap { s =>
-        if (s.isDirectory) walk(s.getPath)
+        if (s.isDirectory) filesUnder(s.getPath)
         else Seq(s)
       }
     val cutoff = System.currentTimeMillis() - minAgeMs
     val rootUri = new Path(table).toUri.getPath
-    val dead = walk(root)
+    val dead = filesUnder(root)
       .filter(_.getModificationTime <= cutoff)
       .map { s =>
         s.getPath.toUri.getPath.stripPrefix(rootUri).stripPrefix("/")
@@ -699,21 +492,8 @@ object TableLog {
     * inference, and an old file simply lacks the columns later commits
     * added (the parquet reader fills them with null). */
   private[graft] def schemaAsOf(spark: SparkSession, table: String,
-      version: Int): Option[org.apache.spark.sql.types.StructType] = {
-    val f = fsOf(spark, table)
-    // backward scan stops at the newest checkpoint <= version: the
-    // checkpoint carries the schema as of ITS version, so no read ever
-    // opens a manifest below it (S19)
-    val floor = newestCheckpoint(spark, table, version)
-    (version to (floor.getOrElse(0) + 1) by -1).iterator
-      .flatMap(v => manifestLines(f, table, v).reverseIterator.collect {
-        case line if line.startsWith("schema\t") =>
-          org.apache.spark.sql.types.DataType.fromJson(line.stripPrefix("schema\t"))
-            .asInstanceOf[org.apache.spark.sql.types.StructType]
-      })
-      .nextOption()
-      .orElse(floor.flatMap(c => loadCheckpoint(spark, table, c).schema))
-  }
+      version: Int): Option[org.apache.spark.sql.types.StructType] =
+    liveState(spark, table, version).schema
 
   /** Snapshot read AS OF `version`: scans exactly the manifest's live
     * files under the LOGGED schema as of that version — a column added by
@@ -721,10 +501,10 @@ object TableLog {
     * before the column existed read as null under a later version's
     * schema (S12). A parquet file dropped next to a live one (a stray
     * writer, an uncommitted stage) is invisible — TimeTravelSpec proves
-    * both. */
+    * both. Files and schema come from ONE replay. */
   def readAsOf(spark: SparkSession, table: String, version: Int): DataFrame = {
     val st = liveState(spark, table, version)
-    scanState(spark, table, st.files, st.dvs, schemaAsOf(spark, table, version))
+    scanState(spark, table, st.files, st.dvs, st.schema)
   }
 
   /** The DV-aware snapshot scan both [[readAsOf]] and [[readAsOfRange]]
@@ -749,7 +529,7 @@ object TableLog {
     }
     if (dvs.isEmpty || files.isEmpty) rd(files.map(_.path))
     else {
-      files.groupBy(f => dvs.filter(_._2 > f.version).map(_._1)).toSeq
+      files.groupBy(LogProtocol.dvsFor(dvs, _)).toSeq
         .map { case (dvPaths, group) =>
           val df = rd(group.map(_.path))
           if (dvPaths.isEmpty) df else df.filter(!dvMatch(spark, table, dvPaths))
@@ -967,18 +747,12 @@ object TableLog {
   }
 
   /** The live files of `version` that can contain rows with `statsCol` in
-    * [lo, hi], plus the unpruned live-file count. A file is dropped ONLY
-    * when its logged stats prove disjointness; a file without stats (or
-    * with stats on a different column) is always kept — pruning can skip
-    * work, never rows. */
+    * [lo, hi] ([[LogProtocol.LiveFile.mayHold]]), plus the unpruned
+    * live-file count. */
   private[graft] def prunedLiveFiles(spark: SparkSession, table: String,
       version: Int, statsCol: String, lo: Long, hi: Long): (Seq[String], Int) = {
-    val all = liveFilesWithStats(spark, table, version)
-    val kept = all.collect {
-      case (p, sts) if sts.find(_.col == statsCol)
-        .forall(s => s.max >= lo && s.min <= hi) => p
-    }
-    (kept, all.size)
+    val all = liveState(spark, table, version).files
+    (all.filter(_.mayHold(statsCol, lo, hi)).map(_.path), all.size)
   }
 
   /** Snapshot range read: [[readAsOf]] restricted to `statsCol` in
@@ -990,17 +764,15 @@ object TableLog {
   def readAsOfRange(spark: SparkSession, table: String, version: Int,
       statsCol: String, lo: Long, hi: Long): DataFrame = {
     val st = liveState(spark, table, version)
-    val kept = st.files.filter(_.stats.find(_.col == statsCol)
-      .forall(s => s.max >= lo && s.min <= hi))
+    val kept = st.files.filter(_.mayHold(statsCol, lo, hi))
     val pred = col(statsCol) >= lo && col(statsCol) <= hi
-    val schema = schemaAsOf(spark, table, version)
     if (kept.isEmpty) {
-      val s = schema.getOrElse(throw new IllegalStateException(
+      val s = st.schema.getOrElse(throw new IllegalStateException(
         s"every file pruned and no logged schema for $table@v$version"))
       return spark.createDataFrame(
         java.util.Collections.emptyList[org.apache.spark.sql.Row](), s)
     }
-    scanState(spark, table, kept, st.dvs, schema).filter(pred)
+    scanState(spark, table, kept, st.dvs, st.schema).filter(pred)
   }
 
   /** The s11 fixture: three commits over the events slice, one file set
@@ -1183,14 +955,15 @@ object TableLog {
     // merge work still happens — 8x the rows ride the hash table — but
     // the 8x2 per-leg slice exchanges collapse to one, which is how a
     // real scheduler batches N concurrent refresh ticks.
-    val (adds, removes) = actionsIn(spark, table, 2, 3)
+    val (base, steps) = window(spark, table, 2, 3)
+    val (adds, removes) = LogProtocol.fileDelta(base, steps)
     // window files read under the LOGGED snapshot schema (the readAsOf
     // discipline) — inferring from the first file's footer and projecting
     // the rest through it would silently drop columns an evolved file
     // carries (r16 advice: the log's own v4 column-tagging scenario).
     // Footer inference is only the fallback for a log predating schema
     // tracking, and then once per call, not once per leg.
-    val windowSchema = schemaAsOf(spark, table, 3)
+    val windowSchema = steps.last.after.schema
       .getOrElse(Tables.readMemo(spark, s"$table/${adds.head}").schema)
     def readFiles(files: Seq[String]): DataFrame =
       spark.read.schema(windowSchema).parquet(files.map(r => s"$table/$r"): _*)
@@ -1214,61 +987,21 @@ object TableLog {
       .filter($"n_rows" > 0)
   }
 
-  /** Deletion-vector paths committed at exactly version `v` (S18). */
-  private[graft] def dvsAt(spark: SparkSession, table: String,
-      v: Int): Seq[String] =
-    manifestLines(fsOf(spark, table), table, v).flatMap(parseAction).collect {
-      case Action("dv", p, _) => p
-    }
-
-  /** ONE manifest's parsed file actions plus its schema action (if any) —
-    * the unit a caller threading its own replay across a window consumes
-    * ([[graft.operators.Lakehouse.cdfRead]]: one pass over the log instead
-    * of a fresh prefix replay per slice). */
-  private[graft] def manifestEntries(spark: SparkSession, table: String,
-      v: Int): (Seq[Action], Option[org.apache.spark.sql.types.StructType]) = {
-    val lines = manifestLines(fsOf(spark, table), table, v)
-    val schema = lines.reverseIterator.collectFirst {
-      case l if l.startsWith("schema\t") =>
-        org.apache.spark.sql.types.DataType.fromJson(l.stripPrefix("schema\t"))
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-    }
-    (lines.flatMap(parseAction), schema)
+  /** The window (from, to]: the state as of `from` (one replay) and each
+    * version's step past it (one walk) — O(commits since checkpoint +
+    * window), never O(table lifetime). */
+  private[graft] def window(spark: SparkSession, table: String, from: Int,
+      to: Int): (LogState, Seq[LogProtocol.Step]) = {
+    val base = liveState(spark, table, from)
+    (base, walk(spark, table, base, from, to).toSeq)
   }
 
   /** DATA-file actions across manifests (from, to]: (added, removed),
-    * each a list of table-relative paths. A file added and removed INSIDE
-    * the window appears in both — its +agg and −agg cancel exactly in the
-    * abelian merge, so no dedup pass is needed. Deletion-vector files are
-    * excluded from BOTH lists: a window that retires a DV (compaction
-    * absorbing it — S18×S13) must not hand the key file to a reader as
-    * removed-row pre-images, which would fabricate null-filled phantom
-    * deltas. The dv-path set seeds from the DVs live at `from`
-    * (checkpoint-bounded), so the call is O(commits since checkpoint +
-    * window), never O(table lifetime). */
+    * each a list of table-relative paths ([[LogProtocol.fileDelta]]). */
   private[graft] def actionsIn(spark: SparkSession, table: String,
       from: Int, to: Int): (Seq[String], Seq[String]) = {
-    val f = fsOf(spark, table)
-    // seeded from the DVs LIVE at `from` (checkpoint-bounded via
-    // liveState — a DV added AND removed before the window can never be
-    // removed again inside it), so this stays O(commits since checkpoint
-    // + window), never O(table lifetime), and survives pre-checkpoint
-    // manifest loss like every other checkpointed read
-    val dvEver = scala.collection.mutable.HashSet.empty[String]
-    liveState(spark, table, from).dvs.foreach(dvEver += _._1)
-    val adds = Seq.newBuilder[String]
-    val removes = Seq.newBuilder[String]
-    ((from + 1) to to).foreach { v =>
-      manifestLines(f, table, v).foreach { line =>
-        parseAction(line) match {
-          case Some(Action("add", p, _)) => adds += p
-          case Some(Action("dv", p, _)) => dvEver += p
-          case Some(Action("remove", p, _)) => if (!dvEver(p)) removes += p
-          case _ => ()
-        }
-      }
-    }
-    (adds.result(), removes.result())
+    val (base, steps) = window(spark, table, from, to)
+    LogProtocol.fileDelta(base, steps)
   }
 
   /** The MV's per-file-set aggregate: (event_type, n_rows, id_sum) with
@@ -1310,9 +1043,9 @@ object TableLog {
     // SECOND time (the state never contained them). Non-abelian either
     // way → refuse loudly and point at the CDF-driven refresh, which sees
     // DV deletes as first-class rows and reads pre-images DV-aware.
-    val dvCommits = ((from + 1) to to)
-      .filter(v => dvsAt(spark, table, v).nonEmpty)
-    val dvLiveAtFrom = liveState(spark, table, from).dvs.map(_._1)
+    val (base, steps) = window(spark, table, from, to)
+    val dvCommits = steps.filter(_.actions.exists(_.op == "dv")).map(_.version)
+    val dvLiveAtFrom = base.dvs.map(_._1)
     require(dvCommits.isEmpty && dvLiveAtFrom.isEmpty,
       s"mvDelta window ($from, $to] is not abelian-foldable: " +
         (if (dvCommits.nonEmpty)
@@ -1324,7 +1057,7 @@ object TableLog {
             "window files raw") +
         " — refresh via the change feed (Lakehouse.mv2Refresh / cdfRead) " +
         "or recompute the view")
-    val (adds, removes) = actionsIn(spark, table, from, to)
+    val (adds, removes) = LogProtocol.fileDelta(base, steps)
     mvSlice(spark, table, adds, 1L)
       .unionByName(mvSlice(spark, table, removes, -1L))
   }
@@ -1470,30 +1203,19 @@ object TableLog {
     * appears, so nothing folds) and emits the view AS OF every version — per-type
     * (n_rows, id_sum) — so the oracle's cumulative replay fails if any
     * refresh missed a file, double-counted the re-delivery, or tore a
-    * batch. Each folded state checkpoints (a |types|-row frame) so
-    * version v's state feeds both the output union and the v+1 fold
-    * without re-deriving the whole delta chain. */
+    * batch. Each version's view folds every window delta so far onto the
+    * empty state lazily — LINEAR, each branch built from the empty state,
+    * never from the previous lazy state (reusing state_{v-1} twice per
+    * version is the exponential-inline trap) — so the four versions cost
+    * no materialization job. */
   def r16StreamViewRefresh(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val table = s"${Etl.scratch(spark)}/r16_table"
     fsOf(spark, table).delete(new Path(table), true)
     val ev = Tables.events(spark, sfDir)
       .select($"event_id", $"user_id", $"event_type", $"value")
-    // folded-state checkpoint LADDER (the BPE_CHECKPOINT_EVERY idiom,
-    // r18): each version's view folds the ≤K pending window deltas onto
-    // the last checkpointed state lazily — version v's output union
-    // branch and the v+1 fold then re-derive at most K tiny delta
-    // slices (LINEAR, each branch built from ckState, never from the
-    // previous lazy state — reusing state_{v-1} twice per version is
-    // the exponential-inline trap) instead of paying one |types|-row
-    // checkpoint JOB per version (4 job walls of pure floor here).
-    // Every K folds the state materializes once, which keeps a
-    // long-lived refresher's plan depth and per-tick cost O(K) — the
-    // same bounded-depth contract the per-version checkpoint gave, at
-    // 1/K the materialization jobs.
-    val every = math.max(1, confInt(spark, "spark.graft.mv.checkpointEvery", "8"))
-    var ckState = mvSlice(spark, table, Seq.empty, 1L)
-    var pending: Seq[DataFrame] = Nil
+    val empty = mvSlice(spark, table, Seq.empty, 1L)
+    var deltas: Seq[DataFrame] = Nil
     val views = (0 until 4).map { b =>
       commitBatch(table, "r16")(ev.filter($"event_id" % 4 === b), b.toLong)
       if (b == 1) {
@@ -1503,12 +1225,8 @@ object TableLog {
           "re-delivered batch must not commit twice")
       }
       val v = currentVersion(spark, table)
-      pending :+= mvDelta(spark, table, v - 1, v)
-      if (pending.size >= every) {
-        ckState = pending.foldLeft(ckState)(mvMerge).localCheckpoint()
-        pending = Nil
-      }
-      pending.foldLeft(ckState)(mvMerge)
+      deltas :+= mvDelta(spark, table, v - 1, v)
+      deltas.foldLeft(empty)(mvMerge)
         .select(lit(v.toLong).as("version"), $"event_type", $"n_rows", $"id_sum")
     }
     views.reduce(_ unionByName _).orderBy($"version", $"event_type")

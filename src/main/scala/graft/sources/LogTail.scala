@@ -49,8 +49,8 @@ import graft.operators.TableLog
   * added later null-fills, extra physical columns are ignored — S12's
   * read rule, per batch).
   *
-  * The feature gate (S21) rides free: planning reads manifests through
-  * [[TableLog]], so a table demanding an unimplemented reader feature
+  * The feature gate (S21) rides free: planning walks manifests through
+  * [[TableLog.walk]], so a table demanding an unimplemented reader feature
   * refuses at planning time like every other read path. */
 class LogTailSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
@@ -177,6 +177,9 @@ private[sources] class LogTailMicroBatchStream(table: String,
     val s = so.v
     val e = end.asInstanceOf[VersionOffset].v
     val parts = mutable.ArrayBuffer.empty[InputPartition]
+    // ONE replay to the window base, walked forward through the window:
+    // each commit's files read under the schema logged AT that commit
+    val base = TableLog.liveState(spark, table, s)
     // pending initial snapshot: the live state AS OF the base version
     // streams as this window's head — deterministic (a mid-snapshot
     // restart re-plans the identical file set from the same offset), and
@@ -184,28 +187,19 @@ private[sources] class LogTailMicroBatchStream(table: String,
     // (the batch readers' in-scan dv_contains filter), so a snapshot over
     // live DVs refuses loudly (OPTIMIZE absorbs them)
     if (so.snapshotPending && s >= 1) {
-      val st = TableLog.liveState(spark, table, s)
-      require(st.dvs.isEmpty,
+      require(base.dvs.isEmpty,
         s"log tail source: snapshot start at $table@v$s has live deletion " +
-          s"vector(s) (e.g. ${st.dvs.head._1}) this reader cannot apply — " +
+          s"vector(s) (e.g. ${base.dvs.head._1}) this reader cannot apply — " +
           "OPTIMIZE first to absorb them, or consume via the relay")
-      val snapSchema = TableLog.schemaAsOf(spark, table, s).getOrElse(schema)
-      st.files.foreach(f =>
+      val snapSchema = base.schema.getOrElse(schema)
+      base.files.foreach(f =>
         parts += LogFilePartition(s"$table/${f.path}", snapSchema.json))
     }
-    // ONE schema resolution at the window base, folded forward through
-    // each commit's own schema action (cdfRead's threading) — per-version
-    // schemaAsOf would re-scan the manifest chain once per commit in the
-    // window, O(window x commits-since-checkpoint) on a catch-up
-    var vSchema: StructType =
-      (if (s == 0) None else TableLog.schemaAsOf(spark, table, s))
-        .getOrElse(schema)
-    ((s + 1) to e).foreach { v =>
-      val (actions, schemaAct) = TableLog.manifestEntries(spark, table, v)
-      schemaAct.foreach(vSchema = _)
+    TableLog.walk(spark, table, base, s, e).foreach { step =>
+      val v = step.version
       // the append-only contract: silently skipping a retraction would
       // hand every downstream consumer resurrected rows forever
-      actions.foreach {
+      step.actions.foreach {
         case TableLog.Action("remove", p, _) =>
           throw new IllegalStateException(
             s"log tail source: $table@v$v removes $p — this is an " +
@@ -218,9 +212,8 @@ private[sources] class LogTailMicroBatchStream(table: String,
               "feed (Lakehouse.cdfRead / relay), not here")
         case _ => ()
       }
-      // files read under the schema logged AT their commit (S12 per
-      // batch), from the threaded fold above
-      actions.foreach {
+      val vSchema = step.after.schema.getOrElse(schema)
+      step.actions.foreach {
         case TableLog.Action("add", p, _) =>
           parts += LogFilePartition(s"$table/$p", vSchema.json)
         case _ => ()

@@ -282,8 +282,8 @@ class LakehouseSpec extends SparkSpecBase {
     assert(kept.size < total, s"nothing pruned: kept ${kept.size} of $total")
     // the kept set is exactly the manifest's overlap computation — and
     // the SCAN reads exactly those files, none of the pruned ones
-    val overlap = TableLog.liveFilesWithStats(spark, table, 2).collect {
-      case (p, Seq(s))
+    val overlap = TableLog.liveState(spark, table, 2).files.collect {
+      case TableLog.LiveFile(p, Seq(s), _)
           if s.max >= Lakehouse.S15_LO && s.min <= Lakehouse.S15_HI => p
     }
     assert(kept.toSet === overlap.toSet)
@@ -341,8 +341,8 @@ class LakehouseSpec extends SparkSpecBase {
     Lakehouse.s15Fixture(spark, sfDir, table)
     val v = Lakehouse.compactCommit(spark, table, targetFiles = 6,
       statsCols = Seq("event_id"))
-    val withStats = TableLog.liveFilesWithStats(spark, table, v)
-    assert(withStats.forall(_._2.nonEmpty),
+    val withStats = TableLog.liveState(spark, table, v).files
+    assert(withStats.forall(_.stats.nonEmpty),
       "compacted files must carry manifest stats")
     val (kept, total) = TableLog.prunedLiveFiles(spark, table, v,
       "event_id", Lakehouse.S15_LO, Lakehouse.S15_HI)
@@ -405,9 +405,9 @@ class LakehouseSpec extends SparkSpecBase {
     import spark.implicits._
     val table = s"${Etl.scratch(spark)}/s16_spec_table"
     Lakehouse.s16Fixture(spark, sfDir, table)
-    val stats = TableLog.liveFilesWithStats(spark, table, 1)
+    val stats = TableLog.liveState(spark, table, 1).files
     assert(stats.size === Lakehouse.S16_FILES)
-    assert(stats.forall(_._2.map(_.col).toSet === Set("event_id", "user_id")))
+    assert(stats.forall(_.stats.map(_.col).toSet === Set("event_id", "user_id")))
     val ev = Tables.events(spark, sfDir)
     // data-derived quarter-domain windows (the fixture sf is tiny; the
     // declared query's literals target the graded sfs)
