@@ -166,31 +166,31 @@ object SparkEntry {
     "r13_stream_left_join" -> (graft.streaming.Streams.r13StreamLeftJoin _),
     "r14_stream_cluster_assign" -> (graft.streaming.Streams.r14StreamClusterAssign _),
     "u4_snapshot_diff" -> (graft.operators.Quality.u4SnapshotDiff _),
-    "r15_stream_table_commit" -> (graft.operators.TableLog.r15StreamTableCommit _),
-    "r16_stream_view_refresh" -> (graft.operators.TableLog.r16StreamViewRefresh _),
+    "r15_stream_table_commit" -> (graft.operators.LakeQueries.r15StreamTableCommit _),
+    "r16_stream_view_refresh" -> (graft.operators.LakeQueries.r16StreamViewRefresh _),
     "s9_clustered_scan" -> (graft.operators.Etl.s9ClusteredScan _),
     "s10_compaction" -> (graft.operators.Etl.s10Compaction _),
-    "s11_time_travel" -> (graft.operators.TableLog.s11TimeTravel _),
-    "s12_schema_evolution" -> (graft.operators.TableLog.s12SchemaEvolution _),
-    "mv1_incremental_agg" -> (graft.operators.TableLog.mv1IncrementalAgg _),
-    "s11_warm_read" -> (graft.operators.TableLog.s11WarmRead _),
-    "mv1_warm_refresh" -> (graft.operators.TableLog.mv1WarmRefresh _),
-    "s13_log_compaction" -> (graft.operators.Lakehouse.s13LogCompaction _),
-    "s14_cdf_read" -> (graft.operators.Lakehouse.s14CdfRead _),
-    "s15_stats_skipping" -> (graft.operators.Lakehouse.s15StatsSkipping _),
-    "s16_zorder_scan" -> (graft.operators.Lakehouse.s16ZorderScan _),
-    "mv2_cdf_refresh" -> (graft.operators.Lakehouse.mv2CdfRefresh _),
-    "s17_cow_merge" -> (graft.operators.Lakehouse.s17CowMerge _),
-    "s18_mor_delete" -> (graft.operators.Lakehouse.s18MorDelete _),
-    "s19_log_checkpoint" -> (graft.operators.Lakehouse.s19LogCheckpoint _),
-    "s20_mor_merge" -> (graft.operators.Lakehouse.s20MorMerge _),
-    "r17_log_relay" -> (graft.operators.Lakehouse.r17LogRelay _),
-    "s13_warm_read" -> (graft.operators.Lakehouse.s13WarmRead _),
-    "s14_warm_feed" -> (graft.operators.Lakehouse.s14WarmFeed _),
-    "s15_warm_skip" -> (graft.operators.Lakehouse.s15WarmSkip _),
-    "s16_warm_scan" -> (graft.operators.Lakehouse.s16WarmScan _),
-    "s17_warm_apply" -> (graft.operators.Lakehouse.s17WarmApply _),
-    "mv2_warm_refresh" -> (graft.operators.Lakehouse.mv2WarmRefresh _),
+    "s11_time_travel" -> (graft.operators.LakeQueries.s11TimeTravel _),
+    "s12_schema_evolution" -> (graft.operators.LakeQueries.s12SchemaEvolution _),
+    "mv1_incremental_agg" -> (graft.operators.LakeQueries.mv1IncrementalAgg _),
+    "s11_warm_read" -> (graft.operators.LakeQueries.s11WarmRead _),
+    "mv1_warm_refresh" -> (graft.operators.LakeQueries.mv1WarmRefresh _),
+    "s13_log_compaction" -> (graft.operators.LakeQueries.s13LogCompaction _),
+    "s14_cdf_read" -> (graft.operators.LakeQueries.s14CdfRead _),
+    "s15_stats_skipping" -> (graft.operators.LakeQueries.s15StatsSkipping _),
+    "s16_zorder_scan" -> (graft.operators.LakeQueries.s16ZorderScan _),
+    "mv2_cdf_refresh" -> (graft.operators.LakeQueries.mv2CdfRefresh _),
+    "s17_cow_merge" -> (graft.operators.LakeQueries.s17CowMerge _),
+    "s18_mor_delete" -> (graft.operators.LakeQueries.s18MorDelete _),
+    "s19_log_checkpoint" -> (graft.operators.LakeQueries.s19LogCheckpoint _),
+    "s20_mor_merge" -> (graft.operators.LakeQueries.s20MorMerge _),
+    "r17_log_relay" -> (graft.operators.LakeQueries.r17LogRelay _),
+    "s13_warm_read" -> (graft.operators.LakeQueries.s13WarmRead _),
+    "s14_warm_feed" -> (graft.operators.LakeQueries.s14WarmFeed _),
+    "s15_warm_skip" -> (graft.operators.LakeQueries.s15WarmSkip _),
+    "s16_warm_scan" -> (graft.operators.LakeQueries.s16WarmScan _),
+    "s17_warm_apply" -> (graft.operators.LakeQueries.s17WarmApply _),
+    "mv2_warm_refresh" -> (graft.operators.LakeQueries.mv2WarmRefresh _),
     "s3_paginated_scan" -> (graft.sources.Paginated.s3PaginatedScan _),
     "s4_point_lookup" -> (graft.sources.Paginated.s4PointLookup _),
     "q2_shipping_priority" -> (Analytics.q2ShippingPriority _),
@@ -752,7 +752,7 @@ object SparkEntry {
     // recomputes the v3 snapshot from the commit rules N times — the
     // full-table recompute a log-less engine pays on EVERY read
     "s11_warm_read" ->
-      (1 to graft.operators.TableLog.WARM_READS).map(i =>
+      (1 to graft.operators.LakeQueries.WARM_READS).map(i =>
         s"""SELECT $i AS read_i, COUNT(*) AS n_rows,
            |  CAST(SUM(event_id) AS BIGINT) AS id_sum
            |FROM events WHERE event_type <> 'click' OR value >= 100.0""".stripMargin)
@@ -761,7 +761,7 @@ object SparkEntry {
     // through the v3 rewrite window; the oracle full-recomputes the
     // refreshed view N times over the v3 snapshot
     "mv1_warm_refresh" ->
-      (1 to graft.operators.TableLog.WARM_READS).map(i =>
+      (1 to graft.operators.LakeQueries.WARM_READS).map(i =>
         s"""SELECT $i AS refresh_i, event_type, COUNT(*) AS n_rows,
            |  CAST(SUM(event_id) AS BIGINT) AS id_sum
            |FROM events WHERE event_type <> 'click' OR value >= 100.0

@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Stamp, Tables}
 
 /** ANN index build/serve split (SURVEY.md §2.10 L3 at deployment shape).
   *
@@ -40,8 +40,8 @@ import graft.Tables
   * deleting the directory (or calling a build directly — BenchHeavy's
   * ann_build_* entries do exactly that to price the build step).
   *
-  * Staleness: every build stamps a `_GRAFT_SOURCE` fingerprint (name, size,
-  * mtime of each embeddings source file) next to `_SUCCESS`, and the
+  * Staleness: every build stamps the embeddings source's fingerprint
+  * ([[graft.Stamp]]: name, size, mtime of each file) next to `_SUCCESS`, and the
   * ensure* gates rebuild when the live source no longer matches — a
   * regenerated fixture under an unchanged path forces a rebuild instead of
   * silently serving vectors that no longer exist (AnnIndexStaleSpec proves
@@ -61,43 +61,21 @@ object AnnIndex {
   def indexDir(spark: SparkSession, sfDir: String): String =
     s"${indexRoot(spark)}/v3/${sfDir.replaceAll("[^A-Za-z0-9._-]", "_")}"
 
-  /** Fingerprint of the embeddings source this index derives from: per-file
-    * (name, length, mtime), covering both the single-file fixture layout and
-    * directory-of-parts layouts (the heavy tiers). Cheap — metadata only —
-    * so every ensure* call can afford it. */
+  /** Fingerprint of the embeddings source this index derives from
+    * ([[graft.Stamp.of]]: per-file name, length and mtime, covering both
+    * the single-file fixture layout and directory-of-parts layouts). */
   def sourceFingerprint(sfDir: String): String =
-    fileFingerprint(s"$sfDir/embeddings.parquet")
+    Stamp.of(s"$sfDir/embeddings.parquet")
 
-  /** [[sourceFingerprint]] for any source table file/dir — artifacts that
-    * derive from a table OTHER than embeddings (the BPE merge memo reads
-    * documents) must stamp against THEIR source, or a regenerated fixture
-    * that touched only that table would stale-serve. */
-  private[llm] def fileFingerprint(path: String): String = {
-    val src = new java.io.File(path)
-    if (src.isFile) s"${src.getName}=${src.length}:${src.lastModified}"
-    else
-      Option(src.listFiles()).getOrElse(Array.empty[java.io.File])
-        .filter(f => f.isFile && !f.getName.startsWith("."))
-        .sortBy(_.getName)
-        .map(f => s"${f.getName}=${f.length}:${f.lastModified}")
-        .mkString(";")
-  }
-
-  private def fpFile(path: String) = java.nio.file.Paths.get(s"$path/_GRAFT_SOURCE")
+  /** Did the artifact's write commit? */
+  private[llm] def committed(path: String): Boolean =
+    new java.io.File(s"$path/_SUCCESS").exists()
 
   /** An artifact is servable iff its write committed (`_SUCCESS`) AND it was
-    * built from the embeddings bytes currently on disk (fingerprint match). */
+    * built from the embeddings bytes currently on disk (its [[graft.Stamp]]
+    * matches). */
   private[llm] def fresh(path: String, fp: String): Boolean =
-    new java.io.File(s"$path/_SUCCESS").exists() &&
-      java.nio.file.Files.isRegularFile(fpFile(path)) &&
-      new String(java.nio.file.Files.readAllBytes(fpFile(path)),
-        java.nio.charset.StandardCharsets.UTF_8) == fp
-
-  /** Stamp AFTER the artifact write commits: a crashed build leaves either
-    * no `_SUCCESS` or no stamp, and both read as not-fresh. */
-  private[llm] def stamp(path: String, fp: String): Unit =
-    java.nio.file.Files.write(fpFile(path),
-      fp.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    committed(path) && Stamp.holds(path, fp)
 
   // ---------------------------------------------------------------- SQ8
 
@@ -132,7 +110,7 @@ object AnnIndex {
             .as("codes"))
         .write.mode("overwrite").parquet(path)
     }
-    stamp(path, fp)
+    Stamp.write(path, fp)
     path
   }
 
@@ -158,7 +136,7 @@ object AnnIndex {
         .sortWithinPartitions($"vec_id")
         .write.mode("overwrite").parquet(path)
     }
-    stamp(path, fp)
+    Stamp.write(path, fp)
     path
   }
 
@@ -243,7 +221,7 @@ object AnnIndex {
         .repartition($"pshard")
         .write.mode("overwrite").partitionBy("pshard").parquet(s"$dir/ivf_corpus")
     }
-    stamp(s"$dir/ivf_corpus", fp)
+    Stamp.write(s"$dir/ivf_corpus", fp)
     dir
   }
 
@@ -264,7 +242,7 @@ object AnnIndex {
         .agg((sum($"v".cast("decimal(20,10)")).cast("double") / count(lit(1))).as("c"))
         .write.mode("overwrite").parquet(s"$dir/ivf_centroids")
     }
-    stamp(s"$dir/ivf_centroids", fp)
+    Stamp.write(s"$dir/ivf_centroids", fp)
     dir
   }
 
@@ -320,7 +298,7 @@ object AnnIndex {
         cent.toDF("m", "c", "d", "cent").coalesce(1)
           .write.mode("overwrite").parquet(s"$dir/pq_codebook")
       }
-      stamp(s"$dir/pq_codebook", fp)
+      Stamp.write(s"$dir/pq_codebook", fp)
       cent
     } else
       // ints and longs round-trip parquet exactly; order is immaterial
@@ -343,7 +321,7 @@ object AnnIndex {
         .repartition($"pshard")
         .write.mode("overwrite").partitionBy("pshard").parquet(s"$dir/pq_codes")
     }
-    stamp(s"$dir/pq_codes", fp)
+    Stamp.write(s"$dir/pq_codes", fp)
     dir
   }
 

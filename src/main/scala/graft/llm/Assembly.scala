@@ -486,8 +486,7 @@ object Assembly {
     * per dir to add row-group skipping (S9). */
   def l13cExportSink(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val out = spark.conf.get("spark.graft.scratchDir", "/root/repo/target/graft-tmp") +
-      "/export_sink"
+    val out = s"${graft.operators.Etl.scratch(spark)}/export_sink"
     val shipped = l13bCorpusExportV2(spark, sfDir)
       .join(Tables.documents(spark, sfDir).select($"doc_id", $"text"), "doc_id")
       // explicit partition count: an unsized keyed repartition is AQE-

@@ -3,7 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Stamp, Tables}
 
 /** Text-analysis operators for training-data pipelines (SURVEY.md §2.10):
   * language-ID heuristic, quality scoring, token counting, document
@@ -544,19 +544,17 @@ object TextAnalysis {
     * side ([[l22BpeTokenize]]) replays the persisted table instead of
     * re-learning per evaluation — a production tokenizer trains once and
     * tokenizes forever. Stamped against the DOCUMENTS source
-    * (AnnIndex.fileFingerprint — not the embeddings fingerprint the ANN
+    * ([[graft.Stamp.of]] — not the embeddings fingerprint the ANN
     * memos use), so a fixture regen that touches only documents rebuilds.
     * l21 keeps the inline training: checking the LEARN is its point. */
   private[graft] def ensureBpeMerges(spark: SparkSession, sfDir: String): Seq[(String, String)] = {
     import spark.implicits._
     val path = s"${AnnIndex.indexDir(spark, sfDir)}/bpe_merges"
-    val fp = AnnIndex.fileFingerprint(s"$sfDir/documents.parquet")
-    if (!AnnIndex.fresh(path, fp)) {
+    Stamp.ensure(path, Stamp.of(s"$sfDir/documents.parquet"), AnnIndex.committed(path)) {
       Tables.sink(path) {
         bpeLearn(Tables.documents(spark, sfDir), BPE_MERGES).coalesce(1)
           .write.mode("overwrite").parquet(path)
       }
-      AnnIndex.stamp(path, fp)
     }
     // merges MUST apply in rank order — parquet row order is not a
     // contract, the sort is

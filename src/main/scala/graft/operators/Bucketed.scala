@@ -1,11 +1,9 @@
 package graft.operators
 
 import java.io.File
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.Tables
+import graft.{Stamp, Tables}
 
 /** The co-located star layout as a FIRST-CLASS operator: orders and
   * lineitem maintained as catalog tables bucketed (and sorted) on the
@@ -21,8 +19,8 @@ import graft.Tables
   *
   * Build/serve split follows the AnnIndex idiom: the layout is built
   * once per (scratch, fixture) into external bucketed tables, stamped
-  * with the source files' fingerprint, and rebuilt only when the source
-  * bytes change; a fresh JVM re-registers the existing files instead of
+  * with the source files' fingerprint ([[graft.Stamp]]), and rebuilt
+  * only when the source bytes change; a fresh JVM re-registers the existing files instead of
   * rewriting them (bucket metadata lives in the catalog DDL, the bytes
   * on disk). */
 object Bucketed {
@@ -39,41 +37,22 @@ object Bucketed {
   private def key(sfDir: String): String =
     sfDir.replaceAll("[^A-Za-z0-9]+", "_").replaceAll("^_+|_+$", "").toLowerCase
 
-  /** Fingerprint of a source table's parquet bytes (name=len:mtime per
-    * file) — same freshness contract as AnnIndex.sourceFingerprint. */
-  private def fingerprint(sfDir: String, table: String): String = {
-    val src = new File(s"$sfDir/$table.parquet")
-    if (src.isFile) s"${src.getName}=${src.length}:${src.lastModified}"
-    else Option(src.listFiles()).getOrElse(Array.empty[File])
-      .filter(f => f.isFile && !f.getName.startsWith("."))
-      .sortBy(_.getName)
-      .map(f => s"${f.getName}=${f.length}:${f.lastModified}")
-      .mkString(";")
-  }
-
-  private def fresh(loc: String, fp: String): Boolean =
-    new File(s"$loc/_SUCCESS").exists() &&
-      Files.isRegularFile(Paths.get(s"$loc/_GRAFT_SOURCE")) &&
-      new String(Files.readAllBytes(Paths.get(s"$loc/_GRAFT_SOURCE")),
-        StandardCharsets.UTF_8) == fp
-
   /** Ensure one bucketed catalog table over `sfDir/<table>.parquet`,
     * bucket+sort key `bucketKey`. Returns the catalog table name. */
   private def ensure(spark: SparkSession, sfDir: String, table: String,
       bucketKey: String): String = {
     val name = s"graft_${table}_b_${key(sfDir)}"
     val loc = s"${layoutRoot(spark)}/$name"
-    val fp = fingerprint(sfDir, table)
-    if (!fresh(loc, fp)) {
+    val built = Stamp.ensure(loc, Stamp.of(s"$sfDir/$table.parquet"),
+        new File(s"$loc/_SUCCESS").exists()) {
       spark.sql(s"DROP TABLE IF EXISTS $name")
       Tables.sink(loc) {
         Tables.table(spark, sfDir, table)
           .write.bucketBy(BUCKETS, bucketKey).sortBy(bucketKey)
           .option("path", loc).mode("overwrite").saveAsTable(name)
       }
-      Files.write(Paths.get(s"$loc/_GRAFT_SOURCE"),
-        fp.getBytes(StandardCharsets.UTF_8))
-    } else if (!spark.catalog.tableExists(name)) {
+    }
+    if (!built && !spark.catalog.tableExists(name)) {
       // fresh bytes from an earlier JVM: re-register the DDL over them
       val ddl = spark.read.parquet(loc).schema.toDDL
       spark.sql(

@@ -17,10 +17,15 @@ import graft.Tables
   */
 object Etl {
 
+  /** [[scratch]]'s fallback: `target/graft-tmp` under the JVM's working
+    * directory, so every checkout writes into its own build tree. */
+  private[graft] val defaultScratch: String =
+    new java.io.File("target/graft-tmp").getAbsolutePath
+
   /** Scratch dir for sink demos — configurable via `spark.graft.scratchDir`
-    * (an object-store URI on a cluster); defaults to the build tree. */
+    * (an object-store URI on a cluster); defaults to [[defaultScratch]]. */
   private[graft] def scratch(spark: SparkSession): String =
-    spark.conf.get("spark.graft.scratchDir", "/root/repo/target/graft-tmp")
+    spark.conf.get("spark.graft.scratchDir", defaultScratch)
 
   /** Vendor-shaped frame derived from the star schema: one row per order,
     * enriched from customer (details branch) and per-order lineitems

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
 
 /** S11 [EXT]: a minimal transactional table log — the manifest layer the
   * other sink operators point at. S10's selective compaction swaps dirs
@@ -529,9 +528,13 @@ object TableLog {
     }
     if (dvs.isEmpty || files.isEmpty) rd(files.map(_.path))
     else {
-      files.groupBy(LogProtocol.dvsFor(dvs, _)).toSeq
+      // groups in manifest order of their first file, not hash order: the
+      // union order is the scan's partition order, which a range-clustered
+      // rewrite (compaction, an apply) samples its bounds from
+      files.zipWithIndex.groupBy { case (f, _) => LogProtocol.dvsFor(dvs, f) }.toSeq
+        .sortBy(_._2.head._2)
         .map { case (dvPaths, group) =>
-          val df = rd(group.map(_.path))
+          val df = rd(group.map(_._1.path))
           if (dvPaths.isEmpty) df else df.filter(!dvMatch(spark, table, dvPaths))
         }
         .reduce(_ unionByName _)
@@ -620,9 +623,12 @@ object TableLog {
     }
 
   /** The add actions for every parquet file already staged under
-    * `table/rel/` (hidden `_`/`.` entries skipped) — the single listing
-    * discipline both [[stage]] and [[stageWithStats]] derive their
-    * manifests from. */
+    * `table/rel/` (hidden `_`/`.` entries skipped), in file-name order —
+    * the single listing discipline both [[stage]] and [[stageWithStats]]
+    * derive their manifests from. Name order, not the listing's own
+    * (file-system) order: Spark's `part-NNNNN` prefix makes it partition
+    * order, so the same write always yields the same manifest, and with
+    * it the same scan order and compaction ranges. */
   private[graft] def listStaged(spark: SparkSession, table: String,
       rel: String): Seq[Action] =
     fsOf(spark, table).listStatus(new Path(s"$table/$rel")).toSeq
@@ -630,7 +636,8 @@ object TableLog {
         val n = s.getPath.getName
         s.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
       }
-      .map(s => Action("add", s"$rel/${s.getPath.getName}"))
+      .map(_.getPath.getName).sorted
+      .map(n => Action("add", s"$rel/$n"))
 
   /** Stage `df` clustered by `orderBy` into `files` range-partitioned
     * files and return add actions carrying each file's (min, max) of
@@ -775,218 +782,6 @@ object TableLog {
     scanState(spark, table, kept, st.dvs, st.schema).filter(pred)
   }
 
-  /** The s11 fixture: three commits over the events slice, one file set
-    * per event_type per commit so the v3 rewrite can retire a partition's
-    * files wholesale (the file-level MERGE every table format performs).
-    *  - v1: initial snapshot — events with event_id % 4 != 3;
-    *  - v2: append — the % 4 == 3 remainder;
-    *  - v3: rewrite of the `click` partition — every live click file
-    *    removed, one rewritten set added holding only clicks with
-    *    value >= 100 (a MERGE-delete expressed as add+remove, the swap
-    *    s10 performs with renames made transactional).
-    * Returns the click files the rewrite retired (still on disk — older
-    * versions must keep reading them). */
-  private[graft] def buildFixture(spark: SparkSession, sfDir: String,
-      table: String): Seq[String] =
-    buildFixtureWith(spark, sfDir, table, Nil)._1
-
-  /** [[buildFixture]] plus caller-supplied extra file sets (relpath → df)
-    * staged CONCURRENTLY with the fixture's nine — staged dirs are
-    * invisible until the caller commits their returned add actions, so a
-    * follow-on commit's write job overlaps the fixture pool instead of
-    * paying its own job-floor round afterwards (the s14 v4 backfill).
-    * Returns (retired click files, extra add-action lists in input
-    * order). */
-  private[graft] def buildFixtureWith(spark: SparkSession, sfDir: String,
-      table: String, extra: Seq[(String, DataFrame)]): (Seq[String], Seq[Seq[Action]]) = {
-    import spark.implicits._
-    val f = fsOf(spark, table)
-    f.delete(new Path(table), true)
-    val ev = Tables.events(spark, sfDir)
-      .select($"event_id", $"user_id", $"event_type", $"value")
-    // bounded-domain driver collect (the s10Fragment convention): the
-    // type enum names the per-commit file sets
-    val types = ev.select($"event_type").distinct()
-      .orderBy($"event_type").as[String].collect().toSeq
-    // ALL NINE file sets (plus any caller extras) stage concurrently
-    // ([[inParallel]]): the staged dirs are disjoint and unreachable until
-    // the three ordered commits below publish them, so the only sequential
-    // steps left are the manifest renames — previously nine tiny write
-    // jobs of per-job floor ran end to end and dominated every
-    // fixture-built declared row
-    def typedTasks(df: DataFrame, v: Int): Seq[() => Seq[Action]] =
-      types.map(t => () => stage(spark, table,
-        df.filter($"event_type" === t), s"data/v$v/$t"))
-    val staged = inParallel(
-      typedTasks(ev.filter($"event_id" % 4 =!= 3), 1) ++
-        typedTasks(ev.filter($"event_id" % 4 === 3), 2) ++
-        Seq(() => stage(spark, table,
-          ev.filter($"event_type" === "click" && $"value" >= 100.0), "data/v3/click")) ++
-        extra.map { case (rel, df) => () => stage(spark, table, df, rel) })
-    // the initial commit records the schema: readers never trust footers
-    commit(spark, table,
-      Action("schema", ev.schema.json) +: staged.take(types.size).flatten)
-    commit(spark, table, staged.slice(types.size, 2 * types.size).flatten)
-    val retired = liveFiles(spark, table, 2).filter(_.contains("/click/"))
-    commit(spark, table, retired.map(Action("remove", _)) ++ staged(2 * types.size))
-    (retired, staged.drop(2 * types.size + 1))
-  }
-
-  /** Every version's snapshot rolled to (version, n_rows, id_sum) — the
-    * whole-history audit both declared queries end in. */
-  private def versionsFrame(spark: SparkSession, table: String): DataFrame = {
-    import spark.implicits._
-    (1 to currentVersion(spark, table))
-      .map { v =>
-        readAsOf(spark, table, v)
-          .agg(count(lit(1)).as("n_rows"), sum($"event_id").as("id_sum"))
-          .select(lit(v.toLong).as("version"), $"n_rows", $"id_sum")
-      }
-      .reduce(_ unionByName _)
-      .orderBy($"version")
-  }
-
-  /** S11 [EXT]: time-travel read over the commit log — build the
-    * three-commit fixture, then read the table AS OF every version in its
-    * history and roll each snapshot up to (version, n_rows, id_sum). The
-    * oracle recomputes each version's row set from the deterministic
-    * commit rules on the source table, so a manifest replay bug (a missed
-    * remove, a stray file, torn isolation between versions) shows up as a
-    * row/hash mismatch. */
-  def s11TimeTravel(spark: SparkSession, sfDir: String): DataFrame = {
-    val table = s"${Etl.scratch(spark)}/s11_table"
-    buildFixture(spark, sfDir, table)
-    versionsFrame(spark, table)
-  }
-
-  /** Fingerprint of the events source (file sizes+mtimes) — the warm
-    * fixture's invalidation key, AnnIndex.sourceFingerprint's recipe. */
-  private[graft] def eventsFp(sfDir: String): String = {
-    val src = new java.io.File(s"$sfDir/events.parquet")
-    if (src.isFile) s"${src.getName}=${src.length}:${src.lastModified}"
-    else
-      Option(src.listFiles()).getOrElse(Array.empty[java.io.File])
-        .filter(f => f.isFile && !f.getName.startsWith("."))
-        .sortBy(_.getName)
-        .map(f => s"${f.getName}=${f.length}:${f.lastModified}")
-        .mkString(";")
-  }
-
-  private val warmLock = new Object
-
-  /** Warm-fixture ensure: [[buildFixture]] plus a persisted v2 MV state,
-    * paid once per source generation and stamped — the AnnIndex/
-    * ensureCodebook idiom applied to the table log (r12 verdict item 5:
-    * the shipped s11/mv1 rows price the ten-file-set fixture BUILD
-    * against a one-GROUP-BY oracle; no deployment re-pays the build per
-    * read, so the warm queries below are the production-path numbers). */
-  private[graft] def ensureWarmFixture(spark: SparkSession, sfDir: String): String =
-    warmLock.synchronized {
-      val table = s"${Etl.scratch(spark)}/s11_warm_table"
-      val fp = eventsFp(sfDir)
-      val marker = java.nio.file.Paths.get(s"$table/_GRAFT_SOURCE")
-      val statePath = java.nio.file.Paths.get(s"$table/mv_state_v2")
-      val fresh = java.nio.file.Files.isRegularFile(marker) &&
-        new String(java.nio.file.Files.readAllBytes(marker), "UTF-8") == fp &&
-        currentVersion(spark, table) == 3 &&
-        java.nio.file.Files.isDirectory(statePath)
-      if (!fresh) {
-        buildFixture(spark, sfDir, table)
-        // the stored view state as of v2: what a deployment has on disk
-        // when commit v3 lands and the refresh runs
-        Tables.sink(s"$table/mv_state_v2") {
-          mvMerge(mvSlice(spark, table, Seq.empty, 1L), mvDelta(spark, table, 0, 2))
-            .write.mode(SaveMode.Overwrite).parquet(s"$table/mv_state_v2")
-        }
-        java.nio.file.Files.write(marker, fp.getBytes("UTF-8"))
-      }
-      table
-    }
-
-  /** S11 warm path [EXT]: the production-shape time-travel read — the
-    * log already exists ([[ensureWarmFixture]], outside the recurring
-    * cost after the first run), the query is ONE `readAsOf` snapshot
-    * rollup. The oracle has no log: DuckDB recomputes the v3 snapshot
-    * from the commit rules with a full-table scan — exactly the
-    * comparison the "as-of read costs manifest replay + pruned scan, not
-    * history replay" claim needs a number for. */
-  /** Serving-loop width (r14 verdict item 5): the warm rows price an
-    * N-read serving deployment INSIDE one declared query — N distinct
-    * read legs in one plan, so the per-query job floor amortizes over N
-    * and the ledger row prices the steady state instead of a cold
-    * session. The oracle replays the same recompute N times (UNION ALL
-    * of N literal-tagged SELECTs), so DuckDB pays N real recomputes —
-    * the comparison a dashboard ticking N times actually faces. */
-  val WARM_READS = 8
-
-  def s11WarmRead(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val table = ensureWarmFixture(spark, sfDir)
-    // the read_i literal sits BELOW each leg's aggregate on purpose: it
-    // makes the N subtrees non-identical, so AQE exchange reuse cannot
-    // collapse the N reads into one — every leg really scans the
-    // snapshot, as N independent serving requests would
-    (1 to WARM_READS).map { i =>
-      readAsOf(spark, table, 3)
-        .withColumn("read_i", lit(i))
-        .groupBy($"read_i")
-        .agg(count(lit(1)).as("n_rows"), sum($"event_id").as("id_sum"))
-    }.reduce(_.unionAll(_))
-  }
-
-  /** MV1 warm path [EXT]: one O(batch) refresh — the persisted v2 view
-    * state merges the (2,3] window's delta (the rewrite commit: click
-    * files out, filtered click files in; the delta scan touches ONLY
-    * those files, pinned in TimeTravelSpec for the cold form). The
-    * oracle recomputes the refreshed view with a full GROUP BY over the
-    * v3 snapshot — the full-recompute a dashboard without IVM pays on
-    * every tick. */
-  def mv1WarmRefresh(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val table = ensureWarmFixture(spark, sfDir)
-    // N refresh legs in one plan ([[WARM_READS]] doc): each leg reads the
-    // stored state and the (2,3] window's add/remove files SEPARATELY
-    // (refresh_i below the aggregate — 3 real scans per leg, nothing
-    // exchange-reuse'd away), contributions normalized to SIGNED rows
-    // (state rows carry their aggregates, added rows +1/+event_id,
-    // removed rows −1/−event_id — the same abelian merge mvSlice+mvMerge
-    // compute, associativity makes one global sum ≡ per-leg sums), then
-    // ONE (refresh_i, event_type) aggregate merges all legs. Every leg's
-    // merge work still happens — 8x the rows ride the hash table — but
-    // the 8x2 per-leg slice exchanges collapse to one, which is how a
-    // real scheduler batches N concurrent refresh ticks.
-    val (base, steps) = window(spark, table, 2, 3)
-    val (adds, removes) = LogProtocol.fileDelta(base, steps)
-    // window files read under the LOGGED snapshot schema (the readAsOf
-    // discipline) — inferring from the first file's footer and projecting
-    // the rest through it would silently drop columns an evolved file
-    // carries (r16 advice: the log's own v4 column-tagging scenario).
-    // Footer inference is only the fallback for a log predating schema
-    // tracking, and then once per call, not once per leg.
-    val windowSchema = steps.last.after.schema
-      .getOrElse(Tables.readMemo(spark, s"$table/${adds.head}").schema)
-    def readFiles(files: Seq[String]): DataFrame =
-      spark.read.schema(windowSchema).parquet(files.map(r => s"$table/$r"): _*)
-    def contrib(i: Int, files: Seq[String], sign: Long): DataFrame =
-      if (files.isEmpty)
-        spark.emptyDataset[(Int, String, Long, Long)]
-          .toDF("refresh_i", "event_type", "nc", "ic")
-      else
-        readFiles(files)
-          .select(lit(i).as("refresh_i"), $"event_type",
-            lit(sign).as("nc"), (lit(sign) * $"event_id").as("ic"))
-    (1 to WARM_READS).map { i =>
-      Tables.readMemo(spark, s"$table/mv_state_v2")
-        .select(lit(i).as("refresh_i"), $"event_type",
-          $"n_rows".as("nc"), $"id_sum".as("ic"))
-        .unionByName(contrib(i, adds, 1L))
-        .unionByName(contrib(i, removes, -1L))
-    }.reduce(_.unionByName(_))
-      .groupBy($"refresh_i", $"event_type")
-      .agg(sum($"nc").as("n_rows"), sum($"ic").as("id_sum"))
-      .filter($"n_rows" > 0)
-  }
-
   /** The window (from, to]: the state as of `from` (one replay) and each
     * version's step past it (one walk) — O(commits since checkpoint +
     * window), never O(table lifetime). */
@@ -1002,155 +797,6 @@ object TableLog {
       from: Int, to: Int): (Seq[String], Seq[String]) = {
     val (base, steps) = window(spark, table, from, to)
     LogProtocol.fileDelta(base, steps)
-  }
-
-  /** The MV's per-file-set aggregate: (event_type, n_rows, id_sum) with
-    * every term SIGNED so removed files subtract. Empty file sets yield
-    * an empty frame of the same schema. */
-  private[graft] def mvSlice(spark: SparkSession, table: String,
-      files: Seq[String], sign: Long): DataFrame = {
-    import spark.implicits._
-    if (files.isEmpty)
-      spark.emptyDataset[(String, Long, Long)]
-        .toDF("event_type", "n_rows", "id_sum")
-    else
-      spark.read.parquet(files.map(r => s"$table/$r"): _*)
-        .groupBy($"event_type")
-        .agg((count(lit(1)) * sign).as("n_rows"),
-          (sum($"event_id") * sign).as("id_sum"))
-  }
-
-  /** MV1 [EXT]: incremental materialized-view maintenance over the log —
-    * the delta-refresh a 100 TB dashboard needs: the view's aggregate is
-    * ABELIAN (counts and sums merge by addition), so a refresh from
-    * version v0 to v1 reads ONLY the files the window's commits touched:
-    * +agg(added files) − agg(removed files), merged into the stored
-    * state. A daily commit touching 0.01% of the table refreshes the
-    * view at 0.01% of the full-scan cost — the log's add/remove actions
-    * are exactly the delta an IVM engine otherwise reconstructs from
-    * change capture. Removed files are still on disk until [[vacuum]]
-    * (whose retention must cover the oldest unrefreshed view — the
-    * documented coupling). Returns the refreshed state for [from, to]. */
-  private[graft] def mvDelta(spark: SparkSession, table: String,
-      from: Int, to: Int): DataFrame = {
-    // a deletion-vector commit (S18) deletes rows WITHOUT an add/remove
-    // action, so it is invisible to this file-level delta — folding a
-    // window that contains one would silently serve a STALE view (the
-    // deleted rows never subtract). And DVs LIVE at `from` break the fold
-    // too, even with no dv action inside the window: the stored state was
-    // computed DV-aware, but this delta reads window files RAW — an
-    // absorbing compaction's removes would subtract the DV-hidden rows a
-    // SECOND time (the state never contained them). Non-abelian either
-    // way → refuse loudly and point at the CDF-driven refresh, which sees
-    // DV deletes as first-class rows and reads pre-images DV-aware.
-    val (base, steps) = window(spark, table, from, to)
-    val dvCommits = steps.filter(_.actions.exists(_.op == "dv")).map(_.version)
-    val dvLiveAtFrom = base.dvs.map(_._1)
-    require(dvCommits.isEmpty && dvLiveAtFrom.isEmpty,
-      s"mvDelta window ($from, $to] is not abelian-foldable: " +
-        (if (dvCommits.nonEmpty)
-          s"deletion-vector commit(s) v${dvCommits.mkString(", v")} inside " +
-            "the window have no add/remove action"
-        else
-          s"deletion vector(s) live at v$from (e.g. ${dvLiveAtFrom.head}) " +
-            "mean the stored state is DV-aware while this delta reads " +
-            "window files raw") +
-        " — refresh via the change feed (Lakehouse.mv2Refresh / cdfRead) " +
-        "or recompute the view")
-    val (adds, removes) = LogProtocol.fileDelta(base, steps)
-    mvSlice(spark, table, adds, 1L)
-      .unionByName(mvSlice(spark, table, removes, -1L))
-  }
-
-  /** One refresh step: fold the (from, to] delta into `state`, dropping
-    * groups whose membership went to zero. Both inputs are
-    * group-cardinality frames — the merge never touches the table. */
-  private[graft] def mvMerge(state: DataFrame, delta: DataFrame): DataFrame = {
-    import state.sparkSession.implicits._
-    state.unionByName(delta)
-      .groupBy($"event_type")
-      .agg(sum($"n_rows").as("n_rows"), sum($"id_sum").as("id_sum"))
-      .filter($"n_rows" > 0)
-  }
-
-  /** MV1 [EXT]: declared query — build the s11 history, then maintain the
-    * per-type (n_rows, id_sum) view through THREE incremental refreshes
-    * (v0→1, 1→2, 2→3: the cold start is just the first window), never
-    * scanning the whole table after a commit. The final state must equal
-    * the direct aggregate over the v3 snapshot — the oracle replays that;
-    * TimeTravelSpec additionally pins that each delta's scan touches ONLY
-    * the window's files. */
-  def mv1IncrementalAgg(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val table = s"${Etl.scratch(spark)}/mv1_table"
-    buildFixture(spark, sfDir, table)
-    (1 to currentVersion(spark, table))
-      .foldLeft(mvSlice(spark, table, Seq.empty, 1L)) { (state, v) =>
-        mvMerge(state, mvDelta(spark, table, v - 1, v))
-      }
-      .orderBy($"event_type")
-  }
-
-  /** S12 [EXT]: schema evolution on the log — the fourth commit the s11
-    * fixture grows: a BACKFILL rewrite of the `error` partition that adds
-    * a `source_tag` column. The new schema publishes as a `schema` action
-    * in the same atomic commit as the file swap, so the column and the
-    * data carrying it appear together: reads as of v1–v3 still present
-    * the ORIGINAL schema (the added column is invisible retroactively),
-    * and under the v4 schema every pre-v4 file null-fills the column —
-    * no file is ever rewritten for schema's sake, the 100 TB point of
-    * log-tracked schemas. Returns the v4 version number. */
-  /** The evolved (column-adding) backfill frame — shared by
-    * [[evolveFixture]] and the s12 staging hoist. */
-  private[graft] def evolvedTagged(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    Tables.events(spark, sfDir)
-      .select($"event_id", $"user_id", $"event_type", $"value")
-      .filter($"event_type" === "error")
-      .withColumn("source_tag",
-        concat($"event_type", lit("-"), pmod($"user_id", lit(3L)).cast("string")))
-  }
-
-  /** `staged`: pre-staged add actions for the backfill file set (the
-    * buildFixtureWith hoist) — None stages here, the standalone form. */
-  private[graft] def evolveFixture(spark: SparkSession, sfDir: String,
-      table: String, staged: Option[Seq[Action]] = None): Int = {
-    val retired = liveFiles(spark, table, currentVersion(spark, table))
-      .filter(_.contains("/error/"))
-    val tagged = evolvedTagged(spark, sfDir)
-    val adds = staged.getOrElse(stage(spark, table, tagged, "data/v4/error"))
-    commit(spark, table,
-      Action("schema", tagged.schema.json) +:
-        (retired.map(Action("remove", _)) ++ adds))
-  }
-
-  /** S12 [EXT]: declared query — build the s11 history, evolve it with
-    * the column-adding backfill commit, then audit every version:
-    * (version, n_rows, n_tagged). Versions 1–3 must report ZERO tagged
-    * rows (the column does not exist yet under their logged schema) and
-    * identical row counts to s11's pre-evolution reads; v4 keeps v3's row
-    * set (the backfill is the identity on rows) with exactly the error
-    * rows tagged. The oracle replays all four from the commit rules. */
-  def s12SchemaEvolution(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val table = s"${Etl.scratch(spark)}/s12_table"
-    // the evolution backfill's file set rides the fixture pool (the s14
-    // v4 hoist); the v4 commit still derives its remove set and schema
-    // action at commit time
-    val (_, extraAdds) = buildFixtureWith(spark, sfDir, table,
-      Seq("data/v4/error" -> evolvedTagged(spark, sfDir)))
-    evolveFixture(spark, sfDir, table, staged = Some(extraAdds.head))
-    (1 to currentVersion(spark, table))
-      .map { v =>
-        val df = readAsOf(spark, table, v)
-        val tagged =
-          if (df.columns.contains("source_tag")) count($"source_tag")
-          else lit(0L)
-        df.agg(count(lit(1)).as("n_rows"), tagged.cast("long").as("n_tagged"))
-          .select(lit(v.toLong).as("version"), $"n_rows", $"n_tagged")
-      }
-      .reduce(_ unionByName _)
-      .orderBy($"version")
   }
 
   /** S12b [EXT]: column DROP — the other direction of schema evolution.
@@ -1193,45 +839,6 @@ object TableLog {
         sch.fields.filterNot(_.name == name)).json)))
   }
 
-  /** R16 [EXT]: streaming view refresh — the composition the S11/R15/MV1
-    * trio exists for: a micro-batch stream lands as atomic txn-marked
-    * commits (R15) and a downstream aggregate view refreshes from each
-    * commit's DELTA (MV1) instead of rescanning the table — the live
-    * dashboard a 100 TB ingest feeds at per-batch cost. Declared batch
-    * form replays r15's four mod-4 micro-batches (including the
-    * worst-case re-delivery, which the commit gate rejects — no version
-    * appears, so nothing folds) and emits the view AS OF every version — per-type
-    * (n_rows, id_sum) — so the oracle's cumulative replay fails if any
-    * refresh missed a file, double-counted the re-delivery, or tore a
-    * batch. Each version's view folds every window delta so far onto the
-    * empty state lazily — LINEAR, each branch built from the empty state,
-    * never from the previous lazy state (reusing state_{v-1} twice per
-    * version is the exponential-inline trap) — so the four versions cost
-    * no materialization job. */
-  def r16StreamViewRefresh(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val table = s"${Etl.scratch(spark)}/r16_table"
-    fsOf(spark, table).delete(new Path(table), true)
-    val ev = Tables.events(spark, sfDir)
-      .select($"event_id", $"user_id", $"event_type", $"value")
-    val empty = mvSlice(spark, table, Seq.empty, 1L)
-    var deltas: Seq[DataFrame] = Nil
-    val views = (0 until 4).map { b =>
-      commitBatch(table, "r16")(ev.filter($"event_id" % 4 === b), b.toLong)
-      if (b == 1) {
-        val again = stage(spark, table,
-          ev.filter($"event_id" % 4 === 1), "data/r16/b1-redelivery")
-        require(commitIfAbsent(spark, table, "r16", 1L, again) == -1,
-          "re-delivered batch must not commit twice")
-      }
-      val v = currentVersion(spark, table)
-      deltas :+= mvDelta(spark, table, v - 1, v)
-      deltas.foldLeft(empty)(mvMerge)
-        .select(lit(v.toLong).as("version"), $"event_type", $"n_rows", $"id_sum")
-    }
-    views.reduce(_ unionByName _).orderBy($"version", $"event_type")
-  }
-
   /** The exactly-once micro-batch sink: stage the batch under an
     * attempt-unique dir, then publish behind the `(streamId, batchId)`
     * txn marker. The pre-check skips a KNOWN re-delivery without
@@ -1269,37 +876,5 @@ object TableLog {
       // lands on.
       if (every > 0 && v > 0 && v % every == 0) checkpointLog(spark, table)
     }
-  }
-
-  /** R15 [EXT]: streaming ingest INTO the table log — the lakehouse
-    * landing pattern: each micro-batch publishes as ONE atomic commit
-    * with a `(streamId, batchId)` txn marker, so readers always see
-    * whole batches (no torn micro-batch) and a re-delivered batch after
-    * a writer restart commits exactly once. Declared batch form replays
-    * the event feed as four deterministic micro-batches (event_id mod 4
-    * — the l2g/u3 synthetic-feed convention), RE-DELIVERS batch 1 with a
-    * freshly staged file set (which must no-op at the commit gate), and
-    * returns every version's (n_rows, id_sum) — the oracle's cumulative
-    * replay fails if the duplicate lands or a batch tears. */
-  def r15StreamTableCommit(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val table = s"${Etl.scratch(spark)}/r15_table"
-    fsOf(spark, table).delete(new Path(table), true)
-    val ev = Tables.events(spark, sfDir)
-      .select($"event_id", $"user_id", $"event_type", $"value")
-    (0 until 4).foreach { b =>
-      commitBatch(table, "r15")(ev.filter($"event_id" % 4 === b), b.toLong)
-      if (b == 1) {
-        // the re-delivered batch, worst case: the restarted writer does
-        // NOT know (no pre-check), fully re-stages the batch, and must be
-        // stopped at the commit gate — its files stay orphaned (vacuum's
-        // job), the table never sees them
-        val again = stage(spark, table,
-          ev.filter($"event_id" % 4 === 1), "data/r15/b1-redelivery")
-        require(commitIfAbsent(spark, table, "r15", 1L, again) == -1,
-          "re-delivered batch must not commit twice")
-      }
-    }
-    versionsFrame(spark, table)
   }
 }

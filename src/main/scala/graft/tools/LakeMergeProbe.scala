@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Lakehouse, TableLog}
+import graft.operators.{LakeQueries, Lakehouse, TableLog}
 
 /** Tier measurement for the MERGE paths (r16 verdict item 7: s13–s16/mv2
   * carry 25M-row walls, s17 does not — and S18 is new this round):
@@ -37,13 +37,7 @@ object LakeMergeProbe {
     import spark.implicits._
     val src = s"${dir.stripSuffix("/")}/lake_merge_src_$FILES"
     val dst = s"${dir.stripSuffix("/")}/lake_merge_dst_$FILES"
-    val fs = new org.apache.hadoop.fs.Path(src)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Seq(src, dst).foreach(t =>
-      fs.delete(new org.apache.hadoop.fs.Path(t), true))
-
-    val ev = graft.Tables.events(spark, dir)
-      .select($"event_id", $"user_id", $"event_type", $"value")
+    val ev = LakeQueries.fixtureEvents(spark, dir, src, dst)
     val org.apache.spark.sql.Row(eLo: Long, eHi: Long) =
       ev.agg(min($"event_id"), max($"event_id")).head()
 

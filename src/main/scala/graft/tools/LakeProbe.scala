@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Lakehouse, TableLog}
+import graft.operators.{LakeQueries, Lakehouse, TableLog}
 
 /** A/B the S15/S16 manifest-stats claim at a heavy tier: the same range
   * rollup through (a) `readAsOfRange` — file list pruned from the
@@ -31,8 +31,7 @@ object LakeProbe {
     import spark.implicits._
     val table = s"${dir.stripSuffix("/")}/lake_probe_table_$FILES"
 
-    val ev = graft.Tables.events(spark, dir)
-      .select($"event_id", $"user_id", $"event_type", $"value")
+    val ev = LakeQueries.fixtureEvents(spark, dir)
     val org.apache.spark.sql.Row(eLo: Long, eHi: Long, uLo: Long, uHi: Long) = ev
       .agg(min($"event_id"), max($"event_id"), min($"user_id"), max($"user_id"))
       .head()

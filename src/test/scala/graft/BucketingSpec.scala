@@ -15,7 +15,7 @@ class BucketingSpec extends SparkSpecBase {
     // the in-memory catalog forgets tables between JVMs but their dirs
     // survive — clear the managed locations too
     for (t <- Seq("b_orders", "b_lineitem")) {
-      val dir = new java.io.File(s"/root/repo/target/graft-tmp/warehouse/$t")
+      val dir = new java.io.File(s"$scratchRoot/warehouse/$t")
       if (dir.exists()) {
         def rm(f: java.io.File): Unit = {
           if (f.isDirectory) f.listFiles().foreach(rm)

@@ -15,8 +15,7 @@ class ClusteredWriteSpec extends SparkSpecBase {
   test("z-order key + clustered write yields disjoint per-file z-ranges (2-D layout)") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val out = spark.conf.get("spark.graft.scratchDir",
-      "/root/repo/target/graft-tmp") + "/clustered_zorder_spec"
+    val out = graft.operators.Etl.scratch(spark) + "/clustered_zorder_spec"
     val day = (datediff($"o_orderdate", lit("1995-01-01").cast("timestamp")) % 1024).cast("long")
     val cust = pmod($"o_custkey", lit(1024L))
     graft.operators.Etl.clusteredWrite(
@@ -36,8 +35,7 @@ class ClusteredWriteSpec extends SparkSpecBase {
   test("clustered write yields disjoint per-file ranges with row-group stats") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val out = spark.conf.get("spark.graft.scratchDir",
-      "/root/repo/target/graft-tmp") + "/clustered_spec"
+    val out = graft.operators.Etl.scratch(spark) + "/clustered_spec"
     graft.operators.Etl.clusteredWrite(
       Tables.orders(spark, sfDir).withColumn("o_date", to_date($"o_orderdate")),
       out, files = 6, clusterCol = "o_date")

@@ -18,7 +18,7 @@ class ConnectedComponentsSpec extends SparkSpecBase {
 
   test("reliable checkpointing yields the same components and writes round state to the dir") {
     import spark.implicits._
-    val dir = "/root/repo/target/graft-tmp/cc_checkpoints"
+    val dir = s"$scratchRoot/cc_checkpoints"
     val vertices = (1L to 7L).toDF("doc_id")
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (6L, 7L)).toDF("doc_a", "doc_b")
     val got = Dedup.connectedComponents(vertices, pairs, Some(dir))
@@ -64,7 +64,7 @@ class ConnectedComponentsSpec extends SparkSpecBase {
     // regression: the fixpoint comparison reads the PREVIOUS round's
     // checkpoint, so dropping round N-1 before the compare crashed with
     // FileNotFoundException on every multi-round reliable-checkpoint run
-    val dir = "/root/repo/target/graft-tmp/cc_checkpoints_star"
+    val dir = s"$scratchRoot/cc_checkpoints_star"
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
       f.delete(); ()
@@ -91,7 +91,7 @@ class ConnectedComponentsSpec extends SparkSpecBase {
 
   test("reliable checkpoints are pruned to a bounded set of rounds") {
     import spark.implicits._
-    val dir = "/root/repo/target/graft-tmp/cc_checkpoints_pruned"
+    val dir = s"$scratchRoot/cc_checkpoints_pruned"
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
       f.delete(); ()

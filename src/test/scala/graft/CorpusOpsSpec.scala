@@ -568,8 +568,8 @@ class CorpusOpsSpec extends SparkSpecBase {
     assert(back.count() === manifest.count())
     assert(joined.filter($"text_md5" =!= $"src_md5").count() === 0)
     // the physical tree is split=/shard= — the dirs a loader globs
-    val root = new java.io.File(spark.conf.get(
-      "spark.graft.scratchDir", "/root/repo/target/graft-tmp") + "/export_sink")
+    val root = new java.io.File(
+      graft.operators.Etl.scratch(spark) + "/export_sink")
     val splits = root.listFiles().filter(_.isDirectory).map(_.getName).toSet
     assert(splits === Set("split=train", "split=valid", "split=test"), splits.toString)
     for (s <- splits) {

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Etl, Lakehouse, TableLog}
@@ -170,5 +171,28 @@ class DvContainsSpec extends SparkSpecBase {
       spark.conf.unset("spark.sql.codegen.factoryMode")
       spark.conf.unset("spark.sql.codegen.wholeStage")
     }
+  }
+
+  test("a snapshot read scans its deletion-vector groups in manifest order, not hash order") {
+    import spark.implicits._
+    val t = fresh("dv_group_order_table")
+    // five file sets, a DV after each of the first four: every file sees a
+    // different DV set, so the read is five groups
+    (0 until 5).foreach { i =>
+      val rows = spark.range(i * 10L, i * 10L + 10).select($"id", ($"id" * 2).as("v"))
+      val adds = TableLog.stage(spark, t, rows, s"data/b$i")
+      TableLog.commit(spark, t,
+        if (i == 0) TableLog.Action("schema", rows.schema.json) +: adds else adds)
+      if (i < 4) Lakehouse.morDelete(spark, t, Seq(i * 10L).toDF("id"))
+    }
+    val head = TableLog.currentVersion(spark, t)
+    val manifestOrder = TableLog.liveFiles(spark, t, head).map(_.split('/')(1)).distinct
+    // the batch dir of each scan relation, in plan (union child) order
+    val scanOrder = TableLog.readAsOf(spark, t, head).queryExecution.optimizedPlan.collect {
+      case l: LogicalRelation => l.relation.asInstanceOf[HadoopFsRelation].location
+        .inputFiles.map(p => new Path(p).getParent.getName).distinct.toSeq
+    }.flatten
+    assert(manifestOrder.size === 5)
+    assert(scanOrder === manifestOrder)
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Etl, Lakehouse, TableLog}
+import graft.operators.{Etl, LakeQueries, Lakehouse, TableLog}
 
 /** S13/S14/S15's claims SQL can't see: snapshot isolation for readers
   * pinned under a racing compaction, the append-retry vs real-conflict
@@ -17,17 +17,17 @@ class LakehouseSpec extends SparkSpecBase {
   test("s13: compaction is one manifest transaction — pinned readers see identical rows, files collapse, inputs stay on disk for time travel") {
     import spark.implicits._
     val table = s"${Etl.scratch(spark)}/s13_spec_table"
-    Lakehouse.s13Fixture(spark, sfDir, table)
+    LakeQueries.s13Fixture(spark, sfDir, table)
     val vPre = TableLog.currentVersion(spark, table)
     val preFiles = TableLog.liveFiles(spark, table, vPre)
-    assert(preFiles.size === Lakehouse.S13_BATCHES * Lakehouse.S13_FILES_PER_BATCH)
+    assert(preFiles.size === LakeQueries.S13_BATCHES * LakeQueries.S13_FILES_PER_BATCH)
     val pinned = TableLog.readAsOf(spark, table, vPre)
       .agg(count(lit(1)), sum($"event_id")).collect().head
-    val vPost = Lakehouse.compactCommit(spark, table, Lakehouse.S13_TARGET_FILES)
+    val vPost = Lakehouse.compactCommit(spark, table, LakeQueries.S13_TARGET_FILES)
     assert(vPost === vPre + 1)
     // the packed snapshot: same rows, S13_TARGET_FILES live files
     val postFiles = TableLog.liveFiles(spark, table, vPost)
-    assert(postFiles.size === Lakehouse.S13_TARGET_FILES)
+    assert(postFiles.size === LakeQueries.S13_TARGET_FILES)
     assert(postFiles.forall(_.startsWith("data/compact/")))
     val post = TableLog.readAsOf(spark, table, vPost)
       .agg(count(lit(1)), sum($"event_id")).collect().head
@@ -44,9 +44,9 @@ class LakehouseSpec extends SparkSpecBase {
 
   test("s13 x s14: a pure rewrite produces an EMPTY change feed") {
     val table = s"${Etl.scratch(spark)}/s13_cdf_table"
-    Lakehouse.s13Fixture(spark, sfDir, table)
+    LakeQueries.s13Fixture(spark, sfDir, table)
     val vPre = TableLog.currentVersion(spark, table)
-    val vPost = Lakehouse.compactCommit(spark, table, Lakehouse.S13_TARGET_FILES)
+    val vPost = Lakehouse.compactCommit(spark, table, LakeQueries.S13_TARGET_FILES)
     // every row of the compaction commit is a rewritten-identical pair —
     // the feed a consumer subscribes to must see NOTHING
     assert(Lakehouse.cdfRead(spark, table, vPre, vPost, "event_id").count() === 0L,
@@ -56,18 +56,18 @@ class LakehouseSpec extends SparkSpecBase {
   test("s13: a blind append racing the compaction costs it a clean retry; nothing lost") {
     import spark.implicits._
     val table = s"${Etl.scratch(spark)}/s13_race_table"
-    Lakehouse.s13Fixture(spark, sfDir, table)
+    LakeQueries.s13Fixture(spark, sfDir, table)
     val v0 = TableLog.currentVersion(spark, table)
     val nRows = TableLog.readAsOf(spark, table, v0).count()
     // an appender lands a fresh batch INSIDE the compaction's
     // read-to-publish window (the beforePublish seam), exactly once
     val extra = Tables.events(spark, sfDir)
       .select($"event_id", $"user_id", $"event_type", $"value")
-      .filter($"event_id" % Lakehouse.S13_BATCHES === 0)
+      .filter($"event_id" % LakeQueries.S13_BATCHES === 0)
       .withColumn("event_id", $"event_id" + 10000000L)
     var raced = false
     val vPost = Lakehouse.compactCommit(spark, table,
-      Lakehouse.S13_TARGET_FILES, beforePublish = { _ =>
+      LakeQueries.S13_TARGET_FILES, beforePublish = { _ =>
         if (!raced) {
           raced = true
           TableLog.commit(spark, table,
@@ -83,17 +83,17 @@ class LakehouseSpec extends SparkSpecBase {
     val live = TableLog.liveFiles(spark, table, vPost)
     assert(live.exists(_.startsWith("data/race-append/")),
       "the appended files must stay live alongside the packed rewrite")
-    assert(live.count(_.startsWith("data/compact/")) === Lakehouse.S13_TARGET_FILES)
+    assert(live.count(_.startsWith("data/compact/")) === LakeQueries.S13_TARGET_FILES)
   }
 
   test("s13: a concurrent commit removing an input is a REAL conflict — loud abort, orphans vacuumable") {
     val table = s"${Etl.scratch(spark)}/s13_conflict_table"
-    Lakehouse.s13Fixture(spark, sfDir, table)
+    LakeQueries.s13Fixture(spark, sfDir, table)
     val victim = TableLog.liveFiles(spark, table,
       TableLog.currentVersion(spark, table)).head
     var raced = false
     val e = intercept[java.util.ConcurrentModificationException] {
-      Lakehouse.compactCommit(spark, table, Lakehouse.S13_TARGET_FILES,
+      Lakehouse.compactCommit(spark, table, LakeQueries.S13_TARGET_FILES,
         beforePublish = { _ =>
           if (!raced) {
             raced = true
@@ -118,7 +118,7 @@ class LakehouseSpec extends SparkSpecBase {
   test("s14: the feed classifies per commit — inserts, true deletes, value-changed updates with post-images") {
     import spark.implicits._
     val table = s"${Etl.scratch(spark)}/s14_spec_table"
-    Lakehouse.s14Fixture(spark, sfDir, table)
+    LakeQueries.s14Fixture(spark, sfDir, table)
     val feed = Lakehouse.cdfRead(spark, table, 0, 4, "event_id").cache()
     try {
       // v3 (the click rewrite): ONLY deletes — and exactly the sub-100 rows
@@ -275,37 +275,37 @@ class LakehouseSpec extends SparkSpecBase {
   test("s15: the range read's file set is pruned from the manifest, and matches exactly the stats-overlapping files") {
     import spark.implicits._
     val table = s"${Etl.scratch(spark)}/s15_spec_table"
-    Lakehouse.s15Fixture(spark, sfDir, table)
+    LakeQueries.s15Fixture(spark, sfDir, table)
     val (kept, total) = TableLog.prunedLiveFiles(spark, table, 2,
-      "event_id", Lakehouse.S15_LO, Lakehouse.S15_HI)
-    assert(total === Lakehouse.S15_V1_FILES + Lakehouse.S15_V2_FILES)
+      "event_id", LakeQueries.S15_LO, LakeQueries.S15_HI)
+    assert(total === LakeQueries.S15_V1_FILES + LakeQueries.S15_V2_FILES)
     assert(kept.size < total, s"nothing pruned: kept ${kept.size} of $total")
     // the kept set is exactly the manifest's overlap computation — and
     // the SCAN reads exactly those files, none of the pruned ones
     val overlap = TableLog.liveState(spark, table, 2).files.collect {
       case TableLog.LiveFile(p, Seq(s), _)
-          if s.max >= Lakehouse.S15_LO && s.min <= Lakehouse.S15_HI => p
+          if s.max >= LakeQueries.S15_LO && s.min <= LakeQueries.S15_HI => p
     }
     assert(kept.toSet === overlap.toSet)
     val scanned = TableLog.readAsOfRange(spark, table, 2, "event_id",
-      Lakehouse.S15_LO, Lakehouse.S15_HI).inputFiles.toSeq
+      LakeQueries.S15_LO, LakeQueries.S15_HI).inputFiles.toSeq
     assert(scanned.size === kept.size)
     assert(kept.forall(k => scanned.exists(_.endsWith(k))))
     // pruning is pure optimization: pruned read ≡ unpruned read + filter
     val pruned = TableLog.readAsOfRange(spark, table, 2, "event_id",
-      Lakehouse.S15_LO, Lakehouse.S15_HI)
+      LakeQueries.S15_LO, LakeQueries.S15_HI)
       .select($"event_id").as[Long].collect().sorted.toSeq
     val full = TableLog.readAsOf(spark, table, 2)
-      .filter($"event_id".between(Lakehouse.S15_LO, Lakehouse.S15_HI))
+      .filter($"event_id".between(LakeQueries.S15_LO, LakeQueries.S15_HI))
       .select($"event_id").as[Long].collect().sorted.toSeq
     assert(pruned === full)
   }
 
   test("s15: the range predicate also reaches the parquet scan (PushedFilters) — manifest pruning stacks on row-group skipping") {
     val table = s"${Etl.scratch(spark)}/s15_push_table"
-    Lakehouse.s15Fixture(spark, sfDir, table)
+    LakeQueries.s15Fixture(spark, sfDir, table)
     val plan = TableLog.readAsOfRange(spark, table, 2, "event_id",
-      Lakehouse.S15_LO, Lakehouse.S15_HI)
+      LakeQueries.S15_LO, LakeQueries.S15_HI)
       .queryExecution.executedPlan.toString
     assert(plan.contains("GreaterThanOrEqual(event_id") &&
       plan.contains("LessThanOrEqual(event_id"),
@@ -315,7 +315,7 @@ class LakehouseSpec extends SparkSpecBase {
   test("s15: an all-pruned range returns empty under the logged schema; stat-less files are never pruned") {
     import spark.implicits._
     val table = s"${Etl.scratch(spark)}/s15_edge_table"
-    Lakehouse.s15Fixture(spark, sfDir, table)
+    LakeQueries.s15Fixture(spark, sfDir, table)
     // a range past every file's max prunes everything — empty result,
     // logged schema preserved
     val out = TableLog.readAsOfRange(spark, table, 2, "event_id",
@@ -331,30 +331,30 @@ class LakehouseSpec extends SparkSpecBase {
     TableLog.commit(spark, table,
       TableLog.stage(spark, table, extra.repartition(1), "data/nostats"))
     val (kept, _) = TableLog.prunedLiveFiles(spark, table, 3,
-      "event_id", Lakehouse.S15_LO, Lakehouse.S15_HI)
+      "event_id", LakeQueries.S15_LO, LakeQueries.S15_HI)
     assert(kept.exists(_.startsWith("data/nostats/")),
       "a file without logged stats must always be kept")
   }
 
   test("s15 x s13: compaction with a stats column preserves manifest skipping") {
     val table = s"${Etl.scratch(spark)}/s15_compact_table"
-    Lakehouse.s15Fixture(spark, sfDir, table)
+    LakeQueries.s15Fixture(spark, sfDir, table)
     val v = Lakehouse.compactCommit(spark, table, targetFiles = 6,
       statsCols = Seq("event_id"))
     val withStats = TableLog.liveState(spark, table, v).files
     assert(withStats.forall(_.stats.nonEmpty),
       "compacted files must carry manifest stats")
     val (kept, total) = TableLog.prunedLiveFiles(spark, table, v,
-      "event_id", Lakehouse.S15_LO, Lakehouse.S15_HI)
+      "event_id", LakeQueries.S15_LO, LakeQueries.S15_HI)
     assert(total === 6)
     assert(kept.size < total,
       "the packed range layout must still prune under the range predicate")
     // and the pruned read over the packed table is still exact
     import spark.implicits._
     val got = TableLog.readAsOfRange(spark, table, v, "event_id",
-      Lakehouse.S15_LO, Lakehouse.S15_HI).count()
+      LakeQueries.S15_LO, LakeQueries.S15_HI).count()
     val want = Tables.events(spark, sfDir)
-      .filter($"event_id".between(Lakehouse.S15_LO, Lakehouse.S15_HI)).count()
+      .filter($"event_id".between(LakeQueries.S15_LO, LakeQueries.S15_HI)).count()
     assert(got === want)
   }
 
@@ -394,7 +394,7 @@ class LakehouseSpec extends SparkSpecBase {
 
   test("s14: an empty commit window (the poller's steady state) yields an EMPTY feed, not an exception") {
     val table = s"${Etl.scratch(spark)}/s14_empty_table"
-    Lakehouse.s14Fixture(spark, sfDir, table)
+    LakeQueries.s14Fixture(spark, sfDir, table)
     val feed = Lakehouse.cdfRead(spark, table, 4, 4, "event_id")
     assert(feed.count() === 0L)
     assert(feed.columns.take(3).toSeq
@@ -404,9 +404,9 @@ class LakehouseSpec extends SparkSpecBase {
   test("s16: one Z-order sort serves range predicates on BOTH dimensions — each prunes files, both reads exact") {
     import spark.implicits._
     val table = s"${Etl.scratch(spark)}/s16_spec_table"
-    Lakehouse.s16Fixture(spark, sfDir, table)
+    LakeQueries.s16Fixture(spark, sfDir, table)
     val stats = TableLog.liveState(spark, table, 1).files
-    assert(stats.size === Lakehouse.S16_FILES)
+    assert(stats.size === LakeQueries.S16_FILES)
     assert(stats.forall(_.stats.map(_.col).toSet === Set("event_id", "user_id")))
     val ev = Tables.events(spark, sfDir)
     // data-derived quarter-domain windows (the fixture sf is tiny; the
@@ -472,7 +472,7 @@ class LakehouseSpec extends SparkSpecBase {
       .as[(Long, Double)].collect().toSet)
   }
 
-  test("s17: past applyProbeInlineMaxFiles the apply falls back to the broadcast probe — identical pruning, identical rows") {
+  test("s17: past INLINE_PROBE_MAX_FILES the apply falls back to the broadcast probe") {
     import spark.implicits._
     val src = s"${Etl.scratch(spark)}/probe_gate_src"
     val dst = s"${Etl.scratch(spark)}/probe_gate_dst"
@@ -481,20 +481,20 @@ class LakehouseSpec extends SparkSpecBase {
       .select($"id".as("event_id"), ($"id" % 7).cast("double").as("value"))
     TableLog.commit(spark, src, TableLog.Action("schema", rows.schema.json) +:
       TableLog.stage(spark, src, rows, "data/v1"))
-    Lakehouse.cdfApply(spark, src, dst, 1, "event_id", "gate", files = 8)
+    // one more ranged destination file than the inline probe takes
+    val files = Lakehouse.INLINE_PROBE_MAX_FILES + 1
+    Lakehouse.cdfApply(spark, src, dst, 1, "event_id", "gate", files)
     val before = TableLog.liveFiles(spark, dst, 1)
-    assert(before.size === 8)
+    assert(before.size === files)
     val bumped = rows.withColumn("value",
       when($"event_id" === 0L || $"event_id" === 999L, $"value" + 100.0)
         .otherwise($"value"))
     TableLog.commit(spark, src,
       TableLog.liveFiles(spark, src, 1).map(TableLog.Action("remove", _)) ++
         TableLog.stage(spark, src, bumped, "data/v2"))
-    // force the wide-destination path: every ranged file count exceeds the
-    // gate, so the hit set must come from the broadcast-join probe job
-    spark.conf.set("spark.graft.log.applyProbeInlineMaxFiles", "0")
-    try Lakehouse.cdfApply(spark, src, dst, 2, "event_id", "gate", files = 8)
-    finally spark.conf.unset("spark.graft.log.applyProbeInlineMaxFiles")
+    // the wide-destination path: the ranged file count exceeds the inline
+    // limit, so the hit set must come from the broadcast-join probe job
+    Lakehouse.cdfApply(spark, src, dst, 2, "event_id", "gate", files)
     val after = TableLog.liveFiles(spark, dst, 2).toSet
     val rewritten = before.toSet -- after
     assert(rewritten.size <= 2,
@@ -595,8 +595,8 @@ class LakehouseSpec extends SparkSpecBase {
   test("s14 x s12: a CDF window crossing a schema-evolution commit unions with null-filled early slices, not an AnalysisException") {
     import spark.implicits._
     val table = s"${Etl.scratch(spark)}/s14_evo_table"
-    TableLog.buildFixture(spark, sfDir, table)
-    TableLog.evolveFixture(spark, sfDir, table) // v4 adds source_tag
+    LakeQueries.buildFixture(spark, sfDir, table)
+    LakeQueries.evolveFixture(spark, sfDir, table) // v4 adds source_tag
     // v5: a post-evolution rewrite whose pre AND post schemas both carry
     // source_tag — its slice has the evolved column, v1–v4's slices
     // (intersection of their own pre/post schemas) do not, so the window
@@ -741,11 +741,11 @@ class LakehouseSpec extends SparkSpecBase {
   test("s18 x s13: a DV landing inside the compaction's window is a REAL conflict — the packed rewrite would escape it") {
     import spark.implicits._
     val table = s"${Etl.scratch(spark)}/s18_conflict_table"
-    Lakehouse.s13Fixture(spark, sfDir, table)
+    LakeQueries.s13Fixture(spark, sfDir, table)
     val ev = Tables.events(spark, sfDir)
     var raced = false
     val e = intercept[java.util.ConcurrentModificationException] {
-      Lakehouse.compactCommit(spark, table, Lakehouse.S13_TARGET_FILES,
+      Lakehouse.compactCommit(spark, table, LakeQueries.S13_TARGET_FILES,
         beforePublish = { _ =>
           if (!raced) {
             raced = true
@@ -812,12 +812,12 @@ class LakehouseSpec extends SparkSpecBase {
       ev.filter($"event_type" === "click").select($"event_id"))
     // folding (1, 2] would silently keep the deleted clicks in the view
     val e = intercept[IllegalArgumentException] {
-      TableLog.mvDelta(spark, table, 1, 2).collect()
+      LakeQueries.mvDelta(spark, table, 1, 2).collect()
     }
     assert(e.getMessage.contains("deletion-vector") &&
       e.getMessage.contains("mv2Refresh"))
     // windows before the DV still fold fine
-    assert(TableLog.mvDelta(spark, table, 0, 1).count() > 0)
+    assert(LakeQueries.mvDelta(spark, table, 0, 1).count() > 0)
     // and the CDF-driven refresh it points at handles the same window
     def view(df: org.apache.spark.sql.DataFrame) =
       df.groupBy($"event_type").agg(count(lit(1)).as("n_rows"))
@@ -906,7 +906,7 @@ class LakehouseSpec extends SparkSpecBase {
     // state never contained
     Lakehouse.compactCommit(spark, table, targetFiles = 2)
     val e = intercept[IllegalArgumentException] {
-      TableLog.mvDelta(spark, table, 2, 3).collect()
+      LakeQueries.mvDelta(spark, table, 2, 3).collect()
     }
     assert(e.getMessage.contains("live at v2"))
   }
@@ -1162,13 +1162,13 @@ class LakehouseSpec extends SparkSpecBase {
   }
 
   test("warm lake fixture: the ensure is stamped — a second call rebuilds nothing, and the shared src stays at v4") {
-    val root = Lakehouse.ensureLakeFixture(spark, sfDir)
+    val root = LakeQueries.ensureLakeFixture(spark, sfDir)
     assert(TableLog.currentVersion(spark, s"$root/src") === 4)
     assert(TableLog.currentVersion(spark, s"$root/packed")
-      === Lakehouse.S13_BATCHES + 1)
+      === LakeQueries.S13_BATCHES + 1)
     val probe = new Path(s"$root/src/_log/v4.log")
     val m1 = fs(root).getFileStatus(probe).getModificationTime
-    val root2 = Lakehouse.ensureLakeFixture(spark, sfDir)
+    val root2 = LakeQueries.ensureLakeFixture(spark, sfDir)
     assert(root2 === root)
     assert(fs(root).getFileStatus(probe).getModificationTime === m1,
       "a fresh stamped fixture was rebuilt")
@@ -1177,7 +1177,7 @@ class LakehouseSpec extends SparkSpecBase {
   test("mv2: the refresh plan keeps touched-group keys DISTRIBUTED — semi/anti joins, never collected isin literals") {
     import spark.implicits._
     val table = s"${Etl.scratch(spark)}/mv2_plan_table"
-    Lakehouse.s14Fixture(spark, sfDir, table)
+    LakeQueries.s14Fixture(spark, sfDir, table)
     def view(df: org.apache.spark.sql.DataFrame) =
       df.groupBy($"event_type")
         .agg(count(lit(1)).as("n_rows"), min($"value").as("min_value"))
@@ -1206,7 +1206,7 @@ class LakehouseSpec extends SparkSpecBase {
   test("mv2: untouched groups ride from the stored state — a planted sentinel survives the CDF-targeted refresh") {
     import spark.implicits._
     val table = s"${Etl.scratch(spark)}/mv2_spec_table"
-    Lakehouse.s14Fixture(spark, sfDir, table)
+    LakeQueries.s14Fixture(spark, sfDir, table)
     def view(df: org.apache.spark.sql.DataFrame) =
       df.groupBy($"event_type")
         .agg(count(lit(1)).as("n_rows"), min($"value").as("min_value"))
@@ -1505,7 +1505,7 @@ class LakehouseSpec extends SparkSpecBase {
         "data/v1/rest")))
     Lakehouse.relay(spark, src, dst, "event_id", "r17evo", evolveSchema = true)
     // v2: the evolution commit — identical common columns, non-null
-    // source_tag on every error row (TableLog.evolveFixture's shape)
+    // source_tag on every error row (LakeQueries.evolveFixture's shape)
     val retired = TableLog.liveFiles(spark, src, 1).filter(_.contains("/error/"))
     val tagged = ev.filter($"event_type" === "error")
       .withColumn("source_tag",
@@ -1641,7 +1641,7 @@ class LakehouseSpec extends SparkSpecBase {
     // silver (offset = silver's own txn markers), fold silver's new
     // versions into the view state — each stage resumes from ITS log,
     // nothing is held anywhere else
-    var state = TableLog.mvSlice(spark, silver, Seq.empty, 1L)
+    var state = LakeQueries.mvSlice(spark, silver, Seq.empty, 1L)
     var refreshedTo = 0
     val mem = MemoryStream[Evt]
     val q = mem.toDS().toDF().writeStream
@@ -1650,8 +1650,8 @@ class LakehouseSpec extends SparkSpecBase {
         Lakehouse.relay(spark, bronze, silver, "event_id", "medallion")
         val head = TableLog.currentVersion(spark, silver)
         if (head > refreshedTo) {
-          state = TableLog.mvMerge(state,
-            TableLog.mvDelta(spark, silver, refreshedTo, head)).localCheckpoint()
+          state = LakeQueries.mvMerge(state,
+            LakeQueries.mvDelta(spark, silver, refreshedTo, head)).localCheckpoint()
           refreshedTo = head
         }
         ()

@@ -4,7 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FSDataInputStream, Path, RawLocalFileSystem}
 
-import graft.operators.{Etl, TableLog}
+import graft.operators.{Etl, Lakehouse, TableLog}
 
 /** The local file system under the `countfs` scheme, recording the path of
   * every file it opens. */
@@ -24,25 +24,53 @@ object CountingFs {
   * Hadoop FileSystem seam. */
 class LogReadCountSpec extends SparkSpecBase {
 
-  test("readAsOf at head opens each manifest exactly once: files and schema come from one replay") {
+  private def events = {
     import spark.implicits._
-    val dir = s"${Etl.scratch(spark)}/readcount_table"
-    val local = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    local.delete(new Path(dir), true)
-    val ev = Tables.events(spark, sfDir).select($"event_id", $"user_id", $"event_type", $"value")
-    // the only schema action is at v1, and there is no checkpoint
+    Tables.events(spark, sfDir).select($"event_id", $"user_id", $"event_type", $"value")
+  }
+
+  /** A fresh four-commit table at `dir` (the mod-4 split of the events):
+    * the only schema action is at v1, and there is no checkpoint. */
+  private def fourCommits(dir: String): Unit = {
+    import spark.implicits._
+    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(new Path(dir), true)
     (0 until 4).foreach { b =>
-      val adds = TableLog.stage(spark, dir, ev.filter($"event_id" % 4 === b), s"data/b$b")
+      val adds = TableLog.stage(spark, dir, events.filter($"event_id" % 4 === b), s"data/b$b")
       TableLog.commit(spark, dir,
-        if (b == 0) TableLog.Action("schema", ev.schema.json) +: adds else adds)
+        if (b == 0) TableLog.Action("schema", events.schema.json) +: adds else adds)
     }
+  }
+
+  /** `dir` under the counting scheme, with the open record cleared. */
+  private def counted(dir: String): String = {
     spark.sparkContext.hadoopConfiguration.set("fs.countfs.impl", classOf[CountingFs].getName)
-    val table = s"countfs://$dir"
     CountingFs.opened.clear()
-    val df = TableLog.readAsOf(spark, table, 4)
-    val logOpens = CountingFs.opened.asScala.toSeq.filter(_.contains("/_log/"))
-    assert(logOpens.sorted === (1 to 4).map(v => s"$dir/_log/v$v.log"),
-      s"log files opened: ${logOpens.mkString(", ")}")
-    assert(df.count() === ev.count())
+    s"countfs://$dir"
+  }
+
+  private def logOpens(dir: String): Seq[String] =
+    CountingFs.opened.asScala.toSeq.filter(_.startsWith(s"$dir/_log/")).sorted
+
+  test("readAsOf at head opens each manifest exactly once: files and schema come from one replay") {
+    val dir = s"${Etl.scratch(spark)}/readcount_table"
+    fourCommits(dir)
+    val df = TableLog.readAsOf(spark, counted(dir), 4)
+    assert(logOpens(dir) === (1 to 4).map(v => s"$dir/_log/v$v.log"),
+      s"log files opened: ${logOpens(dir).mkString(", ")}")
+    assert(df.count() === events.count())
+  }
+
+  test("one relay tick opens each source manifest exactly once: the window split's walk feeds the apply") {
+    val dir = s"${Etl.scratch(spark)}/readcount_relay_src"
+    val dst = s"${Etl.scratch(spark)}/readcount_relay_dst"
+    fourCommits(dir)
+    new Path(dst).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(new Path(dst), true)
+    assert(Lakehouse.relay(spark, counted(dir), dst, "event_id", "readcount") === (1 to 4))
+    assert(logOpens(dir) === (1 to 4).map(v => s"$dir/_log/v$v.log"),
+      s"source log files opened: ${logOpens(dir).mkString(", ")}")
+    assert(TableLog.readAsOf(spark, dst, TableLog.currentVersion(spark, dst)).count() ===
+      events.count())
   }
 }

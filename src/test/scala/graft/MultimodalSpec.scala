@@ -89,7 +89,7 @@ class MultimodalSpec extends SparkSpecBase {
 
   test("binaryFile source reads opaque payloads with typed metadata (L5 ingest path)") {
     import spark.implicits._
-    val dir = new java.io.File("/root/repo/target/graft-tmp/binmedia")
+    val dir = new java.io.File(s"$scratchRoot/binmedia")
     dir.mkdirs()
     val payloads = Map("a.px" -> "alpha-bytes", "b.px" -> "beta", "c.px" -> "gamma-payload")
     payloads.foreach { case (name, content) =>

@@ -38,8 +38,7 @@ class ObjectStoreLogRaceSpec extends SparkSpecBase {
     super.afterAll()
   }
 
-  private def scratch = spark.conf.get("spark.graft.scratchDir",
-    "/root/repo/target/graft-tmp")
+  private def scratch = graft.operators.Etl.scratch(spark)
 
   test("conditional PUT is one-winner: of 8 concurrent claims on one key exactly one lands, losers see 412, bytes are the winner's") {
     store.reset()

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * (the execution-listener bus), so assertions poll. */
 class ObserveSpec extends SparkSpecBase {
 
-  private val dir = "/root/repo/target/graft-tmp/obslogs"
+  private val dir = s"$scratchRoot/obslogs"
 
   private def lines(h: Observe.Handle): Seq[String] =
     h.files.flatMap(p => Files.readAllLines(p).asScala)

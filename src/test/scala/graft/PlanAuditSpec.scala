@@ -152,7 +152,7 @@ class PlanAuditSpec extends SparkSpecBase {
     import spark.implicits._
     // write the demo slice, then read back with a partition-key predicate
     q("s5_s6_partitioned_sink").collect()
-    val scratch = spark.conf.get("spark.graft.scratchDir", "/root/repo/target/graft-tmp")
+    val scratch = graft.operators.Etl.scratch(spark)
     val back = spark.read.parquet(s"$scratch/partitioned_sink")
       .filter($"city_id" === 7 && $"day" === 1)
       .agg(count(lit(1)))

@@ -39,8 +39,7 @@ class S3ProtocolPutSpec extends SparkSpecBase {
     super.afterAll()
   }
 
-  private def scratch = spark.conf.get("spark.graft.scratchDir",
-    "/root/repo/target/graft-tmp")
+  private def scratch = graft.operators.Etl.scratch(spark)
 
   private def writeBytes(name: String, n: Int): java.io.File = {
     val f = new java.io.File(s"$scratch/s3put/$name")

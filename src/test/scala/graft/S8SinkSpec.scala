@@ -47,8 +47,7 @@ class S8SinkSpec extends SparkSpecBase {
     import spark.implicits._
     val hconf = spark.sparkContext.hadoopConfiguration
     assert(hconf.get("mapreduce.fileoutputcommitter.algorithm.version") === "2")
-    val out = spark.conf.get("spark.graft.scratchDir",
-      "/root/repo/target/graft-tmp") + "/s8_committer_sink"
+    val out = graft.operators.Etl.scratch(spark) + "/s8_committer_sink"
     val slice = graft.operators.Etl.vendorFrame(spark, sfDir,
       $"o_orderdate" >= lit("2000-03-01").cast("timestamp")
         && $"o_orderdate" < lit("2000-03-03").cast("timestamp"))

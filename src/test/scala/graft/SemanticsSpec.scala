@@ -119,7 +119,7 @@ class SemanticsSpec extends SparkSpecBase {
 
   test("golden ETL: partitioned write/read-back preserves schema, counts, and partition layout") {
     import spark.implicits._
-    val out = "/root/repo/target/graft-tmp/golden_etl"
+    val out = s"$scratchRoot/golden_etl"
     val v = Etl.vendorFrame(spark, sfDir).filter($"year" === 2000 && $"month" === 1)
     v.write.mode("overwrite").partitionBy("city_id", "year", "month", "day").parquet(out)
     val back = spark.read.parquet(out)

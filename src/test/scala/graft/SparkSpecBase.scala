@@ -11,6 +11,10 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
   // (the Spark session timezone is pinned to UTC separately below).
   java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("UTC"))
 
+  /** Where specs write: the engine's default scratch root, under the
+    * working directory. */
+  val scratchRoot: String = graft.operators.Etl.defaultScratch
+
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
     .appName("graft-spec")
@@ -18,7 +22,7 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    .config("spark.sql.warehouse.dir", "/root/repo/target/graft-tmp/warehouse")
+    .config("spark.sql.warehouse.dir", s"$scratchRoot/warehouse")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 

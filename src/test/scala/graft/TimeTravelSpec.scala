@@ -3,7 +3,7 @@ package graft
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Etl, TableLog}
+import graft.operators.{Etl, LakeQueries, TableLog}
 
 /** s11's claims SQL can't see: old versions stay physically readable after
   * a rewrite retires their files, a snapshot scans EXACTLY the manifest's
@@ -18,7 +18,7 @@ class TimeTravelSpec extends SparkSpecBase {
 
   test("s11: rewrite retires files logically; every version keeps reading") {
     import spark.implicits._
-    val retired = TableLog.buildFixture(spark, sfDir, table)
+    val retired = LakeQueries.buildFixture(spark, sfDir, table)
     assert(retired.nonEmpty && retired.forall(_.contains("/click/")))
     // time travel's precondition: the retired files are still on disk
     retired.foreach(r => assert(fs.exists(new Path(s"$table/$r")),
@@ -49,7 +49,7 @@ class TimeTravelSpec extends SparkSpecBase {
   }
 
   test("s11: vacuum drops only files no retained version references") {
-    TableLog.buildFixture(spark, sfDir, table)
+    LakeQueries.buildFixture(spark, sfDir, table)
     val retired = TableLog.liveFiles(spark, table, 2).filter(_.contains("/click/"))
     val keep3 = TableLog.readAsOf(spark, table, 3).count()
     val dead = TableLog.vacuum(spark, table, retainFrom = 3)
@@ -101,9 +101,9 @@ class TimeTravelSpec extends SparkSpecBase {
   test("s12: the logged schema gates the column in both directions") {
     import spark.implicits._
     val t = s"${Etl.scratch(spark)}/s12_spec_table"
-    TableLog.buildFixture(spark, sfDir, t)
+    LakeQueries.buildFixture(spark, sfDir, t)
     val pre = (1 to 3).map(v => TableLog.readAsOf(spark, t, v).count())
-    TableLog.evolveFixture(spark, sfDir, t)
+    LakeQueries.evolveFixture(spark, sfDir, t)
     // retroactive invisibility: v1-v3 present the ORIGINAL schema even
     // though the log now knows the column
     (1 to 3).foreach { v =>
@@ -131,7 +131,7 @@ class TimeTravelSpec extends SparkSpecBase {
   test("s12b: column drop is logical and O(1) — reads project it away, time travel keeps it, no byte moves") {
     import spark.implicits._
     val t = s"${Etl.scratch(spark)}/s12b_spec_table"
-    TableLog.buildFixture(spark, sfDir, t)
+    LakeQueries.buildFixture(spark, sfDir, t)
     val vPre = TableLog.currentVersion(spark, t)
     val before = TableLog.liveFiles(spark, t, vPre)
     val sig = before.map { r =>
@@ -212,17 +212,17 @@ class TimeTravelSpec extends SparkSpecBase {
 
   test("mv1: every refresh scans only its window's files and lands on the direct aggregate") {
     import spark.implicits._
-    TableLog.buildFixture(spark, sfDir, table)
+    LakeQueries.buildFixture(spark, sfDir, table)
     // the (2,3] window touched ONLY click files (retired + rewrite): the
     // delta scan must never read an untouched partition's bytes
-    val scanned = TableLog.mvDelta(spark, table, 2, 3).inputFiles.toSeq
+    val scanned = LakeQueries.mvDelta(spark, table, 2, 3).inputFiles.toSeq
     assert(scanned.nonEmpty && scanned.forall(_.contains("/click/")),
       s"delta refresh scanned outside its window: $scanned")
     // cold start + two incremental refreshes, each checked against the
     // direct aggregate over that version's snapshot
-    var state = TableLog.mvSlice(spark, table, Seq.empty, 1L)
+    var state = LakeQueries.mvSlice(spark, table, Seq.empty, 1L)
     (1 to 3).foreach { v =>
-      state = TableLog.mvMerge(state, TableLog.mvDelta(spark, table, v - 1, v))
+      state = LakeQueries.mvMerge(state, LakeQueries.mvDelta(spark, table, v - 1, v))
       val got = state.collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
       val direct = TableLog.readAsOf(spark, table, v)
@@ -242,18 +242,18 @@ class TimeTravelSpec extends SparkSpecBase {
     val evts = Tables.events(spark, sfDir)
       .select($"event_id", $"ts", $"user_id", $"event_type")
       .as[Evt].collect().toSeq
-    var state = TableLog.mvSlice(spark, t, Seq.empty, 1L)
+    var state = LakeQueries.mvSlice(spark, t, Seq.empty, 1L)
     val mem = MemoryStream[Evt]
     val q = mem.toDS().toDF().writeStream
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, bid: Long) =>
         TableLog.commitBatch(t, "view-stream")(df, bid)
         val v = TableLog.currentVersion(spark, t)
-        val delta = TableLog.mvDelta(spark, t, v - 1, v)
+        val delta = LakeQueries.mvDelta(spark, t, v - 1, v)
         // per-batch cost: the refresh reads this commit's files, nothing else
         assert(delta.inputFiles.nonEmpty &&
           delta.inputFiles.forall(_.contains(s"/b$bid-")),
           s"batch $bid refresh read outside its delta")
-        state = TableLog.mvMerge(state, delta).localCheckpoint()
+        state = LakeQueries.mvMerge(state, delta).localCheckpoint()
       }
       .outputMode("append").start()
     try {
@@ -321,7 +321,7 @@ class TimeTravelSpec extends SparkSpecBase {
   }
 
   test("commit: a competing writer's published manifest is never clobbered") {
-    TableLog.buildFixture(spark, sfDir, table)
+    LakeQueries.buildFixture(spark, sfDir, table)
     // a competing writer publishes v4 while we prepare our commit: the
     // publish re-reads the log, so we land at v5 and v4 stays
     // byte-identical — no version is ever overwritten (the no-clobber
@@ -348,7 +348,7 @@ class TimeTravelSpec extends SparkSpecBase {
     // overwrite). publish() exists so this interleaving is drivable
     // without thread timing: the competitor lands v4 first, then our
     // publish targets the same version number.
-    TableLog.buildFixture(spark, sfDir, table)
+    LakeQueries.buildFixture(spark, sfDir, table)
     TableLog.publish(spark, table, 4,
       Seq(TableLog.Action("add", "data/winner/file.parquet")))
     val e = intercept[TableLog.CommitConflict] {
@@ -372,7 +372,7 @@ class TimeTravelSpec extends SparkSpecBase {
     // competitor manifest intact and its own actions committed exactly
     // once. Blind file-level appends commute, so no rebase is needed;
     // that commutativity is the documented precondition.
-    TableLog.buildFixture(spark, sfDir, table) // versions 1..3
+    LakeQueries.buildFixture(spark, sfDir, table) // versions 1..3
     var raced = 0
     val v = TableLog.commitWithRetry(spark, table,
       Seq(TableLog.Action("add", "data/mine/file.parquet")),
@@ -556,12 +556,12 @@ class TimeTravelSpec extends SparkSpecBase {
     // subtract them from the view, but a vacuum retaining only v3 has
     // already GC'd them — the refresh must ERROR (missing files), never
     // silently return a partial delta that would corrupt the view state.
-    TableLog.buildFixture(spark, sfDir, table)
+    LakeQueries.buildFixture(spark, sfDir, table)
     val retired = TableLog.liveFiles(spark, table, 2).filter(_.contains("/click/"))
     TableLog.vacuum(spark, table, retainFrom = 3)
     retired.foreach(r => assert(!fs.exists(new Path(s"$table/$r"))))
     val e = intercept[Exception] {
-      TableLog.mvDelta(spark, table, 2, 3).collect()
+      LakeQueries.mvDelta(spark, table, 2, 3).collect()
     }
     val msg = e.toString + Option(e.getCause).map(_.toString).getOrElse("")
     assert(msg.contains("PATH_NOT_FOUND") || msg.contains("FileNotFound") ||
@@ -570,14 +570,14 @@ class TimeTravelSpec extends SparkSpecBase {
     // unrefreshed view) keeps the same refresh working
     val t2 = s"${Etl.scratch(spark)}/mv_retain_table"
     fs.delete(new Path(t2), true)
-    TableLog.buildFixture(spark, sfDir, t2)
+    LakeQueries.buildFixture(spark, sfDir, t2)
     TableLog.vacuum(spark, t2, retainFrom = 2)
-    assert(TableLog.mvDelta(spark, t2, 2, 3).collect().nonEmpty)
+    assert(LakeQueries.mvDelta(spark, t2, 2, 3).collect().nonEmpty)
   }
 
   test("s11: stray files and crashed-writer tmps are invisible to readers") {
     import spark.implicits._
-    TableLog.buildFixture(spark, sfDir, table)
+    LakeQueries.buildFixture(spark, sfDir, table)
     val before = (1 to 3).map(v =>
       TableLog.readAsOf(spark, table, v).count())
     // a stray parquet file NEXT TO live ones (the listing trap): copy a
@@ -593,5 +593,14 @@ class TimeTravelSpec extends SparkSpecBase {
     val after = (1 to 3).map(v => TableLog.readAsOf(spark, table, v).count())
     assert(after === before,
       "a snapshot read picked up files outside its manifest")
+  }
+
+  test("listStaged returns a staged file set's adds in file-name order (partition order), not listing order") {
+    val t = s"${Etl.scratch(spark)}/staged_order_table"
+    fs.delete(new Path(t), true)
+    val adds = TableLog.stage(spark, t, spark.range(0, 4000).toDF().repartition(16), "data/v1")
+    assert(adds.size >= 8)
+    assert(adds.map(_.path) === adds.map(_.path).sorted)
+    assert(TableLog.listStaged(spark, t, "data/v1") === adds)
   }
 }

@@ -88,7 +88,7 @@ class VendorGoldenSpec extends SparkSpecBase {
 
   test("partitioned write keeps the 8-col payload under city_id=/year=/month=/day=") {
     import spark.implicits._
-    val out = "/root/repo/target/graft-tmp/vendor_golden"
+    val out = s"$scratchRoot/vendor_golden"
     val withKeys = vendors
       .withColumn("ts", timestamp_seconds($"extraction_started_at"))
       .withColumn("year", year($"ts")).withColumn("month", month($"ts"))
