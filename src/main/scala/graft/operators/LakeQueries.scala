@@ -568,23 +568,17 @@ object LakeQueries {
 
   // ------------------------------- S17: pruned copy-on-write MERGE (CDF sync)
 
-  /** Replicate versions 1..4 of `src` into `dst` by per-version
-    * [[Lakehouse.cdfApply]] under `consumer`. All four window deltas read
-    * only the (already fully built) source, so they materialize in ONE
-    * concurrent round ([[Lakehouse.prepareDelta]]) and each apply
-    * consumes its prepared slice — the lookahead that overlaps the
-    * per-version checkpoint jobs a sequential loop pays end to end.
-    * `afterApply(v)` runs right after version v's apply. */
+  /** Replicate versions 1..4 of `src` (the s14 history) into `dst` under
+    * `consumer` through [[Lakehouse.cdfApply]]'s window apply, the one the
+    * relay runs: (0, 2] is the cold catch-up of the two appends, and
+    * (2, 4] nets v3's click delete rewrite and v4's error update backfill
+    * into one pruned copy-on-write rewrite carrying txn markers 3 and 4. */
   private def replicate(spark: SparkSession, src: String, dst: String,
-      consumer: String, afterApply: Int => Unit = _ => ()): Unit = {
-    val pres = TableLog.inParallel((1 to 4).map(v => () =>
-      Lakehouse.prepareDelta(spark, src, v, "event_id")))
-    (1 to 4).foreach { v =>
-      Lakehouse.cdfApply(spark, src, dst, v, "event_id", consumer, files = 4,
-        prepared = Some(pres(v - 1)))
-      afterApply(v)
+      consumer: String): Unit =
+    Seq(0 -> 2, 2 -> 4).foreach { case (from, to) =>
+      Lakehouse.cdfApply(spark, src, dst, from, to, "event_id", consumer, files = 4,
+        evolveSchema = false)
     }
-  }
 
   /** The replica's head snapshot per type: (n_rows, id_sum, min_value). */
   private def replicaRollup(spark: SparkSession, dst: String): DataFrame = {
@@ -597,9 +591,10 @@ object LakeQueries {
   }
 
   /** S17 [EXT]: declared query — replicate the s14 source history into a
-    * key-clustered downstream table by per-version [[Lakehouse.cdfApply]]
-    * (with a worst-case RE-DELIVERY of version 3, which must no-op at the
-    * txn gate), then audit the destination's final snapshot per type. The
+    * key-clustered downstream table as a cold window plus one netted
+    * rewrite window ([[replicate]]), re-deliver version 3 (the worst
+    * case: it sits inside the netted window, so it must no-op at the txn
+    * gate), then audit the destination's final snapshot per type. The
     * oracle recomputes the v4 commit rules directly — a replication that
     * dropped a delete, double-applied the re-delivery, or lost an
     * untouched file diverges on rows or hash; LakehouseSpec pins the
@@ -610,10 +605,9 @@ object LakeQueries {
     val dst = s"${Etl.scratch(spark)}/s17_dst_table"
     s14Fixture(spark, sfDir, src)
     wipe(spark, dst)
-    replicate(spark, src, dst, "s17", v =>
-      if (v == 3)
-        require(Lakehouse.cdfApply(spark, src, dst, 3, "event_id", "s17", 4) == -1,
-          "re-delivered version must no-op at the txn gate"))
+    replicate(spark, src, dst, "s17")
+    require(Lakehouse.cdfApply(spark, src, dst, 3, "event_id", "s17", 4) == -1,
+      "re-delivered version must no-op at the txn gate")
     replicaRollup(spark, dst)
   }
 
@@ -919,9 +913,9 @@ object LakeQueries {
     typeRollup(TableLog.readAsOfRange(spark, s"${ensureLakeFixture(spark, sfDir)}/s16t",
       1, "user_id", S16_LO, S16_HI))
 
-  /** S17 warm path [EXT]: the four-version CDF apply loop against the
+  /** S17 warm path [EXT]: the two-window CDF apply ([[replicate]]) of the
     * PREBUILT source history — the replication work itself (feed join,
-    * file pruning, survivor anti-join, clustered re-stage ×4) into a
+    * file pruning, survivor anti-join, clustered re-stage per window) into a
     * fresh per-run destination; the source's fixture build is amortized
     * away. The destination writes are the operator, not fixture tax. */
   def s17WarmApply(spark: SparkSession, sfDir: String): DataFrame = {

@@ -38,8 +38,9 @@ object Lakehouse {
     * `remove(all inputs) + add(packed outputs)` as ONE commit.
     *
     * Concurrency is optimistic via the version CAS ([[TableLog.publish]]'s
-    * one-winner contract) with compaction's read-modify-write conflict
-    * rule layered on top:
+    * one-winner contract, retried by [[TableLog.publishWithRetry]]) with
+    * compaction's read-modify-write conflict rule checked at each
+    * attempt's head:
     *  - whenever the head moved past the snapshot version (a lost publish
     *    race, or a commit that landed between snapshot and first publish),
     *    the input set is revalidated against the new head's live set;
@@ -85,9 +86,7 @@ object Lakehouse {
         TableLog.stageWithStats(spark, table, snapshot, rel, statsCols, targetFiles)
       else TableLog.stage(spark, table, snapshot.repartition(targetFiles), rel)
     val actions = (inputs ++ dvInputs).map(Action("remove", _)) ++ adds
-    var attempt = 1
-    while (true) {
-      val head = TableLog.currentVersion(spark, table)
+    TableLog.publishWithRetry(spark, table, "compaction", maxAttempts, beforePublish) { head =>
       if (head != v0) {
         val now = TableLog.liveState(spark, table, head)
         val nowLive = now.files.map(_.path).toSet ++ now.dvs.map(_._1).toSet
@@ -108,17 +107,8 @@ object Lakehouse {
               s"committed since v$v0 (e.g. ${newDvs.head}) would not apply " +
               "to the packed rewrite; staged rewrite abandoned for vacuum")
       }
-      beforePublish(head + 1)
-      try return TableLog.publish(spark, table, head + 1, actions)
-      catch {
-        case e: TableLog.CommitConflict =>
-          if (attempt >= maxAttempts)
-            throw new IllegalStateException(
-              s"compaction still losing the publish race after $maxAttempts attempts", e)
-          attempt += 1
-      }
+      Some(actions)
     }
-    -1 // unreachable
   }
 
   /** Auto-maintenance policy (S13 as a POLICY, conf-gated): OPTIMIZE
@@ -396,32 +386,6 @@ object Lakehouse {
 
   // ------------------------------- S17: pruned copy-on-write MERGE (CDF sync)
 
-  /** One version's delta materialized AHEAD of its apply: the
-    * checkpointed slice (v-1, v] plus the two source-side probe answers.
-    * A slice reads only the SOURCE, so the declared s17 rows, which apply
-    * a fully built source version by version, prepare every version's
-    * delta in one concurrent round ([[prepareDelta]] on
-    * [[TableLog.inParallel]]) and overlap those materialization jobs
-    * with the applies. */
-  private[graft] final case class PreparedDelta(delta: DataFrame, n: Long, ng: Long)
-
-  /** Materialize version `v`'s delta with the source-side probe metrics
-    * riding its checkpoint job (the cdfApply fold, minus the per-file
-    * hits — those depend on DESTINATION state at apply time, so a
-    * prepared apply answers the hit set with the fallback broadcast
-    * probe when delete/update keys exist). */
-  private[graft] def prepareDelta(spark: SparkSession, src: String, v: Int,
-      keyCol: String): PreparedDelta = {
-    import org.apache.spark.sql.functions.{col => c}
-    val isGone = c("_change_type").isin("delete", "update")
-    val observed = cdfSlice(spark, src, v - 1, v, keyCol)
-      .observe("__cdf_pre", count(lit(1)).as("__n"),
-        count(when(isGone, 1)).as("__ng"))
-    val delta = observed.localCheckpoint()
-    val row = observed.queryExecution.observedMetrics("__cdf_pre")
-    PreparedDelta(delta, row.getAs[Long]("__n"), row.getAs[Long]("__ng"))
-  }
-
   /** The most ranged destination files [[cdfApply]] probes inline, one
     * observed aggregate per file riding the delta's checkpoint job; a
     * wider destination takes the one-job broadcast-join probe. */
@@ -430,10 +394,8 @@ object Lakehouse {
   /** Apply ONE source version `v`: the window (v-1, v]. */
   private[graft] def cdfApply(spark: SparkSession, src: String, dst: String,
       v: Int, keyCol: String, consumer: String, files: Int,
-      evolveSchema: Boolean = false,
-      prepared: Option[PreparedDelta] = None): Int =
-    cdfApply(spark, src, dst, v - 1, v, keyCol, consumer, files, evolveSchema,
-      prepared)
+      evolveSchema: Boolean = false): Int =
+    cdfApply(spark, src, dst, v - 1, v, keyCol, consumer, files, evolveSchema)
 
   /** Apply the source window (from, to]'s NET change feed to a downstream
     * log table as ONE pruned copy-on-write MERGE — the composition the
@@ -461,22 +423,27 @@ object Lakehouse {
     * table — a commit touching one key range rewrites the files covering
     * that range (the copy-on-write MERGE every production format runs for
     * its UPDATE/DELETE/MERGE), and the key-clustered layout is what keeps
-    * that bound tight. `prepared` is a delta [[prepareDelta]] already
-    * materialized for this window. Returns the dst version committed (-1
-    * = replayed no-op). */
+    * that bound tight. This is the one apply path: the relay runs it per
+    * catch-up window, and the declared s17 rows replicate the s14 history
+    * as a cold window (0, 2] plus one netted rewrite window (2, 4]. Each
+    * window replays the source once. Returns the dst version committed
+    * (-1 = replayed no-op). */
   private[graft] def cdfApply(spark: SparkSession, src: String, dst: String,
       from: Int, to: Int, keyCol: String, consumer: String, files: Int,
-      evolveSchema: Boolean, prepared: Option[PreparedDelta]): Int =
+      evolveSchema: Boolean): Int =
     applyWindow(spark, src, dst, from, to, keyCol, consumer, files, evolveSchema,
-      prepared, windowStates(spark, src, from, to))
+      windowStates(spark, src, from, to))
 
-  /** [[cdfApply]] with the source states as of `from` and `to` supplied
-    * by the caller — the relay hands over the ones its window split
-    * already walked. `srcStates` is evaluated only past the txn gate, so
-    * a re-delivered window replays nothing of the source. */
+  /** [[cdfApply]]'s body, with the source states as of `from` and `to`
+    * supplied by the caller — the relay hands over the ones its window
+    * split already walked, `cdfApply` replays them itself. `srcStates` is
+    * evaluated only past the txn gate, so a re-delivered window replays
+    * nothing of the source. One job materializes the window's delta and
+    * answers the probe (emptiness, gone keys, per-file hits) as observed
+    * metrics on it. */
   private def applyWindow(spark: SparkSession, src: String, dst: String,
       from: Int, to: Int, keyCol: String, consumer: String, files: Int,
-      evolveSchema: Boolean, prepared: Option[PreparedDelta],
+      evolveSchema: Boolean,
       srcStates: => (TableLog.LogState, TableLog.LogState)): Int = {
     import org.apache.spark.sql.functions.{col => c}
     require(from < to, s"cdfApply window is empty: ($from, $to]")
@@ -549,46 +516,34 @@ object Lakehouse {
     // thousands of aggregates, so the hit set falls back to the r17
     // broadcast-join probe — one job, still bounded by |dst files|,
     // still no gone KEY ever on the driver or in a plan literal.
-    val inlineProbe = prepared.isEmpty && dstV > 0 && ranged.nonEmpty &&
+    val inlineProbe = dstV > 0 && ranged.nonEmpty &&
       dstSchema.exists(s => s.fieldNames.contains(keyCol) &&
         TableLog.isIntegral(s(keyCol).dataType)) &&
       ranged.size <= INLINE_PROBE_MAX_FILES
-    // checkpoint the window delta (a PREPARED one arrives already
-    // checkpointed with its source-side metrics):
-    // the range agg, the anti-join side, and the staged write would
-    // otherwise each re-run cdfSlice's full-outer join over the window's
-    // files. The observe node rides this one job and is truncated away
-    // with the rest of the lineage — downstream consumers scan the
-    // checkpointed rows, so no metric fires twice.
-    val (delta, metric): (DataFrame, String => Long) = prepared match {
-      case Some(p) =>
-        (p.delta, { name: String =>
-          if (name == "__n") p.n else if (name == "__ng") p.ng
-          else throw new IllegalStateException(s"no prepared metric $name")
-        })
-      case None =>
-        val metricCols =
-          Seq(count(lit(1)).as("__n"), count(when(isGone, 1)).as("__ng")) ++
-            (if (!inlineProbe) Nil
-             else ranged.zipWithIndex.map { case (f, i) =>
-               val s = f.stats.find(_.col == keyCol).get
-               max(when(isGone && c(keyCol).cast("long") >= s.min &&
-                 c(keyCol).cast("long") <= s.max, 1L).otherwise(0L)).as(s"__h$i")
-             })
-        val observed = cdfSliceFrom(spark, src, from, to, keyCol, srcPre, srcPost)
-          .observe("__cdf_probe", metricCols.head, metricCols.tail: _*)
-        val ck = observed.localCheckpoint()
-        // metrics read synchronously off the EXECUTED plan's accumulators
-        // — not via Observation.get, whose latch waits on the async
-        // listener bus (measured 30-150 ms of pure lag per version)
-        val probe: org.apache.spark.sql.Row =
-          observed.queryExecution.observedMetrics("__cdf_probe")
-        (ck, { name: String =>
-          probe.getAs[Any](name) match {
-            case x: Number => x.longValue()
-            case _ => 0L // max over zero rows observes null; only empty
-          }
-        })
+    // checkpoint the window delta: the range agg, the anti-join side,
+    // and the staged write would otherwise each re-run cdfSlice's
+    // full-outer join over the window's files. The observe node rides
+    // this one job and is truncated away with the rest of the lineage —
+    // downstream consumers scan the checkpointed rows, so no metric fires
+    // twice.
+    val metricCols =
+      Seq(count(lit(1)).as("__n"), count(when(isGone, 1)).as("__ng")) ++
+        (if (!inlineProbe) Nil
+         else ranged.zipWithIndex.map { case (f, i) =>
+           val s = f.stats.find(_.col == keyCol).get
+           max(when(isGone && c(keyCol).cast("long") >= s.min &&
+             c(keyCol).cast("long") <= s.max, 1L).otherwise(0L)).as(s"__h$i")
+         })
+    val observed = cdfSliceFrom(spark, src, from, to, keyCol, srcPre, srcPost)
+      .observe("__cdf_probe", metricCols.head, metricCols.tail: _*)
+    val delta = observed.localCheckpoint()
+    // metrics read synchronously off the EXECUTED plan's accumulators —
+    // not via Observation.get, whose latch waits on the async listener bus
+    // (measured 30-150 ms of pure lag per version)
+    val probe = observed.queryExecution.observedMetrics("__cdf_probe")
+    def metric(name: String): Long = probe.getAs[Any](name) match {
+      case x: Number => x.longValue()
+      case _ => 0L // max over zero rows observes null; only empty
     }
     val deltaEmpty = metric("__n") == 0L
     // an EMPTY feed (a source compaction / identical rewrite, or a bare
@@ -874,10 +829,11 @@ object Lakehouse {
     * ONE netted rewrite per window — one slice over (from, to], one
     * destination commit carrying a txn marker for EVERY source version
     * in the window, so exactly-once still holds per version while the
-    * per-version prepare/probe/stage/commit chain is paid once. A source
+    * per-version slice/probe/stage/commit chain is paid once. A source
     * commit carrying a `schema` action starts a new window, so the
     * evolution refusal and adoption below see each schema change at its
-    * own version. Contract: the destination gets one commit per window,
+    * own version. The declared s17 rows run the same window apply
+    * ([[cdfApply]]). Contract: the destination gets one commit per window,
     * not one per source version; the returned source versions and the
     * destination snapshot at each window's end are what per-version
     * applies would have produced.
@@ -912,8 +868,7 @@ object Lakehouse {
     }
     starts.zip(starts.drop(1).map(_ - 1) :+ to).foreach { case (first, last) =>
       val dstV = applyWindow(spark, src, dst, first - 1, last, keyCol, consumer,
-        files, evolveSchema, prepared = None,
-        (states(first - 1 - from), states(last - from)))
+        files, evolveSchema, (states(first - 1 - from), states(last - from)))
       if (every > 0 && dstV > 0 && dstV % every == 0)
         TableLog.checkpointLog(spark, dst)
     }

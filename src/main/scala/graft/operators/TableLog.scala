@@ -66,6 +66,14 @@ object TableLog {
       s"$key must be an integer, got '$v'"))
   }
 
+  /** [[confLong]] for fractional knobs (rates, fractions). */
+  private[graft] def confDouble(spark: SparkSession, key: String,
+      default: String): Double = {
+    val v = spark.conf.get(key, default)
+    v.toDoubleOption.getOrElse(throw new IllegalArgumentException(
+      s"$key must be a number, got '$v'"))
+  }
+
   /** The manifest-stats / DV-pruning integral-key contract in one place:
     * long wire bounds are exact for these types and truncate for
     * everything else. */
@@ -97,8 +105,7 @@ object TableLog {
     publish(spark, table, currentVersion(spark, table) + 1, actions)
 
   /** A lost publish race: another writer already owns manifest `v$next`.
-    * The optimistic-retry loops ([[commitWithRetry]], [[commitIfAbsent]],
-    * [[Lakehouse.compactCommit]]) catch this type; every other
+    * [[publishWithRetry]] catches this type; every other
     * IllegalStateException stays a real failure. */
   private[graft] final class CommitConflict(next: Int, cause: Throwable)
       extends IllegalStateException(s"commit v$next lost the publish race", cause)
@@ -110,67 +117,90 @@ object TableLog {
     * throws [[CommitConflict]]. */
   private[graft] def publish(spark: SparkSession, table: String,
       next: Int, actions: Seq[Action]): Int = {
-    val f = fsOf(spark, table)
-    // attempt-unique staging name: two writers racing to the same version
-    // must never stomp each other's tmp (dot-prefix keeps it invisible to
-    // currentVersion; a crashed attempt leaves only an ignorable tmp)
-    val tmp = f.makeQualified(new Path(table,
-      s"_log/.v$next.${java.util.UUID.randomUUID}.tmp"))
-    val out = f.create(tmp, true)
-    try {
-      actions.foreach(a =>
-        out.write((LogProtocol.actionLine(a) + "\n").getBytes("UTF-8")))
-      out.hflush()
-    } finally out.close()
-    // one-winner publish through the LogStore seam — the storage-specific
-    // atomic-exclusive primitive (HDFS no-clobber rename, POSIX link(2),
-    // an object store's conditional PUT); see [[LogStore]] for the
-    // contract and per-storage windows. A lost race surfaces as
-    // FileAlreadyExistsException, never as a silently overwritten
-    // manifest.
-    val dst = f.makeQualified(new Path(table, s"_log/v$next.log"))
-    try LogStore.forTable(spark, dst)
-      .publishExclusive(spark.sparkContext.hadoopConfiguration, tmp, dst)
-    catch {
-      case e: org.apache.hadoop.fs.FileAlreadyExistsException =>
-        throw new CommitConflict(next, e)
-    }
+    publishLines(spark, table, s"v$next.log", actions.map(LogProtocol.actionLine))
+      .foreach(e => throw new CommitConflict(next, e))
     next
   }
 
-  /** Optimistic-concurrency commit: [[commit]] retried across lost
-    * publish races — the conflict-resolution loop of the production log
-    * stores. A loser re-reads the log and re-targets the next version;
-    * its ACTIONS need no rebase because they are file-level adds/removes
-    * of files only this writer staged (blind appends commute — the same
-    * argument that makes the MV delta abelian). Writers whose semantics
-    * do NOT commute with a concurrent commit (read-modify-write of the
-    * same files, e.g. two compactions of one partition) must instead
-    * treat the race error as a real conflict — that is why [[commit]]
-    * stays the primitive and the retry is opt-in. Gives up after
-    * `maxAttempts` (a pathological storm should surface, not spin). */
-  private[graft] def commitWithRetry(spark: SparkSession, table: String,
-      actions: Seq[Action], maxAttempts: Int = 5,
-      beforePublish: Int => Unit = _ => ()): Int = {
-    var attempt = 1
+  /** The log's one exclusive write: stage `lines` to an attempt-unique
+    * dot-tmp (two writers racing to the same name never stomp each
+    * other's tmp; the dot keeps it invisible to [[currentVersion]]),
+    * hflush, and publish it as `_log/$name` through the [[LogStore]] seam
+    * — the storage-specific one-winner primitive (HDFS no-clobber rename,
+    * POSIX link(2), an object store's conditional PUT). A lost race
+    * deletes the tmp and returns the loss; the caller decides what it
+    * means. A crash leaves only an ignorable tmp ([[vacuum]] sweeps it). */
+  private def publishLines(spark: SparkSession, table: String, name: String,
+      lines: Seq[String]): Option[org.apache.hadoop.fs.FileAlreadyExistsException] = {
+    val f = fsOf(spark, table)
+    val tmp = f.makeQualified(new Path(table,
+      s"_log/.$name.${java.util.UUID.randomUUID}.tmp"))
+    val out = f.create(tmp, true)
+    try {
+      lines.foreach(l => out.write((l + "\n").getBytes("UTF-8")))
+      out.hflush()
+    } finally out.close()
+    val dst = f.makeQualified(new Path(table, s"_log/$name"))
+    try {
+      LogStore.forTable(spark, dst)
+        .publishExclusive(spark.sparkContext.hadoopConfiguration, tmp, dst)
+      None
+    } catch {
+      case e: org.apache.hadoop.fs.FileAlreadyExistsException =>
+        f.delete(tmp, false)
+        Some(e)
+    }
+  }
+
+  /** The optimistic-commit loop every log writer shares — the
+    * conflict-resolution loop of the production log stores. Each attempt
+    * reads the head, runs the caller's `attempt(head)` — its check at
+    * that head, returning the actions to publish, None for a no-op (-1),
+    * or throwing on a real conflict — then `beforePublish(head + 1)` and
+    * the publish. A lost race ([[CommitConflict]]) re-runs the whole
+    * attempt at the new head, so a check never goes stale across a
+    * retry. `beforePublish` marks the read-to-publish window, the exact
+    * gap a concurrent writer can land in: TimeTravelSpec drives a
+    * competitor through it deterministically; production callers leave
+    * it a no-op. Gives up after `maxAttempts` (a pathological storm
+    * should surface, not spin). */
+  private[graft] def publishWithRetry(spark: SparkSession, table: String,
+      what: String, maxAttempts: Int, beforePublish: Int => Unit)(
+      attempt: Int => Option[Seq[Action]]): Int = {
+    var tries = 1
     while (true) {
-      val next = currentVersion(spark, table) + 1
-      // `beforePublish(next)` marks the read-to-publish window — the
-      // exact gap a concurrent writer can land in. TimeTravelSpec drives
-      // a competitor through it deterministically; production callers
-      // leave it a no-op.
-      beforePublish(next)
-      try return publish(spark, table, next, actions)
+      val head = currentVersion(spark, table)
+      val actions = attempt(head) match {
+        case Some(a) => a
+        case None => return -1
+      }
+      beforePublish(head + 1)
+      try return publish(spark, table, head + 1, actions)
       catch {
         case e: CommitConflict =>
-          if (attempt >= maxAttempts)
+          if (tries >= maxAttempts)
             throw new IllegalStateException(
-              s"commit still losing the publish race after $maxAttempts attempts", e)
-          attempt += 1
+              s"$what still losing the publish race after $maxAttempts attempts", e)
+          tries += 1
       }
     }
     -1 // unreachable
   }
+
+  /** Optimistic-concurrency commit: [[commit]] retried across lost
+    * publish races. A loser re-reads the log and re-targets the next
+    * version; its ACTIONS need no rebase because they are file-level
+    * adds/removes of files only this writer staged (blind appends commute
+    * — the same argument that makes the MV delta abelian). Writers whose
+    * semantics do NOT commute with a concurrent commit (read-modify-write
+    * of the same files, e.g. two compactions of one partition) must
+    * instead check at each attempt's head — [[commitIfAbsent]]'s txn gate,
+    * [[Lakehouse.compactCommit]]'s revalidation — which is why [[commit]]
+    * stays the primitive and the blind retry is opt-in. */
+  private[graft] def commitWithRetry(spark: SparkSession, table: String,
+      actions: Seq[Action], maxAttempts: Int = 5,
+      beforePublish: Int => Unit = _ => ()): Int =
+    publishWithRetry(spark, table, "commit", maxAttempts, beforePublish)(_ => Some(actions))
 
   private def readLogLines(f: FileSystem, path: Path): Seq[String] = {
     val in = f.open(path)
@@ -233,8 +263,8 @@ object TableLog {
     * their ORIGINAL add versions, live DVs, schema, txn markers and reader
     * features — features MUST ride it, because after [[vacuumLog]]
     * retires the declaring manifest the checkpoint is the only place the
-    * requirement survives), staged to a dot-tmp and published with the
-    * same exclusive primitive as a commit. At 100 TB this is what keeps
+    * requirement survives), written by the same exclusive write as a
+    * commit ([[publishLines]]). At 100 TB this is what keeps
     * every read metadata cost O(commits since the last
     * OPTIMIZE-and-checkpoint) instead of O(table lifetime): every replay
     * ([[liveState]]) starts from the newest checkpoint at or below its
@@ -246,25 +276,11 @@ object TableLog {
   def checkpointLog(spark: SparkSession, table: String): Int = {
     val cur = currentVersion(spark, table)
     require(cur >= 1, s"nothing to checkpoint in $table")
-    val lines = LogProtocol.checkpointLines(liveState(spark, table, cur))
-    val f = fsOf(spark, table)
-    val tmp = f.makeQualified(new Path(table,
-      s"_log/.v$cur.ckpt.${java.util.UUID.randomUUID}.tmp"))
-    val out = f.create(tmp, true)
-    try {
-      lines.foreach(l => out.write((l + "\n").getBytes("UTF-8")))
-      out.hflush()
-    } finally out.close()
-    val dst = f.makeQualified(new Path(table, s"_log/v$cur.ckpt"))
-    try LogStore.forTable(spark, dst)
-      .publishExclusive(spark.sparkContext.hadoopConfiguration, tmp, dst)
-    catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException =>
-        // a concurrent checkpointer won with IDENTICAL content (the state
-        // is a pure function of the immutable log prefix) — clean up our
-        // tmp and accept theirs
-        f.delete(tmp, false)
-    }
+    // a lost race means a concurrent checkpointer already published
+    // IDENTICAL content (the state is a pure function of the immutable log
+    // prefix): our tmp is deleted and theirs stands
+    publishLines(spark, table, s"v$cur.ckpt",
+      LogProtocol.checkpointLines(liveState(spark, table, cur)))
     cur
   }
 
@@ -353,21 +369,10 @@ object TableLog {
       maxAttempts: Int, beforePublish: Int => Unit): Int = {
     require(batchIds.nonEmpty, "commitIfAbsent needs at least one batch id")
     val markers = batchIds.map(b => Action("txn", s"$streamId\t$b"))
-    var attempt = 1
-    while (true) {
-      if (alreadyCommitted(spark, table, streamId, batchIds)) return -1
-      val next = currentVersion(spark, table) + 1
-      beforePublish(next)
-      try return publish(spark, table, next, actions ++ markers)
-      catch {
-        case e: CommitConflict =>
-          if (attempt >= maxAttempts)
-            throw new IllegalStateException(
-              s"txn commit still losing the publish race after $maxAttempts attempts", e)
-          attempt += 1
-      }
+    publishWithRetry(spark, table, "txn commit", maxAttempts, beforePublish) { head =>
+      if (liveState(spark, table, head).committed(streamId, batchIds)) None
+      else Some(actions ++ markers)
     }
-    -1 // unreachable
   }
 
   /** Physical GC: delete every file under `data/` that no RETAINED

@@ -179,8 +179,7 @@ object Http {
                    headers: Map[String, String] = Map.empty): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val maxPerSec = spark.conf.get("spark.graft.source.maxRowsPerSecond", "0").toDouble
-    val jitterFrac = spark.conf.get("spark.graft.source.rateJitter", "0.2").toDouble
+    val (maxPerSec, jitterFrac) = Throttle.rate(spark)
     val looked = codes.select($"code".cast("string")).as[String]
       .repartition(spark.sparkContext.defaultParallelism)
       .mapPartitions { it0 =>
@@ -210,12 +209,11 @@ object Http {
                  timeoutMs: Long = 30000L,
                  headers: Map[String, String] = Map.empty): DataFrame = {
     import spark.implicits._
+    val (maxPerSec, jitterFrac) = Throttle.rate(spark)
     // driver probe: ONE request to size the scan (main.rs:119-130)
     val probe = fetchListingPage(new Pool(timeoutMs, headers = headers),
       baseUrl, 0, pageSize, maxAttempts, baseDelayMs)
     val nPages = ((probe.availableCount + pageSize - 1) / pageSize).toInt
-    val maxPerSec = spark.conf.get("spark.graft.source.maxRowsPerSecond", "0").toDouble
-    val jitterFrac = spark.conf.get("spark.graft.source.rateJitter", "0.2").toDouble
     val slots = math.max(1, math.min(nPages, spark.sparkContext.defaultParallelism))
     spark.sparkContext.parallelize(0 until nPages, slots)
       .mapPartitions { pages0 =>

@@ -46,6 +46,11 @@ object Paginated {
     * identical, so the oracle is unaffected. */
   def s4PointLookup(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
+    // politeness throttle (main.rs:139-141 / vendor.rs:44): per-partition
+    // rows/second with keyed jitter, OFF by default (0) so recorded-table
+    // replays run at full speed; a live deployment sets the conf and each
+    // partition's client paces itself (see sources/Throttle.scala)
+    val (maxPerSec, jitterFrac) = Throttle.rate(spark)
     // fan the key column out to every core BEFORE the lookup seam: the
     // scan's partitioning follows file splits (a 150 MB key column = 2
     // splits), but a point-lookup source is throughput-bound on the
@@ -54,12 +59,6 @@ object Paginated {
     val codes = Tables.orders(spark, sfDir).select($"o_orderkey".as("code"))
       .repartition(spark.sparkContext.defaultParallelism)
     val hexDigits = "0123456789abcdef".toCharArray
-    // politeness throttle (main.rs:139-141 / vendor.rs:44): per-partition
-    // rows/second with keyed jitter, OFF by default (0) so recorded-table
-    // replays run at full speed; a live deployment sets the conf and each
-    // partition's client paces itself (see sources/Throttle.scala)
-    val maxPerSec = spark.conf.get("spark.graft.source.maxRowsPerSecond", "0").toDouble
-    val jitterFrac = spark.conf.get("spark.graft.source.rateJitter", "0.2").toDouble
     val looked = codes.as[Long].mapPartitions { it0 =>
       val pid = org.apache.spark.TaskContext.getPartitionId()
       val it = Throttle.paced(it0, maxPerSec, jitterFrac, seed = pid.toLong)

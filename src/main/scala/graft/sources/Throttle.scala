@@ -24,15 +24,30 @@ package graft.sources
   * `maxPerSecond` and tests replay the schedule bit-for-bit. */
 object Throttle {
 
+  /** The `spark.graft.source.maxRowsPerSecond` / `rateJitter` pair
+    * (rows per second per partition, 0 = off; jitter fraction in [0, 1)),
+    * read once on the driver through the refusing parse: a malformed or
+    * out-of-range value fails the query naming its key before any job
+    * runs, not inside an executor task. */
+  private[graft] def rate(spark: org.apache.spark.sql.SparkSession): (Double, Double) = {
+    val maxPerSec = graft.operators.TableLog.confDouble(spark,
+      "spark.graft.source.maxRowsPerSecond", "0")
+    val jitterFrac = graft.operators.TableLog.confDouble(spark,
+      "spark.graft.source.rateJitter", "0.2")
+    require(jitterFrac >= 0 && jitterFrac < 1,
+      s"spark.graft.source.rateJitter must be in [0, 1), got $jitterFrac")
+    (maxPerSec, jitterFrac)
+  }
+
   /** Wrap a partition iterator so elements release no faster than
-    * `maxPerSecond` on average. `maxPerSecond <= 0` disables (identity).
+    * `maxPerSecond` on average. `maxPerSecond <= 0` disables (identity);
+    * `jitterFrac` is in [0, 1), checked on the driver by [[rate]].
     * `nanoTime`/`sleep` are injectable so specs assert the schedule
     * without wall-clock sleeping. */
   def paced[T](it: Iterator[T], maxPerSecond: Double, jitterFrac: Double,
       seed: Long, nanoTime: () => Long = System.nanoTime,
       sleep: Long => Unit = sleepNanos): Iterator[T] = {
     if (maxPerSecond <= 0) return it
-    require(jitterFrac >= 0 && jitterFrac < 1, s"jitterFrac out of [0,1): $jitterFrac")
     val baseNanos = (1e9 / maxPerSecond).toLong
     new Iterator[T] {
       private var started = false

@@ -32,7 +32,7 @@ object AnnRecall {
   private val MAX_BANDS = 16
 
   def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/repo/target/bench_heavy/sf5")
+    val dir = args.headOption.getOrElse(MakeHeavy.defaultTier)
     val out = if (args.length > 1) args(1) else "tools/ann_recall.json"
     val spark = graft.GraftSession.local(MakeHeavy.cpus)
     import spark.implicits._

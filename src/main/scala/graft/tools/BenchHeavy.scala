@@ -38,9 +38,14 @@ object MakeHeavy {
   // plan at bucket-count parallelism
   val BUCKETS = 32
 
+  /** The heavy tier's default directory: `target/bench_heavy/sf5` under
+    * the JVM's working directory, so every checkout reads and writes its
+    * own build tree (the [[graft.operators.Etl.defaultScratch]] rule). */
+  val defaultTier: String = new java.io.File("target/bench_heavy/sf5").getAbsolutePath
+
   def main(args: Array[String]): Unit = {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val out = if (args.length > 1) args(1) else "/root/repo/target/bench_heavy/sf5"
+    val out = if (args.length > 1) args(1) else defaultTier
     val copies = if (args.length > 2) args(2).toInt else 50
     // optional trailing args: regenerate only these tables (iteration aid —
     // e.g. adding one table to an existing tier without the docs crossJoin)
@@ -401,7 +406,7 @@ object BenchHeavy {
   val SWEEPS = 3
 
   def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/repo/target/bench_heavy/sf5")
+    val dir = args.headOption.getOrElse(MakeHeavy.defaultTier)
     // optional trailing args: run only these queries (scale-sweep aid);
     // `--sf25` expands to the canonical SF25_QUERIES subset
     val only = args.drop(1).toSet match {

@@ -38,7 +38,7 @@ object PlantedRecall {
   private val BASES_PER_REPLICA = 20
 
   def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/repo/target/bench_heavy/sf5")
+    val dir = args.headOption.getOrElse(MakeHeavy.defaultTier)
     val out = if (args.length > 1) args(1) else "tools/planted_recall.json"
     val spark = graft.GraftSession.local(MakeHeavy.cpus)
     import spark.implicits._

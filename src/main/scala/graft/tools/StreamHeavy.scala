@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
 object StreamHeavy {
 
   def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/repo/target/bench_heavy/sf5")
+    val dir = args.headOption.getOrElse(MakeHeavy.defaultTier)
     val filesPerTrigger = if (args.length > 1) args(1).toInt else 4
     // per-tier artifact (3rd arg): the sf25 run must not clobber the sf5
     // one — BENCHNOTES_HEAVY renders the sf5 file, BENCHNOTES_SF25 the

@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The source layering of the table log: the log library files hold the
   * engine API only — the declared queries and their fixtures live in
-  * LakeQueries — and one module owns the artifact source stamp. Reads the
-  * sources; needs no Spark session. */
+  * LakeQueries — one module owns the artifact source stamp, one write
+  * publishes to the log, and no default path points into one checkout.
+  * Reads the sources; needs no Spark session. */
 class LayeringSpec extends AnyFunSuite {
   private val main = Paths.get("src/main/scala")
   private def read(p: Path): String = new String(Files.readAllBytes(p), UTF_8)
@@ -23,13 +24,30 @@ class LayeringSpec extends AnyFunSuite {
     }
   }
 
-  test("_GRAFT_SOURCE appears in exactly one main source file") {
+  /** Every main source file, relative path and text. */
+  private lazy val sources: Seq[(String, String)] = {
     val walk = Files.walk(main)
-    val hits =
-      try walk.iterator.asScala.toSeq
-        .filter(p => p.toString.endsWith(".scala") && read(p).contains("_GRAFT_SOURCE"))
-        .map(main.relativize(_).toString)
-      finally walk.close()
-    assert(hits === Seq("graft/Stamp.scala"))
+    try walk.iterator.asScala.toSeq.filter(_.toString.endsWith(".scala"))
+      .map(p => main.relativize(p).toString -> read(p)).sortBy(_._1)
+    finally walk.close()
+  }
+
+  test("_GRAFT_SOURCE appears in exactly one main source file") {
+    assert(sources.collect { case (p, src) if src.contains("_GRAFT_SOURCE") => p } ===
+      Seq("graft/Stamp.scala"))
+  }
+
+  test("no main source names an absolute checkout path: defaults resolve under the working directory") {
+    val hits = sources.collect { case (p, src) if src.contains("/root/repo") => p }
+    assert(hits.isEmpty, s"absolute checkout path in ${hits.mkString(", ")}")
+  }
+
+  test("the table log has one exclusive write: publishExclusive( is called from one place outside LogStore") {
+    val calls = sources.filterNot(_._1 == "graft/operators/LogStore.scala").flatMap {
+      case (p, src) => src.linesIterator.zipWithIndex.collect {
+        case (line, i) if line.contains("publishExclusive(") => s"$p:${i + 1}"
+      }
+    }
+    assert(calls.size === 1, s"publishExclusive( called from ${calls.mkString(", ")}")
   }
 }

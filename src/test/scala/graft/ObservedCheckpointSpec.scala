@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** The apply-loop probes (`Lakehouse.prepareDelta`, cdfApply's key-range
-  * probe, morMerge's empty-source test, `Dedup`'s connected-components
+/** The apply-loop probes (cdfApply's emptiness and key-range probe,
+  * morMerge's empty-source test, `Dedup`'s connected-components
   * convergence count) ride a `localCheckpoint()` as observed metrics and
   * read them SYNCHRONOUSLY off the executed plan,
   * `queryExecution.observedMetrics`, not through the listener-bus

@@ -142,7 +142,7 @@ class RelayModelSpec extends SparkSpecBase {
       // re-delivering the window just applied no-ops at the gate
       val dstHead = TableLog.currentVersion(spark, dst)
       assert(Lakehouse.cdfApply(spark, src, dst, from, to, "k", "model", 2,
-        evolveSchema = false, prepared = None) === -1, s"$ctx: re-delivery applied")
+        evolveSchema = false) === -1, s"$ctx: re-delivery applied")
       assert(TableLog.currentVersion(spark, dst) === dstHead, ctx)
       val got = rowsOf(TableLog.readAsOf(spark, dst, dstHead), s"$ctx dst")
       assert(got === rowsOf(TableLog.readAsOf(spark, src, to), s"$ctx src"),

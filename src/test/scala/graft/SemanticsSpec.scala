@@ -192,6 +192,29 @@ class SemanticsSpec extends SparkSpecBase {
     }
   }
 
+  test("an unknown dimBroadcast mode is refused, naming the key, before any job") {
+    val (region, nation, customer) = (Tables.region(spark, sfDir),
+      Tables.nation(spark, sfDir), Tables.customer(spark, sfDir))
+    val (orders, lineitem) = (Tables.orders(spark, sfDir), Tables.lineitem(spark, sfDir))
+    val group = s"dim-broadcast-conf-${System.nanoTime}"
+    spark.sparkContext.setJobGroup(group, "dimBroadcast conf refusal")
+    spark.conf.set("spark.graft.star.dimBroadcast", "sometimes")
+    try {
+      val refused = Seq(
+        intercept[IllegalArgumentException](
+          Analytics.q2PlainFrom(spark, customer, orders, lineitem)),
+        intercept[IllegalArgumentException](
+          Analytics.q3PlainFrom(spark, region, nation, customer, orders, lineitem)))
+      refused.foreach(e =>
+        assert(e.getMessage.contains("spark.graft.star.dimBroadcast"), e.getMessage))
+      assert(spark.sparkContext.statusTracker.getJobIdsForGroup(group).isEmpty,
+        "a gate count ran under the unknown mode")
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.conf.unset("spark.graft.star.dimBroadcast")
+    }
+  }
+
   test("a9: the GK band holds at the guarantee") {
     // the DECLARED row: every group's rank bands true (the in-row verdict
     // the oracle grades as plain TRUE literals — a sketch drift flips it)

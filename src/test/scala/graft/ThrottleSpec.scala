@@ -65,6 +65,27 @@ class ThrottleSpec extends SparkSpecBase {
     assert(Throttle.paced(src, 0.0, 0.2, 1L) eq src)
   }
 
+  test("a malformed or out-of-range rateJitter is refused on the driver, naming the key, before any job") {
+    val group = s"throttle-conf-${System.nanoTime}"
+    spark.sparkContext.setJobGroup(group, "throttle conf refusal")
+    spark.conf.set("spark.graft.source.maxRowsPerSecond", "100000")
+    try {
+      for (bad <- Seq("abc", "1.5")) {
+        spark.conf.set("spark.graft.source.rateJitter", bad)
+        val e = intercept[IllegalArgumentException] {
+          graft.sources.Paginated.s4PointLookup(spark, sfDir)
+        }
+        assert(e.getMessage.contains("spark.graft.source.rateJitter"), e.getMessage)
+      }
+      assert(spark.sparkContext.statusTracker.getJobIdsForGroup(group).isEmpty,
+        "a job ran before the conf was refused")
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.conf.set("spark.graft.source.maxRowsPerSecond", "0")
+      spark.conf.set("spark.graft.source.rateJitter", "0.2")
+    }
+  }
+
   test("S4 results are identical with the throttle enabled") {
     // high rate so the integration run costs ~50ms of real sleeping
     val base = graft.sources.Paginated.s4PointLookup(spark, sfDir).collect()

@@ -364,6 +364,22 @@ class TimeTravelSpec extends SparkSpecBase {
     assert(TableLog.currentVersion(spark, table) === 4)
   }
 
+  test("publish: a loser that lost the race leaves no dot-tmp in _log") {
+    // the exclusive write stages to an attempt-unique dot-tmp; a lost
+    // race deletes it, so a contended log does not collect one stray tmp
+    // per lost attempt until the next vacuum
+    LakeQueries.buildFixture(spark, sfDir, table)
+    TableLog.publish(spark, table, 4,
+      Seq(TableLog.Action("add", "data/winner/file.parquet")))
+    intercept[TableLog.CommitConflict] {
+      TableLog.publish(spark, table, 4,
+        Seq(TableLog.Action("add", "data/loser/file.parquet")))
+    }
+    val tmps = fs.listStatus(new Path(table, "_log")).map(_.getPath.getName)
+      .filter(n => n.startsWith(".") && n.contains(".tmp"))
+    assert(tmps.isEmpty, s"publish left staging files: ${tmps.mkString(", ")}")
+  }
+
   test("commitWithRetry: a loser re-reads and lands after the winner, never over it") {
     // the optimistic-concurrency loop driven deterministically: a
     // competitor publishes INSIDE the read-to-publish window for the
