@@ -38,7 +38,8 @@ class LayeringSpec extends AnyFunSuite {
   }
 
   test("no main source names an absolute checkout path: defaults resolve under the working directory") {
-    val hits = sources.collect { case (p, src) if src.contains("/root/repo") => p }
+    val checkout = Paths.get("").toAbsolutePath.normalize.toString
+    val hits = sources.collect { case (p, src) if src.contains(checkout) => p }
     assert(hits.isEmpty, s"absolute checkout path in ${hits.mkString(", ")}")
   }
 
