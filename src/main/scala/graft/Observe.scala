@@ -105,7 +105,12 @@ object Observe {
   }
 
   /** Best-effort plan metrics: (rows out, exchange data bytes, spill
-    * bytes, parquet scans). Walks the FINAL adaptive plan when AQE ran —
+    * bytes, parquet scans). `rows_out` is the `numOutputRows` of the first
+    * node down from the root that exposes it, passing only nodes that keep
+    * the row count (codegen, input and columnar adapters, AQE stages and
+    * shuffle reads, project, sort, shuffle exchange): under the `toRdd`
+    * drain the root is such a wrapper, and a row-changing node without
+    * the metric leaves -1. Walks the FINAL adaptive plan when AQE ran —
     * the pre-execution plan's metrics are zeros — and descends into
     * query-stage wrappers (AQE's materialized stages are leaf wrappers;
     * a plain `collect` never sees inside them). `exchange_bytes` sums
@@ -117,16 +122,26 @@ object Observe {
     * exchanges and scans are not in these sums. */
   private[graft] def planMetrics(qe: QueryExecution): (Long, Long, Long, Long) =
     try {
-      import org.apache.spark.sql.execution.adaptive.QueryStageExec
-      import org.apache.spark.sql.execution.exchange.Exchange
+      import org.apache.spark.sql.execution.{ColumnarToRowExec, InputAdapter, ProjectExec,
+        SortExec, WholeStageCodegenExec}
+      import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, QueryStageExec}
+      import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
       def expand(p: SparkPlan): Seq[SparkPlan] = p match {
         case a: AdaptiveSparkPlanExec => expand(a.executedPlan)
         case q: QueryStageExec => q +: expand(q.plan)
         case other => other +: other.children.flatMap(expand)
       }
+      def keepsRows(p: SparkPlan): Boolean = p match {
+        case _: WholeStageCodegenExec | _: InputAdapter | _: ColumnarToRowExec |
+            _: QueryStageExec | _: AQEShuffleReadExec | _: ProjectExec | _: SortExec |
+            _: ShuffleExchangeExec => true
+        case _ => false
+      }
       val nodes = expand(qe.executedPlan)
-      val rows = nodes.headOption
-        .flatMap(_.metrics.get("numOutputRows").map(_.value)).getOrElse(-1L)
+      // every row-keeping node is unary, so the pre-order prefix up to the
+      // first other node is the root's chain
+      val rows = nodes.find(n => n.metrics.contains("numOutputRows") || !keepsRows(n))
+        .flatMap(_.metrics.get("numOutputRows")).map(_.value).getOrElse(-1L)
       val exchange = nodes.collect { case e: Exchange => e }
         .flatMap(_.metrics.get("dataSize")).map(_.value).sum
       val spill = nodes.flatMap(_.metrics.get("spillSize")).map(_.value).sum

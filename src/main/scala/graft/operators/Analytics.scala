@@ -56,10 +56,9 @@ object Analytics {
     * measured bracket; both plans are in CROSSOVER.md. Deployments with
     * more executor cores per driver raise it. At 100 TB the count says
     * billions → the gate falls back to the shuffle join, which is
-    * exactly the plan a 1000-executor network spreads. Conf
-    * `spark.graft.star.dimBroadcast`: `auto` (gate, default) | `force`
-    * (always hint — single-box / known-small deployments) | `off`
-    * (never — pure shuffle plan).
+    * exactly the plan a 1000-executor network spreads. A budget of 0
+    * keeps the pure shuffle plan; `Long.MaxValue` always broadcasts
+    * (single-box / known-small deployments).
     *
     * `gates` are COUNT thunks, cheapest first, each an UPPER BOUND on
     * (or exactly) the dim's rows; the first one inside the budget
@@ -68,24 +67,10 @@ object Analytics {
     * ambiguous middle pays the precise join-side count. */
   private def gatedBroadcast(spark: SparkSession, dim: DataFrame,
       gates: Seq[() => Long]): DataFrame =
-    dimBroadcast(spark) match {
-      case "force" => broadcast(dim)
-      case "off" => dim
-      case _ =>
-        if (gates.exists(_() <= broadcastBudget(spark))) broadcast(dim) else dim
-    }
+    if (gates.exists(_() <= broadcastBudget(spark))) broadcast(dim) else dim
 
   private def broadcastBudget(spark: SparkSession): Long =
     TableLog.confLong(spark, "spark.graft.star.broadcastMaxDimRows", "3500000")
-
-  /** `spark.graft.star.dimBroadcast`, refused unless `auto`, `force` or
-    * `off`: a typo must not silently act as `auto`. */
-  private def dimBroadcast(spark: SparkSession): String =
-    spark.conf.get("spark.graft.star.dimBroadcast", "auto") match {
-      case m @ ("auto" | "force" | "off") => m
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.star.dimBroadcast: unknown mode '$other' (auto|force|off)")
-    }
 
   /** Q2 plain form at scale [r13 verdict item 5]: the gate picks among
     * THREE plan shapes from measured survivor counts, because q2's
@@ -110,14 +95,14 @@ object Analytics {
     *     where the aggregate reuses the join's partitioning (+ the
     *     session's AQE hash-join conversion, which removed its sort
     *     spill) — the 100 TB fallback a cluster spreads.
-    * Each gate is one pushed-down narrow count; `force` takes shape 2
-    * (the robust broadcast — the dim is bounded by orders, not items). */
+    * Each gate is one pushed-down narrow count; an unbounded budget takes
+    * shape 2 (the robust broadcast — the dim is bounded by orders, not
+    * items). */
   def q2PlainFrom(spark: SparkSession, customer: DataFrame, ordersT: DataFrame,
       lineitem: DataFrame): DataFrame = {
     import spark.implicits._
     val cut = lit("1998-07-01").cast("timestamp")
     val maxRows = broadcastBudget(spark)
-    val mode = dimBroadcast(spark)
     val cust = customer
       .filter($"c_mktsegment" === "BUILDING").select($"c_custkey")
     val dim = ordersT
@@ -134,27 +119,23 @@ object Analytics {
     // tiny-items corner (its pre-aggregate pays an items exchange AND a
     // per-order-width broadcast: measured 2.8x worse than shape 2 at the
     // 30M-row tier when items ran near the budget).
-    val shape: Int = mode match {
-      case "force" => 2
-      case "off" => 3
-      case _ =>
-        if (dim.count() <= maxRows) 2
-        else {
-          // arm-1 gate is a LIMIT-probe, not a count: when the filtered
-          // item set is huge (every case where arm 1 loses), LocalLimit
-          // aborts each task at the cap and the probe costs ~a task wave
-          // instead of a full 300M-row column scan; when it is small the
-          // probe degenerates to the count it replaces
-          val cap = math.min(maxRows, Int.MaxValue - 2L).toInt
-          val probed = lineitem.filter($"l_shipdate" > cut)
-            .limit(cap + 1).count()
-          // compare against CAP, not maxRows: when a deployment sets the
-          // budget above ~2.1B the LIMIT saturates at cap < maxRows and
-          // `probed <= maxRows` would be vacuously true — a saturated
-          // probe is over-budget evidence, so fall back to the shuffle
-          if (probed <= cap) 1 else 3
-        }
-    }
+    val shape: Int =
+      if (dim.count() <= maxRows) 2
+      else {
+        // arm-1 gate is a LIMIT-probe, not a count: when the filtered
+        // item set is huge (every case where arm 1 loses), LocalLimit
+        // aborts each task at the cap and the probe costs ~a task wave
+        // instead of a full 300M-row column scan; when it is small the
+        // probe degenerates to the count it replaces
+        val cap = math.min(maxRows, Int.MaxValue - 2L).toInt
+        val probed = lineitem.filter($"l_shipdate" > cut)
+          .limit(cap + 1).count()
+        // compare against CAP, not maxRows: when a deployment sets the
+        // budget above ~2.1B the LIMIT saturates at cap < maxRows and
+        // `probed <= maxRows` would be vacuously true — a saturated
+        // probe is over-budget evidence, so fall back to the shuffle
+        if (probed <= cap) 1 else 3
+      }
     shape match {
       case 1 =>
         val items = lineitem

@@ -197,18 +197,6 @@ object Lakehouse {
     val retired = pre.files.filterNot(f => postPaths(f.path))
     val kept = pre.files.filter(f => postPaths(f.path))
     val dvPaths = post.dvs.collect { case (p, v) if v > from => p }
-    // the empty arm is a LocalRelation (createDataFrame over an empty
-    // LIST), not an empty RDD: a LogicalRDD has no stats, so the
-    // optimizer cannot prove it empty and its union branch survives into
-    // the physical plan as a real scan node — PropagateEmptyRelation
-    // erases the LocalRelation form, keeping the no-DV/no-remove slices'
-    // plans identical to the pre-S20 shape (the r17 bench drift gate
-    // caught exactly this: s14's scan count grew 6 -> 8)
-    def scan(files: Seq[TableLog.LiveFile], dvs: Seq[(String, Int)],
-        schema: StructType): DataFrame =
-      if (files.isEmpty)
-        spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-      else TableLog.scanState(spark, table, files, dvs, Some(schema))
     val valCols = postSchema.fieldNames.toSeq
       .intersect(preSchema.fieldNames.toSeq).filterNot(_ == keyCol)
     require(valCols.nonEmpty,
@@ -217,7 +205,7 @@ object Lakehouse {
     // the deletion vectors live at `from` applied (S18). A raw read would
     // feed a DV-absorbing compaction's physical purge as a SECOND delete
     // of rows every consumer already saw deleted.
-    val preFromRetired = scan(retired, pre.dvs, preSchema)
+    val preFromRetired = TableLog.scanState(spark, table, retired, pre.dvs, Some(preSchema))
     // S18/S20: a deletion-vector action hides rows without touching a
     // data file, so its pre-images are invisible to the retired-file scan
     // above — derive them by filtering the kept pre files (earlier DVs
@@ -234,8 +222,9 @@ object Lakehouse {
     // already feed through the retired-file side, and feeding them twice
     // would duplicate keys into the full-outer join.
     val preFromDvs =
-      if (dvPaths.isEmpty || kept.isEmpty) scan(Nil, Nil, preSchema)
-      else scan(kept, pre.dvs, preSchema)
+      if (dvPaths.isEmpty || kept.isEmpty)
+        TableLog.scanState(spark, table, Nil, Nil, Some(preSchema))
+      else TableLog.scanState(spark, table, kept, pre.dvs, Some(preSchema))
         .filter(TableLog.dvMatch(spark, table, dvPaths))
     // columns only the POST schema has — the evolution commit itself,
     // where the pre schema lacks them so they cannot ride the compare
@@ -252,7 +241,7 @@ object Lakehouse {
       .diff(preSchema.fieldNames.toSeq).filterNot(_ == keyCol)
     val preImgs = preFromRetired.unionByName(preFromDvs)
       .select(col(keyCol).as("__key"), struct(valCols.map(col): _*).as("__pre"))
-    val postImgs = scan(added, post.dvs, postSchema)
+    val postImgs = TableLog.scanState(spark, table, added, post.dvs, Some(postSchema))
       .select(Seq(col(keyCol).as("__key"),
         struct(valCols.map(col): _*).as("__post")) ++
         (if (postOnly.isEmpty) Nil
@@ -614,10 +603,7 @@ object Lakehouse {
     // morDelete already hid into the re-staged files — which land at
     // dstV+1, ESCAPE the old DV's sequence-number scope, and resurrect
     // (the same invariant compactCommit's new-DV conflict guards)
-    val base =
-      if (touched.isEmpty)
-        spark.createDataFrame(java.util.Collections.emptyList[Row](), dstSchema.get)
-      else TableLog.scanState(spark, dst, touched, dstState.dvs, dstSchema)
+    val base = TableLog.scanState(spark, dst, touched, dstState.dvs, dstSchema)
     val survivors = base.join(gone, c(keyCol) === c("__gone"), "left_anti")
     val arrivals = delta.filter(c("_change_type") =!= "delete")
       .drop("_commit_version", "_change_type")

@@ -520,7 +520,13 @@ object TableLog {
     * stage per group at any table size. Group count is bounded by the
     * commit count between compactions (compaction absorbs DVs — the
     * S13×S18 contract). A table with no live DVs takes the exact pre-S18
-    * single-scan plan — zero cost when the feature is unused. */
+    * single-scan plan — zero cost when the feature is unused. No files
+    * read as an empty LocalRelation under the logged schema, not as an
+    * empty scan or RDD: the optimizer cannot prove those empty, so their
+    * union branch would survive into the physical plan as a real scan
+    * node, while PropagateEmptyRelation erases the LocalRelation (the r17
+    * bench drift gate caught exactly this: s14's scan count grew 6 -> 8);
+    * no files and no logged schema is refused, naming the table. */
   private[graft] def scanState(spark: SparkSession, table: String,
       files: Seq[LiveFile], dvs: Seq[(String, Int)],
       schema: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
@@ -531,7 +537,11 @@ object TableLog {
         case None => spark.read.parquet(full: _*)
       }
     }
-    if (dvs.isEmpty || files.isEmpty) rd(files.map(_.path))
+    if (files.isEmpty) {
+      val s = schema.getOrElse(throw new IllegalStateException(
+        s"no live files and no logged schema for $table"))
+      spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), s)
+    } else if (dvs.isEmpty) rd(files.map(_.path))
     else {
       // groups in manifest order of their first file, not hash order: the
       // union order is the scan's partition order, which a range-clustered
@@ -778,12 +788,6 @@ object TableLog {
     val st = liveState(spark, table, version)
     val kept = st.files.filter(_.mayHold(statsCol, lo, hi))
     val pred = col(statsCol) >= lo && col(statsCol) <= hi
-    if (kept.isEmpty) {
-      val s = st.schema.getOrElse(throw new IllegalStateException(
-        s"every file pruned and no logged schema for $table@v$version"))
-      return spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](), s)
-    }
     scanState(spark, table, kept, st.dvs, st.schema).filter(pred)
   }
 

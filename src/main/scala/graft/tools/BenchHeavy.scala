@@ -517,41 +517,11 @@ object BenchHeavy {
         bucketed ++ annSized ++ annBuild)
         .filter { case (n, _) => only.isEmpty || only(n) }
 
-    // track genuine executor stage time per query: deep plans (q2/q3's
-    // broadcast-dim chains) pay a fixed ~2-3s driver/AQE stage-scheduling
-    // floor per run that is invariant to data size; reporting both wall
-    // and stage-compute time keeps the 2x-of-baseline gate honest at any
-    // local scale factor
-    val stageMs = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val st = s.stageInfo
-        for (c <- st.completionTime; b <- st.submissionTime) stageMs.addAndGet(c - b)
-      }
-    })
-    for ((_, fn) <- runnable) // warmup: JIT + codegen + file listing
-      try graft.BenchUtil.force(fn()) catch { case _: Throwable => () }
-
-    // pass-major interleaving, same rationale as graft.Bench: a sustained
-    // host contention window corrupts one temporally-separated sample per
-    // query, which the median rejects
-    val samples = scala.collection.mutable.Map(
-      runnable.map(_._1 -> Vector.empty[(Double, Double)]): _*)
-    for (_ <- 1 to SWEEPS; (name, fn) <- runnable) {
-      stageMs.set(0)
-      val t0 = System.nanoTime()
-      val ok = try { graft.BenchUtil.force(fn()); true } catch { case _: Throwable => false }
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(150) // let the listener bus drain stage-completed events
-      if (ok) samples(name) :+= ((wall, stageMs.get() / 1e3))
-    }
-    val results = runnable.map { case (name, _) =>
-      // lower median by wall (see BenchUtil.median for the even-count
-      // rationale); the paired stage time rides along with its run
-      val v = samples(name).sortBy(_._1)
-      name -> (if (v.isEmpty) (-1.0, -1.0) else v((v.size - 1) / 2))
-    }
+    // stage_compute beside the wall: deep plans (q2/q3's broadcast-dim
+    // chains) pay a fixed ~2-3s driver/AQE stage-scheduling floor per run
+    // that is invariant to data size; reporting both keeps the
+    // 2x-of-baseline gate honest at any local scale factor
+    val results = Sweep(spark, runnable, SWEEPS).map { case (n, runs) => n -> Sweep.median(runs) }
     // machine check of the bucketed claim: the fact join and its
     // aggregation must run with zero shuffle exchanges
     val noExchange = haveBuckets && {
@@ -561,13 +531,11 @@ object BenchHeavy {
         .queryExecution.executedPlan.toString
       !plan.contains("Exchange hashpartitioning")
     }
-    val qs = results.map { case (k, (w, _)) => s"\"" + k + "\":" + w }
-      .mkString("{", ",", "}")
-    val cs = results.map { case (k, (_, c)) => s"\"" + k + "\":" + c }
-      .mkString("{", ",", "}")
-    val failed = results.collect { case (n, (w, _)) if w < 0 => "\"" + n + "\"" }
+    val qs = Sweep.perQuery(results)(_.wall)
+    val cs = Sweep.perQuery(results)(_.stageSeconds)
+    val failed = results.collect { case (n, None) => "\"" + n + "\"" }
       .mkString("[", ",", "]")
-    val total = results.map(_._2._1).filter(_ >= 0).sum
+    val total = results.flatMap(_._2).map(_.wall).sum
     val line = s"""{"metric":"heavy_total","value":$total,"unit":"sec","queries":$qs,"stage_compute":$cs,"sf":"$dir","bucketed_no_exchange":$noExchange,"failed":$failed}"""
     println(line)
     // subset runs land in a side file so they can't clobber the full-tier

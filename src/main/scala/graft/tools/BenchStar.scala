@@ -140,21 +140,6 @@ object BenchStar {
     val runnable = if (subset.isEmpty) all else all.filter(p => subset(p._1))
     require(runnable.nonEmpty, s"no queries match subset $subset")
 
-    val stageMs = new java.util.concurrent.atomic.AtomicLong(0)
-    // spill tracking: at the largest tiers a high-cardinality per-task
-    // aggregate can exceed executor memory — surfacing diskBytesSpilled
-    // per query tells the ratio table WHY a point regressed (memory
-    // ceiling, not plan shape)
-    val spillB = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val st = s.stageInfo
-        for (c <- st.completionTime; b <- st.submissionTime) stageMs.addAndGet(c - b)
-      }
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null) spillB.addAndGet(t.taskMetrics.diskBytesSpilled)
-    })
     // FORCING (round 13): full-materialization noop-sink write, the same
     // protocol as graft.Bench/BenchHeavy since round 10. The `.count()`
     // forcing used here through round 12 was safe for the original sweep
@@ -172,30 +157,18 @@ object BenchStar {
       .map(k => k -> spark.conf.get(k))
     def resetBaseConf(): Unit =
       baseConf.foreach { case (k, v) => spark.conf.set(k, v) }
-    for ((_, fn) <- runnable) { resetBaseConf(); graft.BenchUtil.force(fn()) } // warmup: JIT + codegen + listing
-
-    val samples = scala.collection.mutable.Map(
-      runnable.map(_._1 -> Vector.empty[(Double, Double, Double)]): _*)
-    for (_ <- 1 to SWEEPS; (name, fn) <- runnable) {
-      resetBaseConf()
-      stageMs.set(0); spillB.set(0)
-      val t0 = System.nanoTime()
-      graft.BenchUtil.force(fn())
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(150) // let the listener bus drain stage-completed events
-      samples(name) :+= ((wall, stageMs.get() / 1e3, spillB.get() / 1e9))
-    }
-    val results = runnable.map { case (name, _) =>
-      val v = samples(name).sortBy(_._1)
-      name -> v((v.size - 1) / 2)
-    }
-    val qs = results.map { case (k, (w, _, _)) => s"\"" + k + "\":" + w }
-      .mkString("{", ",", "}")
-    val cs = results.map { case (k, (_, c, _)) => s"\"" + k + "\":" + c }
-      .mkString("{", ",", "}")
-    val sp = results.map { case (k, (_, _, s)) => s"\"" + k + "\":" + s }
-      .mkString("{", ",", "}")
-    val line = s"""{"metric":"star_total","value":${results.map(_._2._1).sum},"unit":"sec","tier":"$label","queries":$qs,"stage_compute":$cs,"disk_spill_gb":$sp,"sf":"$dir"}"""
+    // disk_spill_gb: at the largest tiers a high-cardinality per-task
+    // aggregate can exceed executor memory — surfacing diskBytesSpilled
+    // per query tells the ratio table WHY a point regressed (memory
+    // ceiling, not plan shape)
+    val results = Sweep(spark,
+      runnable.map { case (n, fn) => n -> (() => { resetBaseConf(); fn() }) }, SWEEPS)
+      .map { case (n, runs) => n -> Sweep.median(runs) }
+    val qs = Sweep.perQuery(results)(_.wall)
+    val cs = Sweep.perQuery(results)(_.stageSeconds)
+    val sp = Sweep.perQuery(results)(_.spillBytes / 1e9)
+    val total = results.flatMap(_._2).map(_.wall).sum
+    val line = s"""{"metric":"star_total","value":$total,"unit":"sec","tier":"$label","queries":$qs,"stage_compute":$cs,"disk_spill_gb":$sp,"sf":"$dir"}"""
     println(line)
     // a subset run lands in a side file so it can't clobber the tier's
     // full artifact — merge with tools/merge_bench.py

@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The source layering of the table log: the log library files hold the
   * engine API only — the declared queries and their fixtures live in
   * LakeQueries — one module owns the artifact source stamp, one write
-  * publishes to the log, and no default path points into one checkout.
+  * publishes to the log, one harness listens to the scheduler, and no
+  * default path points into one checkout.
   * Reads the sources; needs no Spark session. */
 class LayeringSpec extends AnyFunSuite {
   private val main = Paths.get("src/main/scala")
@@ -35,6 +36,11 @@ class LayeringSpec extends AnyFunSuite {
   test("_GRAFT_SOURCE appears in exactly one main source file") {
     assert(sources.collect { case (p, src) if src.contains("_GRAFT_SOURCE") => p } ===
       Seq("graft/Stamp.scala"))
+  }
+
+  test("addSparkListener appears in exactly one main source file: the tools' sweep harness") {
+    assert(sources.collect { case (p, src) if src.contains("addSparkListener") => p } ===
+      Seq("graft/tools/Sweep.scala"))
   }
 
   test("no main source names an absolute checkout path: defaults resolve under the working directory") {

@@ -53,8 +53,6 @@ class ObserveSpec extends SparkSpecBase {
     val df = agg.as("a").join(agg.as("b"), "o_orderpriority")
     BenchUtil.force(df)
     val (_, exch, _, scans) = Observe.planMetrics(df.queryExecution)
-    // rows_out is best-effort (-1 when the root node exposes no
-    // numOutputRows metric) — not asserted here
     // the traversal descends into query stages: the parquet scan(s) are
     // inside materialized stages, invisible to a plain plan.collect
     assert(scans >= 1, s"scans=$scans — stage interiors not traversed")
@@ -74,6 +72,32 @@ class ObserveSpec extends SparkSpecBase {
     assert(exch === want,
       s"exchange_bytes=$exch != distinct-instance sum $want (double count?)")
     assert(exch > 0, "the grouped self-join must ship at least one exchange")
+  }
+
+  test("planMetrics: rows_out is the real output row count after a force drain (filter+project, AQE aggregate, join)") {
+    import spark.implicits._
+    val orders = Tables.orders(spark, sfDir)
+    val customer = Tables.customer(spark, sfDir)
+    // the drained root is a codegen (or AQE) wrapper with no
+    // numOutputRows of its own: the count comes from the node below it
+    // thunks: the expected count comes from a separate execution, since
+    // re-running one QueryExecution accumulates into the same metrics
+    val cases: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "filter+project" -> (() => orders.filter($"o_orderpriority" === "1-URGENT")
+        .select($"o_orderkey", $"o_totalprice")),
+      "aqe aggregate" -> (() => orders.groupBy($"o_orderpriority").agg(count(lit(1)).as("n"))),
+      "join" -> (() => orders.join(customer, $"o_custkey" === $"c_custkey")
+        .select($"o_orderkey", $"c_name")))
+    val got = cases.map { case (label, mk) =>
+      val want = mk().collect().length.toLong
+      assert(want > 0, s"$label: empty fixture result")
+      val df = mk()
+      BenchUtil.force(df)
+      (label, Observe.planMetrics(df.queryExecution)._1, want)
+    }
+    val wrong = got.filter { case (_, rows, want) => rows != want }
+    assert(wrong.isEmpty, wrong.map { case (l, r, w) => s"$l: rows_out=$r, expected $w" }
+      .mkString("; "))
   }
 
   test("failed actions record status=failed with the error class") {

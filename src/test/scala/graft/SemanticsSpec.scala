@@ -163,8 +163,8 @@ class SemanticsSpec extends SparkSpecBase {
     // the r14 plain-star rework: the declared q2/q3 run the count-gated
     // broadcast-dimension plan (Analytics.gatedBroadcast); value parity
     // with the original join-then-aggregate core and with each other must
-    // hold on BOTH sides of the gate — broadcast hint taken (force /
-    // auto-under-threshold) and shuffle fallback (off / auto-over-threshold)
+    // hold on BOTH sides of the gate — broadcast hint taken (default
+    // budget at this sf, unbounded budget) and shuffle fallback (zero budget)
     def q2() = Analytics.q2PlainFrom(spark, Tables.customer(spark, sfDir),
       Tables.orders(spark, sfDir), Tables.lineitem(spark, sfDir)).collect().toSeq
     def q3() = Analytics.q3PlainFrom(spark, Tables.region(spark, sfDir),
@@ -176,43 +176,16 @@ class SemanticsSpec extends SparkSpecBase {
       Tables.nation(spark, sfDir), Tables.customer(spark, sfDir),
       Tables.orders(spark, sfDir), Tables.lineitem(spark, sfDir)).collect().toSeq
     try {
-      for (mode <- Seq("auto", "force", "off")) {
-        spark.conf.set("spark.graft.star.dimBroadcast", mode)
-        assert(q2() === core2, s"q2 diverged under mode=$mode")
-        assert(q3() === core3, s"q3 diverged under mode=$mode")
+      for (budget <- Seq(None, Some(Long.MaxValue), Some(0L))) {
+        budget match {
+          case Some(b) => spark.conf.set("spark.graft.star.broadcastMaxDimRows", b.toString)
+          case None => spark.conf.unset("spark.graft.star.broadcastMaxDimRows")
+        }
+        val label = budget.fold("default")(_.toString)
+        assert(q2() === core2, s"q2 diverged under budget=$label")
+        assert(q3() === core3, s"q3 diverged under budget=$label")
       }
-      // auto with a zero row budget must take the fallback arm and still agree
-      spark.conf.set("spark.graft.star.dimBroadcast", "auto")
-      spark.conf.set("spark.graft.star.broadcastMaxDimRows", "0")
-      assert(q2() === core2, "q2 diverged under auto/zero-budget fallback")
-      assert(q3() === core3, "q3 diverged under auto/zero-budget fallback")
-    } finally {
-      spark.conf.unset("spark.graft.star.dimBroadcast")
-      spark.conf.unset("spark.graft.star.broadcastMaxDimRows")
-    }
-  }
-
-  test("an unknown dimBroadcast mode is refused, naming the key, before any job") {
-    val (region, nation, customer) = (Tables.region(spark, sfDir),
-      Tables.nation(spark, sfDir), Tables.customer(spark, sfDir))
-    val (orders, lineitem) = (Tables.orders(spark, sfDir), Tables.lineitem(spark, sfDir))
-    val group = s"dim-broadcast-conf-${System.nanoTime}"
-    spark.sparkContext.setJobGroup(group, "dimBroadcast conf refusal")
-    spark.conf.set("spark.graft.star.dimBroadcast", "sometimes")
-    try {
-      val refused = Seq(
-        intercept[IllegalArgumentException](
-          Analytics.q2PlainFrom(spark, customer, orders, lineitem)),
-        intercept[IllegalArgumentException](
-          Analytics.q3PlainFrom(spark, region, nation, customer, orders, lineitem)))
-      refused.foreach(e =>
-        assert(e.getMessage.contains("spark.graft.star.dimBroadcast"), e.getMessage))
-      assert(spark.sparkContext.statusTracker.getJobIdsForGroup(group).isEmpty,
-        "a gate count ran under the unknown mode")
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.conf.unset("spark.graft.star.dimBroadcast")
-    }
+    } finally spark.conf.unset("spark.graft.star.broadcastMaxDimRows")
   }
 
   test("a9: the GK band holds at the guarantee") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.TableLog
+import graft.operators.{Etl, TableLog}
 
 /** Cross-PROCESS linearizability of the table log's optimistic commit
   * (r12 verdict item 3; the LogStore seam is r13's top item):
@@ -24,7 +24,8 @@ class TableLogRaceSpec extends SparkSpecBase {
   private val WRITERS = 3
 
   private def race(logStore: String, commits: Int): Unit = {
-    val scratch = spark.conf.get("spark.graft.scratchDir", "target/graft-tmp")
+    val scratch = Etl.scratch(spark)
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(scratch))
     val table = s"$scratch/race_table_$logStore"
     val dir = new java.io.File(table)
     org.apache.commons.io.FileUtils.deleteQuietly(dir)
