@@ -109,8 +109,9 @@ object Observe {
     * node down from the root that exposes it, passing only nodes that keep
     * the row count (codegen, input and columnar adapters, AQE stages and
     * shuffle reads, project, sort, shuffle exchange): under the `toRdd`
-    * drain the root is such a wrapper, and a row-changing node without
-    * the metric leaves -1. Walks the FINAL adaptive plan when AQE ran —
+    * drain the root is such a wrapper. A `Union` sums its children's
+    * counts, each found the same way; any other row-changing node without
+    * the metric, or a Union child without a count, leaves -1. Walks the FINAL adaptive plan when AQE ran —
     * the pre-execution plan's metrics are zeros — and descends into
     * query-stage wrappers (AQE's materialized stages are leaf wrappers;
     * a plain `collect` never sees inside them). `exchange_bytes` sums
@@ -123,7 +124,7 @@ object Observe {
   private[graft] def planMetrics(qe: QueryExecution): (Long, Long, Long, Long) =
     try {
       import org.apache.spark.sql.execution.{ColumnarToRowExec, InputAdapter, ProjectExec,
-        SortExec, WholeStageCodegenExec}
+        SortExec, UnionExec, WholeStageCodegenExec}
       import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, QueryStageExec}
       import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
       def expand(p: SparkPlan): Seq[SparkPlan] = p match {
@@ -137,11 +138,21 @@ object Observe {
             _: ShuffleExchangeExec => true
         case _ => false
       }
+      // every row-keeping node is unary: descend its one child (a query
+      // stage's plan) until a node counts its rows; a Union's rows are its
+      // children's, each found by the same descent
+      def rowsOf(p: SparkPlan): Long = p match {
+        case a: AdaptiveSparkPlanExec => rowsOf(a.executedPlan)
+        case _ if p.metrics.contains("numOutputRows") => p.metrics("numOutputRows").value
+        case q: QueryStageExec => rowsOf(q.plan)
+        case u: UnionExec =>
+          val parts = u.children.map(rowsOf)
+          if (parts.contains(-1L)) -1L else parts.sum
+        case _ if keepsRows(p) => p.children.headOption.fold(-1L)(rowsOf)
+        case _ => -1L
+      }
       val nodes = expand(qe.executedPlan)
-      // every row-keeping node is unary, so the pre-order prefix up to the
-      // first other node is the root's chain
-      val rows = nodes.find(n => n.metrics.contains("numOutputRows") || !keepsRows(n))
-        .flatMap(_.metrics.get("numOutputRows")).map(_.value).getOrElse(-1L)
+      val rows = rowsOf(qe.executedPlan)
       val exchange = nodes.collect { case e: Exchange => e }
         .flatMap(_.metrics.get("dataSize")).map(_.value).sum
       val spill = nodes.flatMap(_.metrics.get("spillSize")).map(_.value).sum

@@ -375,11 +375,6 @@ object Lakehouse {
 
   // ------------------------------- S17: pruned copy-on-write MERGE (CDF sync)
 
-  /** The most ranged destination files [[cdfApply]] probes inline, one
-    * observed aggregate per file riding the delta's checkpoint job; a
-    * wider destination takes the one-job broadcast-join probe. */
-  private[graft] val INLINE_PROBE_MAX_FILES = 64
-
   /** Apply ONE source version `v`: the window (v-1, v]. */
   private[graft] def cdfApply(spark: SparkSession, src: String, dst: String,
       v: Int, keyCol: String, consumer: String, files: Int,
@@ -490,39 +485,37 @@ object Lakehouse {
     // every file between them). A file without stats on keyCol can never
     // be excluded — stats skip work, never rows.
     //
-    // ZERO extra jobs in the common case (r18): the probe's three answers
-    // — "is the whole delta empty?", "any delete/update keys at all?",
-    // "which ranged files do they overlap?" — ride the delta's OWN
-    // localCheckpoint job as observed metrics (CollectMetrics
-    // aggregates), where r17's fused left-outer probe still paid one
-    // job wall per applied version. The per-file overlap test is one
-    // tiny codegen'd `max(when(key between mn and mx, 1))` aggregate per
-    // ranged destination file, built from bounds the driver ALREADY
-    // holds (liveState is a driver-side manifest replay — no data, no
-    // key, crosses to the driver). Gated by file count
-    // (INLINE_PROBE_MAX_FILES): past the gate a mature table's wide file
-    // list would bloat one plan with
-    // thousands of aggregates, so the hit set falls back to the r17
-    // broadcast-join probe — one job, still bounded by |dst files|,
-    // still no gone KEY ever on the driver or in a plan literal.
-    val inlineProbe = dstV > 0 && ranged.nonEmpty &&
-      dstSchema.exists(s => s.fieldNames.contains(keyCol) &&
-        TableLog.isIntegral(s(keyCol).dataType)) &&
-      ranged.size <= INLINE_PROBE_MAX_FILES
+    // ZERO extra jobs (r18): the probe's three answers — "is the whole
+    // delta empty?", "any delete/update keys at all?", "which ranged
+    // files do they overlap?" — ride the delta's OWN localCheckpoint job
+    // as observed metrics (CollectMetrics aggregates), where r17's fused
+    // left-outer probe still paid one job wall per applied version. The
+    // overlap test reads every ranged file's manifest (min, max, path)
+    // from ONE array literal, built from bounds the driver ALREADY holds
+    // (liveState is a driver-side manifest replay — no data, no key,
+    // crosses to the driver): each gone row yields the paths whose range
+    // holds its key, and one collect_set of those path arrays is the hit
+    // set — one aggregate at any destination width. Only an integral key
+    // carries manifest stats (the stageWithStats contract), so a
+    // destination without ranged files builds no overlap test and never
+    // casts a non-integral key.
+    //
     // checkpoint the window delta: the range agg, the anti-join side,
     // and the staged write would otherwise each re-run cdfSlice's
     // full-outer join over the window's files. The observe node rides
     // this one job and is truncated away with the rest of the lineage —
     // downstream consumers scan the checkpointed rows, so no metric fires
     // twice.
+    val bounds = typedLit(ranged.map { f =>
+      val s = f.stats.find(_.col == keyCol).get
+      (s.min, s.max, f.path)
+    })
+    val key = c(keyCol).cast("long")
     val metricCols =
       Seq(count(lit(1)).as("__n"), count(when(isGone, 1)).as("__ng")) ++
-        (if (!inlineProbe) Nil
-         else ranged.zipWithIndex.map { case (f, i) =>
-           val s = f.stats.find(_.col == keyCol).get
-           max(when(isGone && c(keyCol).cast("long") >= s.min &&
-             c(keyCol).cast("long") <= s.max, 1L).otherwise(0L)).as(s"__h$i")
-         })
+        Option.when(ranged.nonEmpty)(collect_set(when(isGone, transform(
+          filter(bounds, b => key >= b("_1") && key <= b("_2")), b => b("_3"))))
+          .as("__hits"))
     val observed = cdfSliceFrom(spark, src, from, to, keyCol, srcPre, srcPost)
       .observe("__cdf_probe", metricCols.head, metricCols.tail: _*)
     val delta = observed.localCheckpoint()
@@ -530,10 +523,7 @@ object Lakehouse {
     // not via Observation.get, whose latch waits on the async listener bus
     // (measured 30-150 ms of pure lag per version)
     val probe = observed.queryExecution.observedMetrics("__cdf_probe")
-    def metric(name: String): Long = probe.getAs[Any](name) match {
-      case x: Number => x.longValue()
-      case _ => 0L // max over zero rows observes null; only empty
-    }
+    def metric(name: String): Long = probe.getAs[Long](name)
     val deltaEmpty = metric("__n") == 0L
     // an EMPTY feed (a source compaction / identical rewrite, or a bare
     // schema-evolution commit) records the window as applied — a
@@ -547,20 +537,6 @@ object Lakehouse {
     // winner's committed files — the loser's staging stays orphaned for
     // vacuum, the txn gate stops its commit
     val rel = s"data/apply-v$to-${java.util.UUID.randomUUID}"
-    if (dstV == 0) {
-      // cold start (the first delta cannot rewrite anything, so no
-      // gone-side work runs here): the pure-insert delta stages clustered
-      // with stats under the SOURCE'S logged schema (authoritative for
-      // types; the delta-derived shape is the fallback for a legacy
-      // source that never logged one)
-      val rows = delta.filter(c("_change_type") =!= "delete")
-        .drop("_commit_version", "_change_type")
-      val schActs =
-        if (schemaActs.nonEmpty) schemaActs
-        else Seq(Action("schema", rows.schema.json))
-      return commitWindow(
-        schActs ++ TableLog.stageWithStats(spark, dst, rows, rel, Seq(keyCol), files))
-    }
     // copy-on-write semantics: only DELETE/UPDATE keys force a rewrite of
     // the files covering them — inserts just add files, so a pure append
     // (or a delete at one key plus an insert far away) rewrites NOTHING
@@ -571,33 +547,14 @@ object Lakehouse {
     val keyType = dstSchema.get(keyCol).dataType
     require(TableLog.isIntegral(keyType),
       s"cdfApply needs an integral key; '$keyCol' is ${keyType.simpleString}")
-    val gone = delta.filter(isGone)
-      .select(c(keyCol).cast("long").as("__gone"))
-    val goneEmpty = metric("__ng") == 0L
-    val hitPaths: Set[String] =
-      if (goneEmpty) Set.empty
-      else if (inlineProbe)
-        ranged.zipWithIndex.collect {
-          case (f, i) if metric(s"__h$i") == 1L => f.path
-        }.toSet
-      else {
-        // fallback for wide destinations: the r17 broadcast-join probe,
-        // now inner (emptiness answers already rode the checkpoint) —
-        // one job, hit set bounded by |dst files|
-        import spark.implicits._
-        val fileDf = ranged.map { f =>
-          val s = f.stats.find(_.col == keyCol).get
-          (f.path, s.min, s.max)
-        }.toDF("__path", "__mn", "__mx")
-        delta.filter(isGone).select(c(keyCol).cast("long").as("__g"))
-          .join(broadcast(fileDf),
-            c("__g") >= c("__mn") && c("__g") <= c("__mx"))
-          .agg(collect_set(c("__path")).as("__hits"))
-          .head().getSeq[String](0).toSet
-      }
+    val gone = delta.filter(isGone).select(key.as("__gone"))
     val touched: Seq[TableLog.LiveFile] =
-      if (goneEmpty) Seq.empty
-      else statless ++ ranged.filter(f => hitPaths(f.path))
+      if (metric("__ng") == 0L) Seq.empty
+      else {
+        lazy val hits = probe.getAs[collection.Seq[collection.Seq[String]]]("__hits")
+          .flatten.toSet
+        statless ++ ranged.filter(f => hits(f.path))
+      }
     // the touched files are read DV-AWARE (scanState scopes the dst's
     // live deletion vectors per file): a raw read would carry rows a dst
     // morDelete already hid into the re-staged files — which land at
@@ -664,23 +621,31 @@ object Lakehouse {
     }
     requireDvKeyType("morDelete", keyCol, keyType,
       sch.fold(keyType)(_(keyCol).dataType))
+    // plain commit, not blind retry: delete-by-key does NOT commute with
+    // a concurrent commit that re-inserts the key (the dv would scope
+    // over the loser's files on retry) — a lost race surfaces loudly and
+    // the caller decides, the compaction-conflict discipline
+    TableLog.commit(spark, table, stageDv(spark, table, "morDelete", keys))
+  }
+
+  /** Stage `keys`' distinct values as ONE deletion-vector key file under
+    * `data/dv/<uuid>` and return the commit's leading actions: the `dv`
+    * reader feature, then the `dv` action. One file: a DV is
+    * delete-volume-sized by contract (every reading JVM holds its key set
+    * in memory) — a delete big enough to need many files should be a
+    * copy-on-write rewrite (S17) instead. The file is self-describing: its
+    * single column's NAME is the key column it deletes on. The feature
+    * line (S21) states the requirement on the wire: a reader that skipped
+    * the dv action would resurrect every deleted row. */
+  private def stageDv(spark: SparkSession, table: String, op: String,
+      keys: DataFrame): Seq[Action] = {
     val rel = s"data/dv/${java.util.UUID.randomUUID}"
-    // one file: a DV is delete-volume-sized by contract (every reading
-    // JVM holds its key set in memory) — a delete big enough to need many files
-    // should be a copy-on-write rewrite (S17) instead
     keys.distinct().coalesce(1)
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$table/$rel")
     val staged = TableLog.listStaged(spark, table, rel)
       .map(a => Action("dv", a.path))
-    require(staged.nonEmpty, "morDelete staged no key file")
-    // plain commit, not blind retry: delete-by-key does NOT commute with
-    // a concurrent commit that re-inserts the key (the dv would scope
-    // over the loser's files on retry) — a lost race surfaces loudly and
-    // the caller decides, the compaction-conflict discipline. The commit
-    // declares the `dv` reader feature (S21): a reader that skipped the
-    // dv action would resurrect every deleted row, so the requirement is
-    // stated on the wire, not assumed
-    TableLog.commit(spark, table, Action("feature", "dv") +: staged)
+    require(staged.nonEmpty, s"$op staged no key file")
+    Action("feature", "dv") +: staged
   }
 
   /** The DV key-type contract, refused at write time: readers probe DV
@@ -769,20 +734,14 @@ object Lakehouse {
     // an empty MERGE source must not commit a zero-key DV
     if (observed.queryExecution.observedMetrics("__merge_probe")
         .getAs[Long]("__n") == 0L) return cur
-    // the DV key file (morDelete's self-describing wire: the single
-    // column's NAME is the key column, one file by the delete-volume
-    // contract) and the post-image stage are INDEPENDENT writes
-    // off the same checkpointed frame into disjoint staging dirs — they
-    // run concurrently (inParallel, the fixture-staging discipline) and
-    // stay invisible until the single commit below publishes both
-    val dvRel = s"data/dv/${java.util.UUID.randomUUID}"
+    // the DV key file ([[stageDv]]) and the post-image stage are
+    // INDEPENDENT writes off the same checkpointed frame into disjoint
+    // staging dirs — they run concurrently (inParallel, the
+    // fixture-staging discipline) and stay invisible until the single
+    // commit below publishes both
     val addRel = s"data/merge/${java.util.UUID.randomUUID}"
     val Seq(dvActs, adds) = TableLog.inParallel(Seq(
-      () => {
-        post.select(col(keyCol)).distinct().coalesce(1)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(s"$table/$dvRel")
-        TableLog.listStaged(spark, table, dvRel).map(a => Action("dv", a.path))
-      },
+      () => stageDv(spark, table, "morMerge", post.select(col(keyCol))),
       // post-images: clustered with stats when the key can carry them
       // (stageWithStats' integral wire contract), plain otherwise — stats
       // skip work, never rows, so a statless merge file is just unprunable
@@ -790,10 +749,7 @@ object Lakehouse {
         if (TableLog.isIntegral(sch(keyCol).dataType))
           TableLog.stageWithStats(spark, table, post, addRel, Seq(keyCol), files)
         else TableLog.stage(spark, table, post, addRel)))
-    require(dvActs.nonEmpty, "morMerge staged no key file")
-    // declares the `dv` reader feature (S21, morDelete's discipline)
-    TableLog.commit(spark, table,
-      Action("feature", "dv") +: (dvActs ++ adds))
+    TableLog.commit(spark, table, dvActs ++ adds)
   }
 
   // --------------------- R17: exactly-once log-tail relay (src log → dst log)

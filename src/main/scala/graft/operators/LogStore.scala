@@ -110,16 +110,6 @@ private[graft] object RenameLogStore extends LogStore {
   }
 }
 
-/** POSIX impl: hard-link the staged manifest to its final name.
-  * `link(2)` is the textbook one-winner primitive — atomic name
-  * creation, EEXIST for every loser, and the published name shares the
-  * tmp's inode so it appears WITH its full content (a reader can never
-  * open a half-written manifest, unlike create-then-write claims). Crash
-  * at any point leaves either a published `dst` or only an ignorable
-  * dot-tmp — no lock to leak, no wedged version, no repair path needed.
-  * The tmp (and the checksummed LocalFileSystem's `.crc` sibling from
-  * staging) is unlinked after publish; a crash between link and unlink
-  * leaves only those same ignorable dot-files. */
 /** S3-class impl: conditional PUT of the staged manifest's bytes to the
   * final key. The staging FS and the publish store are deliberately
   * decoupled: `tmp` is read through whatever Hadoop FS staged it (local
@@ -166,6 +156,16 @@ private[graft] final class ObjectStoreLogStore(
   }
 }
 
+/** POSIX impl: hard-link the staged manifest to its final name.
+  * `link(2)` is the textbook one-winner primitive — atomic name
+  * creation, EEXIST for every loser, and the published name shares the
+  * tmp's inode so it appears WITH its full content (a reader can never
+  * open a half-written manifest, unlike create-then-write claims). Crash
+  * at any point leaves either a published `dst` or only an ignorable
+  * dot-tmp — no lock to leak, no wedged version, no repair path needed.
+  * The tmp (and the checksummed LocalFileSystem's `.crc` sibling from
+  * staging) is unlinked after publish; a crash between link and unlink
+  * leaves only those same ignorable dot-files. */
 private[graft] object HardLinkLogStore extends LogStore {
   def publishExclusive(conf: Configuration, tmp: Path, dst: Path): Unit = {
     val t = java.nio.file.Paths.get(tmp.toUri.getPath)

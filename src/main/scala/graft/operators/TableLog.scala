@@ -519,8 +519,9 @@ object TableLog {
     * job beyond the scan's own — a snapshot read under DVs stays one scan
     * stage per group at any table size. Group count is bounded by the
     * commit count between compactions (compaction absorbs DVs — the
-    * S13×S18 contract). A table with no live DVs takes the exact pre-S18
-    * single-scan plan — zero cost when the feature is unused. No files
+    * S13×S18 contract). A table with no live DVs forms one group with no
+    * filter — the exact pre-S18 single scan, zero cost when the feature
+    * is unused. No files
     * read as an empty LocalRelation under the logged schema, not as an
     * empty scan or RDD: the optimizer cannot prove those empty, so their
     * union branch would survive into the physical plan as a real scan
@@ -541,8 +542,7 @@ object TableLog {
       val s = schema.getOrElse(throw new IllegalStateException(
         s"no live files and no logged schema for $table"))
       spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), s)
-    } else if (dvs.isEmpty) rd(files.map(_.path))
-    else {
+    } else {
       // groups in manifest order of their first file, not hash order: the
       // union order is the scan's partition order, which a range-clustered
       // rewrite (compaction, an apply) samples its bounds from

@@ -24,22 +24,6 @@ class DvContainsSpec extends SparkSpecBase {
     TableLog.commit(spark, t, TableLog.Action("schema", df.schema.json) +:
       TableLog.stage(spark, t, df, "data/v1"))
 
-  /** Jobs started by `body`, counted through the status tracker once the
-    * listener bus has drained past a marker job. */
-  private def jobsOf[T](group: String)(body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    sc.setJobGroup(group, "")
-    val out = try body finally sc.clearJobGroup()
-    sc.setJobGroup(s"$group-drain", "")
-    try spark.range(1).count() finally sc.clearJobGroup()
-    val deadline = System.currentTimeMillis() + 30000
-    while (sc.statusTracker.getJobIdsForGroup(s"$group-drain").isEmpty &&
-      System.currentTimeMillis() < deadline) Thread.sleep(50)
-    assert(sc.statusTracker.getJobIdsForGroup(s"$group-drain").nonEmpty,
-      "listener bus never drained")
-    (out, sc.statusTracker.getJobIdsForGroup(group).length)
-  }
-
   test("dv_contains: a null-keyed row survives a DV, and a null DV key deletes nothing") {
     import spark.implicits._
     val t = fresh("dv_null_table")

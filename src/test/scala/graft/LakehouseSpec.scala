@@ -472,18 +472,19 @@ class LakehouseSpec extends SparkSpecBase {
       .as[(Long, Double)].collect().toSet)
   }
 
-  test("s17: past INLINE_PROBE_MAX_FILES the apply falls back to the broadcast probe") {
+  test("s17: a destination wider than 64 ranged files probes inside the delta's checkpoint job") {
     import spark.implicits._
     val src = s"${Etl.scratch(spark)}/probe_gate_src"
     val dst = s"${Etl.scratch(spark)}/probe_gate_dst"
-    Seq(src, dst).foreach(t => fs(t).delete(new Path(t), true))
+    val narrow = s"${Etl.scratch(spark)}/probe_gate_narrow"
+    Seq(src, dst, narrow).foreach(t => fs(t).delete(new Path(t), true))
     val rows = spark.range(0, 1000)
       .select($"id".as("event_id"), ($"id" % 7).cast("double").as("value"))
     TableLog.commit(spark, src, TableLog.Action("schema", rows.schema.json) +:
       TableLog.stage(spark, src, rows, "data/v1"))
-    // one more ranged destination file than the inline probe takes
-    val files = Lakehouse.INLINE_PROBE_MAX_FILES + 1
+    val files = 65
     Lakehouse.cdfApply(spark, src, dst, 1, "event_id", "gate", files)
+    Lakehouse.cdfApply(spark, src, narrow, 1, "event_id", "gate", 2)
     val before = TableLog.liveFiles(spark, dst, 1)
     assert(before.size === files)
     val bumped = rows.withColumn("value",
@@ -492,13 +493,21 @@ class LakehouseSpec extends SparkSpecBase {
     TableLog.commit(spark, src,
       TableLog.liveFiles(spark, src, 1).map(TableLog.Action("remove", _)) ++
         TableLog.stage(spark, src, bumped, "data/v2"))
-    // the wide-destination path: the ranged file count exceeds the inline
-    // limit, so the hit set must come from the broadcast-join probe job
-    Lakehouse.cdfApply(spark, src, dst, 2, "event_id", "gate", files)
+    // the same window onto a 2-file and a 65-file destination: every
+    // ranged file's overlap test rides the delta's checkpoint job, so the
+    // wide apply runs no probe job of its own
+    val (_, narrowJobs) = jobsOf("probe-narrow") {
+      Lakehouse.cdfApply(spark, src, narrow, 2, "event_id", "gate", 2)
+    }
+    val (_, wideJobs) = jobsOf("probe-wide") {
+      Lakehouse.cdfApply(spark, src, dst, 2, "event_id", "gate", files)
+    }
+    assert(wideJobs === narrowJobs,
+      s"the 65-file apply ran $wideJobs jobs, the 2-file apply $narrowJobs")
     val after = TableLog.liveFiles(spark, dst, 2).toSet
     val rewritten = before.toSet -- after
     assert(rewritten.size <= 2,
-      s"fallback probe must prune like the inline one, rewrote ${rewritten.size}")
+      s"the wide probe must prune to the covering files, rewrote ${rewritten.size}")
     val got = TableLog.readAsOf(spark, dst, 2)
       .select($"event_id", $"value").as[(Long, Double)].collect().toSet
     assert(got === bumped.select($"event_id", $"value")

@@ -10,8 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The source layering of the table log: the log library files hold the
   * engine API only — the declared queries and their fixtures live in
   * LakeQueries — one module owns the artifact source stamp, one write
-  * publishes to the log, one harness listens to the scheduler, and no
-  * default path points into one checkout.
+  * publishes to the log, one harness listens to the scheduler, no lake
+  * writer pulls rows to the driver, and no default path points into one
+  * checkout.
   * Reads the sources; needs no Spark session. */
 class LayeringSpec extends AnyFunSuite {
   private val main = Paths.get("src/main/scala")
@@ -23,6 +24,15 @@ class LayeringSpec extends AnyFunSuite {
       for (needle <- Seq("Tables.", "Etl.scratch", "sfDir"))
         assert(!src.contains(needle), s"$f.scala mentions $needle")
     }
+  }
+
+  test("the lake writers pull no rows to the driver: no .head(), .collect(), .take( or .count() in TableLog, Lakehouse and LogProtocol") {
+    val hits = for {
+      f <- Seq("TableLog", "Lakehouse", "LogProtocol")
+      (line, i) <- read(main.resolve(s"graft/operators/$f.scala")).linesIterator.zipWithIndex
+      needle <- Seq(".head()", ".collect()", ".take(", ".count()") if line.contains(needle)
+    } yield s"$f.scala:${i + 1} $needle"
+    assert(hits.isEmpty, s"driver pulls in ${hits.mkString(", ")}")
   }
 
   /** Every main source file, relative path and text. */

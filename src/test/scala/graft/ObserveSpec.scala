@@ -87,7 +87,9 @@ class ObserveSpec extends SparkSpecBase {
         .select($"o_orderkey", $"o_totalprice")),
       "aqe aggregate" -> (() => orders.groupBy($"o_orderpriority").agg(count(lit(1)).as("n"))),
       "join" -> (() => orders.join(customer, $"o_custkey" === $"c_custkey")
-        .select($"o_orderkey", $"c_name")))
+        .select($"o_orderkey", $"c_name")),
+      "union" -> (() => orders.filter($"o_orderpriority" === "1-URGENT")
+        .select($"o_custkey".as("k")).union(customer.select($"c_custkey".as("k")))))
     val got = cases.map { case (label, mk) =>
       val want = mk().collect().length.toLong
       assert(want > 0, s"$label: empty fixture result")

@@ -28,6 +28,22 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
 
   val sfDir = "/root/testdata/sf0.001"
 
+  /** Jobs started by `body`, counted through the status tracker once the
+    * listener bus has drained past a marker job. */
+  protected def jobsOf[T](group: String)(body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, "")
+    val out = try body finally sc.clearJobGroup()
+    sc.setJobGroup(s"$group-drain", "")
+    try spark.range(1).count() finally sc.clearJobGroup()
+    val deadline = System.currentTimeMillis() + 30000
+    while (sc.statusTracker.getJobIdsForGroup(s"$group-drain").isEmpty &&
+      System.currentTimeMillis() < deadline) Thread.sleep(50)
+    assert(sc.statusTracker.getJobIdsForGroup(s"$group-drain").nonEmpty,
+      "listener bus never drained")
+    (out, sc.statusTracker.getJobIdsForGroup(group).length)
+  }
+
   override def afterAll(): Unit = {
     // keep the session for sibling suites (same JVM); Spark stops on exit
     super.afterAll()
