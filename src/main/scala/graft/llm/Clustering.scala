@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Stamp, Tables}
 
 /** Embedding-space corpus clustering and cluster-driven curation — the
   * semantic-organization layer of a training-data pipeline (SemDeDup,
@@ -44,8 +44,8 @@ object Clustering {
     * production trains to movement < ε on a sample). */
   val KM_ITERS = 2
 
-  /** Embedding width of the fixture corpus (the oracle's subspace
-    * width; the Spark side derives it from the data). */
+  /** Embedding width of the corpus: the k-means subspace width (M = 1)
+    * of [[kmeans]] and of the oracle's unrolled Lloyd. */
   val KM_DIM = 64
 
   /** Fraction of each cluster pruned as most-prototypical by [[l30ClusterPrune]]
@@ -55,45 +55,108 @@ object Clustering {
 
   import Similarity.{qvec, codebookDf}
 
+  /** The engine's one k-means: integer Lloyd over a `(vec_id, qv:
+    * array<bigint>)` frame of micro-quantized vectors ([[Similarity.qvec]]),
+    * run per `sub`-wide subspace — product quantization at sub < width,
+    * k-means proper at sub = width (M = 1). Deterministic on any engine or
+    * cluster, so the DuckDB oracle replays it as unrolled CTEs:
+    *  - init: centroid c is the c-th of the first `k` vectors by vec_id;
+    *  - assignment: the compiled `pq_encode` argmin (exact BIGINT squared
+    *    distance, ties to the lowest centroid id);
+    *  - update: trunc(double(sum)/count) per (m, c, d) — sums stay far
+    *    under 2^53, so the double division is bit-identical in DuckDB;
+    *  - an empty cluster keeps its previous centroid.
+    * The codebook (M·K·sub longs, corpus-size-independent) is the
+    * loop-carried driver state, re-broadcast as a 1-row literal per
+    * iteration, so plan depth stays constant. Per iteration: one
+    * projection pass (argmin + posexplode) and one (m, c, d) partial-agg
+    * rollup — the only exchange, M·K·sub-bounded after map-side combine.
+    * Returns the (m, c, d, cent) rows, sorted. */
+  private[graft] def lloyd(vecs: DataFrame, sub: Int, k: Int,
+      iters: Int): Seq[(Int, Int, Int, Long)] = {
+    val spark = vecs.sparkSession
+    graft.plans.Native.install(spark)
+    import spark.implicits._
+    val qv = vecs.select($"vec_id", $"qv").persist()
+    try {
+      val init = qv.orderBy($"vec_id").limit(k).collect().map(_.getSeq[Long](1))
+      require(init.forall(_.length % sub == 0), s"vector width is not a multiple of sub=$sub")
+      var cent = for ((v, c) <- init.toSeq.zipWithIndex; (x, pos) <- v.zipWithIndex)
+        yield (pos / sub, c, pos % sub, x)
+      for (_ <- 1 to iters) {
+        // the encode is the generator's input, so it runs once per vector
+        // (as a projection over the exploded rows the optimizer would
+        // re-evaluate it per element); each (m, c) row then explodes its
+        // own subvector slice — no join back to the dims
+        val updated = qv.crossJoin(broadcast(codebookDf(spark, cent)))
+          .select(posexplode(expr("pq_encode(qv, cb)")).as(Seq("m", "c")), $"qv")
+          .select($"m", $"c", posexplode(expr(s"slice(qv, m * $sub + 1, $sub)")).as(Seq("d", "q")))
+          .groupBy($"m", $"c", $"d")
+          .agg(expr("CAST(CAST(CAST(sum(q) AS BIGINT) AS DOUBLE) / count(*) AS BIGINT)")
+            .as("cent"))
+          .collect()
+          .map(r => (r.getInt(0), r.getInt(1), r.getInt(2)) -> r.getLong(3)).toMap
+        cent = cent.map { case (m, c, d, old) =>
+          (m, c, d, updated.getOrElse((m, c, d), old))
+        }
+      }
+      cent.sorted
+    } finally { qv.unpersist(false); () }
+  }
+
+  /** The deterministic training sample of the sized fits: the vectors of
+    * an `n`-vector frame whose xxhash64(vec_id) is 0 mod
+    * max(1, n / sampleVecs) — about `sampleVecs` of them, the same ids on
+    * any engine or partitioning (FAISS trains on ~O(100·K) points, so the
+    * fit costs the sample while the encode touches every vector once). */
+  private[graft] def hashSample(emb: DataFrame, n: Long, sampleVecs: Long): DataFrame =
+    emb.filter(pmod(xxhash64(col("vec_id")), lit(math.max(1L, n / sampleVecs))) === 0)
+
+  /** [[lloyd]] at the clustering defaults over any `(vec_id, embedding)`
+    * frame: full width, [[KM_K]] clusters, [[KM_ITERS]] rounds. */
+  private[graft] def kmeans(emb: DataFrame, k: Int = KM_K): Seq[(Int, Int, Int, Long)] =
+    lloyd(emb.select(col("vec_id"), qvec.as("qv")), KM_DIM, k, KM_ITERS)
+
   /** Fitted-codebook memo — the AnnIndex.ensure idiom at driver-state
-    * scale. The Lloyd fit is DERIVED, deterministic state (integer
+    * scale. A Lloyd fit is DERIVED, deterministic state (integer
     * arithmetic on a fingerprinted source), so it is built once per
     * (source, variant) and reused: an in-JVM memo for the session plus a
-    * fingerprint-stamped text artifact under the index dir so a later
-    * session skips the fit entirely. Before this memo every consumer
-    * (l29/l29b/l30/l30b/l31 and r14's frozen-codebook stream) re-derived
-    * the same 2-pass training per query — BENCHNOTES r11 priced that at
-    * 2.8–2.9× DuckDB on the profile/prune family, pure re-derivation
-    * waste (the l13b checkpoint lesson applied to driver-side state). A
-    * regenerated fixture invalidates by fingerprint, a crashed write
-    * cannot surface (temp-file + ATOMIC_MOVE publish, and a torn file
-    * that somehow lands anyway fails the record-count trailer check),
-    * and the stored codebook is the bit-exact fit (longs in text), so no
-    * consumer can drift. */
+    * text artifact in a per-variant directory under the index dir,
+    * stamped with the source fingerprint ([[graft.Stamp]]), so a later
+    * session skips the fit entirely. Every consumer — the l29–l31 family,
+    * r14's frozen codebook, and the PQ codebook l3m/l3n and the IVF-PQ
+    * index encode with — replays the one fit instead of re-deriving it
+    * per query (BENCHNOTES r11 priced that re-derivation at 2.8–2.9×
+    * DuckDB on the profile/prune family). A regenerated fixture
+    * invalidates by stamp; a crashed write cannot surface (temp-file +
+    * ATOMIC_MOVE publish, and a torn file that lands anyway fails the
+    * record-count trailer check and is refit); the stored codebook is the
+    * bit-exact fit (longs in text), so no consumer can drift. */
   private val kmMemo =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[(Int, Int, Int, Long)]]()
 
+  /** The codebook file of `variant` (its directory carries the stamp). */
+  private[graft] def codebookFile(spark: SparkSession, sfDir: String, variant: String) =
+    java.nio.file.Paths.get(s"${AnnIndex.indexDir(spark, sfDir)}/codebook_$variant/codebook.tsv")
+
   private[graft] def ensureCodebook(spark: SparkSession, sfDir: String,
       variant: String)(fit: => Seq[(Int, Int, Int, Long)]): Seq[(Int, Int, Int, Long)] = {
+    import java.nio.file.{Files, StandardCopyOption}
+    import scala.jdk.CollectionConverters._
     val fp = AnnIndex.sourceFingerprint(sfDir)
     kmMemo.computeIfAbsent(s"$sfDir|$variant|$fp", _ => {
-      val path = java.nio.file.Paths.get(
-        s"${AnnIndex.indexDir(spark, sfDir)}/km_codebook_$variant.tsv")
-      // load-time validity = fp header AND the record-count trailer: the
-      // header is written first, so on its own it would bless a torn
-      // write (fewer centroids — or a final long cut mid-digits that
-      // still parses — replaying silently into every l29–l31/r14
-      // consumer). The trailer is written LAST and must agree with the
-      // row count; any mismatch or parse failure falls back to a refit.
+      val path = codebookFile(spark, sfDir, variant)
+      val dir = path.getParent.toString
+      // replayable = stamped from THIS source AND complete: the `# n=`
+      // trailer is written LAST and must agree with the row count, so a
+      // torn body (fewer centroids, or a final long cut mid-digits that
+      // still parses) falls back to a refit instead of replaying into
+      // every consumer
       val onDisk =
-        if (java.nio.file.Files.isRegularFile(path)) {
-          import scala.jdk.CollectionConverters._
-          val lines = java.nio.file.Files.readAllLines(path).asScala.toSeq
-          val body = lines.drop(1).dropRight(1)
-          val complete = lines.headOption.contains(s"# fp=$fp") &&
-            lines.lastOption.contains(s"# n=${lines.length - 2}")
-          if (complete)
-            scala.util.Try(body.map { l =>
+        if (Stamp.holds(dir, fp) && Files.isRegularFile(path)) {
+          val lines = Files.readAllLines(path).asScala.toSeq
+          if (lines.lastOption.contains(s"# n=${lines.length - 1}"))
+            scala.util.Try(lines.init.map { l =>
               val Array(m, c, d, v) = l.split("\t")
               (m.toInt, c.toInt, d.toInt, v.toLong)
             }).toOption
@@ -101,72 +164,30 @@ object Clustering {
         } else None
       onDisk.getOrElse {
         val cent = fit
-        java.nio.file.Files.createDirectories(path.getParent)
-        import scala.jdk.CollectionConverters._
+        Files.createDirectories(path.getParent)
         // stage to a temp sibling and ATOMIC_MOVE into place: a crash
         // mid-write leaves only the temp file, never a half codebook at
-        // the validated path (same guarantee the table log's manifest
-        // publish rides)
-        val tmp = java.nio.file.Files.createTempFile(
-          path.getParent, s"km_codebook_$variant", ".tmp")
-        java.nio.file.Files.write(tmp,
-          (s"# fp=$fp" +:
-            cent.map { case (m, c, d, v) => s"$m\t$c\t$d\t$v" } :+
-            s"# n=${cent.length}").asJava)
-        java.nio.file.Files.move(tmp, path,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        // the validated path (the table log's manifest publish guarantee)
+        val tmp = Files.createTempFile(path.getParent, "codebook", ".tmp")
+        Files.write(tmp, (cent.map { case (m, c, d, v) => s"$m\t$c\t$d\t$v" } :+
+          s"# n=${cent.length}").asJava)
+        Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE,
+          StandardCopyOption.REPLACE_EXISTING)
+        Stamp.write(dir, fp)
         cent
       }
     })
   }
 
   /** Test hook: drop the in-JVM memo (disk artifacts stay and re-validate
-    * by fingerprint). */
+    * by stamp). */
   private[graft] def clearCodebookMemo(): Unit = kmMemo.clear()
 
-  /** Full-width integer Lloyd over the corpus embeddings — the pqTrain
-    * conventions verbatim (init = vectors `vec_id < K`, exact BIGINT
-    * distances via the compiled `pq_encode` argmin at M=1, update =
-    * trunc(double(sum)/count) per dimension, empty clusters keep their
-    * previous centroid), emitted as (m=0, c, d, cent) so the PQ codebook
-    * plumbing ([[Similarity.codebookDf]]) is reused as-is. Per
-    * iteration: one compiled-argmin projection pass + one posexplode
-    * partial-agg rollup (the ONLY exchange, K·dim-bounded after map-side
-    * combine) — no per-vector join anywhere. Memoized via
-    * [[ensureCodebook]]: the whole l29–l31 family shares one fit. */
+  /** The l29–l31 family's shared fit: [[kmeans]] over the corpus,
+    * memoized via [[ensureCodebook]]. Emitted as (m=0, c, d, cent), so the
+    * PQ codebook plumbing ([[Similarity.codebookDf]]) applies as-is. */
   private[graft] def kmTrain(spark: SparkSession, sfDir: String): Seq[(Int, Int, Int, Long)] =
-    ensureCodebook(spark, sfDir, "base")(kmTrainFrom(Tables.embeddings(spark, sfDir)))
-
-  /** [[kmTrain]] over any `(vec_id, embedding)` frame — the training
-    * corpus is the parameter (streaming.Streams fits on the historical
-    * stratum and assigns the live stream against the frozen codebook). */
-  private[graft] def kmTrainFrom(emb: DataFrame): Seq[(Int, Int, Int, Long)] = {
-    val spark = emb.sparkSession
-    graft.plans.Native.install(spark)
-    import spark.implicits._
-    val vecs = emb.select($"vec_id", qvec.as("qv")).persist()
-    try {
-      var cent: Seq[(Int, Int, Int, Long)] = vecs.filter($"vec_id" < KM_K)
-        .select($"vec_id", posexplode($"qv").as(Seq("d", "q")))
-        .collect()
-        .map(r => (0, r.getLong(0).toInt, r.getInt(1), r.getLong(2))).toSeq
-      for (_ <- 1 to KM_ITERS) {
-        val updated = vecs.crossJoin(broadcast(codebookDf(spark, cent)))
-          .select(expr("element_at(pq_encode(qv, cb), 1)").as("c"),
-            posexplode($"qv").as(Seq("d", "q")))
-          .groupBy($"c", $"d")
-          .agg(expr("CAST(CAST(CAST(sum(q) AS BIGINT) AS DOUBLE) / count(*) AS BIGINT)")
-            .as("cent"))
-          .collect()
-          .map(r => (0, r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
-        cent = cent.map { case (m, c, d, old) =>
-          (m, c, d, updated.getOrElse((m, c, d), old))
-        }
-      }
-      cent
-    } finally { vecs.unpersist(false); () }
-  }
+    ensureCodebook(spark, sfDir, "base")(kmeans(Tables.embeddings(spark, sfDir)))
 
   /** (vec_id, cluster, dist): assignment under a trained codebook plus
     * the EXACT BIGINT squared distance to the assigned centroid, as one
@@ -332,50 +353,14 @@ object Clustering {
     * volume per cluster stays ~this², independent of corpus size. */
   val KM_TARGET_CLUSTER = 512L
 
-  /** Lloyd at width `k` on a deterministic hash-sample — the
-    * [[Similarity.pqTrainSized]] conventions at M=1 full width: init =
-    * the first k sample vectors, assignment via the compiled encode,
-    * trunc(sum/count) update, empty clusters keep their previous
-    * centroid. The codebook is O(K·dim) driver state (~0.5 MB at
-    * K=1024); per iteration one compiled-argmin pass + one posexplode
-    * rollup over the SAMPLE only. */
-  private[graft] def kmTrainSized(spark: SparkSession, sfDir: String, k: Int,
+  /** [[kmeans]] at width `k` on the [[hashSample]] of the `n`-vector
+    * corpus, memoized per (k, sample size). The codebook is O(K·dim)
+    * driver state (~0.5 MB at K=1024); each iteration touches the SAMPLE
+    * only. */
+  private[graft] def kmTrainSized(spark: SparkSession, sfDir: String, n: Long, k: Int,
       sampleVecs: Long = Similarity.PQ_TRAIN_VECS): Seq[(Int, Int, Int, Long)] =
     ensureCodebook(spark, sfDir, s"sized_k${k}_s$sampleVecs")(
-      kmTrainSizedUncached(spark, sfDir, k, sampleVecs))
-
-  private def kmTrainSizedUncached(spark: SparkSession, sfDir: String, k: Int,
-      sampleVecs: Long): Seq[(Int, Int, Int, Long)] = {
-    graft.plans.Native.install(spark)
-    import spark.implicits._
-    val emb = Tables.embeddings(spark, sfDir)
-    val n = emb.count()
-    val mod = math.max(1L, n / sampleVecs)
-    val sample = emb.filter(pmod(xxhash64($"vec_id"), lit(mod)) === 0)
-      .select($"vec_id", qvec.as("qv")).persist()
-    try {
-      var cent: Seq[(Int, Int, Int, Long)] = sample.orderBy($"vec_id").limit(k)
-        .select($"vec_id", posexplode($"qv").as(Seq("d", "q")))
-        .withColumn("rk", dense_rank().over(
-          org.apache.spark.sql.expressions.Window.orderBy($"vec_id")))
-        .select(($"rk" - 1).cast("int").as("c"), $"d", $"q")
-        .collect().map(r => (0, r.getInt(0), r.getInt(1), r.getLong(2))).toSeq
-      for (_ <- 1 to KM_ITERS) {
-        val updated = sample.crossJoin(broadcast(codebookDf(spark, cent)))
-          .select(expr("element_at(pq_encode(qv, cb), 1)").as("c"),
-            posexplode($"qv").as(Seq("d", "q")))
-          .groupBy($"c", $"d")
-          .agg(expr("CAST(CAST(CAST(sum(q) AS BIGINT) AS DOUBLE) / count(*) AS BIGINT)")
-            .as("cent"))
-          .collect()
-          .map(r => (0, r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
-        cent = cent.map { case (m, c, d, old) =>
-          (m, c, d, updated.getOrElse((m, c, d), old))
-        }
-      }
-      cent
-    } finally { sample.unpersist(false); () }
-  }
+      kmeans(hashSample(Tables.embeddings(spark, sfDir), n, sampleVecs), k))
 
   /** L31 at the production cluster count (BenchHeavy's `l31_sized`):
     * K = max(8, N/[[KM_TARGET_CLUSTER]]) clusters from a sampled Lloyd
@@ -388,6 +373,6 @@ object Clustering {
     val emb = Tables.embeddings(spark, sfDir)
     val n = emb.count()
     val k = math.max(KM_K, (n / KM_TARGET_CLUSTER).toInt)
-    semDedupFrom(assignFull(emb, kmTrainSized(spark, sfDir, k)))
+    semDedupFrom(assignFull(emb, kmTrainSized(spark, sfDir, n, k)))
   }
 }

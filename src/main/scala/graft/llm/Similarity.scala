@@ -29,7 +29,7 @@ object Similarity {
 
   /** Same fold for non-float arrays (IVF centroids are double): composed
     * built-ins, same left-to-right order, bit-equal results. */
-  private[llm] def dotD(a: String, b: String): String =
+  private def dotD(a: String, b: String): String =
     s"aggregate(zip_with($a, $b, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), " +
       s"CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
 
@@ -38,12 +38,8 @@ object Similarity {
     graft.plans.Native.install(spark)
     import spark.implicits._
     val emb = Tables.embeddings(spark, sfDir)
-    // query norm computed once in the broadcast frame, not per scanned row
-    val q = emb.filter($"vec_id" === 0)
-      .select($"embedding".as("q_emb"))
-      .withColumn("norm_q", sqrt(expr(dot("q_emb", "q_emb"))))
     emb.filter($"vec_id" =!= 0)
-      .crossJoin(broadcast(q))
+      .crossJoin(broadcast(queryRow(emb, 0L)))
       .withColumn("dot", expr(dot("embedding", "q_emb")))
       .withColumn("norm_a", sqrt(expr(dot("embedding", "embedding"))))
       .select($"vec_id", ($"dot" / ($"norm_a" * $"norm_q")).as("cosine"))
@@ -459,11 +455,8 @@ object Similarity {
       .limit(SHORTLIST)
       .select($"vec_id")
     val emb = Tables.embeddings(spark, sfDir)
-    val q = emb.filter($"vec_id" === 0)
-      .select($"embedding".as("q_emb"))
-      .withColumn("norm_q", sqrt(expr(dot("q_emb", "q_emb"))))
     emb.join(broadcast(shortlist), "vec_id")
-      .crossJoin(broadcast(q))
+      .crossJoin(broadcast(queryRow(emb, 0L)))
       .withColumn("dot", expr(dot("embedding", "q_emb")))
       .withColumn("norm_a", sqrt(expr(dot("embedding", "embedding"))))
       .select($"vec_id", ($"dot" / ($"norm_a" * $"norm_q")).as("cosine"))
@@ -489,35 +482,20 @@ object Similarity {
     ivfTopk(spark, sfDir, nProbe = 2)
 
   /** IVF top-10 for query vec_id=0 probing the `nProbe` nearest
-    * centroids. */
+    * centroids. Centroid components are an exact decimal sum -> double
+    * divide; the aggregate is corpus-wide but its RESULT is K·dim rows
+    * that only change when the source does — so it is built once into the
+    * stamped index dir (AnnIndex.ensureIvfCentroids) and every l3c/l3f
+    * evaluation replays the persisted components bit-exactly (the double
+    * parquet roundtrip is lossless). */
   def ivfTopk(spark: SparkSession, sfDir: String, nProbe: Int): DataFrame = {
     require(nProbe >= 1, s"nProbe out of range: $nProbe")
     graft.plans.Native.install(spark)
     import spark.implicits._
     val emb = Tables.embeddings(spark, sfDir)
-    // centroid components: exact decimal sum -> double divide. The
-    // aggregate is corpus-wide but its RESULT is K·dim rows that only
-    // change when the source does — so it is built once into the
-    // fingerprint-stamped index dir (AnnIndex.ensureIvfCentroids, the
-    // ensureCodebook idiom) and every l3c/l3f evaluation replays the
-    // persisted components bit-exactly (double parquet roundtrip is
-    // lossless; reassembly is the same ordered fold as l3f_serve's, so
-    // the probe choice is bit-equal to the inline form's).
     val comps = Tables.readMemo(spark,
       s"${AnnIndex.ensureIvfCentroids(spark, sfDir)}/ivf_centroids")
-    val centroids = comps
-      .groupBy($"label")
-      .agg(expr("transform(array_sort(collect_list(struct(pos, c))), s -> s.c)").as("centroid"))
-    val q = emb.filter($"vec_id" === 0)
-      .select($"embedding".as("q_emb"))
-      .withColumn("norm_q", sqrt(expr(dot("q_emb", "q_emb"))))
-    val nearest = centroids.crossJoin(broadcast(q))
-      .withColumn("cdot", expr(dotD("centroid", "q_emb")))
-      .withColumn("cnorm", sqrt(expr(dotD("centroid", "centroid"))))
-      .withColumn("csim", $"cdot" / ($"cnorm" * $"norm_q"))
-      .orderBy($"csim".desc, $"label")
-      .limit(nProbe)
-      .select($"label".as("probe_label"), $"q_emb", $"norm_q")
+    val nearest = probeLists(comps, queryRow(emb, 0L), nProbe)
     emb.join(broadcast(nearest), $"label" === $"probe_label")
       .filter($"vec_id" =!= 0)
       .withColumn("dot", expr(dot("embedding", "q_emb")))
@@ -525,6 +503,31 @@ object Similarity {
       .select($"vec_id", $"probe_label", ($"dot" / ($"norm_a" * $"norm_q")).as("cosine"))
       .orderBy($"cosine".desc, $"vec_id")
       .limit(10)
+  }
+
+  /** The one-row query frame (q_emb, norm_q) for vector `id` of `emb`:
+    * the query norm is computed once here, not per scanned row. */
+  private[llm] def queryRow(emb: DataFrame, id: Long): DataFrame =
+    emb.filter(col("vec_id") === id)
+      .select(col("embedding").as("q_emb"))
+      .withColumn("norm_q", sqrt(expr(dot("q_emb", "q_emb"))))
+
+  /** The IVF coarse-quantizer probe: the per-label centroids reassembled
+    * from their components (`comps`: label, pos, c — the
+    * AnnIndex.ensureIvfCentroids artifact) in pos order, ranked by cosine
+    * to the one-row query frame `q` ([[queryRow]]; sequential double folds,
+    * so every caller picks bit-equal lists), ties to the lowest label.
+    * Returns the top `nProbe` as `probe_label`, q's columns riding along. */
+  private[llm] def probeLists(comps: DataFrame, q: DataFrame, nProbe: Int): DataFrame = {
+    val centroids = comps
+      .groupBy(col("label"))
+      .agg(expr("transform(array_sort(collect_list(struct(pos, c))), s -> s.c)").as("centroid"))
+    centroids.crossJoin(broadcast(q))
+      .withColumn("csim", expr(dotD("centroid", "q_emb")) /
+        (sqrt(expr(dotD("centroid", "centroid"))) * col("norm_q")))
+      .orderBy(col("csim").desc, col("label"))
+      .limit(nProbe)
+      .select((col("label").as("probe_label") +: q.columns.toSeq.map(col)): _*)
   }
 
   // ---------------------------------------------------------------------
@@ -552,284 +555,41 @@ object Similarity {
   /** Query vector for [[l3mPqTopk]]. */
   val PQ_QUERY_ID = 0L
 
-  /** (vec_id, m, d, qv): the quantized per-dimension frame every PQ stage
-    * runs on — subspace m, in-subspace dim d, BIGINT micro value. */
-  private[graft] def pqDims(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    Tables.embeddings(spark, sfDir)
-      .select($"vec_id", posexplode($"embedding"))
-      .toDF("vec_id", "pos", "x")
-      .select($"vec_id",
-        // div returns BIGINT in Spark SQL; the driver-side codebook reads
-        // (m, c, d) as ints, so pin the narrow types here
-        expr(s"CAST(pos div $PQ_SUB AS INT)").as("m"),
-        expr(s"CAST(pos % $PQ_SUB AS INT)").as("d"),
-        expr(s"CAST(CAST(x AS DOUBLE) * $PQ_SCALE AS BIGINT)").as("qv"))
-  }
+  /** Micro-fixed-point quantized vector: one BIGINT per dimension, the
+    * PQ_SCALE truncating cast. */
+  private[graft] def qvec = expr(
+    s"transform(embedding, x -> CAST(CAST(x AS DOUBLE) * $PQ_SCALE AS BIGINT))")
 
-  /** Lloyd's k-means per subspace over the quantized dims, fully
-    * deterministic: init = the subvectors of vec_id < PQ_K; assignment =
-    * exact BIGINT squared distance, ties to the lowest centroid id;
-    * update = trunc(double(sum)/count) per dimension (identical bits in
-    * both engines — sums stay far under 2^53), empty clusters keep their
-    * previous centroid. The codebook (M×K×SUB = 1024 rows, independent of
-    * corpus size) is the loop-carried driver state — the sanctioned
-    * fixpoint pattern (l21's argmax, l2e's labels), collected and
-    * re-broadcast per iteration so plan depth stays constant. */
+  /** The demonstration PQ codebook: [[Clustering.lloyd]] per PQ_SUB-dim
+    * subspace over the whole corpus, K = PQ_K — the training l3l emits
+    * and the oracle replays as unrolled CTEs. */
   private[graft] def pqTrain(spark: SparkSession, sfDir: String): Seq[(Int, Int, Int, Long)] = {
     import spark.implicits._
-    val dims = pqDims(spark, sfDir).persist()
-    try {
-      var cent: Seq[(Int, Int, Int, Long)] = dims.filter($"vec_id" < PQ_K)
-        .select($"m", $"vec_id".cast("int").as("c"), $"d", $"qv").collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getLong(3))).toSeq
-      for (_ <- 1 to PQ_ITERS) {
-        val codes = pqAssign(dims, cent)
-        val updated = codes.join(dims, Seq("vec_id", "m"))
-          .groupBy($"m", $"c", $"d")
-          .agg(expr("CAST(CAST(CAST(sum(qv) AS BIGINT) AS DOUBLE) / count(*) AS BIGINT)")
-            .as("cent"))
-          .collect()
-          .map(r => (r.getInt(0), r.getInt(1), r.getInt(2)) -> r.getLong(3)).toMap
-        cent = cent.map { case (m, c, d, old) =>
-          (m, c, d, updated.getOrElse((m, c, d), old))
-        }
-      }
-      cent
-    } finally { dims.unpersist(false); () }
+    Clustering.lloyd(Tables.embeddings(spark, sfDir).select($"vec_id", qvec.as("qv")),
+      PQ_SUB, PQ_K, PQ_ITERS)
   }
 
-  /** Nearest-centroid assignment: (vec_id, m, c) for every subvector —
-    * broadcast codebook join, exact BIGINT distances, min(struct) ties to
-    * the lowest centroid id. */
-  private[graft] def pqAssign(dims: DataFrame, cent: Seq[(Int, Int, Int, Long)]): DataFrame = {
-    val spark = dims.sparkSession
-    import spark.implicits._
-    dims.join(broadcast(cent.toDF("m", "c", "d", "cent")), Seq("m", "d"))
-      .groupBy($"vec_id", $"m", $"c")
-      .agg(sum(($"qv" - $"cent") * ($"qv" - $"cent")).as("dist"))
-      .groupBy($"vec_id", $"m")
-      .agg(min(struct($"dist", $"c")).as("best"))
-      .select($"vec_id", $"m", $"best.c".as("c"))
-  }
-
-  /** [[pqTrain]]'s fixpoint as ONE compiled plan: the codebook stays a
-    * (M·K·SUB = 1024-row) DataFrame between iterations instead of a
-    * collect + re-broadcast round trip, so the whole PQ_ITERS-deep Lloyd
-    * chain runs as a single action — identical arithmetic, identical
-    * result (PqSpec pins plan ≡ collect bit-for-bit). Loop-carried
-    * DRIVER state is only warranted when plan depth would grow without
-    * bound (l2e's fixpoint, l21's 40-step argmax); PQ_ITERS is a
-    * compile-time 2, and the r14 l3l row spent most of its 2.1s on the
-    * per-iteration job boundaries, not on its 2k-vector corpus. The
-    * chained plan re-inlines `dims` ~10x by design: ten pruned scans of
-    * one parquet inside ONE job beat four jobs with a persist (and a
-    * cache entry the declared-query contract has no place to release);
-    * at production scale the train input is a bounded sample
-    * (pqTrainSized), so the re-inline never multiplies a corpus scan. */
-  private[graft] def pqTrainPlan(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    // r18 exchange-shrink (guide §2.3): the d-explosion never crosses a
-    // wire. pqDims' per-dimension rows made every iteration shuffle
-    // nvec·M·K (vec, m, c, dist) partials AND shuffle-join the codes back
-    // onto nvec·M·SUB dim rows — l3l carried the suite's largest exchange
-    // (52 MB at sf0.1). Here each (vec, m) SUBVECTOR rides as one BIGINT
-    // array: distances unroll to PQ_SUB codegen'd terms against the
-    // broadcast codebook arrays, the argmin packs (dist, c) into ONE long
-    // (dist·PACK + c — exact lexicographic order while c < PACK and dist
-    // stays under its documented 2^53 envelope), so every aggregate is a
-    // plain HashAggregate with map-side partials and the only corpus-scale
-    // exchange carries nvec·M rows. The update re-derives (m, c, d, qv)
-    // by posexploding the winner's own array — no join back to the dims.
-    // Arithmetic is bit-identical to pqTrain (PqSpec pins it): same
-    // BIGINT squared distances (a null/ragged tail term contributes 0,
-    // exactly the null-skipping sum), same trunc(sum/count) update, same
-    // lowest-c tie break, empty clusters keep their previous centroid.
-    val subq = s"transform(slice(embedding, m * $PQ_SUB + 1, $PQ_SUB)," +
-      s" x -> CAST(CAST(x AS DOUBLE) * $PQ_SCALE AS BIGINT))"
-    val dims = Tables.embeddings(spark, sfDir)
-      .filter(size($"embedding") >= 1)
-      .select($"vec_id", posexplode(expr(
-        s"transform(sequence(0, CAST((size(embedding) + ${PQ_SUB - 1}) div $PQ_SUB AS INT) - 1), m -> $subq)")))
-      .toDF("vec_id", "m", "qvs")
-      .select($"vec_id", $"m".cast("int").as("m"), $"qvs")
-    val init = dims.filter($"vec_id" < PQ_K)
-      .select($"m", $"vec_id".cast("int").as("c"), $"qvs".as("cents"))
-    // dist·PACK + c: PACK is the smallest power of two above the centroid
-    // ids, so the packed min IS the (dist, c) lexicographic min
-    val pack = java.lang.Long.highestOneBit(math.max(PQ_K - 1, 1).toLong) * 2L
-    val dist = (1 to PQ_SUB).map { i =>
-      val diff = try_element_at($"qvs", lit(i)) - try_element_at($"cents", lit(i))
-      coalesce(diff * diff, lit(0L))
-    }.reduce(_ + _)
-    (1 to PQ_ITERS).foldLeft(init) { (cent, _) =>
-      val best = dims.join(broadcast(cent), Seq("m"))
-        // qvs is functionally dependent on (vec_id, m); grouping BY it
-        // (instead of aggregating it) keeps the argmin a HashAggregate —
-        // a min over an array-typed value would fall back to SortAggregate
-        .groupBy($"vec_id", $"m", $"qvs")
-        .agg(min(dist * pack + $"c").as("bp"))
-        .select($"m", ($"bp" % pack).cast("int").as("c"), $"qvs")
-      val updated = best
-        .select($"m", $"c", posexplode($"qvs").as(Seq("d", "qv")))
-        .groupBy($"m", $"c", $"d")
-        .agg(expr("CAST(CAST(CAST(sum(qv) AS BIGINT) AS DOUBLE) / count(*) AS BIGINT)")
-          .as("u"))
-      // empty clusters keep their previous centroid (the collect path's
-      // getOrElse), expressed as a left join + coalesce; the codebook is
-      // O(M·K·SUB) rows, so the regroup to arrays is metadata-sized
-      cent.select($"m", $"c", posexplode($"cents").as(Seq("d", "cent")))
-        .join(updated, Seq("m", "c", "d"), "left")
-        .groupBy($"m", $"c")
-        .agg(array_sort(collect_list(struct($"d",
-          coalesce($"u", $"cent").as("cent")))).as("ps"))
-        .select($"m", $"c", expr("transform(ps, p -> p.cent)").as("cents"))
-    }
-      .select($"m", $"c", posexplode($"cents").as(Seq("d", "cent")))
-  }
+  /** [[pqTrain]] through the fitted-codebook memo ([[Clustering.ensureCodebook]]):
+    * the declared l3m/l3n and the IVF-PQ index replay the stamped fit
+    * instead of re-running Lloyd per evaluation — production trains once
+    * and encodes forever. */
+  private[graft] def pqCodebook(spark: SparkSession, sfDir: String): Seq[(Int, Int, Int, Long)] =
+    Clustering.ensureCodebook(spark, sfDir, "pq")(pqTrain(spark, sfDir))
 
   /** L3l [EXT]: train the PQ codebook — emits (m, c, d, cent), the full
     * learned table, so the oracle (the same Lloyd iterations unrolled as
     * CTEs, the l21 idiom) checks the TRAINING hash-exactly, not just a
-    * downstream search. Scale: the corpus-size-dependent work is two
-    * broadcast-join + partial-agg passes per iteration; the codebook is
-    * O(M·K·SUB) rows regardless of corpus, so 100 TB changes the scan
-    * cost, never the loop state. In production the codebook trains once
-    * on a sample and encodes everything (AnnIndex's build/serve split
-    * applies verbatim). Runs the single-plan chain ([[pqTrainPlan]]) —
-    * the learn is still inline and oracle-checked; it just compiles to
-    * one job instead of one per Lloyd step. */
+    * downstream search. The fit runs inline on every evaluation — checking
+    * the learn is this row's point. Scale: the corpus-size-dependent work
+    * is one compiled-argmin pass plus a partial-agg rollup per iteration;
+    * the codebook is O(M·K·SUB) rows regardless of corpus, so 100 TB
+    * changes the scan cost, never the loop state. */
   def l3lPqTrain(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    pqTrainPlan(spark, sfDir).orderBy($"m", $"c", $"d")
+    // already (m, c, d)-ordered: a Sort over the local rows would cost a
+    // range-partitioning round of jobs for nothing
+    pqTrain(spark, sfDir).toDF("m", "c", "d", "cent")
   }
-
-  /** L3m [EXT]: asymmetric-distance top-k over PQ codes — every vector
-    * collapses to M 4-bit codes; the query stays full-precision and its
-    * distance to a vector is the sum over subspaces of the exact squared
-    * distance to the CENTROID the vector's code names. One exchange
-    * (the per-vector partial-agg rollup), codebook and query broadcast;
-    * at 100 TB the scan reads M bytes per vector instead of the raw
-    * embedding — the 16-64x read shrink that makes billion-scale ANN
-    * memory-resident. Exactness of the arithmetic (not of the ANN
-    * answer — ADC is an approximation by design) makes the whole path
-    * oracle-able. */
-  def l3mPqTopk(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    // replay the fingerprint-stamped codebook (AnnIndex.ensurePqCodebook,
-    // the l3f ensureIvfCentroids idiom): the training fixpoint is a
-    // deterministic function of the corpus, so the declared query reads
-    // its persisted result hash-exactly instead of re-running Lloyd per
-    // evaluation — production trains once and encodes forever
-    val cent = AnnIndex.ensurePqCodebook(spark, sfDir)
-    val dims = pqDims(spark, sfDir)
-    val codes = pqAssign(dims, cent)
-    val qry = dims.filter($"vec_id" === PQ_QUERY_ID)
-      .select($"m", $"d", $"qv".as("q_qv"))
-    codes.join(broadcast(cent.toDF("m", "c", "d", "cent")), Seq("m", "c"))
-      .join(broadcast(qry), Seq("m", "d"))
-      .groupBy($"vec_id")
-      .agg(sum(($"q_qv" - $"cent") * ($"q_qv" - $"cent")).as("adc_dist"))
-      .orderBy($"adc_dist".asc, $"vec_id".asc)
-      .limit(10)
-  }
-
-  /** IVF lists probed by the composite index (FAISS IVFPQ default is
-    * nprobe=1; 2 matches l3f so the IVF-only and IVF-PQ answers are
-    * comparable over the same probed subset). */
-  val IVFPQ_PROBE = 2
-
-  /** L3n [EXT]: IVF-PQ composite — the production billion-scale ANN stack
-    * (FAISS `IVFPQ`; Jégou et al. 2011 §V "IVFADC"): a coarse quantizer
-    * routes the query to `IVFPQ_PROBE` inverted lists, and ONLY those
-    * lists' PQ codes are scored by asymmetric distance. The two knobs
-    * compose multiplicatively at 100 TB: IVF scans nProbe/k of the corpus
-    * (the l3c/l3f partition prune) and PQ reads M code bytes per vector
-    * instead of the raw embedding (the l3m shrink), so a 1000-executor
-    * scan touches ~nProbe/k · M/(4·dim) of the raw bytes. Plan shape: the
-    * probe step is query planning — centroid scores collapse to
-    * `IVFPQ_PROBE` label ids on the driver (the FAISS coarse-quantizer
-    * lookup; same sanctioned scalar collect as l21's argmax) and the code
-    * table, which carries the list label exactly so a real index can store
-    * codes list-partitioned, is pruned by an `isin` filter — no join, no
-    * shuffle beyond the per-vector ADC rollup. Training and ADC arithmetic
-    * are the exact BIGINT forms of l3l/l3m, so the whole composite is
-    * oracle-able; the IVF probe reuses l3c's exact-decimal centroid mean.
-    * The query vector is excluded from its own result (the l3c
-    * convention). */
-  def l3nIvfPqTopk(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.plans.Native.install(spark)
-    import spark.implicits._
-    val emb = Tables.embeddings(spark, sfDir)
-    // coarse quantizer: the SAME persisted centroid components l3c/l3f
-    // replay (AnnIndex.ensureIvfCentroids — exact decimal mean -> double,
-    // double parquet roundtrip lossless, probe choice bit-equal to the
-    // inline aggregate this recomputed per evaluation until r14)
-    val comps = Tables.readMemo(spark,
-      s"${AnnIndex.ensureIvfCentroids(spark, sfDir)}/ivf_centroids")
-    val centroids = comps
-      .groupBy($"label")
-      .agg(expr("transform(array_sort(collect_list(struct(pos, c))), s -> s.c)").as("centroid"))
-    val q = emb.filter($"vec_id" === PQ_QUERY_ID)
-      .select($"embedding".as("q_emb"))
-      .withColumn("norm_q", sqrt(expr(dot("q_emb", "q_emb"))))
-    val probeLabels = centroids.crossJoin(broadcast(q))
-      .withColumn("cdot", expr(dotD("centroid", "q_emb")))
-      .withColumn("cnorm", sqrt(expr(dotD("centroid", "centroid"))))
-      .withColumn("csim", $"cdot" / ($"cnorm" * $"norm_q"))
-      .orderBy($"csim".desc, $"label")
-      .limit(IVFPQ_PROBE)
-      .select($"label")
-      .collect().map(_.getInt(0)).toSeq
-    // index artifacts: the replayed codebook (l3m's ensure note) +
-    // list-labeled codes computed inline (the corpus-scan half stays in
-    // the query; l3n_serve is the full artifact form)
-    val cent = AnnIndex.ensurePqCodebook(spark, sfDir)
-    val dims = pqDims(spark, sfDir)
-    val codes = pqAssign(dims, cent)
-      .join(emb.select($"vec_id", $"label"), Seq("vec_id"))
-    val qry = dims.filter($"vec_id" === PQ_QUERY_ID)
-      .select($"m", $"d", $"qv".as("q_qv"))
-    // serve: prune to the probed lists, ADC-score only their codes
-    codes.filter($"label".isin(probeLabels: _*) && $"vec_id" =!= PQ_QUERY_ID)
-      .join(broadcast(cent.toDF("m", "c", "d", "cent")), Seq("m", "c"))
-      .join(broadcast(qry), Seq("m", "d"))
-      .groupBy($"vec_id", $"label")
-      .agg(sum(($"q_qv" - $"cent") * ($"q_qv" - $"cent")).as("adc_dist"))
-      .select($"vec_id", $"label".as("probe_label"), $"adc_dist")
-      .orderBy($"adc_dist".asc, $"vec_id".asc)
-      .limit(10)
-  }
-
-  // ---------------------------------------------------------------------
-  // Production-width PQ (8-bit codes): K=256 per subspace, the width the
-  // l3l notes call out ("production raises K to 256"). The demonstration
-  // path above keeps K=16 so the unrolled DuckDB oracle stays tractable
-  // and the OOV/empty-cluster paths are exercised; this path changes the
-  // two things that break at production width:
-  //  - ASSIGNMENT: pqAssign's broadcast join emits one row per
-  //    (subvector, candidate) — ×256 fan-out ≈ half a billion rows per
-  //    500k vectors. plans.PqEncode does the argmin as one compiled loop
-  //    per vector instead (the FAISS encode shape); at equal K the codes
-  //    are bit-identical (PqSizedSpec).
-  //  - TRAINING DATA: Lloyd fits on a deterministic hash-sample of the
-  //    corpus (FAISS trains on ~O(100·K) points), so training cost is
-  //    bounded by the sample while ENCODE touches every vector once.
-  // Same integer arithmetic end to end (micro-fixed-point, trunc means,
-  // ties to the lowest id): the path is deterministic on any cluster,
-  // benched as l3m_sized/l3n_sized, recall-measured in AnnRecall's
-  // pq256_adc table.
-  // ---------------------------------------------------------------------
-
-  /** Production centroids per subspace — 8-bit codes. */
-  val PQ_K_PROD = 256
-  /** Target Lloyd training-sample size (vectors). */
-  val PQ_TRAIN_VECS = 8192L
-
-  /** Micro-fixed-point quantized vector (the pqDims convention, kept as
-    * one array instead of exploded rows). */
-  private[llm] def qvec = expr(
-    s"transform(embedding, x -> CAST(CAST(x AS DOUBLE) * $PQ_SCALE AS BIGINT))")
 
   /** 1-row codebook frame: cb[m][c][d], from the driver-side table. */
   private[llm] def codebookDf(spark: SparkSession, cent: Seq[(Int, Int, Int, Long)]) = {
@@ -843,55 +603,9 @@ object Similarity {
     Seq(Tuple1(nested)).toDF("cb")
   }
 
-  /** Lloyd at width `k` on a deterministic hash-sample: init = the first
-    * k sample vectors' subvectors, assignment via the compiled encode,
-    * update = trunc(sum/count) per dim, empty clusters keep their
-    * previous centroid (all the pqTrain conventions). The codebook is
-    * O(M·K·SUB) driver state — 16k longs at production width. */
-  private[graft] def pqTrainSized(spark: SparkSession, sfDir: String,
-      k: Int = PQ_K_PROD, sampleVecs: Long = PQ_TRAIN_VECS): Seq[(Int, Int, Int, Long)] = {
-    graft.plans.Native.install(spark)
-    import spark.implicits._
-    val emb = Tables.embeddings(spark, sfDir)
-    val n = emb.count()
-    val mod = math.max(1L, n / sampleVecs)
-    val sample = emb.filter(pmod(xxhash64($"vec_id"), lit(mod)) === 0)
-      .select($"vec_id", qvec.as("qv")).persist()
-    try {
-      val sampleDims = sample
-        .select($"vec_id", posexplode($"qv").as(Seq("pos", "q")))
-        .select($"vec_id",
-          expr(s"CAST(pos div $PQ_SUB AS INT)").as("m"),
-          expr(s"CAST(pos % $PQ_SUB AS INT)").as("d"),
-          $"q".as("dimv"))
-      var cent: Seq[(Int, Int, Int, Long)] = sample
-        .orderBy($"vec_id").limit(k)
-        .select($"vec_id", posexplode($"qv").as(Seq("pos", "q")))
-        .withColumn("rk", dense_rank().over(
-          org.apache.spark.sql.expressions.Window.orderBy($"vec_id")))
-        .select(expr(s"CAST(pos div $PQ_SUB AS INT)").as("m"),
-          ($"rk" - 1).cast("int").as("c"),
-          expr(s"CAST(pos % $PQ_SUB AS INT)").as("d"), $"q")
-        .collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getLong(3))).toSeq
-      for (_ <- 1 to PQ_ITERS) {
-        val codes = sample.crossJoin(broadcast(codebookDf(spark, cent)))
-          .select($"vec_id", posexplode(expr("pq_encode(qv, cb)")).as(Seq("m", "c")))
-          .select($"vec_id", $"m".cast("int").as("m"), $"c")
-        val updated = codes.join(sampleDims, Seq("vec_id", "m"))
-          .groupBy($"m", $"c", $"d")
-          .agg(expr("CAST(CAST(CAST(sum(dimv) AS BIGINT) AS DOUBLE) / count(*) AS BIGINT)")
-            .as("cent"))
-          .collect()
-          .map(r => (r.getInt(0), r.getInt(1), r.getInt(2)) -> r.getLong(3)).toMap
-        cent = cent.map { case (m, c, d, old) =>
-          (m, c, d, updated.getOrElse((m, c, d), old))
-        }
-      }
-      cent
-    } finally { sample.unpersist(false); () }
-  }
-
-  /** Encode every vector in ONE compiled pass: (vec_id, label, codes). */
+  /** Encode every vector in ONE compiled pass: (vec_id, label, codes) —
+    * the native `pq_encode` argmin per subspace against the 1-row
+    * codebook broadcast, the FAISS encode shape (no per-candidate rows). */
   private[graft] def pqEncodeAll(spark: SparkSession, sfDir: String,
       cent: Seq[(Int, Int, Int, Long)]): DataFrame = {
     graft.plans.Native.install(spark)
@@ -922,58 +636,119 @@ object Similarity {
     .map(i => expr(s"element_at(element_at(lut, ${i + 1}), element_at(codes, ${i + 1}) + 1)"))
     .reduce(_ + _)
 
-  /** L3m at production width (8-bit codes): sampled Lloyd fit, compiled
-    * encode over the full corpus, LUT-probe ADC rollup — one corpus pass
-    * after training, zero per-vector joins. Parameterization of l3m's
-    * oracle-checked semantics (the l3e_sized precedent): no oracle, the
-    * recall deltas live in AnnRecall's pq256 table. */
-  def l3mSizedTopk(spark: SparkSession, sfDir: String): DataFrame = {
+  /** Every vector ADC-scored against the query [[PQ_QUERY_ID]] under
+    * `cent`: (vec_id, label, adc_dist). The query is quantized on the
+    * driver once, its LUT rides the plan as a literal, and the corpus side
+    * is one [[pqEncodeAll]] pass — zero per-vector joins. Integer addition
+    * is order-independent, so the LUT regrouping (d-sums inside the
+    * table, m-sums per row) is bit-equal to the oracle's flat sum. */
+  private def adcScored(spark: SparkSession, sfDir: String,
+      cent: Seq[(Int, Int, Int, Long)]): DataFrame = {
     import spark.implicits._
-    val cent = pqTrainSized(spark, sfDir)
-    val m = cent.map(_._1).max + 1
     val q = Tables.embeddings(spark, sfDir).filter($"vec_id" === PQ_QUERY_ID)
       .select(qvec.as("qv")).collect()(0).getSeq[Long](0)
     pqEncodeAll(spark, sfDir, cent)
       .withColumn("lut", typedLit(adcLut(q, cent)))
-      .select($"vec_id", adcScore(m).as("adc_dist"))
+      .select($"vec_id", $"label", adcScore(cent.map(_._1).max + 1).as("adc_dist"))
+  }
+
+  /** L3m [EXT]: asymmetric-distance top-k over PQ codes — every vector
+    * collapses to M 4-bit codes; the query stays full-precision and its
+    * distance to a vector is the sum over subspaces of the exact squared
+    * distance to the CENTROID the vector's code names. At 100 TB the scan
+    * reads M bytes per vector instead of the raw embedding — the 16-64x
+    * read shrink that makes billion-scale ANN memory-resident. Exactness
+    * of the arithmetic (not of the ANN answer — ADC is an approximation
+    * by design) makes the whole path oracle-able. Reads the memoized
+    * codebook ([[pqCodebook]]). */
+  def l3mPqTopk(spark: SparkSession, sfDir: String): DataFrame =
+    adcTopk(spark, sfDir, pqCodebook(spark, sfDir))
+
+  private def adcTopk(spark: SparkSession, sfDir: String,
+      cent: Seq[(Int, Int, Int, Long)]): DataFrame = {
+    import spark.implicits._
+    adcScored(spark, sfDir, cent)
+      .select($"vec_id", $"adc_dist")
       .orderBy($"adc_dist".asc, $"vec_id".asc)
       .limit(10)
   }
 
-  /** L3n at production width: the l3n composite with the sized codebook —
-    * coarse-quantizer probe prunes to IVFPQ_PROBE lists, compiled encode,
-    * LUT ADC over only the probed lists' codes. */
-  def l3nSizedTopk(spark: SparkSession, sfDir: String): DataFrame = {
+  /** IVF lists probed by the composite index (FAISS IVFPQ default is
+    * nprobe=1; 2 matches l3f so the IVF-only and IVF-PQ answers are
+    * comparable over the same probed subset). */
+  val IVFPQ_PROBE = 2
+
+  /** L3n [EXT]: IVF-PQ composite — the production billion-scale ANN stack
+    * (FAISS `IVFPQ`; Jégou et al. 2011 §V "IVFADC"): a coarse quantizer
+    * routes the query to `IVFPQ_PROBE` inverted lists, and ONLY those
+    * lists' PQ codes are scored by asymmetric distance. The two knobs
+    * compose multiplicatively at 100 TB: IVF scans nProbe/k of the corpus
+    * (the l3c/l3f partition prune) and PQ reads M code bytes per vector
+    * instead of the raw embedding (the l3m shrink), so a 1000-executor
+    * scan touches ~nProbe/k · M/(4·dim) of the raw bytes. Plan shape: the
+    * probe step is query planning — [[probeLists]] collapses to
+    * `IVFPQ_PROBE` label ids on the driver (the FAISS coarse-quantizer
+    * lookup; same sanctioned scalar collect as l21's argmax) and the
+    * scored codes, which carry the list label exactly so a real index can
+    * store codes list-partitioned, are pruned by an `isin` filter — no
+    * join, no shuffle. Training and ADC arithmetic are l3l/l3m's, so the
+    * whole composite is oracle-able. The query vector is excluded from
+    * its own result (the l3c convention). */
+  def l3nIvfPqTopk(spark: SparkSession, sfDir: String): DataFrame =
+    ivfAdcTopk(spark, sfDir, pqCodebook(spark, sfDir))
+
+  private def ivfAdcTopk(spark: SparkSession, sfDir: String,
+      cent: Seq[(Int, Int, Int, Long)]): DataFrame = {
     graft.plans.Native.install(spark)
     import spark.implicits._
-    val emb = Tables.embeddings(spark, sfDir)
-    val comps = emb
-      .select($"label", posexplode($"embedding").as(Seq("pos", "v")))
-      .groupBy($"label", $"pos")
-      .agg((sum($"v".cast("decimal(20,10)")).cast("double") / count(lit(1))).as("c"))
-    val centroids = comps
-      .groupBy($"label")
-      .agg(expr("transform(array_sort(collect_list(struct(pos, c))), s -> s.c)").as("centroid"))
-    val qrow = emb.filter($"vec_id" === PQ_QUERY_ID)
-      .select($"embedding".as("q_emb"))
-      .withColumn("norm_q", sqrt(expr(dot("q_emb", "q_emb"))))
-    val probeLabels = centroids.crossJoin(broadcast(qrow))
-      .withColumn("cdot", expr(dotD("centroid", "q_emb")))
-      .withColumn("cnorm", sqrt(expr(dotD("centroid", "centroid"))))
-      .withColumn("csim", $"cdot" / ($"cnorm" * $"norm_q"))
-      .orderBy($"csim".desc, $"label")
-      .limit(IVFPQ_PROBE)
-      .select($"label")
+    val comps = Tables.readMemo(spark,
+      s"${AnnIndex.ensureIvfCentroids(spark, sfDir)}/ivf_centroids")
+    val probes = probeLists(comps,
+      queryRow(Tables.embeddings(spark, sfDir), PQ_QUERY_ID), IVFPQ_PROBE)
       .collect().map(_.getInt(0)).toSeq
-    val cent = pqTrainSized(spark, sfDir)
-    val m = cent.map(_._1).max + 1
-    val q = emb.filter($"vec_id" === PQ_QUERY_ID)
-      .select(qvec.as("qv")).collect()(0).getSeq[Long](0)
-    pqEncodeAll(spark, sfDir, cent)
-      .filter($"label".isin(probeLabels: _*) && $"vec_id" =!= PQ_QUERY_ID)
-      .withColumn("lut", typedLit(adcLut(q, cent)))
-      .select($"vec_id", $"label".as("probe_label"), adcScore(m).as("adc_dist"))
+    adcScored(spark, sfDir, cent)
+      .filter($"label".isin(probes: _*) && $"vec_id" =!= PQ_QUERY_ID)
+      .select($"vec_id", $"label".as("probe_label"), $"adc_dist")
       .orderBy($"adc_dist".asc, $"vec_id".asc)
       .limit(10)
   }
+
+  // ---------------------------------------------------------------------
+  // Production-width PQ (8-bit codes): K=256 per subspace, the width the
+  // l3l notes call out ("production raises K to 256"). The demonstration
+  // rows above keep K=16 so the unrolled DuckDB oracle stays tractable;
+  // at production width the same fit ([[Clustering.lloyd]]) runs on a
+  // deterministic hash-sample of the corpus ([[Clustering.hashSample]]),
+  // so training cost is bounded by the sample while the encode touches
+  // every vector once. Assignment is the one `pq_encode` kernel at every
+  // width — a compiled argmin per vector, never a row per (subvector,
+  // candidate). Same integer arithmetic end to end: benched as
+  // l3m_sized/l3n_sized, recall-measured in AnnRecall's pq256_adc table.
+  // ---------------------------------------------------------------------
+
+  /** Production centroids per subspace — 8-bit codes. */
+  val PQ_K_PROD = 256
+  /** Target Lloyd training-sample size (vectors). */
+  val PQ_TRAIN_VECS = 8192L
+
+  /** [[pqTrain]] at width `k` on the corpus's hash-sample of about
+    * `sampleVecs` vectors. */
+  private[graft] def pqTrainSized(spark: SparkSession, sfDir: String,
+      k: Int = PQ_K_PROD, sampleVecs: Long = PQ_TRAIN_VECS): Seq[(Int, Int, Int, Long)] = {
+    import spark.implicits._
+    val emb = Tables.embeddings(spark, sfDir)
+    Clustering.lloyd(Clustering.hashSample(emb, emb.count(), sampleVecs)
+      .select($"vec_id", qvec.as("qv")), PQ_SUB, k, PQ_ITERS)
+  }
+
+  /** L3m at production width (8-bit codes): l3m's body over a sampled fit
+    * at K=256. Parameterization of l3m's oracle-checked semantics (the
+    * l3e_sized precedent): no oracle, the recall deltas live in
+    * AnnRecall's pq256 table. */
+  def l3mSizedTopk(spark: SparkSession, sfDir: String): DataFrame =
+    adcTopk(spark, sfDir, pqTrainSized(spark, sfDir))
+
+  /** L3n at production width: l3n's body over the K=256 sampled fit. */
+  def l3nSizedTopk(spark: SparkSession, sfDir: String): DataFrame =
+    ivfAdcTopk(spark, sfDir, pqTrainSized(spark, sfDir))
 }

@@ -538,8 +538,9 @@ object TextAnalysis {
     bpeLearn(Tables.documents(spark, sfDir), BPE_MERGES)
 
   /** The learned merge table as a fingerprint-stamped artifact — the
-    * ensurePqCodebook idiom for BPE: [[bpeLearn]] is a deterministic
-    * function of the documents table (exact counts, total tie order), and
+    * fitted-codebook memo idiom (Clustering.ensureCodebook) for BPE:
+    * [[bpeLearn]] is a deterministic function of the documents table
+    * (exact counts, total tie order), and
     * its per-rank driver fixpoint costs BPE_MERGES jobs, so the APPLY
     * side ([[l22BpeTokenize]]) replays the persisted table instead of
     * re-learning per evaluation — a production tokenizer trains once and

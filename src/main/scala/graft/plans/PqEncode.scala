@@ -12,17 +12,17 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * subspace codes (`ARRAY<INT>`) under a codebook
   * (`ARRAY<ARRAY<ARRAY<BIGINT>>>`, M × K × SUB).
   *
-  * This is the production-width (K=256, 8-bit codes) answer to the
-  * fan-out the demonstration path tolerates: `Similarity.pqAssign`
-  * assigns by a broadcast join that materializes one ROW per
-  * (subvector, candidate centroid) — ×16 at the fixture's K=16, but
-  * ×256 at production width that join emits half a BILLION intermediate
-  * rows per 500k vectors. Here the argmin over K centroids is one
-  * compiled loop per vector (M·K·SUB integer multiply-adds, no rows),
-  * the codebook riding a 1-row broadcast beside the scan — the FAISS
-  * encode shape. Arithmetic is the exact BIGINT squared distance of
-  * pqAssign with ties to the lowest centroid id, so at equal K the two
-  * paths emit identical codes (PqSizedSpec proves it at K=16).
+  * The engine's one PQ/k-means assigner: every Lloyd fit
+  * (`Clustering.lloyd`), every code consumer (l3m/l3n, the IVF-PQ index,
+  * the recall tools) and the clustering assignment encode through it. The
+  * argmin over K centroids is one compiled loop per vector (M·K·SUB
+  * integer multiply-adds, no rows), the codebook riding a 1-row broadcast
+  * beside the scan — the FAISS encode shape, where a broadcast join would
+  * materialize one ROW per (subvector, candidate centroid): ×256 at
+  * production width, half a BILLION intermediate rows per 500k vectors.
+  * Arithmetic is the exact BIGINT squared distance with ties to the
+  * lowest centroid id — the oracle's `ROW_NUMBER() OVER (ORDER BY dist,
+  * c)` rule, so the DuckDB replay picks identical codes.
   *
   * SUB is derived as qvec.length / M; a vector whose length is not
   * M·SUB yields NULL (ragged input), as does any null element. */
@@ -66,8 +66,8 @@ case class PqEncode(left: Expression, right: Expression)
 object PqEncode {
 
   /** Compiled argmin per subspace: exact BIGINT squared distances, ties
-    * to the lowest centroid id (the pqAssign `min(struct(dist, c))`
-    * convention). Returns null on ragged/null input. */
+    * to the lowest centroid id (strict `<` over ascending c). Returns null
+    * on ragged/null input. */
   def evalEncode(vec: ArrayData, cb: ArrayData): ArrayData = {
     val m = cb.numElements()
     if (m == 0) return new GenericArrayData(Array.empty[Int])

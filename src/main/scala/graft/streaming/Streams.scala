@@ -469,7 +469,7 @@ object Streams {
     val spark = emb.sparkSession
     import spark.implicits._
     val cut = emb.agg(expr("max(vec_id) * 4 div 5")).head().getLong(0)
-    def fit = graft.llm.Clustering.kmTrainFrom(emb.filter($"vec_id" < cut))
+    def fit = graft.llm.Clustering.kmeans(emb.filter($"vec_id" < cut))
     // the nightly re-fit is session state, not per-query work: when the
     // frame is a fingerprintable source, the frozen codebook rides the
     // l29 memo (variant "hist45" = the 4/5 historical stratum)

@@ -137,52 +137,37 @@ object AnnRecall {
     // a deployment would re-rank (l3j's pattern): a true top-K neighbor is
     // recovered iff its ADC rank (asymmetric distance to the centroid its
     // code names) lands within R. The classic lookup-table form: per-query
-    // sub-distance LUT (queries × M × K rows), broadcast onto the code
-    // scan — exactly the shape l3mPqTopk ships, widened to many queries.
-    val pqCent = graft.llm.Similarity.pqTrain(spark, dir)
-    val pqDims = graft.llm.Similarity.pqDims(spark, dir)
-    val pqCodes = graft.llm.Similarity.pqAssign(pqDims, pqCent)
-    val qDims = pqDims.join(broadcast(queries.select($"q_id")), $"vec_id" === $"q_id")
-      .select($"q_id", $"m", $"d", $"qv")
-    val lut = qDims
-      .join(broadcast(pqCent.toDF("m", "c", "d", "cent")), Seq("m", "d"))
-      .groupBy($"q_id", $"m", $"c")
-      .agg(sum(($"qv" - $"cent") * ($"qv" - $"cent")).as("subdist"))
-    val adcRank = pqCodes.join(broadcast(lut), Seq("m", "c"))
-      .groupBy($"q_id", $"vec_id")
-      .agg(sum($"subdist").as("adc"))
-      .filter($"q_id" =!= $"vec_id")
-      .withColumn("prk", row_number().over(
-        Window.partitionBy($"q_id").orderBy($"adc".asc, $"vec_id")))
-      .select($"q_id", $"vec_id", $"prk")
-    // join the (tiny) truth frame back BEFORE collecting — only the true
-    // pairs' ranks ever reach the driver, not the full n-per-query ranking
-    val pqRanks = adcRank.join(truth, Seq("q_id", "vec_id"))
-      .select($"prk").as[Int].collect()
-    val pq = Seq(10, 50, 100, 500).map(s =>
-      s -> pqRanks.count(_ <= s).toDouble / judged.length)
-
+    // sub-distance LUT (queries × M × K rows), broadcast onto the
+    // `pq_encode` code scan — l3m's shape, widened to many queries.
+    val SUB = graft.llm.Similarity.PQ_SUB
+    val qDims = emb.join(broadcast(queries.select($"q_id")), $"vec_id" === $"q_id")
+      .select($"q_id", posexplode(graft.llm.Similarity.qvec).as(Seq("pos", "qv")))
+      .select($"q_id", expr(s"CAST(pos div $SUB AS INT)").as("m"),
+        expr(s"CAST(pos % $SUB AS INT)").as("d"), $"qv")
+    def pqRecall(cent: Seq[(Int, Int, Int, Long)]): Seq[(Int, Double)] = {
+      val codes = graft.llm.Similarity.pqEncodeAll(spark, dir, cent)
+        .select($"vec_id", posexplode($"codes").as(Seq("m", "c")))
+      val lut = qDims
+        .join(broadcast(cent.toDF("m", "c", "d", "cent")), Seq("m", "d"))
+        .groupBy($"q_id", $"m", $"c")
+        .agg(sum(($"qv" - $"cent") * ($"qv" - $"cent")).as("subdist"))
+      val adcRank = codes.join(broadcast(lut), Seq("m", "c"))
+        .groupBy($"q_id", $"vec_id")
+        .agg(sum($"subdist").as("adc"))
+        .filter($"q_id" =!= $"vec_id")
+        .withColumn("prk", row_number().over(
+          Window.partitionBy($"q_id").orderBy($"adc".asc, $"vec_id")))
+        .select($"q_id", $"vec_id", $"prk")
+      // join the (tiny) truth frame back BEFORE collecting — only the true
+      // pairs' ranks ever reach the driver, not the full n-per-query ranking
+      val ranks = adcRank.join(truth, Seq("q_id", "vec_id"))
+        .select($"prk").as[Int].collect()
+      Seq(10, 50, 100, 500).map(s => s -> ranks.count(_ <= s).toDouble / judged.length)
+    }
+    val pq = pqRecall(graft.llm.Similarity.pqTrain(spark, dir))
     // production-width PQ (K=256, 8-bit codes — Similarity.PQ_K_PROD):
-    // sampled Lloyd fit + compiled encode, same rank-based recall
-    val cent256 = graft.llm.Similarity.pqTrainSized(spark, dir)
-    val codes256 = graft.llm.Similarity.pqEncodeAll(spark, dir, cent256)
-      .select($"vec_id", posexplode($"codes").as(Seq("m", "c")))
-      .select($"vec_id", $"m".cast("int").as("m"), $"c")
-    val lut256 = qDims
-      .join(broadcast(cent256.toDF("m", "c", "d", "cent")), Seq("m", "d"))
-      .groupBy($"q_id", $"m", $"c")
-      .agg(sum(($"qv" - $"cent") * ($"qv" - $"cent")).as("subdist"))
-    val adcRank256 = codes256.join(broadcast(lut256), Seq("m", "c"))
-      .groupBy($"q_id", $"vec_id")
-      .agg(sum($"subdist").as("adc"))
-      .filter($"q_id" =!= $"vec_id")
-      .withColumn("prk", row_number().over(
-        Window.partitionBy($"q_id").orderBy($"adc".asc, $"vec_id")))
-      .select($"q_id", $"vec_id", $"prk")
-    val pq256Ranks = adcRank256.join(truth, Seq("q_id", "vec_id"))
-      .select($"prk").as[Int].collect()
-    val pq256 = Seq(10, 50, 100, 500).map(s =>
-      s -> pq256Ranks.count(_ <= s).toDouble / judged.length)
+    // the same fit on a hash-sample, same rank-based recall
+    val pq256 = pqRecall(graft.llm.Similarity.pqTrainSized(spark, dir))
 
     def tbl(rows: Seq[(Int, Double)]): String =
       rows.map { case (b, r) => s"""{"k":$b,"recall":${f"$r%.4f"}}""" }

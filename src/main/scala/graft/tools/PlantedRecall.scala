@@ -144,10 +144,8 @@ object PlantedRecall {
     val SUB = graft.llm.Similarity.PQ_SUB
     val SC = graft.llm.Similarity.PQ_SCALE
     val pqCent = graft.llm.Similarity.pqTrain(spark, dir)
-    val vecCodes = graft.llm.Similarity
-      .pqAssign(graft.llm.Similarity.pqDims(spark, dir), pqCent)
-      .groupBy($"vec_id")
-      .agg(expr("transform(array_sort(collect_list(struct(m, c))), s -> s.c)").as("cs"))
+    val vecCodes = graft.llm.Similarity.pqEncodeAll(spark, dir, pqCent)
+      .select($"vec_id", $"codes".as("cs"))
     val qLut = planted.filter($"base_id" % MakeHeavy.SHIFT_VEC < 2)
       .select($"base_id", $"ci", $"cos_t", posexplode($"planted_emb"))
       .toDF("base_id", "ci", "cos_t", "pos", "x")

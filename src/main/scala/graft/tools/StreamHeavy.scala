@@ -141,7 +141,7 @@ object StreamHeavy {
       run("r14_cluster_assign", fileStream("embeddings", embSchema), {
         val embBatch = spark.read.parquet(s"$dir/embeddings.parquet")
         val cut = embBatch.agg(expr("max(vec_id) * 4 div 5")).head().getLong(0)
-        val codebook = graft.llm.Clustering.kmTrainFrom(
+        val codebook = graft.llm.Clustering.kmeans(
           embBatch.filter($"vec_id" < cut))
         df => graft.llm.Clustering.assignWithDist(
           df.filter($"vec_id" >= cut), codebook)

@@ -11,46 +11,15 @@ class ClusteringSpec extends SparkSpecBase {
 
   private val C = graft.llm.Clustering
 
-  /** Reference trainer: identical rules, no Spark — init from
-    * vec_id < K, exact BIGINT distances with lowest-id tie-break,
-    * trunc(double(sum)/count) update, empty cluster keeps its previous
-    * centroid, final assignment under the FINAL codebook. */
+  /** The reference fit (LloydRef at full width, M = 1) and its final
+    * assignment under the FINAL codebook: vec_id -> (cluster, dist). */
   private def refCluster(vecs: Map[Long, Array[Long]]): Map[Long, (Int, Long)] = {
     val dim = vecs.head._2.length
-    var cent: Map[Int, Array[Long]] =
-      (0 until C.KM_K).map(c => c -> vecs(c.toLong).clone()).toMap
-    def assign(): Map[Long, (Int, Long)] = vecs.map { case (id, q) =>
-      val best = (0 until C.KM_K).map { c =>
-        val dist = (0 until dim).map { d =>
-          val diff = q(d) - cent(c)(d); diff * diff
-        }.sum
-        (dist, c)
-      }.min
-      id -> (best._2, best._1)
-    }
-    for (_ <- 1 to C.KM_ITERS) {
-      val byC = assign().toSeq.groupBy(_._2._1)
-      cent = cent.map { case (c, old) =>
-        c -> byC.get(c).map { members =>
-          Array.tabulate(dim) { d =>
-            val vals = members.map { case (id, _) => vecs(id)(d) }
-            (vals.sum.toDouble / vals.size).toLong
-          }
-        }.getOrElse(old)
-      }
-    }
-    assign()
+    val cent = LloydRef.fit(vecs, dim, C.KM_K, C.KM_ITERS)
+    vecs.map { case (id, q) => id -> LloydRef.encode(q, cent, dim).head }
   }
 
-  private def fixtureVecs(): Map[Long, Array[Long]] = {
-    import spark.implicits._
-    Tables.embeddings(spark, sfDir)
-      .select($"vec_id", $"embedding").collect()
-      .map(r => r.getLong(0) ->
-        r.getSeq[Float](1).map(x =>
-          (x.toDouble * graft.llm.Similarity.PQ_SCALE).toLong).toArray)
-      .toMap
-  }
+  private def fixtureVecs(): Map[Long, Array[Long]] = LloydRef.fixtureVecs(spark, sfDir)
 
   test("l29: assignment + distance equal the plain-Scala Lloyd reference; k-means ran") {
     val want = refCluster(fixtureVecs())
@@ -180,7 +149,6 @@ class ClusteringSpec extends SparkSpecBase {
     // at N=500 the hash-sample modulus is 1 (full corpus) and
     // K = max(8, N/512) = 8 with init = vec_id < 8 — so the sized path
     // must train the IDENTICAL codebook and emit the identical keep set
-    // (the PqSizedSpec bit-identity argument at equal K)
     val base = C.l31SemDedup(spark, sfDir).collect().map(_.toSeq).toSeq
     val sized = C.l31Sized(spark, sfDir).collect().map(_.toSeq).toSeq
     assert(sized === base)
@@ -215,15 +183,16 @@ class ClusteringSpec extends SparkSpecBase {
       assert(tracker.getJobIdsForGroup(s"$group-drain").nonEmpty,
         "listener bus never drained")
     }
-    val art = java.nio.file.Paths.get(
-      s"${graft.llm.AnnIndex.indexDir(spark, sfDir)}/km_codebook_base.tsv")
+    val art = C.codebookFile(spark, sfDir, "base")
     C.clearCodebookMemo()
     java.nio.file.Files.deleteIfExists(art)
     // cold: the fit runs real jobs and stamps the artifact
     sc.setJobGroup("km-cold", ""); val first = C.kmTrain(spark, sfDir); sc.clearJobGroup()
     drainAfter("km-cold")
     assert(tracker.getJobIdsForGroup("km-cold").nonEmpty, "cold fit ran no jobs?")
-    assert(java.nio.file.Files.isRegularFile(art), "fit did not stamp its artifact")
+    assert(java.nio.file.Files.isRegularFile(art), "fit did not publish its artifact")
+    assert(graft.Stamp.holds(art.getParent.toString, graft.llm.AnnIndex.sourceFingerprint(sfDir)),
+      "fit did not stamp its artifact")
     // warm, same JVM: memo hit, zero jobs
     sc.setJobGroup("km-warm", ""); val second = C.kmTrain(spark, sfDir); sc.clearJobGroup()
     drainAfter("km-warm")
@@ -240,7 +209,7 @@ class ClusteringSpec extends SparkSpecBase {
       "disk-replayed fit re-ran Spark jobs")
   }
 
-  test("codebook memo: a torn artifact (valid fp header, truncated body) is refit, not replayed") {
+  test("codebook memo: a torn artifact (valid stamp, truncated body) is refit, not replayed") {
     // r12-advice hardening: the publish is now temp-file + ATOMIC_MOVE so
     // a crash cannot leave a partial file at the validated path at all —
     // and if one lands anyway (copied in, disk corruption), the
@@ -249,13 +218,12 @@ class ClusteringSpec extends SparkSpecBase {
     // mid-rows, the final long cut mid-digits (still parses as a long!),
     // and a missing trailer.
     import scala.jdk.CollectionConverters._
-    val art = java.nio.file.Paths.get(
-      s"${graft.llm.AnnIndex.indexDir(spark, sfDir)}/km_codebook_base.tsv")
+    val art = C.codebookFile(spark, sfDir, "base")
     C.clearCodebookMemo()
     java.nio.file.Files.deleteIfExists(art)
     val good = C.kmTrain(spark, sfDir)
     val lines = java.nio.file.Files.readAllLines(art).asScala.toSeq
-    assert(lines.last === s"# n=${lines.length - 2}", "trailer missing on a clean publish")
+    assert(lines.last === s"# n=${lines.length - 1}", "trailer missing on a clean publish")
     val torn = Seq(
       lines.dropRight(1 + lines.length / 2),                 // body cut, no trailer
       lines.dropRight(1).init :+ lines.init.last.dropRight(3), // last long cut mid-digits
@@ -267,7 +235,7 @@ class ClusteringSpec extends SparkSpecBase {
       assert(refit === good, "torn artifact replayed instead of refitting")
       // the refit re-publishes a complete artifact
       val repaired = java.nio.file.Files.readAllLines(art).asScala.toSeq
-      assert(repaired.last === s"# n=${repaired.length - 2}")
+      assert(repaired.last === s"# n=${repaired.length - 1}")
       assert(repaired === lines)
     }
   }

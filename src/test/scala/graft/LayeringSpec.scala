@@ -67,4 +67,22 @@ class LayeringSpec extends AnyFunSuite {
     }
     assert(calls.size === 1, s"publishExclusive( called from ${calls.mkString(", ")}")
   }
+
+  test("one integer Lloyd: src/main/scala holds exactly one CAST(CAST(CAST(sum( centroid update") {
+    val update = java.util.regex.Pattern.quote("CAST(CAST(CAST(sum(").r
+    val hits = sources.map { case (p, src) => p -> update.findAllIn(src).size }
+      .filter(_._2 > 0)
+    assert(hits.map(_._2).sum === 1, s"centroid updates in ${hits.mkString(", ")}")
+  }
+
+  test("one PQ encoder: no join-based min(struct(dist, c)) argmin in src/main/scala") {
+    val hits = sources.collect { case (p, src) if src.contains("min(struct($\"dist\"") => p }
+    assert(hits.isEmpty, s"join-based argmin in ${hits.mkString(", ")}")
+  }
+
+  test("the deleted k-means and PQ twins stay deleted: pqAssign, pqDims, pqTrainPlan, kmTrainFrom") {
+    val gone = "pqAssign|pqDims|pqTrainPlan|kmTrainFrom".r
+    val hits = sources.collect { case (p, src) if gone.findFirstIn(src).nonEmpty => p }
+    assert(hits.isEmpty, s"deleted names in ${hits.mkString(", ")}")
+  }
 }

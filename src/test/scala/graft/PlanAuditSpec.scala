@@ -373,9 +373,11 @@ class PlanAuditSpec extends SparkSpecBase {
   test("l3n_serve: ADC over the probed pq_codes shards only; floats only as point lookups") {
     val p = plan(q("l3n_serve"))
     // corpus side = the list-sharded code store, dynamically pruned to the
-    // probed shards; the codebook artifact feeds the broadcast ADC table
+    // probed shards; the memoized driver codebook (a local relation, no
+    // parquet read) feeds the broadcast ADC table
     assert(p.contains("pq_codes"), p)
-    assert(p.contains("pq_codebook"), p)
+    assert(!p.contains("pq_codebook"), p)
+    assert(p.contains("LocalTableScan"), p)
     assert(p.contains("ivf_centroids"), p)
     assert(p.toLowerCase.contains("dynamicpruning"), p)
     // the raw embeddings table is never touched, and every float read is
@@ -640,13 +642,15 @@ class PlanAuditSpec extends SparkSpecBase {
     assert(p.linesIterator.count(_.contains("Exchange hashpartitioning")) === 2, p)
   }
 
-  test("l3m: PQ search broadcasts codebook + query; one rollup exchange, top-K without a sort") {
+  test("l3m: PQ search encodes against the broadcast 1-row codebook; exchange-free, top-K without a sort") {
     val p = plan(q("l3m_pq_topk"))
-    assert(p.contains("BroadcastHashJoin"), p)
+    // the codebook rides one broadcast row, the query LUT a plan literal:
+    // encode + ADC score are projections over the scan, with no join
+    // fan-out per candidate and no rollup exchange
+    assert(p.contains("BroadcastNestedLoopJoin"), p)
+    assert(p.contains("pq_encode"), p)
+    assert(!p.contains("Exchange hashpartitioning"), s"ADC scoring introduced a shuffle:\n$p")
     assert(p.contains("TakeOrderedAndProject"), p)
-    // the per-vector ADC rollup is the only data-sized exchange family;
-    // everything codebook/query-sized rides broadcasts
-    assert(p.contains("partial_sum") || p.contains("partial_min"), s"no map-side combine:\n$p")
   }
 
   test("u3: the compaction exchanges double as the MERGE join exchanges") {

@@ -10,45 +10,9 @@ class PqSpec extends SparkSpecBase {
 
   private val S = graft.llm.Similarity
 
-  /** The reference trainer: identical rules, no Spark — init from
-    * vec_id < K, exact BIGINT distances with lowest-id tie-break,
-    * trunc(double(sum)/count) centroid update, empty cluster keeps its
-    * previous centroid. */
-  private def refTrain(vecs: Map[Long, Array[Long]]): Map[(Int, Int, Int), Long] = {
-    val m = 64 / S.PQ_SUB
-    var cent: Map[(Int, Int, Int), Long] =
-      (for (c <- 0 until S.PQ_K; mm <- 0 until m; d <- 0 until S.PQ_SUB)
-        yield (mm, c, d) -> vecs(c.toLong)(mm * S.PQ_SUB + d)).toMap
-    for (_ <- 1 to S.PQ_ITERS) {
-      val assign = for ((id, q) <- vecs.toSeq; mm <- 0 until m) yield {
-        val best = (0 until S.PQ_K).map { c =>
-          val dist = (0 until S.PQ_SUB).map { d =>
-            val diff = q(mm * S.PQ_SUB + d) - cent((mm, c, d)); diff * diff
-          }.sum
-          (dist, c)
-        }.min
-        (id, mm, best._2)
-      }
-      val upd = assign.groupBy { case (_, mm, c) => (mm, c) }.flatMap {
-        case ((mm, c), members) =>
-          (0 until S.PQ_SUB).map { d =>
-            val vals = members.map { case (id, _, _) => vecs(id)(mm * S.PQ_SUB + d) }
-            (mm, c, d) -> (vals.sum.toDouble / vals.size).toLong
-          }
-      }
-      cent = cent.map { case (k, old) => k -> upd.getOrElse(k, old) }
-    }
-    cent
-  }
-
   test("l3l: codebook equals the plain-Scala integer Lloyd reference") {
-    import spark.implicits._
-    val vecs = Tables.embeddings(spark, sfDir)
-      .select($"vec_id", $"embedding").collect()
-      .map(r => r.getLong(0) ->
-        r.getSeq[Float](1).map(x => (x.toDouble * S.PQ_SCALE).toLong).toArray)
-      .toMap
-    val want = refTrain(vecs)
+    val vecs = LloydRef.fixtureVecs(spark, sfDir)
+    val want = LloydRef.fit(vecs, S.PQ_SUB, S.PQ_K, S.PQ_ITERS)
     val got = S.l3lPqTrain(spark, sfDir).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getInt(2)) -> r.getLong(3)).toMap
     assert(got === want)
@@ -59,24 +23,15 @@ class PqSpec extends SparkSpecBase {
     assert(moved > want.size / 2, s"only $moved centroids moved off init")
   }
 
-  test("single-plan Lloyd chain == collect-per-iteration training, bit for bit") {
-    // r15: the declared l3l runs the whole fixpoint as ONE compiled plan
-    // (pqTrainPlan — no per-iteration collect/job boundary); the memo
-    // builder keeps the collecting pqTrain. Same rules, same bits.
-    val plan = S.pqTrainPlan(spark, sfDir).collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getLong(3))).toSet
-    assert(plan === S.pqTrain(spark, sfDir).toSet)
-  }
-
   test("codebook memo replay is bit-equal to inline training (the l3m/l3n serve path)") {
-    // r14: the declared l3m/l3n read the fingerprint-stamped pq_codebook
-    // instead of re-running Lloyd per evaluation — the replay must be the
-    // SAME driver state the training produces (ints/longs round-trip
-    // parquet exactly), and a second ensure must be a pure read (fresh
-    // stamp), not a retrain
+    // the declared l3m/l3n and the IVF-PQ index read the memoized fit
+    // (Clustering.ensureCodebook, variant "pq") instead of re-running
+    // Lloyd per evaluation — the replay must be the SAME driver state the
+    // training produces, and a second ensure must be a pure read, not a
+    // retrain
     val inline = S.pqTrain(spark, sfDir).toSet
-    val first = graft.llm.AnnIndex.ensurePqCodebook(spark, sfDir).toSet
-    val again = graft.llm.AnnIndex.ensurePqCodebook(spark, sfDir).toSet
+    val first = S.pqCodebook(spark, sfDir).toSet
+    val again = S.pqCodebook(spark, sfDir).toSet
     assert(first === inline)
     assert(again === inline)
   }

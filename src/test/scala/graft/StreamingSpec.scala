@@ -378,7 +378,7 @@ class StreamingSpec extends SparkSpecBase {
     val today = emb.filter($"vec_id" >= cut)
       .as[(Long, Array[Float])].collect().toSeq
     assert(today.size >= 2, "fixture must leave a non-trivial today batch")
-    val cent = graft.llm.Clustering.kmTrainFrom(emb.filter($"vec_id" < cut))
+    val cent = graft.llm.Clustering.kmeans(emb.filter($"vec_id" < cut))
     val mem = MemoryStream[(Long, Array[Float])]
     val name = "sink_r14_" + System.nanoTime()
     val q = graft.llm.Clustering
