@@ -126,13 +126,10 @@ object GraftSession {
   }
 
   /** Local session (local[n], n shuffle partitions): the one session
-    * graftbench and every `graft.tools` main build. `warehouse` is
-    * where managed tables live (the heavy tiers keep their bucketed
-    * copies beside the data). */
-  def local(cores: Int, warehouse: Option[String] = None): SparkSession = {
-    val b = tuned(SparkSession.builder().master(s"local[$cores]"), cores)
-      .config("spark.ui.enabled", "false")
-    val s = warehouse.fold(b)(b.config("spark.sql.warehouse.dir", _)).getOrCreate()
+    * graftbench and every `graft.tools` main build. */
+  def local(cores: Int): SparkSession = {
+    val s = tuned(SparkSession.builder().master(s"local[$cores]"), cores)
+      .config("spark.ui.enabled", "false").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -11,9 +11,9 @@ import java.nio.file.{Files, Paths}
   * unchanged path forces a rebuild instead of serving data that no longer
   * exists. The stamp is written only AFTER the build returns: a crashed
   * build leaves no stamp (or the previous generation's, which no longer
-  * matches), and both read as stale. Each caller adds its own completeness
-  * check (`_SUCCESS`, a log version) — the stamp proves provenance, not
-  * that a build finished.
+  * matches), and both read as stale. The stamp proves provenance, not
+  * that a build finished: each caller adds a completeness check, the
+  * written artifacts' [[committed]] or a log version.
   */
 object Stamp {
 
@@ -32,6 +32,9 @@ object Stamp {
         .map(f => s"${f.getName}=${f.length}:${f.lastModified}")
         .mkString(";")
   }
+
+  /** Did the write of the artifact at `dir` commit (`_SUCCESS`)? */
+  def committed(dir: String): Boolean = Files.exists(Paths.get(s"$dir/_SUCCESS"))
 
   /** Does `dir` carry the stamp `fp`? */
   def holds(dir: String, fp: String): Boolean =

@@ -67,15 +67,11 @@ object AnnIndex {
   def sourceFingerprint(sfDir: String): String =
     Stamp.of(s"$sfDir/embeddings.parquet")
 
-  /** Did the artifact's write commit? */
-  private[llm] def committed(path: String): Boolean =
-    new java.io.File(s"$path/_SUCCESS").exists()
-
   /** An artifact is servable iff its write committed (`_SUCCESS`) AND it was
     * built from the embeddings bytes currently on disk (its [[graft.Stamp]]
     * matches). */
   private[llm] def fresh(path: String, fp: String): Boolean =
-    committed(path) && Stamp.holds(path, fp)
+    Stamp.committed(path) && Stamp.holds(path, fp)
 
   // ---------------------------------------------------------------- SQ8
 

@@ -551,7 +551,7 @@ object TextAnalysis {
   private[graft] def ensureBpeMerges(spark: SparkSession, sfDir: String): Seq[(String, String)] = {
     import spark.implicits._
     val path = s"${AnnIndex.indexDir(spark, sfDir)}/bpe_merges"
-    Stamp.ensure(path, Stamp.of(s"$sfDir/documents.parquet"), AnnIndex.committed(path)) {
+    Stamp.ensure(path, Stamp.of(s"$sfDir/documents.parquet"), Stamp.committed(path)) {
       Tables.sink(path) {
         bpeLearn(Tables.documents(spark, sfDir), BPE_MERGES).coalesce(1)
           .write.mode("overwrite").parquet(path)

@@ -25,10 +25,8 @@ object Analytics {
     * tied each one once gate costs count — q2's fact side is already
     * date-pruned, so the shuffle a broadcast would replace is ~5x
     * cheaper than q3's, and its filtered dims (4-8M rows at sf25/50)
-    * sit past the broadcast budget's wall crossing. [[q2PlainFrom]]
-    * remains the adaptive variant for deployments whose item cut is
-    * genuinely selective (a 1-2% late-shipdate slice → its arm-1
-    * zero-exchange plan), value-pinned equal in SemanticsSpec. */
+    * sit past the broadcast budget's wall crossing. The measured arms
+    * are deleted; their numbers stay in CROSSOVER.md's q2 section. */
   def q2ShippingPriority(spark: SparkSession, sfDir: String): DataFrame =
     q2From(spark, Tables.customer(spark, sfDir), Tables.orders(spark, sfDir),
       Tables.lineitem(spark, sfDir))
@@ -66,105 +64,13 @@ object Analytics {
     * small case pays one narrow pushed-down count and only the
     * ambiguous middle pays the precise join-side count. */
   private def gatedBroadcast(spark: SparkSession, dim: DataFrame,
-      gates: Seq[() => Long]): DataFrame =
-    if (gates.exists(_() <= broadcastBudget(spark))) broadcast(dim) else dim
-
-  private def broadcastBudget(spark: SparkSession): Long =
-    TableLog.confLong(spark, "spark.graft.star.broadcastMaxDimRows", "3500000")
-
-  /** Q2 plain form at scale [r13 verdict item 5]: the gate picks among
-    * THREE plan shapes from measured survivor counts, because q2's
-    * optimal plans differ by which filtered side fits memory:
-    *  1. Small surviving ITEM set (a late date cut — the classic case):
-    *     aggregate revenue per order BELOW the join (a per-order BIGINT
-    *     sum is exact — ≤7 items) and BROADCAST the pre-aggregate, so
-    *     the 35M-row orders side never shuffles; o_orderkey is unique in
-    *     orders, so the join emits one already-grouped row per
-    *     qualifying order — the GROUP BY disappears and TakeOrdered(10)
-    *     runs straight off the join. (The pre-aggregate WITHOUT the
-    *     broadcast is a measured negative on this fixture — 49% of
-    *     lineitem survives, the per-order hash table is corpus-sized,
-    *     its exchange spilled ~1 GB at sf25 and lost 1.4x to the core.)
-    *  2. Small surviving ORDERS set (this fixture: the BUILDING-segment
-    *     date-cut orders are ~1/9 of orders): broadcast the fixed-width
-    *     (o_orderkey, o_orderdate) dim — [[q3PlainFrom]]'s shape — so
-    *     lineitem streams through the probe with no fact exchange, and
-    *     the per-order aggregate shuffles only the ~1/9 of item rows
-    *     that survive the probe instead of every filtered item.
-    *  3. Both large: [[q2From]]'s join-then-aggregate shuffle core,
-    *     where the aggregate reuses the join's partitioning (+ the
-    *     session's AQE hash-join conversion, which removed its sort
-    *     spill) — the 100 TB fallback a cluster spreads.
-    * Each gate is one pushed-down narrow count; an unbounded budget takes
-    * shape 2 (the robust broadcast — the dim is bounded by orders, not
-    * items). */
-  def q2PlainFrom(spark: SparkSession, customer: DataFrame, ordersT: DataFrame,
-      lineitem: DataFrame): DataFrame = {
-    import spark.implicits._
-    val cut = lit("1998-07-01").cast("timestamp")
-    val maxRows = broadcastBudget(spark)
-    val cust = customer
-      .filter($"c_mktsegment" === "BUILDING").select($"c_custkey")
-    val dim = ordersT
-      .filter($"o_orderdate" < cut)
-      .select($"o_orderkey", $"o_custkey", $"o_orderdate")
-      .join(broadcast(cust), $"o_custkey" === $"c_custkey")
-      .select($"o_orderkey", $"o_orderdate")
-    def rev4 = (graft.Exact.cents($"l_extendedprice") *
-      (lit(100L) - graft.Exact.cents($"l_discount"))).as("rev4")
-    // arm order is a cost statement: shape 2's broadcast is the orders-
-    // bounded FIXED-WIDTH dim — always the cheaper hash relation — so it
-    // goes first whenever it fits (also: one gate count instead of two
-    // in the common case). Shape 1 is the rescue for the huge-orders /
-    // tiny-items corner (its pre-aggregate pays an items exchange AND a
-    // per-order-width broadcast: measured 2.8x worse than shape 2 at the
-    // 30M-row tier when items ran near the budget).
-    val shape: Int =
-      if (dim.count() <= maxRows) 2
-      else {
-        // arm-1 gate is a LIMIT-probe, not a count: when the filtered
-        // item set is huge (every case where arm 1 loses), LocalLimit
-        // aborts each task at the cap and the probe costs ~a task wave
-        // instead of a full 300M-row column scan; when it is small the
-        // probe degenerates to the count it replaces
-        val cap = math.min(maxRows, Int.MaxValue - 2L).toInt
-        val probed = lineitem.filter($"l_shipdate" > cut)
-          .limit(cap + 1).count()
-        // compare against CAP, not maxRows: when a deployment sets the
-        // budget above ~2.1B the LIMIT saturates at cap < maxRows and
-        // `probed <= maxRows` would be vacuously true — a saturated
-        // probe is over-budget evidence, so fall back to the shuffle
-        if (probed <= cap) 1 else 3
-      }
-    shape match {
-      case 1 =>
-        val items = lineitem
-          .filter($"l_shipdate" > cut)
-          .select($"l_orderkey", rev4)
-          .groupBy($"l_orderkey")
-          .agg(sum($"rev4").as("rev4"))
-        dim
-          .join(broadcast(items), $"o_orderkey" === $"l_orderkey")
-          .select($"o_orderkey",
-            unix_timestamp($"o_orderdate").as("orderdate_s"),
-            ($"rev4".cast("double") / lit(1e4)).as("revenue"))
-          .orderBy($"revenue".desc, $"o_orderkey")
-          .limit(10)
-      case 2 =>
-        lineitem
-          .filter($"l_shipdate" > cut)
-          .select($"l_orderkey", rev4)
-          .join(broadcast(dim), $"l_orderkey" === $"o_orderkey")
-          .groupBy($"o_orderkey")
-          .agg(min(unix_timestamp($"o_orderdate")).as("orderdate_s"),
-            (sum($"rev4").cast("double") / lit(1e4)).as("revenue"))
-          .orderBy($"revenue".desc, $"o_orderkey")
-          .limit(10)
-      case _ => q2From(spark, customer, ordersT, lineitem)
-    }
+      gates: Seq[() => Long]): DataFrame = {
+    val budget =
+      TableLog.confLong(spark, "spark.graft.star.broadcastMaxDimRows", "3500000")
+    if (gates.exists(_() <= budget)) broadcast(dim) else dim
   }
 
-  /** Q2 over caller-supplied base tables: the bench's bucketed tier passes
+  /** Q2 over caller-supplied base tables: [[Bucketed.q2Bucketed]] passes
     * catalog tables bucketed on the order key, which run the same plan with
     * zero shuffle exchanges (bucket layout feeds the fact join AND the
     * post-join aggregation). */
@@ -191,13 +97,9 @@ object Analytics {
         (graft.Exact.cents($"l_extendedprice") *
           (lit(100L) - graft.Exact.cents($"l_discount"))).as("rev4"))
     // the fused partial+final hash aggregate after the join builds TWO
-    // ~|orders|-group hash tables back to back in one stage; with the
-    // group key unique in orders the partial's reduction is marginal,
-    // so one build is near-pure tax. The measured alternative
-    // (BenchStar's q2_sortagg_probe arm, r14 verdict item 4): keep the
-    // SMJ and let spark.sql.execution.replaceHashWithSortAgg collapse
-    // the pair into ONE Complete-mode SortAggregate streaming over the
-    // join's own key order — the verdict lives in CROSSOVER.md.
+    // ~|orders|-group hash tables back to back in one stage; the r15
+    // single-SortAggregate alternative (SMJ + replaceHashWithSortAgg)
+    // measured worse at every tier — CROSSOVER.md's q2 section is the ledger
     orders
       .join(broadcast(cust), $"o_custkey" === $"c_custkey")
       .join(items, $"o_orderkey" === $"l_orderkey")

@@ -1,8 +1,7 @@
 package graft.operators
 
-import java.io.File
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import graft.{Stamp, Tables}
 
 /** The co-located star layout as a FIRST-CLASS operator: orders and
@@ -22,7 +21,8 @@ import graft.{Stamp, Tables}
   * with the source files' fingerprint ([[graft.Stamp]]), and rebuilt
   * only when the source bytes change; a fresh JVM re-registers the existing files instead of
   * rewriting them (bucket metadata lives in the catalog DDL, the bytes
-  * on disk). */
+  * on disk). It is the engine's only writer of a bucketed layout: the
+  * heavy- and star-tier tools lay their tiers out through [[ensure]]. */
 object Bucketed {
 
   /** One bucket per local core; production sizes this to cluster
@@ -37,17 +37,26 @@ object Bucketed {
   private def key(sfDir: String): String =
     sfDir.replaceAll("[^A-Za-z0-9]+", "_").replaceAll("^_+|_+$", "").toLowerCase
 
-  /** Ensure one bucketed catalog table over `sfDir/<table>.parquet`,
-    * bucket+sort key `bucketKey`. Returns the catalog table name. */
-  private def ensure(spark: SparkSession, sfDir: String, table: String,
+  /** Ensure one bucketed catalog table over `sfDir/<table>.parquet`
+    * (`events` read through [[Tables.events]]'s timestamp normalization),
+    * bucket+sort key `bucketKey`. Returns the catalog table name.
+    *
+    * The rows are repartitioned ON the bucket key before the write: one
+    * writer task per bucket leaves exactly one file per bucket whatever
+    * the source's file count, the layout a scan under
+    * `spark.sql.legacy.bucketedTableScan.outputOrdering=true` trusts to
+    * deliver the sort order, so the sort-merge join runs with neither an
+    * exchange nor a per-task sort. */
+  private[graft] def ensure(spark: SparkSession, sfDir: String, table: String,
       bucketKey: String): String = {
     val name = s"graft_${table}_b_${key(sfDir)}"
     val loc = s"${layoutRoot(spark)}/$name"
-    val built = Stamp.ensure(loc, Stamp.of(s"$sfDir/$table.parquet"),
-        new File(s"$loc/_SUCCESS").exists()) {
+    val built = Stamp.ensure(loc, Stamp.of(s"$sfDir/$table.parquet"), Stamp.committed(loc)) {
       spark.sql(s"DROP TABLE IF EXISTS $name")
+      val rows =
+        if (table == "events") Tables.events(spark, sfDir) else Tables.table(spark, sfDir, table)
       Tables.sink(loc) {
-        Tables.table(spark, sfDir, table)
+        rows.repartition(BUCKETS, col(bucketKey))
           .write.bucketBy(BUCKETS, bucketKey).sortBy(bucketKey)
           .option("path", loc).mode("overwrite").saveAsTable(name)
       }

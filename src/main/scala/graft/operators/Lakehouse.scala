@@ -830,11 +830,9 @@ object Lakehouse {
   // ------------------------------------------------- S16: Z-order clustering
 
   /** Morton (Z-curve) value of two non-negative long columns, each first
-    * scaled linearly into `bits` bits against its [lo, hi] domain: the
-    * interleaved-bit cluster key that makes ONE sort order serve range
-    * predicates on BOTH dimensions. Built entirely from codegen'd bit
-    * functions (shiftright/and/shiftleft chains — no UDF): 2·`bits`
-    * unrolled terms OR-folded, whole-stage-compiled like any arithmetic.
+    * scaled linearly into `bits` bits against its [lo, hi] domain, then
+    * interleaved by [[graft.functions.Scalars.zorderKey]]: the cluster key
+    * that makes ONE sort order serve range predicates on BOTH dimensions.
     * 16 bits per dimension is plenty for file-level skipping — the curve
     * only has to separate files, not rows. */
   def zOrderValue(a: Column, aLo: Long, aHi: Long,
@@ -867,12 +865,6 @@ object Lakehouse {
         else shiftrightunsigned(d, 64 -
           java.lang.Long.numberOfLeadingZeros(width.toLong / (scale + 1)))
       }
-    val na = norm(a, aLo, aHi)
-    val nb = norm(b, bLo, bHi)
-    (0 until bits).map { k =>
-      shiftleft(shiftrightunsigned(na, k).bitwiseAND(lit(1L)), 2 * k)
-        .bitwiseOR(
-          shiftleft(shiftrightunsigned(nb, k).bitwiseAND(lit(1L)), 2 * k + 1))
-    }.reduce(_ bitwiseOR _)
+    graft.functions.Scalars.zorderKey(norm(a, aLo, aHi), norm(b, bLo, bHi), bits)
   }
 }

@@ -10,9 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The source layering of the table log: the log library files hold the
   * engine API only — the declared queries and their fixtures live in
   * LakeQueries — one module owns the artifact source stamp, one write
-  * publishes to the log, one harness listens to the scheduler, no lake
-  * writer pulls rows to the driver, and no default path points into one
-  * checkout.
+  * publishes to the log, one harness listens to the scheduler, one
+  * operator writes a bucketed layout, no lake writer pulls rows to the
+  * driver, and no default path points into one checkout.
   * Reads the sources; needs no Spark session. */
 class LayeringSpec extends AnyFunSuite {
   private val main = Paths.get("src/main/scala")
@@ -82,6 +82,18 @@ class LayeringSpec extends AnyFunSuite {
 
   test("the deleted k-means and PQ twins stay deleted: pqAssign, pqDims, pqTrainPlan, kmTrainFrom") {
     val gone = "pqAssign|pqDims|pqTrainPlan|kmTrainFrom".r
+    val hits = sources.collect { case (p, src) if gone.findFirstIn(src).nonEmpty => p }
+    assert(hits.isEmpty, s"deleted names in ${hits.mkString(", ")}")
+  }
+
+  test("one bucketed-layout writer: bucketBy( and CLUSTERED BY each appear only in operators/Bucketed.scala") {
+    for (needle <- Seq("bucketBy(", "CLUSTERED BY"))
+      assert(sources.collect { case (p, src) if src.contains(needle) => p } ===
+        Seq("graft/operators/Bucketed.scala"), needle)
+  }
+
+  test("the deleted star arms and the second layout writer stay deleted: q2PlainFrom, MakeStar, registerBucketed, probe rows") {
+    val gone = "q2PlainFrom|MakeStar|registerBucketed|q2_sortagg_probe|plain_legacy".r
     val hits = sources.collect { case (p, src) if gone.findFirstIn(src).nonEmpty => p }
     assert(hits.isEmpty, s"deleted names in ${hits.mkString(", ")}")
   }

@@ -1,6 +1,13 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SortExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.BucketingUtils
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+
+import graft.operators.Bucketed
 
 /** Plan audits: assert the physical plans have the shapes the 100 TB
   * design requires — pushdown reaching the scan, pruned read schemas,
@@ -730,6 +737,34 @@ class PlanAuditSpec extends SparkSpecBase {
             s"$name: expected only the nation-keyed post-agg exchange:\n$p")
       }
     }
+    // one file per bucket, whatever the source's file count: over a
+    // multi-file star source (the heavy tier's layout in miniature) each
+    // scan task would otherwise write its own file into every bucket, and
+    // the bucketed scan could no longer deliver the join's sort order
+    val multiFile = s"$scratchRoot/bucketed_multifile_src"
+    for (t <- Seq("customer", "orders", "lineitem")) {
+      val path = s"$multiFile/$t.parquet"
+      Tables.sink(path) {
+        Tables.table(spark, sfDir, t).repartition(4).write.mode("overwrite").parquet(path)
+      }
+    }
+    val (orders, lineitem) = Bucketed.starFacts(spark, multiFile)
+    for (facts <- Seq(orders, lineitem)) {
+      val perBucket =
+        facts.inputFiles.toSeq.groupBy(f => BucketingUtils.getBucketId(new Path(f).getName))
+      assert(perBucket.nonEmpty && perBucket.forall { case (id, fs) => id.isDefined && fs.size == 1 },
+        s"not one file per bucket: ${perBucket.filter(_._2.size != 1).keys.toSeq.sorted}")
+    }
+    spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
+    try {
+      object Aqe extends AdaptiveSparkPlanHelper
+      val q2 = Bucketed.q2Bucketed(spark, multiFile).queryExecution.executedPlan
+      val joins = Aqe.collect(q2) { case j: SortMergeJoinExec => j }
+      assert(joins.nonEmpty, s"q2_bucketed lost the merge join:\n$q2")
+      for (j <- joins)
+        assert(Aqe.collect(j) { case s: SortExec => s }.isEmpty,
+          s"q2_bucketed sorts under its merge join:\n$q2")
+    } finally spark.conf.unset("spark.sql.legacy.bucketedTableScan.outputOrdering")
   }
 
   test("no operator plan contains a cartesian product") {

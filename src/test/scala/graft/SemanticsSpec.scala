@@ -159,18 +159,14 @@ class SemanticsSpec extends SparkSpecBase {
     assert(p.contains("BroadcastHashJoin"), p)
   }
 
-  test("q2/q3 plain gated-broadcast forms equal the shuffle-core plans under every gate mode") {
-    // the r14 plain-star rework: the declared q2/q3 run the count-gated
+  test("q3 plain gated-broadcast form equals the shuffle-core plan in every gate mode") {
+    // the r14 plain-star rework: the declared q3 runs the count-gated
     // broadcast-dimension plan (Analytics.gatedBroadcast); value parity
-    // with the original join-then-aggregate core and with each other must
-    // hold on BOTH sides of the gate — broadcast hint taken (default
-    // budget at this sf, unbounded budget) and shuffle fallback (zero budget)
-    def q2() = Analytics.q2PlainFrom(spark, Tables.customer(spark, sfDir),
-      Tables.orders(spark, sfDir), Tables.lineitem(spark, sfDir)).collect().toSeq
+    // with the original join-then-aggregate core must hold on BOTH sides
+    // of the gate — broadcast hint taken (default budget at this sf,
+    // unbounded budget) and shuffle fallback (zero budget)
     def q3() = Analytics.q3PlainFrom(spark, Tables.region(spark, sfDir),
       Tables.nation(spark, sfDir), Tables.customer(spark, sfDir),
-      Tables.orders(spark, sfDir), Tables.lineitem(spark, sfDir)).collect().toSeq
-    val core2 = Analytics.q2From(spark, Tables.customer(spark, sfDir),
       Tables.orders(spark, sfDir), Tables.lineitem(spark, sfDir)).collect().toSeq
     val core3 = Analytics.q3From(spark, Tables.region(spark, sfDir),
       Tables.nation(spark, sfDir), Tables.customer(spark, sfDir),
@@ -182,7 +178,6 @@ class SemanticsSpec extends SparkSpecBase {
           case None => spark.conf.unset("spark.graft.star.broadcastMaxDimRows")
         }
         val label = budget.fold("default")(_.toString)
-        assert(q2() === core2, s"q2 diverged under budget=$label")
         assert(q3() === core3, s"q3 diverged under budget=$label")
       }
     } finally spark.conf.unset("spark.graft.star.broadcastMaxDimRows")

@@ -111,13 +111,9 @@ def main():
         per = {}
         for q in QUERIES:
             b = q.split("_", 1)[0] + "_bucketed"  # q2_bucketed / q3_bucketed
-            # r14: the pre-rework plain plan rides along as q2/q3_plain_legacy
-            # so the gated-broadcast delta is same-generation, same-tier
-            leg = q.split("_", 1)[0] + "_plain_legacy"
             duck = duck_time(sf_dir, oracle[q])
             per[q] = (bench["queries"][q], bench["stage_compute"][q], duck,
-                      bench["queries"][b], bench["stage_compute"][b],
-                      bench["queries"].get(leg))
+                      bench["queries"][b], bench["stage_compute"][b])
         for q in SOLO_QUERIES:
             if q in bench["queries"]:
                 duck = duck_time(sf_dir, oracle[q])
@@ -135,25 +131,20 @@ def main():
                 "post-warmup) on the identical oracle SQL; `stage` is executor "
                 "stage-compute seconds (wall minus the fixed driver/AQE floor). "
                 "Regenerate: `python3 tools/crossover.py <oracleJson> "
-                "sf1=<dir> ...` after `graft.tools.MakeStar` + `BenchStar` "
+                "sf1=<dir> ...` after `graft.tools.MakeHeavy <src> <out> "
+                "<copies> orders customer lineitem region nation` + `BenchStar` "
                 "per tier."
                 + (" " + analysis["_header_note"] if "_header_note" in analysis else "")
                 + "\n\n")
-        have_legacy = any(per[jq][5] is not None
-                          for _, _, per in rows for jq in QUERIES)
         for q in QUERIES:
             f.write(f"## {q}\n\n")
-            legh = "r13-plan wall s | " if have_legacy else ""
             f.write("| tier | lineitem rows | spark wall s | spark stage s | "
-                    f"{legh}bucketed wall s | bucketed stage s | duckdb s | "
+                    "bucketed wall s | bucketed stage s | duckdb s | "
                     "wall ratio | stage ratio | bucketed stage ratio |\n")
-            f.write("|---|---|---|---|---|---|---|---|---|---|"
-                    + ("---|" if have_legacy else "") + "\n")
+            f.write("|---|---|---|---|---|---|---|---|---|---|\n")
             for label, n_li, per in rows:
-                w, s, d, bw, bs, leg = per[q]
-                legc = (f"{leg:.2f} | " if leg is not None else "— | ") \
-                    if have_legacy else ""
-                f.write(f"| {label} | {n_li:,} | {w:.2f} | {s:.2f} | {legc}{bw:.2f} | "
+                w, s, d, bw, bs = per[q]
+                f.write(f"| {label} | {n_li:,} | {w:.2f} | {s:.2f} | {bw:.2f} | "
                         f"{bs:.2f} | {d:.2f} | {w / d:.1f}x | {s / d:.1f}x | "
                         f"{bs / d:.1f}x |\n")
             f.write("\n")
